@@ -36,7 +36,7 @@ def main():
                          "contract — rules + uniqueness + refs + drift "
                          "baseline + bounds/metric/integrity specs — "
                          "run end-to-end; mutually exclusive with "
-                         "--rules/--unique")
+                         "--rules/--unique/--row-keys/--max-exemplars")
     ap.add_argument("--row-keys", default="",
                     help="comma-separated row-identity columns carried "
                          "on each violation row")
@@ -47,6 +47,17 @@ def main():
     ap.add_argument("--out", default="")
     ap.add_argument("--max-exemplars", type=int, default=0)
     args = ap.parse_args()
+    if bool(args.rules) == bool(args.suite):
+        raise SystemExit("exactly one of --rules / --suite is required")
+    ignored = [flag for flag, v in (("--unique", args.unique),
+                                    ("--row-keys", args.row_keys),
+                                    ("--max-exemplars", args.max_exemplars))
+               if v]
+    if args.suite and ignored:
+        raise SystemExit(
+            f"--suite carries its own uniqueness groups, row keys and "
+            f"exemplar cap; {', '.join(ignored)} would be ignored — set "
+            f"them in the suite artifact instead")
 
     from protovalidate_spark.conf import apply_recommended
     spark = apply_recommended(
@@ -56,9 +67,6 @@ def main():
     from protovalidate_spark import load_ruleset
     from protovalidate_spark.errors import cap_exemplars, violation_summary
     from protovalidate_spark.rules.object import ObjectRuleSet
-
-    if bool(args.rules) == bool(args.suite):
-        raise SystemExit("exactly one of --rules / --suite is required")
 
     if args.suite:
         from protovalidate_spark import load_suite

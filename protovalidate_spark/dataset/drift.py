@@ -22,10 +22,11 @@ import json
 import math
 from typing import Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import Code
+from .fused import Check, collect
 
 N_BUCKETS = 32
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
@@ -54,65 +55,83 @@ def numeric_bounds(df: DataFrame, cols: Sequence[str]) -> Dict[str, Tuple[float,
     return {c: (r[f"{c}__lo"], r[f"{c}__hi"]) for c in num}
 
 
-def histograms(df: DataFrame, cols: Sequence[str],
-               bounds: Optional[Dict[str, Tuple[float, float]]] = None,
-               n_buckets: int = N_BUCKETS,
-               max_categories: int = 1000) -> Dict[str, Dict[str, float]]:
-    """Relative-frequency histograms for ALL ``cols`` in ONE Spark action.
+class Histograms:
+    """Relative-frequency histograms of ``cols`` (per ``group_col`` value
+    when given) as one slice of the shared aggregate — the building
+    block of :class:`Drift`, planned like a check.
 
     Numeric columns (which must have frozen ``bounds``) bucket via
     ``width_bucket`` into labels ``b<i>``; categoricals use the string
     value, keep the top ``max_categories`` by count and pool the rest
     into ``__other__`` — the pooled mass is derived from the same
-    aggregation's per-column total, not a second scan.
-    """
-    bounds = bounds or {}
-    dtypes = dict(df.dtypes)
-    entries = []
-    numeric_names = set()
-    for c in cols:
-        dt = dtypes[c].split("(")[0]
-        if dt in _NUMERIC:
-            lo, hi = _fix_bounds(*bounds.get(c, (None, None)))
-            label = F.concat(
-                F.lit("b"),
-                F.width_bucket(F.col(c).cast("double"), F.lit(lo), F.lit(hi),
-                               F.lit(n_buckets)).cast("bigint").cast("string"))
-            numeric_names.add(c)
-        else:
-            label = F.col(c).cast("string")
-        entries.append(F.struct(F.lit(c).alias("name"),
-                                F.when(F.col(c).isNotNull(), label)
-                                 .alias("label")))
-    pair = F.explode(F.array(*entries)).alias("p")
-    counts = (df.select(pair)
-              .select(F.col("p.name").alias("name"),
-                      F.col("p.label").alias("label"))
-              .filter(F.col("label").isNotNull())
-              .groupBy("name", "label")
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    w = Window.partitionBy("name")
-    ranked = counts.select(
-        "name", "label", "cnt",
-        F.sum("cnt").over(w).alias("total"),
-        F.row_number().over(
-            w.orderBy(F.desc("cnt"), F.col("label"))).alias("rn"))
-    keep = F.col("rn") <= max_categories
-    if numeric_names:  # numeric labels are <= n_buckets+2: keep them all
-        keep = keep | F.col("name").isin(*sorted(numeric_names))
-    kept = ranked.filter(keep)
-    out: Dict[str, Dict[str, float]] = {c: {} for c in cols}
-    totals: Dict[str, int] = {}
-    for r in kept.collect():
-        out[r["name"]][r["label"]] = r["cnt"] / r["total"]
-        totals[r["name"]] = r["total"]
-    for c in cols:
-        if c in numeric_names:
-            continue
-        rest = 1.0 - sum(out[c].values())
-        if rest > 1e-12:
-            out[c]["__other__"] = rest
-    return out
+    aggregation's per-column total, not a second scan. NULL group values
+    histogram under the literal label ``__null__``."""
+
+    def __init__(self, cols: Sequence[str],
+                 bounds: Optional[Dict[str, Tuple[float, float]]] = None,
+                 group_col: Optional[str] = None,
+                 n_buckets: int = N_BUCKETS, max_categories: int = 1000):
+        self.cols = list(cols)
+        self.bounds = bounds or {}
+        self.group_col = group_col
+        self.n_buckets = n_buckets
+        self.max_categories = max_categories
+
+    def plan(self, agg):
+        p = agg.scope()
+        self._keys = {f"{p}{j}": c for j, c in enumerate(self.cols)}
+        self._numeric = set()
+        grp = (F.coalesce(F.col(self.group_col).cast("string"),
+                          F.lit("__null__"))
+               if self.group_col else None)
+        for k, c in self._keys.items():
+            if agg.dtypes[c].split("(")[0] in _NUMERIC:
+                lo, hi = _fix_bounds(*self.bounds.get(c, (None, None)))
+                label = F.concat(
+                    F.lit("b"),
+                    F.width_bucket(F.col(c).cast("double"), F.lit(lo),
+                                   F.lit(hi), F.lit(self.n_buckets))
+                    .cast("bigint").cast("string"))
+                # numeric labels are <= n_buckets+2: keep them all
+                self._numeric.add(c)
+                agg.totals(k)
+            else:
+                label = F.col(c)
+                agg.cap(k, self.max_categories)
+            # gated on the label: width_bucket is NULL for NaN too
+            agg.stack(k, grp, label, when=label.isNotNull())
+        self._h = f"{p}h"
+        agg.per_key(F.collect_list(agg.mine(
+            list(self._keys), F.struct("l1", "l2", "cnt", "t1")))
+            .alias(self._h))
+
+    def histograms(self, res) -> Dict[Optional[str], Dict[str, dict]]:
+        """``{group: {col: {label: freq}}}`` (group None when ungrouped)."""
+        out: Dict[Optional[str], Dict[str, dict]] = (
+            {} if self.group_col else {None: {c: {} for c in self.cols}})
+        for k, c in self._keys.items():
+            for e in (res.key(k) or {}).get(self._h, []):
+                per_col = out.setdefault(e["l1"], {c2: {} for c2 in self.cols})
+                per_col[c][e["l2"]] = e["cnt"] / e["t1"]
+        for per_col in out.values():
+            for c in self.cols:
+                if c in self._numeric:
+                    continue
+                rest = 1.0 - sum(per_col[c].values())
+                if rest > 1e-12:
+                    per_col[c]["__other__"] = rest
+        return out
+
+
+def histograms(df: DataFrame, cols: Sequence[str],
+               bounds: Optional[Dict[str, Tuple[float, float]]] = None,
+               n_buckets: int = N_BUCKETS,
+               max_categories: int = 1000) -> Dict[str, Dict[str, float]]:
+    """Relative-frequency histograms for ALL ``cols`` in ONE Spark action
+    (see :class:`Histograms` for the labels and the category cap)."""
+    h = Histograms(cols, bounds, n_buckets=n_buckets,
+                   max_categories=max_categories)
+    return h.histograms(collect(df, [h]))[None]
 
 
 def grouped_histograms(df: DataFrame, group_col: str, cols: Sequence[str],
@@ -126,53 +145,8 @@ def grouped_histograms(df: DataFrame, group_col: str, cols: Sequence[str],
     ingest day / source / codec): the driver collects
     O(groups × cols × buckets) rows. NULL group values histogram under
     the literal label ``__null__`` (a NULL-group shard drifts too)."""
-    bounds = bounds or {}
-    dtypes = dict(df.dtypes)
-    entries = []
-    numeric_names = set()
-    for c in cols:
-        dt = dtypes[c].split("(")[0]
-        if dt in _NUMERIC:
-            lo, hi = _fix_bounds(*bounds.get(c, (None, None)))
-            label = F.concat(
-                F.lit("b"),
-                F.width_bucket(F.col(c).cast("double"), F.lit(lo), F.lit(hi),
-                               F.lit(n_buckets)).cast("bigint").cast("string"))
-            numeric_names.add(c)
-        else:
-            label = F.col(c).cast("string")
-        entries.append(F.struct(F.lit(c).alias("name"),
-                                F.when(F.col(c).isNotNull(), label)
-                                 .alias("label")))
-    pair = F.explode(F.array(*entries)).alias("p")
-    grp = F.coalesce(F.col(group_col).cast("string"), F.lit("__null__"))
-    counts = (df.select(grp.alias("grp"), pair)
-              .select("grp", F.col("p.name").alias("name"),
-                      F.col("p.label").alias("label"))
-              .filter(F.col("label").isNotNull())
-              .groupBy("grp", "name", "label")
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    w = Window.partitionBy("grp", "name")
-    ranked = counts.select(
-        "grp", "name", "label", "cnt",
-        F.sum("cnt").over(w).alias("total"),
-        F.row_number().over(
-            w.orderBy(F.desc("cnt"), F.col("label"))).alias("rn"))
-    keep = F.col("rn") <= max_categories
-    if numeric_names:
-        keep = keep | F.col("name").isin(*sorted(numeric_names))
-    out: Dict[str, Dict[str, Dict[str, float]]] = {}
-    for r in ranked.filter(keep).collect():
-        out.setdefault(r["grp"], {c: {} for c in cols})
-        out[r["grp"]][r["name"]][r["label"]] = r["cnt"] / r["total"]
-    for g, per_col in out.items():
-        for c in cols:
-            if c in numeric_names:
-                continue
-            rest = 1.0 - sum(per_col[c].values())
-            if rest > 1e-12:
-                per_col[c]["__other__"] = rest
-    return out
+    h = Histograms(cols, bounds, group_col, n_buckets, max_categories)
+    return h.histograms(collect(df, [h]))
 
 
 def drift_by_group_violations(
@@ -186,33 +160,8 @@ def drift_by_group_violations(
     (group, drifted column): ``(group, field_path, rule_id=DRIFT,
     message, actual='psi=..[,ks=..]')``. ONE Spark action (the grouped
     stacked histogram); pass ``ks_threshold=None`` to gate on PSI only."""
-    spark = df.sparkSession
-    cols = list(baseline.keys())
-    dtypes = dict(df.dtypes)
-    bounds = {c: _fix_bounds(s.get("lo"), s.get("hi"))
-              for c, s in baseline.items()
-              if dtypes[c].split("(")[0] in _NUMERIC}
-    gh = grouped_histograms(df, group_col, cols, bounds)
-    rows = []
-    for g in sorted(gh):
-        for c, snap in baseline.items():
-            cur = gh[g].get(c, {})
-            p = psi(snap["hist"], cur)
-            bad = p > psi_threshold
-            actual = f"psi={p:.4f}"
-            gates = [f"psi>{psi_threshold}"]
-            if ks_threshold is not None:
-                k = ks_stat(snap["hist"], cur)
-                bad = bad or k > ks_threshold
-                actual += f",ks={k:.4f}"
-                gates.append(f"ks>{ks_threshold}")
-            if bad:
-                rows.append((g, f"/{c}", Code.DRIFT,
-                             "group distribution drifts from the global "
-                             f"baseline ({' or '.join(gates)})", actual))
-    return spark.createDataFrame(
-        rows, f"`{group_col}` string, field_path string, rule_id string, "
-              "message string, actual string")
+    return Drift(baseline, psi_threshold, ks_threshold,
+                 group_col=group_col).frame(df)
 
 
 def histogram(df: DataFrame, col: str, lo: Optional[float] = None,
@@ -335,6 +284,73 @@ def load_snapshot(path: str) -> Dict[str, dict]:
         return json.load(f)
 
 
+class Drift(Check):
+    """The drift finder (:func:`drift_violations`, or
+    :func:`drift_by_group_violations` with ``group_col``): histograms
+    from the shared aggregate, PSI/KS (and optional chi2/JS) gates
+    evaluated on the driver."""
+
+    def __init__(self, baseline: Dict[str, dict], psi_threshold: float = 0.2,
+                 ks_threshold: Optional[float] = 0.1,
+                 chi2_threshold: Optional[float] = None,
+                 js_threshold: Optional[float] = None,
+                 group_col: Optional[str] = None):
+        self.baseline = baseline
+        self.psi_threshold = psi_threshold
+        self.ks_threshold = ks_threshold
+        self.chi2_threshold = chi2_threshold
+        self.js_threshold = js_threshold
+        self.group_col = group_col
+
+    def columns(self, df):
+        return ([(self.group_col, "string")] if self.group_col else []) \
+            + super().columns(df)
+
+    def plan(self, agg):
+        bounds = {c: _fix_bounds(s.get("lo"), s.get("hi"))
+                  for c, s in self.baseline.items()
+                  if agg.dtypes[c].split("(")[0] in _NUMERIC}
+        self._h = Histograms(list(self.baseline), bounds, self.group_col)
+        self._h.plan(agg)
+
+    def findings(self, res):
+        hists = self._h.histograms(res)
+        rows = []
+        for g in sorted(hists, key=lambda g: (g is not None, g)):
+            for c, snap in self.baseline.items():
+                cur = hists[g].get(c, {})
+                p = psi(snap["hist"], cur)
+                bad = p > self.psi_threshold
+                actual = f"psi={p:.4f}"
+                gates = [f"psi>{self.psi_threshold}"]
+                if self.ks_threshold is not None:  # None: PSI-only gating
+                    k = ks_stat(snap["hist"], cur)
+                    bad = bad or k > self.ks_threshold
+                    actual += f",ks={k:.4f}"
+                    gates.append(f"ks>{self.ks_threshold}")
+                if self.chi2_threshold is not None:
+                    x2 = chi2_distance(snap["hist"], cur)
+                    bad = bad or x2 > self.chi2_threshold
+                    actual += f",chi2={x2:.4f}"
+                    gates.append(f"chi2>{self.chi2_threshold}")
+                if self.js_threshold is not None:
+                    js = js_divergence(snap["hist"], cur)
+                    bad = bad or js > self.js_threshold
+                    actual += f",js={js:.4f}"
+                    gates.append(f"js>{self.js_threshold}")
+                if not bad:
+                    continue
+                if self.group_col:
+                    rows.append((g, f"/{c}", Code.DRIFT,
+                                 "group distribution drifts from the global "
+                                 f"baseline ({' or '.join(gates)})", actual))
+                else:
+                    rows.append((f"/{c}", Code.DRIFT,
+                                 "distribution drift exceeds thresholds "
+                                 f"({' or '.join(gates)})", actual))
+        return rows
+
+
 def drift_violations(
     df: DataFrame, baseline: Dict[str, dict],
     psi_threshold: float = 0.2, ks_threshold: Optional[float] = 0.1,
@@ -349,37 +365,5 @@ def drift_violations(
     distance and Jensen-Shannon gates (computed from the SAME
     histograms — no extra action); when enabled their values join the
     ``actual`` string."""
-    spark = df.sparkSession
-    cols = list(baseline.keys())
-    bounds = {c: _fix_bounds(s.get("lo"), s.get("hi"))
-              for c, s in baseline.items()
-              if dict(df.dtypes)[c].split("(")[0] in _NUMERIC}
-    hists = histograms(df, cols, bounds)
-    rows = []
-    for c, snap in baseline.items():
-        cur = hists[c]
-        p = psi(snap["hist"], cur)
-        bad = p > psi_threshold
-        actual = f"psi={p:.4f}"
-        gates = [f"psi>{psi_threshold}"]
-        if ks_threshold is not None:  # None: PSI-only gating
-            k = ks_stat(snap["hist"], cur)
-            bad = bad or k > ks_threshold
-            actual += f",ks={k:.4f}"
-            gates = [f"psi>{psi_threshold} or ks>{ks_threshold}"]
-        if chi2_threshold is not None:
-            x2 = chi2_distance(snap["hist"], cur)
-            bad = bad or x2 > chi2_threshold
-            actual += f",chi2={x2:.4f}"
-            gates.append(f"chi2>{chi2_threshold}")
-        if js_threshold is not None:
-            js = js_divergence(snap["hist"], cur)
-            bad = bad or js > js_threshold
-            actual += f",js={js:.4f}"
-            gates.append(f"js>{js_threshold}")
-        if bad:
-            rows.append((f"/{c}", Code.DRIFT,
-                         "distribution drift exceeds thresholds "
-                         f"({' or '.join(gates)})", actual))
-    return spark.createDataFrame(
-        rows, "field_path string, rule_id string, message string, actual string")
+    return Drift(baseline, psi_threshold, ks_threshold, chi2_threshold,
+                 js_threshold).frame(df)

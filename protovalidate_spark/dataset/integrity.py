@@ -17,10 +17,12 @@ Scale design (10^12 rows):
   table, so AQE picks broadcast when either side fits.
 - ``monotonic_violations``: one hash-partition-by-key window — the same
   shuffle a sessionization pass pays; no global sort.
-- ``volume_anomalies`` / ``calendar_gap_violations``: the per-partition
-  count aggregate collapses to partition-cardinality rows (thousands,
-  not trillions) before anything else happens; the mean/sequence step
-  runs on that tiny frame.
+- ``volume_anomalies`` / ``calendar_gap_violations`` /
+  ``freshness_violations``: slices of the shared aggregate
+  (dataset/fused.py) — the per-group count, distinct dates and max
+  timestamp collapse to group-cardinality rows (thousands, not
+  trillions) before anything else happens; the mean/sequence/cutoff
+  step runs on those.
 """
 
 from __future__ import annotations
@@ -31,8 +33,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..errors import Code
+from ..errors import ACTUAL_TRUNCATE, Code
 from ..rules.base import violation_struct
+from .fused import Check
 
 
 def reconciliation_violations(
@@ -179,6 +182,49 @@ def group_size_violations(
                       "_v.message", "_v.actual")
 
 
+class Volume(Check):
+    """The :func:`volume_anomalies` finder: per-group counts from the
+    shared aggregate (collected at group cardinality, with their mean
+    computed by Spark), gated on the driver. Group values ride as
+    strings and are cast back to the group expression's type."""
+
+    def __init__(self, group_expr: Column, group_name: str,
+                 max_rel_dev: float = 0.5, min_count: Optional[int] = None):
+        self.group_expr, self.group_name = group_expr, group_name
+        self.max_rel_dev, self.min_count = max_rel_dev, min_count
+
+    def columns(self, df):
+        return [(self.group_name, df.select(self.group_expr).schema[0]
+                 .dataType), ("cnt", "bigint")] + super().columns(df)
+
+    def plan(self, agg):
+        p = agg.scope()
+        self._k, self._a = f"{p}0", (f"{p}g", f"{p}mean")
+        agg.stack(self._k, self.group_expr)
+        agg.per_key(F.collect_list(agg.mine(
+            [self._k], F.struct("l1", "cnt"))).alias(self._a[0]))
+        agg.per_key(F.avg("cnt").alias(self._a[1]))
+
+    def findings(self, res):
+        r = res.key(self._k)
+        if r is None:
+            return []
+        mean = r[self._a[1]]
+        msg = (f"group row count deviates from mean by more than "
+               f"{self.max_rel_dev}"
+               + (f" or falls below {self.min_count}"
+                  if self.min_count is not None else ""))
+        rows = []
+        for e in r[self._a[0]]:
+            cnt = e["cnt"]
+            if abs(cnt - mean) / mean > float(self.max_rel_dev) or (
+                    self.min_count is not None
+                    and cnt < int(self.min_count)):
+                rows.append((e["l1"], cnt, f"/{self.group_name}", Code.DRIFT,
+                             msg, str(cnt)[:ACTUAL_TRUNCATE]))
+        return rows
+
+
 def volume_anomalies(
     df: DataFrame, group_expr: Column, group_name: str,
     max_rel_dev: float = 0.5, min_count: Optional[int] = None,
@@ -190,29 +236,43 @@ def volume_anomalies(
     distribution drift (same rows, different shape).
 
     The count aggregate collapses the input to group-cardinality rows
-    (map-side combined) before the tiny mean/compare step; the mean ride
-    in on a broadcast of a single aggregate row.
+    (map-side combined) before the tiny mean/compare step on the driver
+    (:class:`Volume`).
 
     Output: (group value as ``group_name``, cnt, field_path, rule_id,
     message, actual).
     """
-    counts = (df.groupBy(group_expr.alias(group_name))
-                .agg(F.count(F.lit(1)).alias("cnt")))
-    mean = counts.agg(F.avg("cnt").alias("__mean"))
-    j = counts.crossJoin(F.broadcast(mean))
-    rel_bad = (F.abs(F.col("cnt") - F.col("__mean")) / F.col("__mean")
-               > F.lit(float(max_rel_dev)))
-    floor_bad = (F.col("cnt") < F.lit(int(min_count))
-                 if min_count is not None else F.lit(False))
-    v = violation_struct(
-        f"/{group_name}", Code.DRIFT,
-        f"group row count deviates from mean by more than {max_rel_dev}"
-        + (f" or falls below {min_count}" if min_count is not None else ""),
-        F.col("cnt"))
-    return (j.filter(rel_bad | floor_bad)
-             .select(F.col(group_name), "cnt", v.alias("_v"))
-             .select(group_name, "cnt", "_v.field_path", "_v.rule_id",
-                     "_v.message", "_v.actual"))
+    return Volume(group_expr, group_name, max_rel_dev, min_count).frame(df)
+
+
+class Calendar(Check):
+    """The :func:`calendar_gap_violations` finder: the distinct dates
+    collapse in the shared aggregate, and the missing ones are
+    ``sequence(min, max)`` minus that set — computed (and formatted) by
+    Spark before the collect."""
+
+    def __init__(self, date_expr: Column, date_name: str):
+        self.date_expr, self.date_name = date_expr, date_name
+
+    def columns(self, df):
+        return [(self.date_name, "date")] + super().columns(df)
+
+    def plan(self, agg):
+        p = agg.scope()
+        self._k, self._a = f"{p}0", f"{p}missing"
+        d = self.date_expr.cast("date")
+        agg.stack(self._k, d, when=d.isNotNull())
+        day = agg.mine([self._k], F.col("l1").cast("date"))
+        agg.per_key(F.transform(
+            F.array_except(F.sequence(F.min(day), F.max(day)),
+                           F.collect_set(day)),
+            lambda x: x.cast("string")).alias(self._a))
+
+    def findings(self, res):
+        return [(d, f"/{self.date_name}", Code.REQUIRED,
+                 "calendar date missing between observed min and max",
+                 d[:ACTUAL_TRUNCATE])
+                for d in (res.key(self._k) or {}).get(self._a) or []]
 
 
 def calendar_gap_violations(df: DataFrame, date_expr: Column,
@@ -222,28 +282,55 @@ def calendar_gap_violations(df: DataFrame, date_expr: Column,
     ``REQUIRED`` violation (the "a whole ingest day is absent" check —
     the partition-level analog of the stats-delta REQUIRED column row).
 
-    Distinct-date collapse first (group-cardinality rows), then the
-    driver-free sequence explode runs on the single (min, max) row and
-    anti-joins the broadcast distinct-date set — no full-table second
-    pass.
+    Distinct-date collapse first (date-cardinality rows), then the
+    missing dates are ``sequence(min, max)`` minus the distinct set,
+    inside the same aggregate (:class:`Calendar`) — no full-table
+    second pass.
 
     Output: (missing date as ``date_name``, field_path, rule_id,
     message, actual).
     """
-    dates = df.select(date_expr.cast("date").alias(date_name)) \
-              .filter(F.col(date_name).isNotNull()).distinct()
-    bounds = dates.agg(F.min(date_name).alias("__lo"),
-                       F.max(date_name).alias("__hi"))
-    all_days = bounds.select(
-        F.explode(F.sequence(F.col("__lo"), F.col("__hi"))).alias(date_name))
-    missing = all_days.join(F.broadcast(dates), on=date_name,
-                            how="left_anti")
-    v = violation_struct(
-        f"/{date_name}", Code.REQUIRED,
-        "calendar date missing between observed min and max",
-        F.col(date_name))
-    return missing.select(F.col(date_name), v.alias("_v")).select(
-        date_name, "_v.field_path", "_v.rule_id", "_v.message", "_v.actual")
+    return Calendar(date_expr, date_name).frame(df)
+
+
+class Freshness(Check):
+    """The :func:`freshness_violations` finder: the newest timestamp per
+    group (or of the table) rides the shared aggregate's stacked
+    ``max(v)``; the staleness compare and the timestamp strings are
+    Spark's, before the collect."""
+
+    def __init__(self, ts_expr: Column, ts_name: str, max_age_hours: float,
+                 as_of: str, group_col: Optional[str] = None):
+        self.ts_expr, self.ts_name = ts_expr, ts_name
+        self.max_age_hours, self.as_of = max_age_hours, as_of
+        self.group_col = group_col
+
+    def columns(self, df):
+        keys = ([(self.group_col, df.schema[self.group_col].dataType)]
+                if self.group_col else [])
+        return keys + [("max_ts", "timestamp")] + super().columns(df)
+
+    def plan(self, agg):
+        p = agg.scope()
+        self._k, self._a = f"{p}0", f"{p}stale"
+        ts = self.ts_expr.cast("timestamp")
+        agg.stack(self._k, F.col(self.group_col) if self.group_col else None,
+                  v=ts, when=ts.isNotNull())
+        cutoff = F.to_timestamp(F.lit(self.as_of)) - F.expr(
+            f"INTERVAL {int(round(self.max_age_hours * 3600))} SECONDS")
+        agg.per_key(F.collect_list(agg.mine(
+            [self._k],
+            F.when(F.col("v") < cutoff,
+                   F.struct("l1", F.col("v").cast("string").alias("ts")))))
+            .alias(self._a))
+
+    def findings(self, res):
+        msg = (f"newest row older than {self.max_age_hours}h before "
+               f"{self.as_of}")
+        return [(*([e["l1"]] if self.group_col else []), e["ts"],
+                 f"/{self.ts_name}", Code.EXPIRED, msg,
+                 e["ts"][:ACTUAL_TRUNCATE])
+                for e in (res.key(self._k) or {}).get(self._a, [])]
 
 
 def freshness_violations(df: DataFrame, ts_expr: Column, ts_name: str,
@@ -261,31 +348,15 @@ def freshness_violations(df: DataFrame, ts_expr: Column, ts_name: str,
     pinned by the caller exactly like Time.WithMinDiff pins now at
     compile (temporal.py), so runs are reproducible and resumable.
 
-    One max() aggregation; with ``group_col`` it is a map-side-combined
-    (group, max_ts) shuffle of group-cardinality rows. Groups with NO
-    rows at all are the reconciliation/volume checks' finding (nothing
-    to aggregate here).
+    One max() per group in the shared aggregate (:class:`Freshness`): a
+    map-side-combined (group, max_ts) shuffle of group-cardinality
+    rows. Groups with NO rows at all are the reconciliation/volume
+    checks' finding (nothing to aggregate here).
 
     Output: ([group_col,] max_ts, field_path, rule_id, message, actual).
     """
-    cutoff = F.to_timestamp(F.lit(as_of)) - F.expr(
-        f"INTERVAL {int(round(max_age_hours * 3600))} SECONDS")
-    ts = ts_expr.cast("timestamp")
-    if group_col is not None:
-        agg = df.filter(ts.isNotNull()).groupBy(F.col(group_col)) \
-                .agg(F.max(ts).alias("max_ts"))
-        keys = [group_col]
-    else:
-        agg = df.agg(F.max(ts).alias("max_ts"))
-        keys = []
-    stale = agg.filter(F.col("max_ts") < cutoff)
-    v = violation_struct(
-        f"/{ts_name}", Code.EXPIRED,
-        f"newest row older than {max_age_hours}h before {as_of}",
-        F.col("max_ts"))
-    return stale.select(*keys, "max_ts", v.alias("_v")).select(
-        *keys, "max_ts", "_v.field_path", "_v.rule_id", "_v.message",
-        "_v.actual")
+    return Freshness(ts_expr, ts_name, max_age_hours, as_of,
+                     group_col).frame(df)
 
 
 def functional_dependency_violations(

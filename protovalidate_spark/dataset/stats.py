@@ -13,8 +13,11 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..errors import Code
+from .fused import Check, local_frame
 
 DEFAULT_QUANTILES = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 
@@ -24,33 +27,75 @@ _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
 def stats_aggs(dtypes: dict, cols: Sequence[str],
                quantiles: Sequence[float] = DEFAULT_QUANTILES,
                accuracy: int = 2500, exact_distinct: bool = False,
-               rsd: float = 0.05, exact_quantiles: bool = False) -> list:
+               rsd: float = 0.05, exact_quantiles: bool = False,
+               prefix: str = "") -> list:
     """The per-column aggregation expressions behind :func:`column_stats`
     — shared with streaming.windowed_column_stats so the batch and
-    per-window stats definitions can never drift apart."""
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    per-window stats definitions can never drift apart. ``prefix``
+    namespaces the aliases inside a shared aggregate."""
+    aggs = [F.count(F.lit(1)).alias(f"{prefix}__n")]
     for c in cols:
+        p = f"{prefix}{c}"
         base = dtypes[c].split("(")[0]
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.min(c).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(c).cast("string").alias(f"{c}__max"))
+        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{p}__nulls"))
+        aggs.append(F.min(c).cast("string").alias(f"{p}__min"))
+        aggs.append(F.max(c).cast("string").alias(f"{p}__max"))
         if exact_distinct:
-            aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__distinct"))
+            aggs.append(F.count_distinct(F.col(c)).alias(f"{p}__distinct"))
         else:
-            aggs.append(F.approx_count_distinct(c, rsd).alias(f"{c}__distinct"))
+            aggs.append(F.approx_count_distinct(c, rsd).alias(f"{p}__distinct"))
         if base in _NUMERIC and quantiles:
             if exact_quantiles:
                 aggs.append(F.percentile(
                     F.col(c).cast("double"),
                     F.array(*[F.lit(float(q)) for q in quantiles])
-                ).alias(f"{c}__q"))
+                ).alias(f"{p}__q"))
             else:
                 aggs.append(F.percentile_approx(
                     F.col(c).cast("double"), list(quantiles), accuracy
-                ).alias(f"{c}__q"))
+                ).alias(f"{p}__q"))
         else:
-            aggs.append(F.lit(None).cast("array<double>").alias(f"{c}__q"))
+            aggs.append(F.lit(None).cast("array<double>").alias(f"{p}__q"))
     return aggs
+
+
+_STATS_FIELDS = ("column", "n_rows", "null_rate", "min", "max",
+                 "approx_distinct", "quantiles")
+
+
+class ColumnStats(Check):
+    """Per-column stats as one slice of the shared aggregate: one row
+    per column, (column, n_rows, null_rate, min, max, approx_distinct,
+    quantiles)."""
+
+    def __init__(self, cols: Optional[Sequence[str]] = None,
+                 quantiles: Sequence[float] = DEFAULT_QUANTILES,
+                 accuracy: int = 2500, exact_distinct: bool = False,
+                 rsd: float = 0.05, exact_quantiles: bool = False):
+        self.cols = list(cols or [])
+        self.kw = dict(quantiles=quantiles, accuracy=accuracy,
+                       exact_distinct=exact_distinct, rsd=rsd,
+                       exact_quantiles=exact_quantiles)
+
+    def columns(self, df):
+        return [("column", "string"), ("n_rows", "bigint"),
+                ("null_rate", "double"), ("min", "string"),
+                ("max", "string"), ("approx_distinct", "bigint"),
+                ("quantiles", "array<double>")]
+
+    def plan(self, agg):
+        self._cols = list(self.cols or agg.df.columns)
+        self._p = agg.scope()
+        agg.glob(*stats_aggs(agg.dtypes, self._cols, prefix=self._p,
+                             **self.kw))
+
+    def findings(self, res):
+        g, p = res.g, self._p
+        n = g[f"{p}__n"]
+        return [(c, n, (g[f"{p}{c}__nulls"] / n) if n else 0.0,
+                 g[f"{p}{c}__min"], g[f"{p}{c}__max"],
+                 g[f"{p}{c}__distinct"], g[f"{p}{c}__q"])
+                for c in self._cols]
 
 
 def column_stats(
@@ -73,31 +118,9 @@ def column_stats(
     quantile_cont analog) — oracle mode only; the approx path is pinned
     within tolerance of it in tests/test_dataset.py.
     """
-    dtypes = dict(df.dtypes)
-    cols = list(cols or df.columns)
-    aggs = stats_aggs(dtypes, cols, quantiles=quantiles, accuracy=accuracy,
-                      exact_distinct=exact_distinct, rsd=rsd,
-                      exact_quantiles=exact_quantiles)
-    row: Row = df.agg(*aggs).collect()[0]
-
-    n = row["__n"]
-    out = [
-        (
-            c,
-            n,
-            (row[f"{c}__nulls"] / n) if n else 0.0,
-            row[f"{c}__min"],
-            row[f"{c}__max"],
-            row[f"{c}__distinct"],
-            row[f"{c}__q"],
-        )
-        for c in cols
-    ]
-    return df.sparkSession.createDataFrame(
-        out,
-        "column string, n_rows long, null_rate double, min string, max string, "
-        "approx_distinct long, quantiles array<double>",
-    )
+    return ColumnStats(cols, quantiles=quantiles, accuracy=accuracy,
+                       exact_distinct=exact_distinct, rsd=rsd,
+                       exact_quantiles=exact_quantiles).frame(df)
 
 
 def heavy_hitters(df: DataFrame, cols: Optional[Sequence[str]] = None,
@@ -140,26 +163,36 @@ def heavy_hitters(df: DataFrame, cols: Optional[Sequence[str]] = None,
 def stats_snapshot(df: DataFrame, cols: Optional[Sequence[str]] = None,
                    exact_distinct: bool = False,
                    entropy_cols: Sequence[str] = ()) -> dict:
-    """JSON-serializable per-column stats baseline (ONE aggregation;
-    ``entropy_cols`` adds one stacked melt+agg pass recording Shannon
-    entropy for those categoricals — dataset/metrics.py arithmetic —
-    so the drift check can gate on entropy movement). Records each
+    """JSON-serializable per-column stats baseline (ONE action;
+    ``entropy_cols`` adds stacked value counts to the same shared
+    aggregate, recording Shannon entropy for those categoricals —
+    dataset/metrics.py arithmetic — so the drift check can gate on
+    entropy movement). Records each
     column's Spark dtype so the drift check can flag a TYPE change
     (older snapshots without it are still accepted)."""
     dtypes = dict(df.dtypes)
-    rows = column_stats(df, cols, exact_distinct=exact_distinct).collect()
-    snap = {r["column"]: {
-        "n_rows": r["n_rows"], "null_rate": r["null_rate"],
-        "min": r["min"], "max": r["max"],
-        "distinct": r["approx_distinct"], "quantiles": r["quantiles"],
-        "dtype": dtypes[r["column"]],
-    } for r in rows}
-    if entropy_cols:
-        from .metrics import column_entropy
-        for r in column_entropy(df, list(entropy_cols)).collect():
-            snap.setdefault(r["column"], {"dtype": dtypes[r["column"]]})[
-                "entropy"] = r["entropy"]
+    stats, ent = _stats_and_entropy(df, cols, exact_distinct, entropy_cols)
+    snap = {c: {
+        "n_rows": n, "null_rate": nr, "min": lo, "max": hi,
+        "distinct": d, "quantiles": q, "dtype": dtypes[c],
+    } for c, n, nr, lo, hi, d, q in stats}
+    for c, e in ent.items():
+        snap.setdefault(c, {"dtype": dtypes[c]})["entropy"] = e
     return snap
+
+
+def _stats_and_entropy(df: DataFrame, cols, exact_distinct: bool,
+                       entropy_cols: Sequence[str]):
+    """(:class:`ColumnStats` rows, {column: entropy}) from ONE shared
+    aggregate."""
+    from .fused import collect
+    from .metrics import Entropy
+    stats = ColumnStats(cols, exact_distinct=exact_distinct)
+    ent = Entropy(list(entropy_cols))
+    res = collect(df, [stats, ent] if entropy_cols else [stats])
+    return (stats.findings(res),
+            {c: e for c, _, _, e, _ in ent.metrics(res)}
+            if entropy_cols else {})
 
 
 def stats_drift_violations(df: DataFrame, baseline: dict,
@@ -181,8 +214,7 @@ def stats_drift_violations(df: DataFrame, baseline: dict,
       with ``entropy_cols``) moved by more than ``entropy_jump`` nats
       either way — the distribution-SHAPE regression null-rate and
       cardinality both miss (same categories, same nulls, but one value
-      now dominates); costs one extra stacked agg over only those
-      columns.
+      now dominates); its value counts ride the same aggregate.
 
     A baseline column MISSING from the current schema is itself a
     violation (rule_id=REQUIRED, the loudest regression of all) — it is
@@ -193,20 +225,14 @@ def stats_drift_violations(df: DataFrame, baseline: dict,
     rule_id=UNEXPECTED — opt-in, because snapshots may deliberately
     profile a column subset (the DSL analog: ``with_unknown``).
 
-    ONE aggregation for all columns; thresholds are deliberately coarse
+    ONE action for all columns; thresholds are deliberately coarse
     gates, not statistics — use dataset/drift.py for distribution shape.
     """
-    spark = df.sparkSession
     dtypes = dict(df.dtypes)
     cols = [c for c in baseline.keys() if c in dtypes]
-    cur = {r["column"]: r for r in
-           column_stats(df, cols, exact_distinct=exact_distinct).collect()}
     ent_cols = [c for c in cols if baseline[c].get("entropy") is not None]
-    cur_ent = {}
-    if ent_cols:
-        from .metrics import column_entropy
-        cur_ent = {r["column"]: r["entropy"] for r in
-                   column_entropy(df, ent_cols).collect()}
+    stats, cur_ent = _stats_and_entropy(df, cols, exact_distinct, ent_cols)
+    cur = {r[0]: dict(zip(_STATS_FIELDS, r)) for r in stats}
     rows = [(f"/{c}", "REQUIRED",
              "baseline column missing from current schema", None)
             for c in baseline.keys() if c not in dtypes]
@@ -268,8 +294,9 @@ def stats_drift_violations(df: DataFrame, baseline: dict,
             rows.append((f"/{c}", "DRIFT",
                          "column statistics regressed vs baseline snapshot",
                          "; ".join(probs)))
-    return spark.createDataFrame(
-        rows, "field_path string, rule_id string, message string, actual string")
+    return local_frame(df.sparkSession, rows,
+                       [(c, "string") for c in ("field_path", "rule_id",
+                                                "message", "actual")])
 
 
 def grouped_column_stats(
@@ -319,6 +346,66 @@ def grouped_column_stats(
         "s.min", "s.max", "s.approx_distinct", "s.quantiles")
 
 
+class StatsBounds(Check):
+    """The :func:`stats_bounds_violations` finder over the shared
+    aggregate (its column stats skip the unused quantile sketches)."""
+
+    def __init__(self, specs: Sequence[dict], exact_distinct: bool = False):
+        self.specs = list(specs)
+        self.exact_distinct = exact_distinct
+
+    def plan(self, agg):
+        cols = [s["col"] for s in self.specs]
+        missing = [c for c in cols if c not in agg.dtypes]
+        if missing:
+            raise ValueError(f"stats_bounds_violations: columns not in "
+                             f"table: {missing}")
+        bad = [s["col"] for s in self.specs
+               if ("min" in s or "max" in s)
+               and agg.dtypes[s["col"]].split("(")[0]
+               not in _NUMERIC | {"decimal"}]
+        if bad:
+            raise ValueError(
+                f"stats_bounds_violations: value bounds (min/max) require "
+                f"numeric columns, got non-numeric: {bad} — use the DSL "
+                f"string comparators for lexicographic bounds")
+        self._stats = ColumnStats(cols, quantiles=(),
+                                  exact_distinct=self.exact_distinct)
+        self._stats.plan(agg)
+
+    def findings(self, res):
+        st = {r[0]: dict(zip(_STATS_FIELDS, r))
+              for r in self._stats.findings(res)}
+        rows = []
+        for s in self.specs:
+            c = s["col"]
+            r = st[c]
+            if "max_null_rate" in s and r["null_rate"] > s["max_null_rate"]:
+                rows.append((f"/{c}/null_rate", Code.NULL,
+                             f"null rate above maximum {s['max_null_rate']}",
+                             f"{round(r['null_rate'], 6):g}"))
+            d = r["approx_distinct"]
+            if "min_distinct" in s and d < s["min_distinct"]:
+                rows.append((f"/{c}/distinct", Code.MIN,
+                             f"distinct count below minimum "
+                             f"{s['min_distinct']}", str(d)))
+            if "max_distinct" in s and d > s["max_distinct"]:
+                rows.append((f"/{c}/distinct", Code.MAX,
+                             f"distinct count above maximum "
+                             f"{s['max_distinct']}", str(d)))
+            if "min" in s and r["min"] is not None \
+                    and float(r["min"]) < s["min"]:
+                rows.append((f"/{c}/min", Code.MIN,
+                             f"observed minimum below bound {s['min']}",
+                             r["min"]))
+            if "max" in s and r["max"] is not None \
+                    and float(r["max"]) > s["max"]:
+                rows.append((f"/{c}/max", Code.MAX,
+                             f"observed maximum above bound {s['max']}",
+                             r["max"]))
+        return rows
+
+
 def stats_bounds_violations(df: DataFrame, specs: Sequence[dict],
                             exact_distinct: bool = False) -> DataFrame:
     """Deequ-style ABSOLUTE column assertions over ONE ``column_stats``
@@ -340,50 +427,4 @@ def stats_bounds_violations(df: DataFrame, specs: Sequence[dict],
 
     The driver loop is O(#specs) over the collected per-column stat
     rows — the table itself is touched by exactly the one agg scan."""
-    from ..errors import Code
-    cols = [s["col"] for s in specs]
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"stats_bounds_violations: columns not in "
-                         f"table: {missing}")
-    dtypes = dict(df.dtypes)
-    bad = [s["col"] for s in specs
-           if ("min" in s or "max" in s)
-           and dtypes[s["col"]].split("(")[0] not in _NUMERIC | {"decimal"}]
-    if bad:
-        raise ValueError(
-            f"stats_bounds_violations: value bounds (min/max) require "
-            f"numeric columns, got non-numeric: {bad} — use the DSL "
-            f"string comparators for lexicographic bounds")
-    st = {r["column"]: r for r in
-          column_stats(df, cols, exact_distinct=exact_distinct).collect()}
-    rows = []
-    for s in specs:
-        c = s["col"]
-        r = st[c]
-        if "max_null_rate" in s and r["null_rate"] > s["max_null_rate"]:
-            rows.append((f"/{c}/null_rate", Code.NULL,
-                         f"null rate above maximum {s['max_null_rate']}",
-                         f"{round(r['null_rate'], 6):g}"))
-        d = r["approx_distinct"]
-        if "min_distinct" in s and d < s["min_distinct"]:
-            rows.append((f"/{c}/distinct", Code.MIN,
-                         f"distinct count below minimum "
-                         f"{s['min_distinct']}", str(d)))
-        if "max_distinct" in s and d > s["max_distinct"]:
-            rows.append((f"/{c}/distinct", Code.MAX,
-                         f"distinct count above maximum "
-                         f"{s['max_distinct']}", str(d)))
-        if "min" in s and r["min"] is not None \
-                and float(r["min"]) < s["min"]:
-            rows.append((f"/{c}/min", Code.MIN,
-                         f"observed minimum below bound {s['min']}",
-                         r["min"]))
-        if "max" in s and r["max"] is not None \
-                and float(r["max"]) > s["max"]:
-            rows.append((f"/{c}/max", Code.MAX,
-                         f"observed maximum above bound {s['max']}",
-                         r["max"]))
-    return df.sparkSession.createDataFrame(
-        rows,
-        "field_path string, rule_id string, message string, actual string")
+    return StatsBounds(specs, exact_distinct).frame(df)

@@ -4,20 +4,29 @@ Combines:
 - row-level object rule set (ONE projection, whole-stage codegen; audio
   decode wired in as ONE Arrow batch stage, decoded struct computed once
   and reused — SURVEY.md §4),
-- dataset-level checks (uniqueness, referential, drift) which scan the RAW
-  input (no decode cost),
+- scan-based dataset checks (uniqueness, referential, label conflicts,
+  monotonicity, reconciliation, outliers) which scan the RAW input (no
+  decode cost),
+- aggregate-shaped table checks (stats bounds, drift and per-group
+  drift, entropy / correlation / MI bounds, volume, calendar,
+  freshness) and the ``with_stats`` column stats, all fed by ONE shared
+  aggregate (dataset/fused.py),
 - per-partition verdicts.
 
 Scan budget at scale: row pass (1 scan incl. decode) + uniqueness
 (1 scan of key column only — parquet column pruning) + referential
-(1 scan of ref column only) + drift (1 scan of drifted columns) +
-row-count agg (metadata-cheap). Violations are persisted (or written to a
-sink) so verdict aggregation never re-runs the decode stage.
+(1 scan of ref column only) + the shared aggregate (at most 2 scans of
+the columns its checks read: one stacked count, one global agg) +
+row-count agg (metadata-cheap). ``run`` fires exactly ONE driver action
+— the shared aggregate's collect (outlier and embedding-drift specs
+without frozen parameters add their own parameter aggs); its findings
+re-enter the violation union as one JVM-local relation. Violations are
+persisted (or written to a sink) so verdict aggregation never re-runs
+the decode stage.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Dict, Optional, Sequence, Tuple
 
@@ -26,9 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .audio.decode import decode_ok_rule, with_decoded
-from .dataset.drift import drift_violations
+from .dataset.fused import collect, local_frame
 from .dataset.referential import ref_violations
-from .dataset.stats import column_stats
+from .dataset.stats import ColumnStats
 from .dataset.uniqueness import unique_violations
 from .rules.binary import BinaryRuleSet
 from .rules.object import ObjectRuleSet
@@ -37,9 +46,8 @@ from .rules.object import ObjectRuleSet
 @dataclass
 class RunResult:
     violations: DataFrame        # (row keys..., part?, field_path, rule_id, message, actual)
-    verdicts: DataFrame          # (part, pass, rows_scanned, violations, wall_ms)
+    verdicts: DataFrame          # (part, pass, rows_scanned, violations)
     stats: Optional[DataFrame]
-    wall_ms: int
     # pre-cap stream when max_exemplars_per_rule > 0 (exact counts live
     # here); identical to `violations` otherwise
     violations_full: Optional[DataFrame] = None
@@ -102,8 +110,8 @@ class ValidationSuite:
     embedding_drift: Sequence[dict] = ()
     # absolute stats assertions (dataset/stats.py
     # stats_bounds_violations specs: {"col", "max_null_rate",
-    # "min_distinct"/"max_distinct", "min"/"max"}). NOTE: eager — the
-    # one column_stats agg fires at plan-build time, like outliers
+    # "min_distinct"/"max_distinct", "min"/"max"}) — evaluated on the
+    # driver from the shared aggregate's global agg (the one action)
     stats_bounds: Sequence[dict] = ()
     # information-metric bound specs (dataset/metrics.py): each dict is
     # {"kind": "entropy", "cols": [...], "min_entropy"/"max_entropy"} |
@@ -168,7 +176,52 @@ class ValidationSuite:
         keep = self._keep()
         return rules.violations(work, row_key_cols=keep)
 
+    def _aggregate_checks(self) -> list:
+        """The aggregate-shaped checks, each with the name of the output
+        column whose value the suite appends to its message."""
+        from .dataset.drift import Drift
+        from .dataset.integrity import Calendar, Freshness, Volume
+        from .dataset.metrics import (Correlation, Entropy,
+                                      MutualInformation)
+        from .dataset.stats import StatsBounds
+        out = []
+        if self.stats_bounds:
+            out.append((StatsBounds(list(self.stats_bounds)), None))
+        for spec in self.metrics:
+            s_ = dict(spec)
+            kind = {"entropy": Entropy, "corr": Correlation,
+                    "mi": MutualInformation}[s_.pop("kind")]
+            out.append((kind(**s_).bounded(), None))
+        for spec in self.volume_specs:
+            gc = spec["group_col"]
+            out.append((Volume(F.col(gc), gc,
+                               max_rel_dev=spec.get("max_rel_dev", 0.5),
+                               min_count=spec.get("min_count")), gc))
+        for c in self.calendar_cols:
+            out.append((Calendar(F.col(c), c), None))
+        for spec in self.freshness:
+            gc = spec.get("group_col")
+            out.append((Freshness(F.col(spec["ts_col"]), spec["ts_col"],
+                                  spec["max_age_hours"], spec["as_of"],
+                                  group_col=gc), gc))
+        if self.drift_baseline:
+            out.append((Drift(self.drift_baseline, self.psi_threshold,
+                              self.ks_threshold), None))
+            if self.drift_group_col:
+                out.append((Drift(self.drift_baseline, self.psi_threshold,
+                                  self.ks_threshold,
+                                  group_col=self.drift_group_col),
+                            self.drift_group_col))
+        return out
+
     def dataset_violations(self, df: DataFrame) -> list:
+        return self._dataset_parts(df)[0]
+
+    def _dataset_parts(self, df: DataFrame, stats_cols=None):
+        """(dataset-level violation frames, column-stats frame or None).
+        The aggregate-shaped checks and the stats share ONE aggregate of
+        ``df`` — the one driver action of a suite run — and return as
+        one JVM-local frame."""
         keep = self._keep()
         out = []
         for cols in self.unique:
@@ -185,30 +238,15 @@ class ValidationSuite:
         part = ([F.lit(None).cast("date").alias(self.partition_col)]
                 if self.partition_col else [])
 
-        def _tag(v: DataFrame, label_col: Optional[str] = None,
-                 label_name: Optional[str] = None) -> DataFrame:
+        def _tag(v: DataFrame, label_col: Optional[str] = None) -> DataFrame:
             """Project a table-level check's rows into the suite shape:
             NULL row keys; an identifying column rides in the message."""
-            msg = (F.concat(F.col("message"), F.lit(f" [{label_name}="),
+            msg = (F.concat(F.col("message"), F.lit(f" [{label_col}="),
                             F.col(label_col).cast("string"), F.lit("]"))
                    if label_col else F.col("message"))
             return v.select(*null_keys, *part, "field_path", "rule_id",
                             msg.alias("message"), "actual")
 
-        if self.stats_bounds:
-            from .dataset.stats import stats_bounds_violations
-            out.append(_tag(stats_bounds_violations(
-                df, list(self.stats_bounds))))
-        for spec in self.metrics:
-            from .dataset.metrics import (correlation_violations,
-                                          entropy_violations,
-                                          mutual_information_violations)
-            s_ = dict(spec)
-            kind = s_.pop("kind")
-            fn = {"entropy": entropy_violations,
-                  "corr": correlation_violations,
-                  "mi": mutual_information_violations}[kind]
-            out.append(_tag(fn(df, **s_)))
         for spec in self.outliers:
             from .dataset.outliers import (iqr_outlier_violations,
                                            mad_outlier_violations)
@@ -222,26 +260,7 @@ class ValidationSuite:
         for spec in self.reconciliations:
             from .dataset.integrity import reconciliation_violations
             rv = reconciliation_violations(df, **spec)
-            out.append(_tag(rv, spec["dim_key"], spec["dim_key"]))
-        for spec in self.volume_specs:
-            from .dataset.integrity import volume_anomalies
-            gc = spec["group_col"]
-            vv = volume_anomalies(
-                df, F.col(gc), gc,
-                max_rel_dev=spec.get("max_rel_dev", 0.5),
-                min_count=spec.get("min_count"))
-            out.append(_tag(vv, gc, gc))
-        for c in self.calendar_cols:
-            from .dataset.integrity import calendar_gap_violations
-            out.append(_tag(calendar_gap_violations(df, F.col(c), c)))
-        for spec in self.freshness:
-            from .dataset.integrity import freshness_violations
-            fv = freshness_violations(
-                df, F.col(spec["ts_col"]), spec["ts_col"],
-                spec["max_age_hours"], spec["as_of"],
-                group_col=spec.get("group_col"))
-            gc = spec.get("group_col")
-            out.append(_tag(fv, gc, gc) if gc else _tag(fv))
+            out.append(_tag(rv, spec["dim_key"]))
         for spec in self.embedding_drift:
             from .dataset.embedding import embedding_drift_violations
             ev = embedding_drift_violations(
@@ -249,28 +268,46 @@ class ValidationSuite:
                 z_threshold=spec.get("z_threshold", 1.0),
                 max_drift_frac=spec.get("max_drift_frac", 0.1))
             out.append(_tag(ev))
-        if self.drift_baseline:
-            d = drift_violations(df, self.drift_baseline,
-                                 self.psi_threshold, self.ks_threshold)
-            out.append(d.select(*null_keys, *part,
-                                "field_path", "rule_id", "message", "actual"))
-            if self.drift_group_col:
-                from .dataset.drift import drift_by_group_violations
-                g = drift_by_group_violations(
-                    df, self.drift_group_col, self.drift_baseline,
-                    self.psi_threshold, self.ks_threshold)
-                out.append(g.select(
-                    *null_keys, *part, "field_path", "rule_id",
-                    F.concat(F.col("message"),
-                             F.lit(f" [{self.drift_group_col}="),
-                             F.col(self.drift_group_col), F.lit("]"))
-                    .alias("message"), "actual"))
-        return out
+
+        checks = self._aggregate_checks()
+        stats = ColumnStats(stats_cols) if stats_cols is not None else None
+        if not checks and stats is None:
+            return out, None
+        res = collect(df, [c for c, _ in checks] + ([stats] if stats else []))
+        spark = df.sparkSession
+        blank = (None,) * (len(self.row_keys) + len(part))
+        rows = []
+        for check, tag in checks:
+            names = [n for n, _ in check.columns(df)]
+            for r in check.findings(res):
+                f = dict(zip(names, r))
+                msg = f["message"]
+                if tag:
+                    label = f[tag]
+                    msg = None if label is None else f"{msg} [{tag}={label}]"
+                rows.append(blank + (f["field_path"], f["rule_id"], msg,
+                                     f["actual"]))
+        if checks:
+            out.append(local_frame(
+                spark, rows,
+                [(k, "string") for k in self.row_keys]
+                + [(self.partition_col, "date")] * len(part)
+                + [(c, "string") for c in
+                   ("field_path", "rule_id", "message", "actual")]))
+        stats_df = (local_frame(spark, stats.findings(res), stats.columns(df))
+                    if stats else None)
+        return out, stats_df
 
     def run(self, df: DataFrame, with_stats: bool = False,
             persist: bool = True) -> RunResult:
-        t0 = time.time()
-        parts = [self.row_violations(df)] + self.dataset_violations(df)
+        """One suite pass. Plan building fires ONE driver action — the
+        shared aggregate of the table-level checks (and the column stats
+        with ``with_stats``) — plus the parameter aggs of outlier and
+        embedding-drift specs without frozen parameters; everything else
+        stays lazy until the caller acts on the returned frames."""
+        dparts, stats = self._dataset_parts(
+            df, (list(self.stats_cols) or df.columns) if with_stats else None)
+        parts = [self.row_violations(df)] + dparts
         violations = parts[0]
         for p in parts[1:]:
             violations = violations.unionByName(p.select(*violations.columns))
@@ -296,7 +333,6 @@ class ValidationSuite:
             verdicts = (rows.crossJoin(vio)
                         .withColumn("pass", F.col("violations") == 0))
 
-        stats = column_stats(df, list(self.stats_cols)) if with_stats else None
         out_violations = violations
         if self.max_exemplars_per_rule > 0:
             # verdicts above reference the PRE-cap (persisted) frame, so
@@ -305,7 +341,5 @@ class ValidationSuite:
             out_violations = cap_exemplars(
                 violations, list(self.row_keys),
                 self.max_exemplars_per_rule)
-        wall_ms = int((time.time() - t0) * 1000)
-        verdicts = verdicts.withColumn("wall_ms", F.lit(wall_ms))
-        return RunResult(out_violations, verdicts, stats, wall_ms,
+        return RunResult(out_violations, verdicts, stats,
                          violations_full=violations)

@@ -31,6 +31,7 @@ verbatim through the same ``_enc``/``_dec`` value codec.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from typing import Sequence
 
@@ -51,6 +52,17 @@ _SPEC_FIELDS = (
     "label_conflicts", "monotonic", "volume_specs", "freshness",
     "embedding_drift", "stats_bounds", "metrics", "outliers",
 )
+_DEFAULTS = {f.name: f.default for f in dataclasses.fields(ValidationSuite)}
+
+
+def _is_default(name: str, v) -> bool:
+    """Compare against the dataclass default, never truthiness: a
+    zero-valued threshold (psi_threshold=0.0) is the STRICTEST gate and
+    must survive the round-trip."""
+    d = _DEFAULTS[name]
+    if isinstance(d, tuple) and isinstance(v, (list, tuple)):
+        return tuple(v) == d
+    return v == d
 
 
 def suite_to_dict(suite: ValidationSuite, *,
@@ -65,7 +77,7 @@ def suite_to_dict(suite: ValidationSuite, *,
     out: dict = {"rules": ruleset_to_dict(suite.rules)}
     for f in _PLAIN_FIELDS:
         v = getattr(suite, f)
-        if v or isinstance(v, int) and v != 0:
+        if not _is_default(f, v):
             out[f] = _enc(v)
     if suite.unique:
         out["unique"] = [list(g) for g in suite.unique]

@@ -18,6 +18,16 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def tiny_table(spark, tmp_path_factory):
+    """The TINY profile written ONCE as a part_date-partitioned parquet
+    table, shared read-only (tests that rewrite or append to a table
+    write their own)."""
+    from protovalidate_spark.fixtures import TINY, write_clips
+    return write_clips(spark, str(tmp_path_factory.mktemp("tiny_table")),
+                       TINY)
+
+
+@pytest.fixture(scope="session")
 def tiny_clips(spark):
     from protovalidate_spark.fixtures import TINY, clips_df
     df = clips_df(spark, TINY).persist()

@@ -77,10 +77,28 @@ def test_histogram_categorical(spark):
     assert abs(h["a"] - 0.7) < 1e-9 and abs(h["b"] - 0.3) < 1e-9
 
 
+def test_histograms_skip_nan_like_null(spark):
+    """width_bucket is NULL for NaN: a NaN value drops out of a numeric
+    histogram exactly like a NULL (the frequencies of the other values
+    are unchanged), and the drift gates never see a NULL label."""
+    from pyspark.sql import functions as F
+    from protovalidate_spark.dataset import drift_violations, snapshot
+    from protovalidate_spark.dataset.drift import histograms
+    df = spark.createDataFrame(
+        [(1.0,), (2.0,), (2.5,), (float("nan"),), (None,)], "v double")
+    assert histograms(df, ["v"], {"v": (0.0, 4.0)}, n_buckets=4) == \
+        {"v": {"b2": 0.3333333333333333, "b3": 0.6666666666666666}}
+    # the NaN row does not move the table off its NaN-free snapshot
+    base = snapshot(df.filter(~F.isnan("v")), ["v"])
+    assert drift_violations(df, base, 0.0, 0.0).collect() == []
+
+
 def _count_actions(monkeypatch):
     """Count driver actions (collect/count/toPandas) fired on any
-    DataFrame — the O(columns)-scans regression guard for drift."""
-    from pyspark.sql import DataFrame
+    DataFrame — the O(columns)-scans regression guard for drift.
+    Patched on PySpark 4's concrete classic DataFrame, which overrides
+    the actions of ``pyspark.sql.DataFrame``."""
+    from pyspark.sql.classic.dataframe import DataFrame
     calls = {"n": 0}
     orig_collect, orig_count = DataFrame.collect, DataFrame.count
     orig_topandas = DataFrame.toPandas
@@ -556,25 +574,35 @@ def test_mutual_information_and_gate(spark):
         df, "x", "y", min_mi=0.0, max_mi=exp + 0.01).count() == 0
 
 
-def test_metrics_plan_shapes(spark):
-    """Scale pins: entropy/MI shuffle O(distinct) rows via map-side
-    partial counts; correlation is one single-row agg with partials;
-    the MI marginal joins are broadcasts; no Python UDF stages."""
+def test_metrics_plan_shapes(spark, monkeypatch):
+    """Scale pins on the aggregate each metric collects: entropy/MI
+    shuffle O(distinct) rows via map-side partial counts; correlation is
+    one single-row agg with partials; the MI marginals are window sums
+    over the pair counts (no join); no Python UDF stages."""
+    from pyspark.sql.classic.dataframe import DataFrame
     from protovalidate_spark.dataset import (column_entropy, correlation,
                                              mutual_information)
     df = spark.createDataFrame(
         [(i, str(i % 3), str(i % 2), float(i)) for i in range(100)],
         "id int, x string, y string, v double")
-    for frame in (column_entropy(df, ["x", "y"]),
-                  correlation(df, "id", "v"),
-                  mutual_information(df, "x", "y")):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
+    plans = []
+    orig = DataFrame.collect
+
+    def record(self, *a, **k):
+        out = orig(self, *a, **k)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+    monkeypatch.setattr(DataFrame, "collect", record)
+    column_entropy(df, ["x", "y"])
+    correlation(df, "id", "v")
+    mutual_information(df, "x", "y")
+    monkeypatch.undo()
+    assert len(plans) == 3
+    for plan in plans:
         assert "partial" in plan.lower()
         assert "ArrowEvalPython" not in plan
         assert "BatchEvalPython" not in plan
-    mi_plan = mutual_information(df, "x", "y") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in mi_plan
+    assert "Window" in plans[2] and "Join" not in plans[2]
 
 
 def test_suite_integration_metrics_specs(spark):

@@ -10,17 +10,14 @@ engine claims (SURVEY.md §4) asserted against `.explain` output:
 
 from protovalidate_spark.clips import clips_suite
 from protovalidate_spark.dataset import ref_violations, unique_violations
-from protovalidate_spark.fixtures import TINY, write_clips
 
 
 import pytest
 
 
 @pytest.fixture(scope="module")
-def clips_path(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("plans") / "clips")
-    write_clips(spark, path, TINY)
-    return path
+def clips_path(tiny_table):
+    return tiny_table
 
 
 def _plan(df):
@@ -178,20 +175,31 @@ def test_monotonic_is_single_key_shuffle(spark):
     assert "rangepartitioning" not in plan.lower()  # no global sort
 
 
-def test_volume_calendar_collapse_before_compare(spark):
+def test_volume_calendar_collapse_before_compare(spark, monkeypatch):
     """Volume/calendar checks aggregate to group cardinality FIRST; the
-    mean/sequence side rides a broadcast, never a fact-side shuffle."""
+    mean and the missing-date sequence are computed on those rows inside
+    the shared aggregate — no join, never a fact-side shuffle — and the
+    findings come back as a JVM-local frame."""
     from pyspark.sql import functions as F
     from protovalidate_spark.dataset import (calendar_gap_violations,
                                              volume_anomalies)
     df = spark.range(1000).select(
         F.date_add(F.lit("2024-01-01").cast("date"),
                    (F.col("id") % 20).cast("int")).alias("d"))
-    vplan = _plan(volume_anomalies(df, F.col("d"), "d", 0.5))
-    assert vplan.count("HashAggregate") >= 2      # map-side partials
-    assert "BroadcastNestedLoopJoin" in vplan or "BroadcastExchange" in vplan
-    cplan = _plan(calendar_gap_violations(df, F.col("d"), "d"))
-    assert "BroadcastHashJoin" in cplan and "LeftAnti" in cplan
+    cls = type(df)
+    collected = []
+    orig = cls.collect
+
+    def record(self, *a, **k):
+        collected.append(self)
+        return orig(self, *a, **k)
+    monkeypatch.setattr(cls, "collect", record)
+    for v in (volume_anomalies(df, F.col("d"), "d", 0.5),
+              calendar_gap_violations(df, F.col("d"), "d")):
+        agg = _plan(collected.pop())
+        assert agg.count("HashAggregate") >= 2    # map-side partials
+        assert "Join" not in agg
+        assert "ExistingRDD" not in _plan(v)
 
 
 def test_embedding_snapshot_is_single_row_agg(spark):

@@ -12,10 +12,9 @@ from protovalidate_spark.runner import (
 )
 
 
-def test_resume_from_manifest(spark, tmp_path_factory):
-    table = str(tmp_path_factory.mktemp("clips_table"))
+def test_resume_from_manifest(spark, tiny_table, tmp_path_factory):
+    table = tiny_table
     out = str(tmp_path_factory.mktemp("run_out"))
-    write_clips(spark, table, TINY)
     suite = clips_suite(spark)
 
     # first run dies after 7 partitions

@@ -13,19 +13,13 @@ from pyspark.sql.functions import pandas_udf
 
 from protovalidate_spark.clips import clips_suite
 from protovalidate_spark.errors import Code
-from protovalidate_spark.fixtures import TINY, expected_violations, write_clips
+from protovalidate_spark.fixtures import TINY, expected_violations
 from protovalidate_spark.runner import (
     completed_partitions, read_manifest, run_checkpointed,
     verdicts_from_outputs,
 )
 from protovalidate_spark.rules.object import ObjectRule
 from protovalidate_spark.suite import ValidationSuite
-
-
-def _table(spark, tmp_path_factory):
-    table = str(tmp_path_factory.mktemp("clips_table"))
-    write_clips(spark, table, TINY)
-    return table
 
 
 def _slow_suite(spark, secs: float):
@@ -44,8 +38,9 @@ def _slow_suite(spark, secs: float):
         suite, extra_object_rules=suite.extra_object_rules + (rule,))
 
 
-def test_partition_timeout_row_and_resume(spark, tmp_path_factory):
-    table = _table(spark, tmp_path_factory)
+def test_partition_timeout_row_and_resume(spark, tiny_table,
+                                          tmp_path_factory):
+    table = tiny_table
     out = str(tmp_path_factory.mktemp("run_out"))
 
     r1 = run_checkpointed(spark, _slow_suite(spark, 30), table, out,
@@ -81,8 +76,9 @@ def test_partition_timeout_row_and_resume(spark, tmp_path_factory):
     assert viol2.filter(viol2.rule_id == Code.TIMEOUT).count() == 0
 
 
-def test_run_budget_cancels_remaining(spark, tmp_path_factory):
-    table = _table(spark, tmp_path_factory)
+def test_run_budget_cancels_remaining(spark, tiny_table,
+                                      tmp_path_factory):
+    table = tiny_table
     out = str(tmp_path_factory.mktemp("run_out"))
 
     r = run_checkpointed(spark, clips_suite(spark), table, out,
@@ -98,8 +94,9 @@ def test_run_budget_cancels_remaining(spark, tmp_path_factory):
     assert len(r2.partitions_run) == 16 and not r2.partitions_skipped
 
 
-def test_partition_batching_matches_per_partition(spark, tmp_path_factory):
-    table = _table(spark, tmp_path_factory)
+def test_partition_batching_matches_per_partition(spark, tiny_table,
+                                                  tmp_path_factory):
+    table = tiny_table
     out1 = str(tmp_path_factory.mktemp("run_single"))
     out4 = str(tmp_path_factory.mktemp("run_batched"))
 
@@ -143,11 +140,11 @@ def test_partition_batching_matches_per_partition(spark, tmp_path_factory):
 
 
 def test_runner_caps_sink_but_keeps_manifest_counts_exact(
-        spark, tmp_path_factory):
+        spark, tiny_table, tmp_path_factory):
     """max_exemplars_per_rule bounds the violations PARQUET SINK while
     the manifest (Observation on the pre-cap stream) records exact
     counts — the verdicts stay identical to an uncapped run."""
-    table = _table(spark, tmp_path_factory)
+    table = tiny_table
     out_full = str(tmp_path_factory.mktemp("run_full"))
     out_cap = str(tmp_path_factory.mktemp("run_cap"))
 

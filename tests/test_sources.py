@@ -11,10 +11,8 @@ from protovalidate_spark.sources import (
 )
 
 
-def test_parquet_dir_source(spark, tmp_path):
-    from protovalidate_spark.fixtures import TINY, write_clips
-    path = str(tmp_path / "clips")
-    write_clips(spark, path, TINY)
+def test_parquet_dir_source(spark, tiny_table):
+    path = tiny_table
 
     assert not is_catalog_table(spark, path)
     assert read_table(spark, path).count() == 2080

@@ -114,3 +114,45 @@ def test_extra_object_rules_refuse(spark):
             "X", lambda cols: F.lit(True), "x", "/x"),))
     with pytest.raises(SerdeError):
         suite_to_dict(suite)
+
+
+def _drift_rows(suite, table):
+    return [r for r in suite.run(table, persist=False).violations.collect()
+            if r["rule_id"] == "DRIFT"]
+
+
+def test_zero_drift_thresholds_survive_roundtrip(spark, table, dim_path):
+    """psi_threshold=0.0 is the strictest gate; a reloaded suite must
+    not fall back to the looser 0.2 / 0.1 defaults."""
+    import dataclasses
+    base = make_suite(spark, dim_path)
+    assert not _drift_rows(base, table)  # the defaults pass this drift
+    strict = dataclasses.replace(base, psi_threshold=0.0, ks_threshold=0.0)
+    want = _drift_rows(strict, table)
+    assert want
+    doc = json.loads(json.dumps(suite_to_dict(strict, ref_paths=[dim_path])))
+    reloaded = suite_from_dict(doc, spark)
+    assert (reloaded.psi_threshold, reloaded.ks_threshold) == (0.0, 0.0)
+    assert _drift_rows(reloaded, table) == want
+
+
+def test_validate_table_refuses_flags_the_suite_ignores(monkeypatch, tmp_path):
+    """jobs/validate_table.py --suite runs the artifact's own uniqueness
+    groups, row keys and exemplar cap; the CLI flags for them are
+    refused, never silently dropped."""
+    import importlib.util
+    import os
+    import sys
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs", "validate_table.py")
+    spec = importlib.util.spec_from_file_location("validate_table", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    suite = str(tmp_path / "missing.json")
+    for flags in (["--unique", "id"], ["--row-keys", "id"],
+                  ["--max-exemplars", "3"]):
+        monkeypatch.setattr(sys, "argv", ["validate_table.py", "--table",
+                                          str(tmp_path), "--suite", suite,
+                                          *flags])
+        with pytest.raises(SystemExit, match=flags[0]):
+            job.main()
