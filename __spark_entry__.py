@@ -3664,8 +3664,9 @@ def oracle_sql() -> dict[str, str]:
                WHERE sdigits = n
               UNION ALL
               SELECT 'o_orderstatus', 'allowed_values',
-                     (SELECT string_agg(v, ',' ORDER BY v) FROM
-                        (SELECT DISTINCT o_orderstatus AS v FROM orders)),
+                     (SELECT CAST(to_json(list(v ORDER BY v)) AS VARCHAR)
+                        FROM (SELECT DISTINCT o_orderstatus AS v
+                                FROM orders)),
                      printf('%d distinct values', ds) FROM s
                WHERE ds <= 12 AND ds <= 0.1 * n
               UNION ALL

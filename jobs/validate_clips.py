@@ -80,6 +80,7 @@ def main():
             "mode": "checkpointed", "partitions_run": rep.partitions_run,
             "partitions_skipped": rep.partitions_skipped,
             "partitions_stale": rep.partitions_stale,
+            "manifest_torn_tail": rep.manifest_torn_tail,
             "rows": rep.total_rows, "violations": rep.total_violations,
             "wall_s": round(time.time() - t0, 2),
         }))

@@ -47,6 +47,7 @@ from .decode import (  # noqa: F401
     dur_consistency_rule,
     sr_consistency_rule,
     with_decoded,
+    with_decoded_header,
 )
 from .features import (  # noqa: F401
     clipping_rule,

@@ -2,15 +2,32 @@
 
 The reference's extension point for opaque values is
 ``Interface[T]().WithCast(fn)`` / ``WithRuleFunc``
-(/root/reference/pkg/rules/inerface.go:69-74, rule.go:43-60) — a custom
+(reference pkg/rules/inerface.go:69-74, rule.go:43-60) — a custom
 decode validated per value. Here that becomes ONE vectorized pandas UDF
-over the ``bytes`` column (Arrow batch transfer, no per-row Python
-dispatch — BASELINE.json input_hint), producing a decoded struct that is
-computed once and reused by every downstream consistency rule
-(SURVEY.md §4 "decode once into a struct column").
+(Arrow batch transfer, no per-row Python dispatch — BASELINE.json
+input_hint), producing a decoded struct that is computed once and reused
+by every downstream consistency rule (SURVEY.md §4 "decode once into a
+struct column").
+
+What each stage ships to Python:
+
+- :func:`with_decoded_header` (the suite's plain decode stage) ships the
+  44-byte header and the payload length per row, plus the payload only
+  for the rows that :func:`canonical_guard` cannot prove canonical
+  (extra chunks, EXTENSIBLE, multi-channel, malformed). ``ok``, ``sr``,
+  ``n_samples`` and ``dur_ms`` of a canonical WAV follow from its header
+  and length alone; the struct carries no ``rms``.
+- :func:`with_decoded` and every PCM consumer (features, VAD, bandwidth,
+  fingerprints, embeddings, repair) ship the whole payload: ``rms`` and
+  the samples need it.
+
+Both run the same kernel, :func:`_decode_parts`.
 """
 
 from __future__ import annotations
+
+import struct
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -37,102 +54,142 @@ DECODED_TYPE = T.StructType(_BASE_FIELDS)
 DECODED_PCM_TYPE = T.StructType(
     _BASE_FIELDS + [T.StructField("pcm", T.ArrayType(T.FloatType()))])
 DECODED_DDL = "struct<ok:boolean,sr:int,n_samples:bigint,dur_ms:int,rms:double>"
+# header-only stage: no rms, so a rule that reads it fails at analysis
+HEADER_TYPE = T.StructType(_BASE_FIELDS[:4])
 
+HEADER_LEN = 44  # RIFF + WAVE + 16-byte fmt chunk + data chunk header
+
+# fixed bytes of a canonical header, (offset, value): RIFF/WAVE/fmt tags,
+# fmt chunk size 16, one channel, data tag — the numpy mask and the
+# Catalyst guard both test exactly these
+_CANONICAL_BYTES = ((0, _RIFF), (8, _WAVE + _FMT), (16, struct.pack("<I", 16)),
+                    (22, struct.pack("<H", 1)), (36, _DATA))
 
 _LE32 = np.array([1, 1 << 8, 1 << 16, 1 << 24], dtype=np.int64)
 
 
-def _decode_series(bs: pd.Series, want_pcm: bool,
-                   downmix: bool = False) -> pd.DataFrame:
-    """Batched WAV decode: ONE vectorized header parse for the whole
-    Arrow batch (44-byte headers gathered into an (n, 44) uint8 matrix,
-    field extraction as column arithmetic — no per-row struct.unpack or
-    chunk-walk branches on the standard canonical layout), then per-row
-    zero-copy int16 views + one BLAS dot each for RMS (no payload slice
-    copy). Rows with a non-canonical chunk layout (extra LIST/fact
-    chunks) fall back to the exact chunk-walking parser in wav.py."""
-    n_rows = len(bs)
-    bufs = bs.to_numpy()
-    lens = np.fromiter(
-        (0 if b is None else len(b) for b in bufs), dtype=np.int64,
-        count=n_rows)
-    has_hdr = lens >= 44
+class _Headers(NamedTuple):
+    has_hdr: np.ndarray     # payload is at least HEADER_LEN bytes
+    canonical: np.ndarray   # fields below are exact from the header alone
+    sr: np.ndarray
+    audio_fmt: np.ndarray
+    bits: np.ndarray
+    bytes_per: np.ndarray
+    dsize: np.ndarray
 
-    H = np.zeros((n_rows, 44), dtype=np.uint8)
+
+def _parse_headers(hdrs, lens: np.ndarray) -> _Headers:
+    """ONE vectorized header parse for a whole Arrow batch: the first
+    44 bytes of every row gathered into an (n, 44) uint8 matrix, field
+    extraction as column arithmetic. ``hdrs`` items are whole payloads
+    or their 44-byte prefixes; ``lens`` are the payload lengths."""
+    n_rows = len(hdrs)
+    has_hdr = lens >= HEADER_LEN
+    H = np.zeros((n_rows, HEADER_LEN), dtype=np.uint8)
     for i in np.nonzero(has_hdr)[0]:
-        H[i] = np.frombuffer(bufs[i], dtype=np.uint8, count=44)
-
-    def tag_eq(sl, tag):
-        return (H[:, sl] == np.frombuffer(tag, np.uint8)).all(axis=1)
+        H[i] = np.frombuffer(hdrs[i], dtype=np.uint8, count=HEADER_LEN)
 
     sr = H[:, 24:28].astype(np.int64) @ _LE32
-    fmt_size = H[:, 16:20].astype(np.int64) @ _LE32
     audio_fmt = H[:, 20].astype(np.int64) + (H[:, 21].astype(np.int64) << 8)
-    channels = H[:, 22].astype(np.int64) + (H[:, 23].astype(np.int64) << 8)
     bits = H[:, 34].astype(np.int64) + (H[:, 35].astype(np.int64) << 8)
     dsize = H[:, 40:44].astype(np.int64) @ _LE32
     # (fmt, bits) admissibility + bytes-per-sample, vectorized over the
     # same table wav.py uses — every uncompressed format (PCM 8/16/24/32,
-    # float 32/64, G.711) takes this path when the chunk layout is the
-    # canonical 44-byte one; EXTENSIBLE (fmt_size 40) and multi-chunk
-    # layouts fall to the exact walker below
+    # float 32/64, G.711) is canonical when the chunk layout is the
+    # 44-byte one; EXTENSIBLE (fmt_size 40) and multi-chunk layouts are
+    # not, and take the exact walker
     fmt_ok = np.zeros(n_rows, dtype=bool)
     for code, allowed in _FMT_BITS.items():
         fmt_ok |= (audio_fmt == code) & np.isin(bits, allowed)
     bytes_per = np.maximum(bits >> 3, 1)
-    canonical = (has_hdr & tag_eq(slice(0, 4), _RIFF)
-                 & tag_eq(slice(8, 12), _WAVE) & tag_eq(slice(12, 16), _FMT)
-                 & (fmt_size == 16) & fmt_ok & (channels == 1)
-                 & tag_eq(slice(36, 40), _DATA)
-                 & (sr > 0) & (dsize % bytes_per == 0) & (44 + dsize == lens))
+    canonical = has_hdr & fmt_ok & (sr > 0) & (dsize % bytes_per == 0)
+    for off, tag in _CANONICAL_BYTES:
+        canonical &= (H[:, off:off + len(tag)]
+                      == np.frombuffer(tag, np.uint8)).all(axis=1)
     # equality (not <=): a canonical 44-byte prefix followed by MORE chunks
     # must take the exact chunk walker, whose later-data-chunk-wins rule
     # would otherwise diverge from this first-data-chunk fast path
+    canonical &= HEADER_LEN + dsize == lens
+    return _Headers(has_hdr, canonical, sr, audio_fmt, bits, bytes_per, dsize)
 
+
+def _decode_parts(hdrs, lens: np.ndarray, body, want_rms: bool = True,
+                  want_pcm: bool = False,
+                  downmix: bool = False) -> pd.DataFrame:
+    """The WAV kernel. ``hdrs``: per-row payloads or 44-byte header
+    prefixes; ``lens``: payload lengths; ``body``: per-row whole
+    payloads (None where not shipped).
+
+    Canonical rows take ok/sr/n_samples/dur_ms from the header matrix;
+    their payload is read only for ``rms``/``pcm`` (zero-copy int16
+    views + one BLAS dot each for PCM16). Every other row with a header
+    takes the exact chunk-walking parser in wav.py over its payload,
+    which must then be shipped."""
+    n_rows = len(hdrs)
+    h = _parse_headers(hdrs, lens)
+    canonical = h.canonical
     ok = canonical.copy()
-    n_samp = np.where(canonical, dsize // bytes_per, 0)
-    sr_out = np.where(canonical, sr, 0).astype(np.int64)
+    n_samp = np.where(canonical, h.dsize // h.bytes_per, 0)
+    sr_out = np.where(canonical, h.sr, 0).astype(np.int64)
     dur = np.zeros(n_rows, dtype=np.int64)
     dur[canonical] = np.round(
-        n_samp[canonical] * 1000.0 / sr[canonical]).astype(np.int64)
+        n_samp[canonical] * 1000.0 / h.sr[canonical]).astype(np.int64)
     rms = np.zeros(n_rows, dtype=np.float64)
     pcm = [None] * n_rows if want_pcm else None
 
-    is_pcm16 = canonical & (audio_fmt == 1) & (bits == 16)
-    for i in np.nonzero(is_pcm16)[0]:
-        n = int(n_samp[i])
-        if n:
-            x16 = np.frombuffer(bufs[i], dtype="<i2", count=n, offset=44)
-            x = x16.astype(np.float32)
-            rms[i] = float(np.sqrt(np.dot(x, x) / n) / 32768.0)
+    if want_rms or want_pcm:
+        is_pcm16 = canonical & (h.audio_fmt == 1) & (h.bits == 16)
+        for i in np.nonzero(is_pcm16)[0]:
+            n = int(n_samp[i])
+            if n:
+                x16 = np.frombuffer(body[i], dtype="<i2", count=n,
+                                    offset=HEADER_LEN)
+                x = x16.astype(np.float32)
+                rms[i] = float(np.sqrt(np.dot(x, x) / n) / 32768.0)
+                if want_pcm:
+                    pcm[i] = x / np.float32(32768.0)
+            elif want_pcm:
+                pcm[i] = np.array([], dtype=np.float32)
+        for i in np.nonzero(canonical & ~is_pcm16)[0]:
+            x = _samples_to_float(body[i][HEADER_LEN:], int(h.audio_fmt[i]),
+                                  int(h.bits[i]))
+            n = int(x.size)
+            rms[i] = float(np.sqrt(np.dot(x, x) / n)) if n else 0.0
             if want_pcm:
-                pcm[i] = x / np.float32(32768.0)
-        elif want_pcm:
-            pcm[i] = np.array([], dtype=np.float32)
-    for i in np.nonzero(canonical & ~is_pcm16)[0]:
-        x = _samples_to_float(bufs[i][44:], int(audio_fmt[i]), int(bits[i]))
-        n = int(x.size)
-        rms[i] = float(np.sqrt(np.dot(x, x) / n)) if n else 0.0
-        if want_pcm:
-            pcm[i] = x
+                pcm[i] = x
 
     # exact fallback for non-canonical-but-maybe-valid layouts
     # (multi-channel input lands here too: the canonical fast path is
     # channels==1, and the walker honors the downmix policy)
-    for i in np.nonzero(has_hdr & ~canonical)[0]:
-        d = decode_bytes(bytes(bufs[i]), "wav", want_pcm, downmix)
+    for i in np.nonzero(h.has_hdr & ~canonical)[0]:
+        if body[i] is None:
+            raise ValueError(
+                f"row {i}: non-canonical WAV header but no payload shipped")
+        d = decode_bytes(bytes(body[i]), "wav", want_pcm, downmix)
         ok[i] = d.ok
         sr_out[i], n_samp[i], dur[i], rms[i] = d.sr, d.n_samples, d.dur_ms, d.rms
         if want_pcm:
             pcm[i] = d.pcm
 
-    cols = {"ok": ok, "sr": sr_out.astype(np.int32),
-            "n_samples": n_samp.astype(np.int64),
-            "dur_ms": dur.astype(np.int32), "rms": rms}
-    out = pd.DataFrame(cols)
+    out = pd.DataFrame({"ok": ok, "sr": sr_out.astype(np.int32),
+                        "n_samples": n_samp.astype(np.int64),
+                        "dur_ms": dur.astype(np.int32)})
+    if want_rms:
+        out["rms"] = rms
     if want_pcm:
         out["pcm"] = pcm
     return out
+
+
+def _decode_series(bs: pd.Series, want_pcm: bool,
+                   downmix: bool = False) -> pd.DataFrame:
+    """Whole-payload decode of an Arrow batch (ok/sr/n_samples/dur_ms/
+    rms, plus pcm with ``want_pcm``)."""
+    bufs = bs.to_numpy()
+    lens = np.fromiter((0 if b is None else len(b) for b in bufs),
+                       dtype=np.int64, count=len(bufs))
+    return _decode_parts(bufs, lens, bufs, want_pcm=want_pcm,
+                         downmix=downmix)
 
 
 def _make_udf(include_pcm: bool, downmix: bool = False):
@@ -153,6 +210,57 @@ def with_decoded(df: DataFrame, bytes_col: str = "bytes",
     violation — the validation stance for a mono table)."""
     return df.withColumn(out_col,
                          _make_udf(include_pcm, downmix)(F.col(bytes_col)))
+
+
+def _le_uint(b: Column, offset: int, n: int) -> Column:
+    """Little-endian unsigned int of ``n`` bytes at 0-based ``offset``.
+    Byte pairs of the hex string are reordered: ``reverse`` on binary
+    goes through a UTF-8 string cast and reorders multi-byte sequences
+    as units, so it misreads bytes of 0xC0 and above."""
+    hx = F.hex(F.substring(b, offset + 1, n))
+    return F.conv(F.concat(*[F.substring(hx, 2 * k + 1, 2)
+                             for k in reversed(range(n))]), 16, 10) \
+        .cast("long")
+
+
+def canonical_guard(b: Column) -> Column:
+    """Catalyst twin of the kernel's canonical mask: true only for rows
+    whose header alone gives exact ok/sr/n_samples/dur_ms (never NULL).
+    Built from the same byte table, ``_FMT_BITS`` pairs and size
+    equalities as :func:`_parse_headers`."""
+    bits = _le_uint(b, 34, 2)
+    dsize = _le_uint(b, 40, 4)
+    pairs = [bytearray(struct.pack("<HH", code, nb))
+             for code, allowed in _FMT_BITS.items() for nb in allowed]
+    cond = F.concat(F.substring(b, 21, 2), F.substring(b, 35, 2)).isin(*pairs)
+    for off, tag in _CANONICAL_BYTES:
+        cond &= F.substring(b, off + 1, len(tag)) == bytearray(tag)
+    cond &= ((F.substring(b, 25, 4) != bytearray(4))  # sr > 0
+             & (dsize + HEADER_LEN == F.length(b))
+             & (dsize % F.greatest(F.shiftright(bits, 3), F.lit(1)) == 0))
+    return F.coalesce(cond, F.lit(False))
+
+
+def _make_header_udf():
+    def decode_wav_header_udf(hdr: pd.Series, n: pd.Series,
+                              body: pd.Series) -> pd.DataFrame:
+        return _decode_parts(hdr.to_numpy(),
+                             n.fillna(0).to_numpy(dtype=np.int64),
+                             body.to_numpy(), want_rms=False)
+
+    return pandas_udf(decode_wav_header_udf, HEADER_TYPE)
+
+
+def with_decoded_header(df: DataFrame, bytes_col: str = "bytes",
+                        out_col: str = "_decoded") -> DataFrame:
+    """Append ``struct<ok, sr, n_samples, dur_ms>`` (no ``rms``) from
+    ONE Arrow stage that ships each row's 44-byte header and length,
+    plus its payload only where :func:`canonical_guard` fails. Same
+    values as :func:`with_decoded` on those four fields."""
+    b = F.col(bytes_col)
+    return df.withColumn(out_col, _make_header_udf()(
+        F.substring(b, 1, HEADER_LEN), F.length(b),
+        F.when(~canonical_guard(b), b)))
 
 
 # ---------------------------------------------------------------------------

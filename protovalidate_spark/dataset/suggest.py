@@ -29,7 +29,7 @@ Suggested rule kinds (column-level unless noted):
   required        null count is zero
   min / max       observed numeric/timestamp bounds
   min_len/max_len observed string octet-length bounds
-  allowed_values  low-cardinality value set (sorted, comma-joined)
+  allowed_values  low-cardinality value set (sorted JSON array)
   regex           every non-null value is all-digits (^[0-9]+$)
   unique          DATASET-level: distinct == rows and no nulls
 
@@ -42,6 +42,7 @@ plain string cast, doubles via ``%.6f``, timestamps via
 from __future__ import annotations
 
 import datetime as _dt
+import json
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -118,7 +119,7 @@ def suggest_rules(df: DataFrame, cols: Optional[Sequence[str]] = None, *,
     value_sets = {}
     if value_set_cols:
         sets_row = df.agg(*[
-            F.array_join(F.array_sort(F.collect_set(c)), ",")
+            F.to_json(F.array_sort(F.collect_set(c)))
              .alias(c) for c in value_set_cols]).collect()[0]
         value_sets = {c: sets_row[c] for c in value_set_cols}
 
@@ -226,6 +227,6 @@ def build_ruleset(suggestions, dtypes: dict):
             elif rule == "regex":
                 rs = rs.regex(param)
             elif rule == "allowed_values":
-                rs = rs.allowed_values(*param.split(","))
+                rs = rs.allowed_values(*json.loads(param))
         obj = obj.with_key(c, rs)
     return obj.with_unknown(), unique

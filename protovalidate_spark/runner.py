@@ -20,6 +20,11 @@ supersedes its earlier ``TIMEOUT`` rec), then re-runs the GLOBAL phase
 last global pass, in which case the recorded result is reused and the
 rerun performs zero table scans.
 
+Each record is ONE fsynced write, so a run killed mid-append leaves at
+most a torn LAST line: readers skip it, and the next run cuts it before
+appending and reports it (``RunReport.manifest_torn_tail``). An
+unparseable line anywhere else is corruption and raises.
+
 Lineage-verified resume: a ``complete`` record is trusted only while the
 partition's CURRENT data-file list still equals the recorded
 ``file_list`` — a partition rewritten between runs (late-arriving files,
@@ -57,6 +62,7 @@ optional salting (see dataset/uniqueness.py).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
@@ -70,6 +76,8 @@ from .errors import Code
 from .sources import (read_partition, read_partition_files, read_table,
                       table_partitions, table_snapshot_id)
 from .suite import ValidationSuite
+
+log = logging.getLogger(__name__)
 
 MANIFEST_NAME = "manifest.jsonl"
 GLOBAL_KEY = "__global__"
@@ -92,19 +100,68 @@ def partition_files(table_path: str, partition_col: str, value: str) -> List[str
     )
 
 
+def _scan_manifest(path: str):
+    """(records, byte offset where a torn trailing line starts or None,
+    file bytes). A run killed mid-append leaves at most the LAST line
+    torn; an unparseable line anywhere else is corruption and raises."""
+    with open(path, "rb") as f:
+        data = f.read()
+    recs, pos, torn_at = [], 0, None
+    for line in data.splitlines(keepends=True):
+        if line.strip():
+            try:
+                recs.append(json.loads(line))
+            except ValueError:
+                if data[pos + len(line):].strip():
+                    raise ValueError(
+                        f"{path}: corrupt manifest record at byte {pos}")
+                torn_at = pos
+                break
+        pos += len(line)
+    return recs, torn_at, data
+
+
 def read_manifest(manifest_dir: str) -> dict:
     """Latest manifest record per partition (append-only file, last line
-    wins — a retry's ``complete`` supersedes an earlier ``TIMEOUT``)."""
+    wins — a retry's ``complete`` supersedes an earlier ``TIMEOUT``).
+    A torn trailing line is skipped with a warning."""
     path = os.path.join(manifest_dir, MANIFEST_NAME)
     done = {}
     if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    rec = json.loads(line)
-                    done[rec["part"]] = rec
+        recs, torn_at, data = _scan_manifest(path)
+        if torn_at is not None:
+            log.warning("%s: skipping torn trailing record %r", path,
+                        data[torn_at:])
+        for rec in recs:
+            done[rec["part"]] = rec
     return done
+
+
+def repair_manifest(manifest_dir: str) -> Optional[str]:
+    """Cut a torn trailing line off the manifest (a run killed mid-
+    append) so the next append starts on a fresh line; returns the
+    dropped text, or None when the file was whole."""
+    path = os.path.join(manifest_dir, MANIFEST_NAME)
+    if not os.path.exists(path):
+        return None
+    _, torn_at, data = _scan_manifest(path)
+    keep = len(data) if torn_at is None else torn_at
+    # a whole record killed before its newline keeps the record
+    newline = keep > 0 and data[keep - 1:keep] != b"\n"
+    if keep == len(data) and not newline:
+        return None
+    with open(path, "r+b") as f:
+        f.truncate(keep)
+        if newline:
+            f.seek(keep)
+            f.write(b"\n")
+        f.flush()
+        os.fsync(f.fileno())
+    if torn_at is None:
+        return None
+    dropped = data[torn_at:].decode("utf-8", "replace")
+    log.warning("%s: cut torn trailing record %r", path, dropped)
+    return dropped
 
 
 def completed_partitions(manifest_dir: str) -> dict:
@@ -114,9 +171,14 @@ def completed_partitions(manifest_dir: str) -> dict:
 
 
 def append_manifest(manifest_dir: str, rec: dict) -> None:
+    """One write per record, flushed and fsynced: a crash leaves at most
+    a torn LAST line, which :func:`repair_manifest` cuts."""
     os.makedirs(manifest_dir, exist_ok=True)
-    with open(os.path.join(manifest_dir, MANIFEST_NAME), "a") as f:
-        f.write(json.dumps(rec) + "\n")
+    line = (json.dumps(rec) + "\n").encode()
+    with open(os.path.join(manifest_dir, MANIFEST_NAME), "ab") as f:
+        f.write(line)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 @dataclass
@@ -130,6 +192,9 @@ class RunReport:
     # complete in the manifest but re-run because the partition's current
     # file list diverged from the recorded lineage (also in partitions_run)
     partitions_stale: List[str] = field(default_factory=list)
+    # text of a torn trailing manifest line (a run killed mid-append)
+    # that this run cut before appending, else None
+    manifest_torn_tail: Optional[str] = None
 
 
 def stale_partitions(done: dict, table_path: str, partition_col: str) -> List[str]:
@@ -279,6 +344,7 @@ def run_checkpointed(
     pc = suite.partition_col or "part_date"
     manifest_dir = os.path.join(output_dir, "_manifest")
     viol_dir = os.path.join(output_dir, "violations")
+    torn_tail = repair_manifest(manifest_dir)
     done = completed_partitions(manifest_dir)
     stale = []
     delta_plan = {}  # pv -> (new data files, prior complete rec)
@@ -443,7 +509,7 @@ def run_checkpointed(
                                      STATUS_COMPLETE) == STATUS_COMPLETE):
             return RunReport(ran, skipped, total_rows,
                              total_viol + prior_global["violations"],
-                             timed_out, canceled, stale)
+                             timed_out, canceled, stale, torn_tail)
         t0 = time.time()
         full = read_table(spark, table_path)
         gparts = suite.dataset_violations(full)
@@ -451,8 +517,12 @@ def run_checkpointed(
             g = gparts[0]
             for p in gparts[1:]:
                 g = g.unionByName(p.select(*g.columns))
-            g.write.mode("overwrite").parquet(os.path.join(output_dir, "global_violations"))
-            gn = spark.read.parquet(os.path.join(output_dir, "global_violations")).count()
+            # the count rides the write (as the partition jobs' do)
+            obs = Observation()
+            (g.observe(obs, F.count(F.lit(1)).alias("n"))
+              .write.mode("overwrite")
+              .parquet(os.path.join(output_dir, "global_violations")))
+            gn = obs.get["n"]
         else:
             gn = 0
         append_manifest(manifest_dir, _manifest_rec(
@@ -461,7 +531,7 @@ def run_checkpointed(
         total_viol += gn
 
     return RunReport(ran, skipped, total_rows, total_viol,
-                     timed_out, canceled, stale)
+                     timed_out, canceled, stale, torn_tail)
 
 
 def compact_violations(spark: SparkSession, output_dir: str,

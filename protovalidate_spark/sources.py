@@ -23,10 +23,14 @@ tables.
 
 from __future__ import annotations
 
+import logging
 import os
 from typing import List, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def is_catalog_table(spark: SparkSession, ref: str) -> bool:
@@ -34,7 +38,8 @@ def is_catalog_table(spark: SparkSession, ref: str) -> bool:
         return False
     try:
         return spark.catalog.tableExists(ref)
-    except Exception:
+    except AnalysisException as e:  # not a parseable identifier
+        log.warning("%r is not a catalog table: %s", ref, e)
         return False
 
 
@@ -54,7 +59,8 @@ def table_partitions(spark: SparkSession, ref: str,
                 f"SELECT partition.{partition_col} AS p "
                 f"FROM {ref}.partitions").collect()
             return sorted(str(r["p"]) for r in rows)
-        except Exception:
+        except AnalysisException as e:  # not Iceberg: no .partitions
+            log.info("no partitions metadata table for %s: %s", ref, e)
             rows = spark.sql(f"SHOW PARTITIONS {ref}").collect()
             return sorted(r[0].split("=", 1)[1] for r in rows)
     vals = []
@@ -74,8 +80,8 @@ def table_snapshot_id(spark: SparkSession, ref: str) -> str:
                 f"ORDER BY committed_at DESC LIMIT 1").collect()
             if r:
                 return str(r[0]["snapshot_id"])
-        except Exception:
-            pass
+        except AnalysisException as e:  # not Iceberg: no .snapshots
+            log.info("no snapshots metadata table for %s: %s", ref, e)
         return f"table-{ref}"
     return f"snap-{int(os.path.getmtime(ref))}"
 

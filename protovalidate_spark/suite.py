@@ -3,7 +3,14 @@
 Combines:
 - row-level object rule set (ONE projection, whole-stage codegen; audio
   decode wired in as ONE Arrow batch stage, decoded struct computed once
-  and reused — SURVEY.md §4),
+  and reused — SURVEY.md §4). The plain decode stage (no
+  ``audio_features``/``audio_vad``/``audio_bandwidth`` on the column)
+  ships Python each row's 44-byte WAV header and payload length, plus
+  the payload only for rows a Catalyst guard cannot prove canonical
+  (audio/decode.py ``with_decoded_header``); its struct is
+  ``ok, sr, n_samples, dur_ms`` with no ``rms``, so a rule reading
+  ``rms`` from it fails at analysis. The feature/VAD/bandwidth stages
+  need the samples and ship whole payloads,
 - scan-based dataset checks (uniqueness, referential, label conflicts,
   monotonicity, reconciliation, outliers) which scan the RAW input (no
   decode cost),
@@ -34,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .audio.decode import decode_ok_rule, with_decoded
+from .audio.decode import decode_ok_rule, with_decoded_header
 from .dataset.fused import collect, local_frame
 from .dataset.referential import ref_violations
 from .dataset.stats import ColumnStats
@@ -167,7 +174,8 @@ class ValidationSuite:
                 work = with_decoded_features(work, bytes_col=c,
                                              out_col=f"__dec_{c}")
             else:
-                work = with_decoded(work, bytes_col=c, out_col=f"__dec_{c}")
+                work = with_decoded_header(work, bytes_col=c,
+                                           out_col=f"__dec_{c}")
             rules = rules.with_rule(decode_ok_rule(c, f"__dec_{c}"))
         for r in self.extra_object_rules:
             rules = rules.with_rule(r)

@@ -33,6 +33,48 @@ def test_row_pass_has_single_decode_stage(spark, clips_path):
         "violations expression (see rules/object.py violations())")
 
 
+def _python_data_sent(df):
+    """``pythonDataSent`` of every ArrowEvalPython node in the executed
+    plan of ``df`` (read after ``df``'s own action ran; AQE wrappers and
+    query stages unwrapped)."""
+    out = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            return walk(node.executedPlan())
+        if "QueryStage" in name:
+            return walk(node.plan())
+        if "ArrowEvalPython" in name:
+            out.append(node.metrics().apply("pythonDataSent").value())
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_row_pass_ships_headers_not_payloads(spark, clips_path):
+    """The suite's plain decode stage sends Python a 44-byte header and
+    a length per row, plus the payload only of rows the canonical guard
+    rejects — not every clip's bytes."""
+    from pyspark.sql import functions as F
+
+    from protovalidate_spark.audio.decode import HEADER_LEN, canonical_guard
+    df = spark.read.parquet(clips_path)
+    rv = clips_suite(spark).row_violations(df)
+    rv.collect()
+    [sent] = _python_data_sent(rv)
+    n, total, shipped = df.agg(
+        F.count(F.lit(1)), F.sum(F.length("bytes")),
+        F.sum(F.when(~canonical_guard(F.col("bytes")),
+                     F.length("bytes")))).first()
+    per_row = HEADER_LEN + 32   # + Arrow offsets, the length, validity
+    assert sent <= n * per_row + (shipped or 0), (sent, n)
+    assert (shipped or 0) < total / 100   # the fixture is mostly canonical
+
+
 def test_referential_is_broadcast_anti_join(spark, clips_path):
     df = spark.read.parquet(clips_path)
     dim = spark.createDataFrame([("wav",), ("mp3",)], "codec string")

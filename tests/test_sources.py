@@ -2,6 +2,9 @@
 resolution used by the checkpointed runner (Iceberg slots in via the
 same functions when its runtime is on the classpath)."""
 
+import pytest
+from pyspark.errors import AnalysisException
+
 from protovalidate_spark.sources import (
     is_catalog_table,
     read_partition,
@@ -32,3 +35,52 @@ def test_catalog_table_source(spark):
         assert read_table(spark, "pv_src_tbl").count() == 1
     finally:
         spark.catalog.dropTempView("pv_src_tbl")
+
+
+class _FakeSession:
+    """Stands in for a SparkSession whose catalog calls fail with
+    ``exc`` (the source seam's fallbacks must catch only the analysis
+    errors a non-Iceberg table raises)."""
+
+    def __init__(self, exc, exists=True):
+        self.exc, self.exists = exc, exists
+        self.catalog = self
+        self.queries = []
+
+    def tableExists(self, ref):
+        if not self.exists:
+            raise self.exc
+        return True
+
+    def sql(self, q):
+        self.queries.append(q)
+        if len(self.queries) == 1:
+            raise self.exc
+        return self
+
+    def collect(self):
+        return [("part_date=2026-01-01",)]
+
+
+def test_expected_catalog_errors_are_logged(caplog):
+    with caplog.at_level("INFO", logger="protovalidate_spark.sources"):
+        assert not is_catalog_table(
+            _FakeSession(AnalysisException("bad name"), exists=False), "t")
+        assert table_partitions(
+            _FakeSession(AnalysisException("no .partitions")), "t") == \
+            ["2026-01-01"]
+        assert table_snapshot_id(
+            _FakeSession(AnalysisException("no .snapshots")), "t") == \
+            "table-t"
+    for msg in ("bad name", "no .partitions", "no .snapshots"):
+        assert msg in caplog.text
+
+
+def test_unexpected_catalog_errors_propagate():
+    boom = RuntimeError("catalog down")
+    with pytest.raises(RuntimeError):
+        is_catalog_table(_FakeSession(boom, exists=False), "t")
+    with pytest.raises(RuntimeError):
+        table_partitions(_FakeSession(boom), "t")
+    with pytest.raises(RuntimeError):
+        table_snapshot_id(_FakeSession(boom), "t")

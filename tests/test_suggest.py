@@ -44,8 +44,8 @@ def test_suggest_rows(table):
     assert s[("code", "max_len")]["param"] == "4"
     assert ("code", "unique") in s
 
-    # low-cardinality: sorted comma-joined value set
-    assert s[("flag", "allowed_values")]["param"] == "A,B"
+    # low-cardinality: sorted value set as a JSON array
+    assert s[("flag", "allowed_values")]["param"] == '["A","B"]'
     assert ("flag", "unique") not in s
 
     assert s[("amt", "min")]["param"] == "0.000000"
@@ -103,3 +103,18 @@ def test_value_set_pass_is_bounded(table):
 def test_bad_column_raises(table):
     with pytest.raises(ValueError):
         suggest_rules(table, ["nope"])
+
+
+def test_allowed_values_keep_commas(spark):
+    """A suggested value containing a comma survives the suggest →
+    build_ruleset round trip as ONE allowed value."""
+    rows = [(i, "a,b" if i % 2 else "c") for i in range(40)]
+    t = spark.createDataFrame(rows, "id bigint, tag string")
+    sugg = suggest_rules(t, ["tag"], exact_distinct=True)
+    obj, _ = build_ruleset(sugg, dict(t.dtypes))
+    assert obj.violations(t, row_key_cols=["id"]).count() == 0
+    probe = spark.createDataFrame([(0, "a"), (1, "b"), (2, "a,b")],
+                                  t.schema)
+    got = {r["id"] for r in
+           obj.violations(probe, row_key_cols=["id"]).collect()}
+    assert got == {0, 1}
