@@ -10,6 +10,7 @@ deterministic scalar fixture ``_fixtures/clips_scalar.parquet``
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Callable
 
@@ -27,11 +28,12 @@ EXPECTED_DIR = os.path.join(REPO, "_fixtures", "expected")
 # pyspark's module-level cache instead: call-site capture costs a Python
 # stack walk + 2-3 py4j round-trips on EVERY DataFrame API call, which
 # dominated plan-construction time for the build-heavy queries here.
-try:  # pyspark 4.x internal — harmless no-op if the attribute moves
+try:  # pyspark 4.x internal — a no-op if the module moves
     import pyspark.errors.utils as _pyspark_errors_utils
     _pyspark_errors_utils._enable_debugging_cache = False
-except Exception:
-    pass
+except ImportError as e:
+    logging.getLogger(__name__).warning(
+        "call-site capture stays on: %s", e)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -597,7 +599,7 @@ def q_clips_audio_features(spark, sf_dir):
     amplitudes (clean / clipped / silent) plus undecodable payloads —
     ONE fused Arrow stage (decode + features). Non-SQL (decode);
     deterministic, so the oracle is a committed snapshot."""
-    from protovalidate_spark.audio.features import with_audio_features
+    from protovalidate_spark.audio import with_decoded
     from protovalidate_spark.audio.wav import synth_sine_wav
     fmts = ["pcm8", "pcm16", "pcm24", "pcm32", "float32", "float64",
             "mulaw", "alaw"]
@@ -609,13 +611,13 @@ def q_clips_audio_features(spark, sf_dir):
                                         fmt=fmt)))
     rows += [("bad_garbage", b"not audio"), ("bad_null", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    f = with_audio_features(df)
+    f = with_decoded(df, fields=("features",))
     return f.select(
-        "clip_id", F.col("_afeat.ok").alias("feat_ok"),
-        F.round("_afeat.peak", 6).alias("peak"),
-        F.round("_afeat.clip_ratio", 6).alias("clip_ratio"),
-        F.round("_afeat.silence_ratio", 6).alias("silence_ratio"),
-        F.round("_afeat.zcr", 6).alias("zcr"))
+        "clip_id", F.col("_decoded.ok").alias("feat_ok"),
+        F.round("_decoded.peak", 6).alias("peak"),
+        F.round("_decoded.clip_ratio", 6).alias("clip_ratio"),
+        F.round("_decoded.silence_ratio", 6).alias("silence_ratio"),
+        F.round("_decoded.zcr", 6).alias("zcr"))
 
 
 def q_audio_snr_clips(spark, sf_dir):
@@ -626,7 +628,7 @@ def q_audio_snr_clips(spark, sf_dir):
     import numpy as np
 
     from protovalidate_spark import Object
-    from protovalidate_spark.audio import min_snr_rule, with_segments
+    from protovalidate_spark.audio import min_snr_rule, with_decoded
     from protovalidate_spark.audio.wav import synth_wav
     rows = []
     for fmt, sr in (("pcm16", 16000), ("float32", 8000), ("alaw", 8000)):
@@ -641,7 +643,7 @@ def q_audio_snr_clips(spark, sf_dir):
             rows.append((f"{fmt}_{label}", synth_wav(x, sr, fmt=fmt)))
     rows += [("bad_garbage", b"not audio"), ("bad_null", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    seg = with_segments(df)
+    seg = with_decoded(df, fields=("vad",))
     rs = Object().with_unknown().with_rule(min_snr_rule(min_db=10.0))
     v = rs.violations(seg, row_key_cols=["clip_id"])
     return v.select("clip_id", "field_path", "rule_id", "actual")
@@ -658,7 +660,7 @@ def q_audio_bandwidth_clips(spark, sf_dir):
     import numpy as np
 
     from protovalidate_spark import Object
-    from protovalidate_spark.audio import bandwidth_rule, with_bandwidth
+    from protovalidate_spark.audio import bandwidth_rule, with_decoded
     from protovalidate_spark.audio.wav import synth_wav
 
     def lowpass(sr, freqs, amp=0.25):
@@ -681,7 +683,7 @@ def q_audio_bandwidth_clips(spark, sf_dir):
                      synth_wav(np.zeros(int(sr * 0.3)), sr, fmt=fmt)))
     rows += [("bad_garbage", b"not audio"), ("bad_null", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    bw = with_bandwidth(df)
+    bw = with_decoded(df, fields=("bandwidth",))
     rs = Object().with_unknown().with_rule(bandwidth_rule(min_ratio=0.5))
     v = rs.violations(bw, row_key_cols=["clip_id"])
     return v.select("clip_id", "field_path", "rule_id", "actual")
@@ -731,7 +733,7 @@ def q_repair_audio_clips(spark, sf_dir):
     deterministic, so the oracle is a committed snapshot."""
     import numpy as np
 
-    from protovalidate_spark.audio import (with_audio_features,
+    from protovalidate_spark.audio import (with_decoded,
                                            with_normalized_audio)
     from protovalidate_spark.audio.wav import synth_wav
     rows = []
@@ -746,17 +748,18 @@ def q_repair_audio_clips(spark, sf_dir):
     rows += [("bad_garbage", b"not audio"), ("bad_null", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
     norm = with_normalized_audio(df)
-    feats = with_audio_features(
+    feats = with_decoded(
         norm.select("clip_id",
                     F.col("_norm")["ok"].alias("norm_ok"),
                     F.round(F.col("_norm")["gain_db"], 2).alias("gain2"),
                     F.round(F.col("_norm")["dc_removed"], 4).alias("dc4"),
-                    F.col("_norm")["bytes"].alias("bytes")))
+                    F.col("_norm")["bytes"].alias("bytes")),
+        fields=("features",))
     return feats.select(
         "clip_id", "norm_ok", "gain2", "dc4",
-        F.round("_afeat.peak", 3).alias("peak3"),
-        F.round("_afeat.dc_offset", 4).alias("rdc4"),
-        F.round("_afeat.rms_dbfs", 1).alias("rdbfs1"))
+        F.round("_decoded.peak", 3).alias("peak3"),
+        F.round("_decoded.dc_offset", 4).alias("rdc4"),
+        F.round("_decoded.rms_dbfs", 1).alias("rdbfs1"))
 
 
 def q_standardize_audio_clips(spark, sf_dir):
@@ -886,9 +889,8 @@ def q_audio_level_clips(spark, sf_dir):
     import numpy as np
 
     from protovalidate_spark import Object
-    from protovalidate_spark.audio.features import (dc_offset_rule,
-                                                    quiet_rule,
-                                                    with_audio_features)
+    from protovalidate_spark.audio import with_decoded
+    from protovalidate_spark.audio.features import dc_offset_rule, quiet_rule
     from protovalidate_spark.audio.wav import synth_wav
     rows = []
     for fmt, sr in (("pcm16", 16000), ("pcm24", 22050), ("float32", 8000),
@@ -902,7 +904,7 @@ def q_audio_level_clips(spark, sf_dir):
             rows.append((f"{fmt}_{label}", synth_wav(x, sr, fmt=fmt)))
     rows += [("bad_garbage", b"not audio"), ("bad_null", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    f = with_audio_features(df)
+    f = with_decoded(df, fields=("features",))
     rs = (Object().with_unknown()
           .with_rule(quiet_rule(min_dbfs=-45.0))
           .with_rule(dc_offset_rule(max_abs=0.02)))
@@ -1773,7 +1775,7 @@ def q_audio_segments_clips(spark, sf_dir):
     synth), so the oracle is a committed snapshot."""
     import numpy as np
 
-    from protovalidate_spark.audio import with_segments
+    from protovalidate_spark.audio import with_decoded
     from protovalidate_spark.audio.wav import synth_wav
 
     def pcm(sr, pattern, freq=330.0):
@@ -1800,8 +1802,8 @@ def q_audio_segments_clips(spark, sf_dir):
                          synth_wav(pcm(sr, p), sr, fmt=fmt)))
     rows += [("bad_garbage", b"not audio"), ("bad_null", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    seg = with_segments(df)
-    v = F.col("_vad")
+    seg = with_decoded(df, fields=("vad",))
+    v = F.col("_decoded")
     return seg.select(
         "clip_id", v["ok"].alias("vad_ok"),
         v["n_segments"].alias("n_segments"),

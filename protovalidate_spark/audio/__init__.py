@@ -17,7 +17,6 @@ from .segments import (  # noqa: F401
     min_snr_rule,
     segment_pcm,
     speech_presence_rule,
-    with_segments,
 )
 from .consistency import (  # noqa: F401
     transcript_conflict_violations,
@@ -33,7 +32,6 @@ from .fingerprint import (  # noqa: F401
 from .bandwidth import (  # noqa: F401
     bandwidth_rule,
     rolloff_hz,
-    with_bandwidth,
 )
 from .container import (  # noqa: F401
     CODEC_FORMATS,
@@ -42,12 +40,10 @@ from .container import (  # noqa: F401
     with_container_format,
 )
 from .decode import (  # noqa: F401
-    DECODED_DDL,
     decode_ok_rule,
     dur_consistency_rule,
     sr_consistency_rule,
     with_decoded,
-    with_decoded_header,
 )
 from .features import (  # noqa: F401
     clipping_rule,
@@ -56,9 +52,6 @@ from .features import (  # noqa: F401
     silence_rule,
     speech_rate,
     speech_rate_rule,
-    with_audio_features,
-    with_decoded_features,
-    with_full_audio,
 )
 from .repair import (  # noqa: F401
     normalize_pcm,

@@ -12,9 +12,10 @@ ASR-dataset curation pass runs after decode.
 Spectral rolloff here is the frequency below which ``rolloff`` (default
 0.99) of total spectral power sits, computed from a Welch-style average
 of non-overlapping Hann-windowed ``n_fft`` frames — one rfft per frame,
-bounded work per clip regardless of clip length, inside the same
-Arrow-batched stage family as every other PCM feature (no per-row
-Python dispatch). ``bandwidth_ratio = rolloff_hz / (sr/2)`` is the
+bounded work per clip regardless of clip length, computed as the
+``bandwidth`` group of the one decode stage
+(``decode.with_decoded(fields=("bandwidth",))``, no per-row Python
+dispatch). ``bandwidth_ratio = rolloff_hz / (sr/2)`` is the
 judged quantity: a proper full-band recording lands near 1.0; content
 ideally-resampled from sr/2 lands near 0.5; telephony-band content in a
 16 kHz container lands near 0.2.
@@ -31,22 +32,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..errors import Code
 from ..rules.object import ObjectRule
-from .decode import _decode_series
 
-BANDWIDTH_TYPE = T.StructType([
-    T.StructField("ok", T.BooleanType()),
-    T.StructField("sr", T.IntegerType()),
-    T.StructField("rms", T.DoubleType()),
-    T.StructField("rolloff_hz", T.DoubleType()),
-    T.StructField("bandwidth_ratio", T.DoubleType()),
-])
+#: the ``bandwidth`` group of ``with_decoded``'s struct
+BANDWIDTH_FIELDS = [T.StructField("rolloff_hz", T.DoubleType()),
+                    T.StructField("bandwidth_ratio", T.DoubleType())]
 
 #: clips with integrated RMS below this have no measurable content
 #: spectrum — only a codec noise floor (G.711 A-law encodes digital
@@ -85,41 +79,20 @@ def rolloff_hz(x: np.ndarray, sr: int, rolloff: float = 0.99,
     return float(hz), float(min(hz / nyq, 1.0)) if nyq > 0 else float("nan")
 
 
-def _bandwidth_frame(dec, n_rows: int, rolloff: float, n_fft: int):
-    """Per-clip rolloff/ratio arrays from an already-decoded batch."""
-    ok = dec["ok"].to_numpy()
+def _bandwidth_frame(dec: pd.DataFrame, rolloff: float,
+                     n_fft: int) -> pd.DataFrame:
+    """Per-clip rolloff/ratio of a decoded batch (``_decode_parts`` with
+    ``want_pcm``); undecodable rows -> null fields."""
+    n_rows = len(dec)
     roll = np.full(n_rows, np.nan)
     ratio = np.full(n_rows, np.nan)
-    for i in np.nonzero(ok)[0]:
-        r_hz, r = rolloff_hz(dec["pcm"][i], int(dec["sr"][i]),
-                             rolloff, n_fft)
-        roll[i], ratio[i] = r_hz, r
-    return roll, ratio
+    for i in np.nonzero(dec["ok"].to_numpy())[0]:
+        roll[i], ratio[i] = rolloff_hz(dec["pcm"][i], int(dec["sr"][i]),
+                                       rolloff, n_fft)
+    return pd.DataFrame({"rolloff_hz": roll, "bandwidth_ratio": ratio})
 
 
-def _bandwidth_series(bs: pd.Series, rolloff: float,
-                      n_fft: int) -> pd.DataFrame:
-    dec = _decode_series(bs, want_pcm=True)
-    roll, ratio = _bandwidth_frame(dec, len(bs), rolloff, n_fft)
-    return pd.DataFrame({"ok": dec["ok"], "sr": dec["sr"],
-                         "rms": dec["rms"].astype("float64"),
-                         "rolloff_hz": roll, "bandwidth_ratio": ratio})
-
-
-def with_bandwidth(df: DataFrame, bytes_col: str = "bytes",
-                   out_col: str = "_bw", rolloff: float = 0.99,
-                   n_fft: int = 2048) -> DataFrame:
-    """Append the bandwidth struct (single Arrow-batched stage). For a
-    suite that also runs feature/VAD gates, prefer
-    ``with_full_audio(..., bandwidth=True)`` — same fields, one fused
-    decode for everything."""
-    def _udf(bs: pd.Series) -> pd.DataFrame:
-        return _bandwidth_series(bs, rolloff, n_fft)
-    return df.withColumn(out_col,
-                         pandas_udf(_udf, BANDWIDTH_TYPE)(F.col(bytes_col)))
-
-
-def bandwidth_rule(bytes_col: str = "bytes", bw_col: str = "_bw",
+def bandwidth_rule(bytes_col: str = "bytes", bw_col: str = "_decoded",
                    min_ratio: float = 0.5,
                    min_rms: float = MIN_JUDGED_RMS) -> ObjectRule:
     """Effective bandwidth must reach ``min_ratio`` of Nyquist

@@ -9,23 +9,30 @@ input_hint), producing a decoded struct that is computed once and reused
 by every downstream consistency rule (SURVEY.md §4 "decode once into a
 struct column").
 
-What each stage ships to Python:
+:func:`with_decoded` is the package's one validation-stage UDF. Its
+``fields`` pick the struct's groups after ``ok, sr, n_samples,
+dur_ms``: ``rms``, ``pcm``, ``features`` (features.py), ``vad``
+(segments.py) and ``bandwidth`` (bandwidth.py). One pandas UDF decodes
+each Arrow batch once with :func:`_decode_parts` and runs the requested
+group kernels over that decoded frame.
 
-- :func:`with_decoded_header` (the suite's plain decode stage) ships the
-  44-byte header and the payload length per row, plus the payload only
-  for the rows that :func:`canonical_guard` cannot prove canonical
-  (extra chunks, EXTENSIBLE, multi-channel, malformed). ``ok``, ``sr``,
-  ``n_samples`` and ``dur_ms`` of a canonical WAV follow from its header
-  and length alone; the struct carries no ``rms``.
-- :func:`with_decoded` and every PCM consumer (features, VAD, bandwidth,
-  fingerprints, embeddings, repair) ship the whole payload: ``rms`` and
-  the samples need it.
+What the stage ships to Python follows from ``fields`` alone:
 
-Both run the same kernel, :func:`_decode_parts`.
+- ``fields=()`` (the suite's plain decode stage) ships the 44-byte
+  header and the payload length per row, plus the payload only for the
+  rows that :func:`canonical_guard` cannot prove canonical (extra
+  chunks, EXTENSIBLE, multi-channel, malformed). ``ok``, ``sr``,
+  ``n_samples`` and ``dur_ms`` of a canonical WAV follow from its
+  header and length alone; the struct carries no ``rms``.
+- any other ``fields`` ships the whole payload: ``rms`` and the samples
+  need it. The re-encoding stages (repair, fingerprints, embeddings)
+  decode whole payloads with :func:`_decode_series`.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 import struct
 from typing import NamedTuple
 
@@ -38,24 +45,31 @@ from pyspark.sql.functions import pandas_udf
 
 from ..errors import Code
 from ..rules.object import ObjectRule
+from .bandwidth import BANDWIDTH_FIELDS, _bandwidth_frame
+from .features import FEATURE_FIELDS, _features_series
+from .segments import VAD_FIELDS, _segments_series
 from .wav import (_DATA, _FMT, _FMT_BITS, _RIFF, _WAVE, _samples_to_float,
                   decode_bytes)
 
 # Programmatic DataTypes (not DDL strings): pandas_udf must be creatable on
 # executors at module import where no SparkSession exists to parse DDL.
-_BASE_FIELDS = [
+# Every decoded struct starts with these; the groups follow in FIELD_GROUPS
+# order.
+HEADER_FIELDS = [
     T.StructField("ok", T.BooleanType()),
     T.StructField("sr", T.IntegerType()),
     T.StructField("n_samples", T.LongType()),
     T.StructField("dur_ms", T.IntegerType()),
-    T.StructField("rms", T.DoubleType()),
 ]
-DECODED_TYPE = T.StructType(_BASE_FIELDS)
-DECODED_PCM_TYPE = T.StructType(
-    _BASE_FIELDS + [T.StructField("pcm", T.ArrayType(T.FloatType()))])
-DECODED_DDL = "struct<ok:boolean,sr:int,n_samples:bigint,dur_ms:int,rms:double>"
-# header-only stage: no rms, so a rule that reads it fails at analysis
-HEADER_TYPE = T.StructType(_BASE_FIELDS[:4])
+
+#: the ``fields`` groups of :func:`with_decoded`, in struct order
+FIELD_GROUPS = {
+    "rms": [T.StructField("rms", T.DoubleType())],
+    "pcm": [T.StructField("pcm", T.ArrayType(T.FloatType()))],
+    "features": FEATURE_FIELDS,
+    "vad": VAD_FIELDS,
+    "bandwidth": BANDWIDTH_FIELDS,
+}
 
 HEADER_LEN = 44  # RIFF + WAVE + 16-byte fmt chunk + data chunk header
 
@@ -192,75 +206,115 @@ def _decode_series(bs: pd.Series, want_pcm: bool,
                          downmix=downmix)
 
 
-def _make_udf(include_pcm: bool, downmix: bool = False):
-    rt = DECODED_PCM_TYPE if include_pcm else DECODED_TYPE
-
-    def decode_wav_udf(bs: pd.Series) -> pd.DataFrame:
-        return _decode_series(bs, want_pcm=include_pcm, downmix=downmix)
-
-    return pandas_udf(decode_wav_udf, rt)
+def _field_groups(fields) -> tuple:
+    """``fields`` in struct order; a payload group brings ``rms``."""
+    unknown = set(fields) - set(FIELD_GROUPS)
+    if unknown:
+        raise ValueError(f"unknown decoded field groups {sorted(unknown)}; "
+                         f"choose from {list(FIELD_GROUPS)}")
+    return tuple(g for g in FIELD_GROUPS
+                 if g in fields or (g == "rms" and fields))
 
 
 def with_decoded(df: DataFrame, bytes_col: str = "bytes",
-                 out_col: str = "_decoded", include_pcm: bool = False,
-                 downmix: bool = False) -> DataFrame:
-    """Append the decoded struct column (single Arrow-batched stage).
-    ``downmix=True`` additionally accepts multi-channel WAV via
-    per-frame channel-mean downmix (default: multi-channel is a DECODE
-    violation — the validation stance for a mono table)."""
-    return df.withColumn(out_col,
-                         _make_udf(include_pcm, downmix)(F.col(bytes_col)))
+                 out_col: str = "_decoded", fields=("rms",),
+                 downmix: bool = False, frame_ms: int = 20,
+                 silence_rms: float = 0.01, clip_level: float = 0.999,
+                 vad_threshold_rms: float = 0.01, hangover_frames: int = 2,
+                 min_speech_frames: int = 2, rolloff: float = 0.99,
+                 n_fft: int = 2048) -> DataFrame:
+    """Append the decoded struct column from ONE Arrow-batched stage.
+
+    The struct is ``ok, sr, n_samples, dur_ms`` followed by the
+    requested ``fields`` groups in :data:`FIELD_GROUPS` order: ``rms``,
+    ``pcm`` (float32 samples), ``features`` (features.py: peak, clipping,
+    silence, ZCR, level, DC offset; ``frame_ms``, ``silence_rms``,
+    ``clip_level``), ``vad`` (segments.py: energy-VAD spans and SNR;
+    ``frame_ms``, ``vad_threshold_rms``, ``hangover_frames``,
+    ``min_speech_frames``) and ``bandwidth`` (bandwidth.py: spectral
+    rolloff; ``rolloff``, ``n_fft``). Any payload group also brings
+    ``rms``. Every group is computed from the same decoded batch.
+
+    ``fields=()`` ships each row's 44-byte header and length, plus the
+    payload only where :func:`canonical_guard` fails; any other value
+    ships every payload. ``downmix=True`` additionally accepts
+    multi-channel WAV via per-frame channel-mean downmix (default:
+    multi-channel is a DECODE violation — the validation stance for a
+    mono table)."""
+    groups = _field_groups(fields)
+    want_pcm = bool(set(groups) - {"rms"})
+    kernels = {
+        "features": lambda d: _features_series(d, frame_ms, silence_rms,
+                                               clip_level),
+        "vad": lambda d: _segments_series(d, frame_ms, vad_threshold_rms,
+                                          hangover_frames, min_speech_frames),
+        "bandwidth": lambda d: _bandwidth_frame(d, rolloff, n_fft),
+    }
+    run = [kernels[g] for g in groups if g in kernels]
+    fields_out = HEADER_FIELDS + [f for g in groups for f in FIELD_GROUPS[g]]
+    base = [f.name for f in HEADER_FIELDS] + [
+        f.name for g in ("rms", "pcm") if g in groups for f in FIELD_GROUPS[g]]
+
+    def decode_stage(*cols: pd.Series) -> pd.DataFrame:
+        if len(cols) == 1:   # whole payloads
+            dec = _decode_series(cols[0], want_pcm, downmix)
+        else:                # header, length, payload where the guard fails
+            hdr, n, body = cols
+            dec = _decode_parts(hdr.to_numpy(),
+                                n.fillna(0).to_numpy(dtype=np.int64),
+                                body.to_numpy(), want_rms=False,
+                                downmix=downmix)
+        return pd.concat([dec[base]] + [k(dec) for k in run], axis=1)
+
+    b = F.col(bytes_col)
+    args = ((b,) if groups else
+            (F.substring(b, 1, HEADER_LEN), F.length(b),
+             F.when(~canonical_guard(bytes_col), b)))
+    udf = pandas_udf(decode_stage, T.StructType(fields_out))
+    return df.withColumn(out_col, udf(*args))
 
 
-def _le_uint(b: Column, offset: int, n: int) -> Column:
-    """Little-endian unsigned int of ``n`` bytes at 0-based ``offset``.
-    Byte pairs of the hex string are reordered: ``reverse`` on binary
-    goes through a UTF-8 string cast and reorders multi-byte sequences
-    as units, so it misreads bytes of 0xC0 and above."""
-    hx = F.hex(F.substring(b, offset + 1, n))
-    return F.conv(F.concat(*[F.substring(hx, 2 * k + 1, 2)
-                             for k in reversed(range(n))]), 16, 10) \
-        .cast("long")
+def _le_uint(b: str, offset: int, n: int) -> str:
+    """SQL for the little-endian unsigned int of ``n`` bytes at 0-based
+    ``offset`` of binary ``b``. Byte pairs of the hex string are
+    reordered: ``reverse`` on binary goes through a UTF-8 string cast
+    and reorders multi-byte sequences as units, so it misreads bytes of
+    0xC0 and above."""
+    hx = f"hex(substring({b}, {offset + 1}, {n}))"
+    pairs = ", ".join(f"substring({hx}, {2 * k + 1}, 2)"
+                      for k in reversed(range(n)))
+    return f"CAST(conv(concat({pairs}), 16, 10) AS BIGINT)"
 
 
-def canonical_guard(b: Column) -> Column:
+def _binary_sql(raw: bytes) -> str:
+    return f"X'{raw.hex().upper()}'"
+
+
+@functools.lru_cache(maxsize=None)
+def _guard_sql(name: str) -> str:
+    b = (name if re.fullmatch(r"\w+(\.\w+)*|`[^`]+`", name)
+         else "`" + name.replace("`", "``") + "`")
+    bits, dsize = _le_uint(b, 34, 2), _le_uint(b, 40, 4)
+    pairs = ", ".join(_binary_sql(struct.pack("<HH", code, nb))
+                      for code, allowed in _FMT_BITS.items() for nb in allowed)
+    conds = [f"concat(substring({b}, 21, 2), substring({b}, 35, 2)) "
+             f"IN ({pairs})"]
+    conds += [f"substring({b}, {off + 1}, {len(tag)}) = {_binary_sql(tag)}"
+              for off, tag in _CANONICAL_BYTES]
+    conds += [f"substring({b}, 25, 4) != {_binary_sql(bytes(4))}",  # sr > 0
+              f"{dsize} + {HEADER_LEN} = length({b})",
+              f"{dsize} % greatest(shiftright({bits}, 3), 1) = 0"]
+    return "coalesce(" + " AND ".join(f"({c})" for c in conds) + ", false)"
+
+
+def canonical_guard(b: str | Column) -> Column:
     """Catalyst twin of the kernel's canonical mask: true only for rows
     whose header alone gives exact ok/sr/n_samples/dur_ms (never NULL).
     Built from the same byte table, ``_FMT_BITS`` pairs and size
-    equalities as :func:`_parse_headers`."""
-    bits = _le_uint(b, 34, 2)
-    dsize = _le_uint(b, 40, 4)
-    pairs = [bytearray(struct.pack("<HH", code, nb))
-             for code, allowed in _FMT_BITS.items() for nb in allowed]
-    cond = F.concat(F.substring(b, 21, 2), F.substring(b, 35, 2)).isin(*pairs)
-    for off, tag in _CANONICAL_BYTES:
-        cond &= F.substring(b, off + 1, len(tag)) == bytearray(tag)
-    cond &= ((F.substring(b, 25, 4) != bytearray(4))  # sr > 0
-             & (dsize + HEADER_LEN == F.length(b))
-             & (dsize % F.greatest(F.shiftright(bits, 3), F.lit(1)) == 0))
-    return F.coalesce(cond, F.lit(False))
-
-
-def _make_header_udf():
-    def decode_wav_header_udf(hdr: pd.Series, n: pd.Series,
-                              body: pd.Series) -> pd.DataFrame:
-        return _decode_parts(hdr.to_numpy(),
-                             n.fillna(0).to_numpy(dtype=np.int64),
-                             body.to_numpy(), want_rms=False)
-
-    return pandas_udf(decode_wav_header_udf, HEADER_TYPE)
-
-
-def with_decoded_header(df: DataFrame, bytes_col: str = "bytes",
-                        out_col: str = "_decoded") -> DataFrame:
-    """Append ``struct<ok, sr, n_samples, dur_ms>`` (no ``rms``) from
-    ONE Arrow stage that ships each row's 44-byte header and length,
-    plus its payload only where :func:`canonical_guard` fails. Same
-    values as :func:`with_decoded` on those four fields."""
-    b = F.col(bytes_col)
-    return df.withColumn(out_col, _make_header_udf()(
-        F.substring(b, 1, HEADER_LEN), F.length(b),
-        F.when(~canonical_guard(b), b)))
+    equalities as :func:`_parse_headers`. ``b`` is the bytes column's
+    name or a plain column reference to it; its SQL text is built once
+    per name and parsed by one ``F.expr``."""
+    return F.expr(_guard_sql(b if isinstance(b, str) else b._jc.toString()))
 
 
 # ---------------------------------------------------------------------------

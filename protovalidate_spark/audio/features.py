@@ -4,9 +4,9 @@ A training-data pipeline over audio wants more than "does it decode":
 clipping detection, silence screening, and a transcript-vs-duration
 plausibility check are the standard first-pass quality gates. Peak /
 clipping ratio / silence ratio / zero-crossing rate are computed from
-the decoded PCM inside ONE Arrow-batched stage (the same vectorized
-batch decoder the DECODE rule uses — no second decode, no per-row
-Python dispatch); speech rate is a pure JVM column expression over
+the decoded PCM as the ``features`` group of the one decode stage
+(``decode.with_decoded(fields=("features",))`` — no second decode, no
+per-row Python dispatch); speech rate is a pure JVM column expression over
 (transcript, dur_ms), no decode needed at all.
 
 Reference analog: these compose like any other rule-builder output —
@@ -20,55 +20,31 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..errors import Code
 from ..rules.object import ObjectRule
-from .decode import _decode_series
 
-AUDIO_FEATURES_TYPE = T.StructType([
-    T.StructField("ok", T.BooleanType()),
-    T.StructField("peak", T.DoubleType()),
-    T.StructField("clip_ratio", T.DoubleType()),
-    T.StructField("silence_ratio", T.DoubleType()),
-    T.StructField("zcr", T.DoubleType()),
-    T.StructField("rms_dbfs", T.DoubleType()),
-    T.StructField("dc_offset", T.DoubleType()),
-])
+#: the ``features`` group of ``with_decoded``'s struct
+FEATURE_FIELDS = [T.StructField(name, T.DoubleType()) for name in (
+    "peak", "clip_ratio", "silence_ratio", "zcr", "rms_dbfs", "dc_offset")]
 
 # all-zero PCM has no finite dBFS; a fixed floor keeps the column typed
 # double (no NULL/-inf special case in rules) and sits far below any
 # real recording (16-bit quantization noise alone is ~-96 dBFS)
 SILENCE_DBFS = -200.0
 
-# decode struct + feature fields in ONE column: a suite that wants both
-# the DECODE/CONSISTENT rules and the feature rules pays a single Arrow
-# stage and a single decode (field names match DECODED_TYPE, so every
-# decode-consumer rule works on this column unchanged)
-from .decode import _BASE_FIELDS  # noqa: E402  (after pandas/pyspark imports)
 
-DECODED_FEATURES_TYPE = T.StructType(
-    _BASE_FIELDS + [T.StructField("peak", T.DoubleType()),
-                    T.StructField("clip_ratio", T.DoubleType()),
-                    T.StructField("silence_ratio", T.DoubleType()),
-                    T.StructField("zcr", T.DoubleType()),
-                    T.StructField("rms_dbfs", T.DoubleType()),
-                    T.StructField("dc_offset", T.DoubleType())])
-
-
-def _features_series(bs: pd.Series, frame_ms: int, silence_rms: float,
-                     clip_level: float, _decoded=None) -> pd.DataFrame:
-    """Decode the whole Arrow batch once (vectorized kernel), then one
-    numpy pass per clip: peak, clipping ratio (|x| at/above full scale),
-    silence ratio (fraction of frame_ms frames under silence_rms), and
-    zero-crossing rate. Undecodable rows -> ok=false, null features.
-    Pass ``_decoded`` (a _decode_series(want_pcm=True) frame) to reuse
-    an already-decoded batch instead of decoding again."""
-    dec = _decode_series(bs, want_pcm=True) if _decoded is None else _decoded
-    n_rows = len(bs)
+def _features_series(dec: pd.DataFrame, frame_ms: int, silence_rms: float,
+                     clip_level: float) -> pd.DataFrame:
+    """One numpy pass per clip of a decoded batch (``_decode_parts``
+    with ``want_pcm``): peak, clipping ratio (|x| at/above full scale),
+    silence ratio (fraction of frame_ms frames under silence_rms),
+    zero-crossing rate, integrated level and DC offset. Undecodable
+    rows -> null features."""
+    n_rows = len(dec)
     ok = dec["ok"].to_numpy()
     peak = np.full(n_rows, np.nan)
     clip_r = np.full(n_rows, np.nan)
@@ -103,122 +79,12 @@ def _features_series(bs: pd.Series, frame_ms: int, silence_rms: float,
         else:  # clip shorter than one frame: all-or-nothing
             rms = float(np.sqrt(np.dot(x.astype(np.float64), x) / n))
             sil_r[i] = 1.0 if rms < silence_rms else 0.0
-    out = pd.DataFrame({"ok": dec["ok"], "peak": peak, "clip_ratio": clip_r,
-                        "silence_ratio": sil_r, "zcr": zcr,
-                        "rms_dbfs": dbfs, "dc_offset": dc})
-    return out
+    return pd.DataFrame({"peak": peak, "clip_ratio": clip_r,
+                         "silence_ratio": sil_r, "zcr": zcr,
+                         "rms_dbfs": dbfs, "dc_offset": dc})
 
 
-def with_audio_features(df: DataFrame, bytes_col: str = "bytes",
-                        out_col: str = "_afeat", frame_ms: int = 20,
-                        silence_rms: float = 0.01,
-                        clip_level: float = 0.999) -> DataFrame:
-    """Append the feature struct column (single Arrow-batched stage)."""
-    def _udf(bs: pd.Series) -> pd.DataFrame:
-        return _features_series(bs, frame_ms, silence_rms, clip_level)
-    return df.withColumn(out_col,
-                         pandas_udf(_udf, AUDIO_FEATURES_TYPE)(F.col(bytes_col)))
-
-
-def with_decoded_features(df: DataFrame, bytes_col: str = "bytes",
-                          out_col: str = "_decoded", frame_ms: int = 20,
-                          silence_rms: float = 0.01,
-                          clip_level: float = 0.999) -> DataFrame:
-    """Decode struct AND feature fields from ONE fused Arrow stage —
-    drop-in replacement for ``with_decoded`` when feature rules are on
-    (decode_ok/sr/dur consistency rules read the same field names)."""
-    def _udf(bs: pd.Series) -> pd.DataFrame:
-        dec = _decode_series(bs, want_pcm=True)
-        feat = _features_series(bs, frame_ms, silence_rms, clip_level,
-                                _decoded=dec)
-        return pd.DataFrame({
-            "ok": dec["ok"], "sr": dec["sr"], "n_samples": dec["n_samples"],
-            "dur_ms": dec["dur_ms"], "rms": dec["rms"],
-            "peak": feat["peak"], "clip_ratio": feat["clip_ratio"],
-            "silence_ratio": feat["silence_ratio"], "zcr": feat["zcr"],
-            "rms_dbfs": feat["rms_dbfs"], "dc_offset": feat["dc_offset"]})
-    return df.withColumn(out_col,
-                         pandas_udf(_udf, DECODED_FEATURES_TYPE)(F.col(bytes_col)))
-
-
-#: decode struct + feature fields + VAD fields in ONE column — the
-#: everything-on audio stage (suite `audio_vad`): decode-consumer rules,
-#: feature rules, and VAD/SNR rules all read the same struct, ONE Arrow
-#: stage, ONE decode
-FULL_AUDIO_TYPE = T.StructType(
-    DECODED_FEATURES_TYPE.fields + [
-        T.StructField("segments", T.ArrayType(T.StructType([
-            T.StructField("start_ms", T.IntegerType()),
-            T.StructField("end_ms", T.IntegerType()),
-        ]))),
-        T.StructField("speech_ms", T.IntegerType()),
-        T.StructField("speech_ratio", T.DoubleType()),
-        T.StructField("n_segments", T.IntegerType()),
-        T.StructField("longest_gap_ms", T.IntegerType()),
-        T.StructField("snr_db", T.DoubleType()),
-    ])
-
-
-#: FULL_AUDIO_TYPE + effective-bandwidth fields (with_full_audio(...,
-#: bandwidth=True)); field names match BANDWIDTH_TYPE so bandwidth_rule
-#: reads the fused column unchanged via bw_col=
-FULL_AUDIO_BW_TYPE = T.StructType(
-    FULL_AUDIO_TYPE.fields + [
-        T.StructField("rolloff_hz", T.DoubleType()),
-        T.StructField("bandwidth_ratio", T.DoubleType()),
-    ])
-
-
-def with_full_audio(df: DataFrame, bytes_col: str = "bytes",
-                    out_col: str = "_audio", frame_ms: int = 20,
-                    silence_rms: float = 0.01, clip_level: float = 0.999,
-                    vad_threshold_rms: float = 0.01,
-                    hangover_frames: int = 2,
-                    min_speech_frames: int = 2,
-                    bandwidth: bool = False, rolloff: float = 0.99,
-                    n_fft: int = 2048) -> DataFrame:
-    """Decode struct + PCM features + energy-VAD/SNR from ONE fused
-    Arrow stage — a suite with EVERY audio gate enabled (decode/sr/dur
-    consistency, clipping/silence/quiet/DC, speech-presence/max-gap/
-    min-SNR) still pays a single Python round-trip and a single decode.
-    Field names match DECODED_TYPE / AUDIO_FEATURES_TYPE / SEGMENTS_TYPE,
-    so every rule consumes this column unchanged via its *_col kwarg.
-    ``bandwidth=True`` additionally computes the effective-bandwidth
-    fields (audio/bandwidth.py) in the SAME stage — opt-in because the
-    per-frame rffts cost more than every other feature combined."""
-    from .segments import _segments_series
-
-    def _udf(bs: pd.Series) -> pd.DataFrame:
-        dec = _decode_series(bs, want_pcm=True)
-        feat = _features_series(bs, frame_ms, silence_rms, clip_level,
-                                _decoded=dec)
-        vad = _segments_series(bs, frame_ms, vad_threshold_rms,
-                               hangover_frames, min_speech_frames,
-                               _decoded=dec)
-        out = pd.DataFrame({
-            "ok": dec["ok"], "sr": dec["sr"], "n_samples": dec["n_samples"],
-            "dur_ms": dec["dur_ms"], "rms": dec["rms"],
-            "peak": feat["peak"], "clip_ratio": feat["clip_ratio"],
-            "silence_ratio": feat["silence_ratio"], "zcr": feat["zcr"],
-            "rms_dbfs": feat["rms_dbfs"], "dc_offset": feat["dc_offset"],
-            "segments": vad["segments"], "speech_ms": vad["speech_ms"],
-            "speech_ratio": vad["speech_ratio"],
-            "n_segments": vad["n_segments"],
-            "longest_gap_ms": vad["longest_gap_ms"],
-            "snr_db": vad["snr_db"]})
-        if bandwidth:
-            from .bandwidth import _bandwidth_frame
-            roll, ratio = _bandwidth_frame(dec, len(bs), rolloff, n_fft)
-            out["rolloff_hz"] = roll
-            out["bandwidth_ratio"] = ratio
-        return out
-
-    otype = FULL_AUDIO_BW_TYPE if bandwidth else FULL_AUDIO_TYPE
-    return df.withColumn(out_col,
-                         pandas_udf(_udf, otype)(F.col(bytes_col)))
-
-
-def clipping_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
+def clipping_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
                   max_ratio: float = 0.01) -> ObjectRule:
     """Clipped-sample ratio must stay under max_ratio (MAX). Only
     decodable clips are judged — DECODE reports the rest.
@@ -226,9 +92,9 @@ def clipping_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
     Note: clip_level is an absolute full-scale threshold. G.711
     mu-law/A-law saturate at ~0.980/0.984 of int16 full scale, below
     the 0.999 default — for telephony tables pass
-    ``with_audio_features(..., clip_level=0.97)``. Unsigned PCM8 is
-    asymmetric: the positive rail is 127/128 = 0.9922 (only the -1.0
-    negative rail clears 0.999), so for 8-bit tables use
+    ``with_decoded(..., fields=("features",), clip_level=0.97)``.
+    Unsigned PCM8 is asymmetric: the positive rail is 127/128 = 0.9922
+    (only the -1.0 negative rail clears 0.999), so for 8-bit tables use
     ``clip_level=0.99`` to count both rails."""
     return ObjectRule(
         rule_id=Code.MAX,
@@ -240,7 +106,7 @@ def clipping_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
     )
 
 
-def silence_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
+def silence_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
                  max_ratio: float = 0.9) -> ObjectRule:
     """Mostly-silent clips (silent-frame ratio above max_ratio) fail MAX."""
     return ObjectRule(
@@ -253,7 +119,7 @@ def silence_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
     )
 
 
-def quiet_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
+def quiet_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
                min_dbfs: float = -45.0) -> ObjectRule:
     """Integrated RMS level must reach min_dbfs (MIN) — a near-inaudible
     recording is a capture failure even when it isn't digitally silent,
@@ -271,7 +137,7 @@ def quiet_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
     )
 
 
-def dc_offset_rule(bytes_col: str = "bytes", feat_col: str = "_afeat",
+def dc_offset_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
                    max_abs: float = 0.02) -> ObjectRule:
     """Mean sample value must stay within ±max_abs of zero (MAX) — a DC
     bias flags a broken capture chain (mic preamp / ADC coupling) and

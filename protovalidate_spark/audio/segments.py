@@ -6,9 +6,9 @@ for cropping / windowing, plus derived gates (too little speech, one
 giant silence hole, clip is nothing but leading/trailing dead air).
 The segmenter is the standard energy VAD: frame RMS against a
 threshold, short gaps bridged (hangover), too-short bursts dropped.
-Deterministic, pure numpy, and fused into ONE Arrow-batched stage that
-reuses the vectorized batch decoder — no second decode, no per-row
-Python dispatch.
+Deterministic, pure numpy, and computed as the ``vad`` group of the one
+decode stage (``decode.with_decoded(fields=("vad",))``) — no second
+decode, no per-row Python dispatch.
 
 Rule composition mirrors the engine's shape everywhere else: the
 segment struct is a column, so MIN/MAX-style rules read its fields and
@@ -18,21 +18,16 @@ violation rows carry the same (field_path, rule_id, actual) triple
 
 from __future__ import annotations
 
-from typing import List, Tuple
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..errors import Code
 from ..rules.object import ObjectRule
-from .decode import _decode_series
 
-SEGMENTS_TYPE = T.StructType([
-    T.StructField("ok", T.BooleanType()),
+#: the ``vad`` group of ``with_decoded``'s struct
+VAD_FIELDS = [
     T.StructField("segments", T.ArrayType(T.StructType([
         T.StructField("start_ms", T.IntegerType()),
         T.StructField("end_ms", T.IntegerType()),
@@ -42,7 +37,7 @@ SEGMENTS_TYPE = T.StructType([
     T.StructField("n_segments", T.IntegerType()),
     T.StructField("longest_gap_ms", T.IntegerType()),
     T.StructField("snr_db", T.DoubleType()),
-])
+]
 
 # digital-silence noise frames would make the SNR ratio infinite; the
 # cap keeps the column finite and far above any real acoustic SNR
@@ -120,15 +115,15 @@ def segment_pcm(x: np.ndarray, sr: int, frame_ms: int = 20,
     return (out, rms, active) if return_frames else out
 
 
-def _segments_series(bs: pd.Series, frame_ms: int, threshold_rms: float,
-                     hangover_frames: int, min_speech_frames: int,
-                     _decoded=None) -> pd.DataFrame:
-    """Pass ``_decoded`` (a _decode_series(want_pcm=True) frame) to reuse
-    an already-decoded batch — the fused full-audio stage decodes once
-    for decode rules, features, AND VAD (features.with_full_audio)."""
-    dec = _decode_series(bs, want_pcm=True) if _decoded is None else _decoded
+def _segments_series(dec: pd.DataFrame, frame_ms: int,
+                     threshold_rms: float, hangover_frames: int,
+                     min_speech_frames: int) -> pd.DataFrame:
+    """VAD spans, speech share, longest gap and SNR per clip of a decoded
+    batch (``_decode_parts`` with ``want_pcm``); snr_db is speech-frame
+    RMS vs noise-frame RMS from the same frame pass, NULL when the clip
+    has no noise reference. Undecodable rows -> null fields."""
     ok = dec["ok"].to_numpy()
-    n_rows = len(bs)
+    n_rows = len(dec)
     segs = [None] * n_rows
     speech_ms = [None] * n_rows
     ratio = np.full(n_rows, np.nan)
@@ -151,7 +146,7 @@ def _segments_series(bs: pd.Series, frame_ms: int, threshold_rms: float,
         gap[i] = max((marks[j + 1] - marks[j]
                       for j in range(0, len(marks), 2)), default=dur)
     return pd.DataFrame({
-        "ok": dec["ok"], "segments": segs,
+        "segments": segs,
         "speech_ms": pd.array(speech_ms, dtype="Int32"),
         "speech_ratio": ratio,
         "n_segments": pd.array(nseg, dtype="Int32"),
@@ -159,22 +154,7 @@ def _segments_series(bs: pd.Series, frame_ms: int, threshold_rms: float,
         "snr_db": pd.array(snr, dtype="float64")})
 
 
-def with_segments(df: DataFrame, bytes_col: str = "bytes",
-                  out_col: str = "_vad", frame_ms: int = 20,
-                  threshold_rms: float = 0.01, hangover_frames: int = 2,
-                  min_speech_frames: int = 2) -> DataFrame:
-    """Append struct(ok, segments, speech_ms, speech_ratio, n_segments,
-    longest_gap_ms, snr_db) — single Arrow-batched decode+VAD stage
-    (snr_db = speech-frames RMS vs noise-frames RMS from the same frame
-    pass; NULL when the clip has no noise reference)."""
-    def _udf(bs: pd.Series) -> pd.DataFrame:
-        return _segments_series(bs, frame_ms, threshold_rms,
-                                hangover_frames, min_speech_frames)
-    return df.withColumn(out_col,
-                         pandas_udf(_udf, SEGMENTS_TYPE)(F.col(bytes_col)))
-
-
-def speech_presence_rule(bytes_col: str = "bytes", vad_col: str = "_vad",
+def speech_presence_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
                          min_ratio: float = 0.1) -> ObjectRule:
     """Speech-activity ratio must reach min_ratio (MIN). Only decodable
     clips are judged — DECODE reports the rest."""
@@ -189,7 +169,7 @@ def speech_presence_rule(bytes_col: str = "bytes", vad_col: str = "_vad",
     )
 
 
-def min_snr_rule(bytes_col: str = "bytes", vad_col: str = "_vad",
+def min_snr_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
                  min_db: float = 10.0) -> ObjectRule:
     """VAD-estimated SNR must reach min_db (MIN) — a recording whose
     speech barely clears its own noise floor is a capture-quality
@@ -208,7 +188,7 @@ def min_snr_rule(bytes_col: str = "bytes", vad_col: str = "_vad",
     )
 
 
-def max_gap_rule(bytes_col: str = "bytes", vad_col: str = "_vad",
+def max_gap_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
                  max_gap_ms: int = 5000) -> ObjectRule:
     """No silent hole (incl. lead-in/tail-out) may exceed max_gap_ms
     (MAX) — a transcriptless dead-air stretch is a pairing smell."""

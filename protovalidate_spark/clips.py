@@ -44,22 +44,23 @@ def clips_suite(spark: SparkSession,
                 label_conflicts: bool = False) -> ValidationSuite:
     """``audio_checks=True`` adds the PCM quality gates (clipping ratio,
     silence ratio) and the transcript speech-rate consistency rule; the
-    feature fields ride the SAME fused Arrow decode stage, so the scan
-    and Python round-trip budget is unchanged. ``level_checks=True``
-    adds the capture-chain gates (integrated RMS level, DC offset) on
-    the same feature fields. ``vad_checks=True`` adds the energy-VAD
-    gates (speech presence, max silent gap, VAD-estimated min SNR) —
-    with every flag on it is STILL one Arrow stage and one decode
-    (features.with_full_audio). ``bandwidth_checks=True`` adds the
+    feature fields ride the SAME decode stage (its ``features`` group),
+    so the scan and Python round-trip budget is unchanged.
+    ``level_checks=True`` adds the capture-chain gates (integrated RMS
+    level, DC offset) on the same feature fields. ``vad_checks=True``
+    adds the energy-VAD gates (speech presence, max silent gap,
+    VAD-estimated min SNR) — the ``vad`` group; with every flag on it is
+    STILL one Arrow stage and one decode (``audio/decode.py::
+    with_decoded``). ``bandwidth_checks=True`` adds the
     effective-bandwidth / upsample-detection gate (audio/bandwidth.py:
-    spectral rolloff vs the container's Nyquist) — the bandwidth fields
-    ride the SAME everything-on Arrow stage. NOTE: the deterministic
-    test fixture synthesizes pure tones, which ARE narrowband — on the
-    fixture this gate flags most decodable clips by design; it is meant
-    for real recorded speech. ``label_conflicts=True`` adds the
-    byte-exact transcript-conflict dataset check
-    (audio/consistency.py): byte-identical clips whose transcripts
-    disagree emit CONSISTENT violation rows."""
+    spectral rolloff vs the container's Nyquist) — the ``bandwidth``
+    group of the same stage. With no audio flag the stage ships headers,
+    not payloads. NOTE: the deterministic test fixture synthesizes pure
+    tones, which ARE narrowband — on the fixture this gate flags most
+    decodable clips by design; it is meant for real recorded speech.
+    ``label_conflicts=True`` adds the byte-exact transcript-conflict
+    dataset check (audio/consistency.py): byte-identical clips whose
+    transcripts disagree emit CONSISTENT violation rows."""
     extra = [
         sr_consistency_rule("sr_hz", "__dec_bytes"),
         dur_consistency_rule("dur_ms", "__dec_bytes", tolerance_ms=10),

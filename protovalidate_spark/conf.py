@@ -5,17 +5,18 @@ workload (binary columns of 10s–100s of KB flowing through Arrow UDF
 stages). They matter at every scale:
 
 - ``spark.sql.execution.arrow.maxRecordsPerBatch``: the payload stages
-  (``with_decoded``, features/VAD/bandwidth, fingerprints, embeddings,
-  repair) ship the raw ``bytes`` column to Python workers in Arrow
-  record batches. At the default 10 000 rows/batch a batch of ~30 KB
-  clips is ~300 MB of netty direct memory PER TASK; with 32 concurrent
-  tasks that exhausts ``MaxDirectMemorySize`` (observed
+  (``with_decoded`` with any ``fields`` — rms, pcm, features, VAD,
+  bandwidth — and fingerprints, embeddings, repair) ship the raw
+  ``bytes`` column to Python workers in Arrow record batches. At the
+  default 10 000 rows/batch a batch of ~30 KB clips is ~300 MB of
+  netty direct memory PER TASK; with 32 concurrent tasks that exhausts
+  ``MaxDirectMemorySize`` (observed
   ``org.apache.arrow.memory.OutOfMemoryException`` and 4-10× slowdowns
   from allocator thrash). 4 000 rows ≈ 120 MB peak/task: measured 4-5×
   faster cold and never OOMs. On a real cluster the same bound holds
-  per executor core. The suite's plain decode stage
-  (``with_decoded_header``) ships a 44-byte header per canonical row,
-  so the cap does not bind there.
+  per executor core. ``with_decoded(fields=())`` — the suite's plain
+  decode stage — ships a 44-byte header per canonical row, so the cap
+  does not bind there.
 - AQE on: runtime coalescing + skew-join splitting (north_rule: skew
   handling on hot codec partitions).
 - Shuffle partitions default to 2× cores locally; on a cluster size to

@@ -22,6 +22,3 @@ from .similarity import (  # noqa: F401
     read_lsh_probe, train_centroids, write_ivf_index, write_lsh_index,
 )
 from .curate import curate_clips, curate_documents  # noqa: F401
-from .multimodal import (  # noqa: F401
-    extract_media_meta, feature_extract, frame_sample, sniff_format,
-)

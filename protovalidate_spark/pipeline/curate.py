@@ -193,7 +193,8 @@ def curate_clips(
     dedup/conflicts (a dropped clip cannot crowd out its duplicates).
 
     Scale shape: THREE Arrow stage instances total, independent of the
-    gate count — the fused decode+features kernel evaluated under the
+    gate count — the decode stage with its ``features`` group
+    (``with_decoded(fields=("features",))``) evaluated under the
     violation projection and under the clean-side filter (caching the
     corpus to merge those two would store every payload byte; decoding
     twice is the right trade at scale), and ONE decode+FFT fingerprint
@@ -207,7 +208,7 @@ def curate_clips(
     downstream read reuse the materialized result instead of replaying
     the decode stages (same pattern as ngram_jaccard_dedup)."""
     from ..audio.consistency import transcript_label
-    from ..audio.features import with_audio_features
+    from ..audio.decode import with_decoded
     from ..audio.fingerprint import keyed_fingerprints
 
     tid = F.col(id_col)
@@ -218,7 +219,8 @@ def curate_clips(
             F.lit(msg).alias("message"),
             F.substring(actual.cast("string"), 1, 50).alias("actual"))
 
-    feats = with_audio_features(df, bytes_col=bytes_col, out_col="__af")
+    feats = with_decoded(df, bytes_col=bytes_col, out_col="__af",
+                         fields=("features",))
     ok = F.coalesce(F.col("__af")["ok"], F.lit(False))
     clip_r = F.col("__af")["clip_ratio"]
     sil_r = F.col("__af")["silence_ratio"]

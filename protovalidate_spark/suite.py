@@ -3,14 +3,15 @@
 Combines:
 - row-level object rule set (ONE projection, whole-stage codegen; audio
   decode wired in as ONE Arrow batch stage, decoded struct computed once
-  and reused — SURVEY.md §4). The plain decode stage (no
-  ``audio_features``/``audio_vad``/``audio_bandwidth`` on the column)
-  ships Python each row's 44-byte WAV header and payload length, plus
-  the payload only for rows a Catalyst guard cannot prove canonical
-  (audio/decode.py ``with_decoded_header``); its struct is
-  ``ok, sr, n_samples, dur_ms`` with no ``rms``, so a rule reading
-  ``rms`` from it fails at analysis. The feature/VAD/bandwidth stages
-  need the samples and ship whole payloads,
+  and reused — SURVEY.md §4). Each decodable bytes column gets one
+  ``audio/decode.py::with_decoded`` stage whose ``fields`` follow from
+  ``audio_features`` / ``audio_vad`` / ``audio_bandwidth``. With none of
+  them (``fields=()``) it ships Python each row's 44-byte WAV header and
+  payload length, plus the payload only for rows a Catalyst guard
+  cannot prove canonical; its struct is ``ok, sr, n_samples, dur_ms``
+  with no ``rms``, so a rule reading ``rms`` from it fails at analysis.
+  The feature/VAD/bandwidth groups need the samples and ship whole
+  payloads,
 - scan-based dataset checks (uniqueness, referential, label conflicts,
   monotonicity, reconciliation, outliers) which scan the RAW input (no
   decode cost),
@@ -41,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .audio.decode import decode_ok_rule, with_decoded_header
+from .audio.decode import decode_ok_rule, with_decoded
 from .dataset.fused import collect, local_frame
 from .dataset.referential import ref_violations
 from .dataset.stats import ColumnStats
@@ -76,20 +77,20 @@ class ValidationSuite:
     stats_cols: Sequence[str] = ()
     extra_object_rules: tuple = field(default_factory=tuple)
     salt_buckets: int = 0
-    # bytes columns whose decode stage should ALSO emit PCM features
-    # (peak/clip/silence/zcr/rms_dbfs/dc_offset) — same single Arrow
-    # stage, same struct column name, so decode-consumer rules are
-    # unaffected
+    # bytes columns whose decode stage should ALSO emit the PCM feature
+    # fields (peak/clip/silence/zcr/rms_dbfs/dc_offset) — the stage's
+    # "features" group, same struct column name, so decode-consumer
+    # rules are unaffected
     audio_features: Sequence[str] = ()
-    # bytes columns whose decode stage should ALSO emit energy-VAD
-    # fields (segments/speech_ratio/longest_gap_ms/snr_db) — implies the
-    # feature fields too (features.with_full_audio): EVERY audio gate on
-    # is still ONE Arrow stage and ONE decode
+    # bytes columns whose decode stage should ALSO emit the energy-VAD
+    # fields (segments/speech_ratio/longest_gap_ms/snr_db) — the "vad"
+    # group; implies the feature fields too: EVERY audio gate on is
+    # still ONE Arrow stage and ONE decode
     audio_vad: Sequence[str] = ()
     # bytes columns whose decode stage should ALSO emit the
     # effective-bandwidth fields (rolloff_hz/bandwidth_ratio — upsample
-    # detection, audio/bandwidth.py); implies features + VAD: the
-    # everything-on stage stays ONE Arrow stage and ONE decode
+    # detection, audio/bandwidth.py) — the "bandwidth" group; implies
+    # features + VAD: still ONE Arrow stage and ONE decode
     audio_bandwidth: Sequence[str] = ()
     # transcript-label conflict specs (audio/consistency.py): each dict
     # is kwargs for transcript_conflict_violations minus row_key_cols,
@@ -155,27 +156,22 @@ class ValidationSuite:
             cols.append(self.partition_col)
         return cols
 
+    def _audio_fields(self, col: str) -> tuple:
+        """The decode stage's field groups for bytes column ``col``:
+        bandwidth implies VAD, VAD implies features."""
+        bw = col in self.audio_bandwidth
+        vad = bw or col in self.audio_vad
+        feat = vad or col in self.audio_features
+        return tuple(g for g, on in (("features", feat), ("vad", vad),
+                                     ("bandwidth", bw)) if on)
+
     def row_violations(self, df: DataFrame) -> DataFrame:
         """Row-level pass: decode stage (if any) + one validation projection."""
         rules = self.rules
         work = df
         for c in self._decodable_cols():
-            if c in self.audio_bandwidth:
-                from .audio.features import with_full_audio
-                work = with_full_audio(work, bytes_col=c,
-                                       out_col=f"__dec_{c}",
-                                       bandwidth=True)
-            elif c in self.audio_vad:
-                from .audio.features import with_full_audio
-                work = with_full_audio(work, bytes_col=c,
-                                       out_col=f"__dec_{c}")
-            elif c in self.audio_features:
-                from .audio.features import with_decoded_features
-                work = with_decoded_features(work, bytes_col=c,
-                                             out_col=f"__dec_{c}")
-            else:
-                work = with_decoded_header(work, bytes_col=c,
-                                           out_col=f"__dec_{c}")
+            work = with_decoded(work, bytes_col=c, out_col=f"__dec_{c}",
+                                fields=self._audio_fields(c))
             rules = rules.with_rule(decode_ok_rule(c, f"__dec_{c}"))
         for r in self.extra_object_rules:
             rules = rules.with_rule(r)

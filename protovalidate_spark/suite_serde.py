@@ -112,8 +112,6 @@ def suite_to_dict(suite: ValidationSuite, *,
         out["reconciliations"] = recs
 
     for f in _SPEC_FIELDS:
-        if f == "reconciliations":
-            continue
         v = getattr(suite, f)
         if v:
             out[f] = _enc(list(v))

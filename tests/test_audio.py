@@ -55,7 +55,7 @@ def test_decode_udf_pcm_snr(spark):
     b = synth_sine_wav(440, 16000, 500)
     df = spark.createDataFrame([(b,)], "bytes binary")
     pcm = np.array(
-        with_decoded(df, include_pcm=True).select("_decoded.pcm").collect()[0][0],
+        with_decoded(df, fields=("pcm",)).select("_decoded.pcm").collect()[0][0],
         dtype=np.float64)
     t = np.arange(8000) / 16000.0
     ref = 0.5 * np.sin(2 * np.pi * 440 * t)

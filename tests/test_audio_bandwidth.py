@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 from protovalidate_spark import Object
 from protovalidate_spark.audio.bandwidth import (
-    _bandwidth_series, bandwidth_rule, rolloff_hz, with_bandwidth,
+    _bandwidth_frame, bandwidth_rule, rolloff_hz,
 )
-from protovalidate_spark.audio.features import with_full_audio
+from protovalidate_spark.audio.decode import _decode_series, with_decoded
 from protovalidate_spark.audio.wav import synth_sine_wav, synth_wav
 
 
@@ -65,7 +65,7 @@ def test_rolloff_empty_and_silent_nan():
     assert np.isnan(hz) and np.isnan(ratio)
 
 
-def test_bandwidth_series_batch():
+def test_bandwidth_frame_batch():
     sr = 16000
     bs = pd.Series([
         synth_wav(_noise(sr, 0.3), sr),
@@ -73,7 +73,9 @@ def test_bandwidth_series_batch():
         b"not audio",
         None,
     ], dtype=object)
-    out = _bandwidth_series(bs, rolloff=0.99, n_fft=2048)
+    dec = _decode_series(bs, want_pcm=True)
+    out = pd.concat([dec, _bandwidth_frame(dec, rolloff=0.99, n_fft=2048)],
+                    axis=1)
     assert out["ok"].tolist() == [True, True, False, False]
     assert out["bandwidth_ratio"][0] > 0.9
     assert out["bandwidth_ratio"][1] < 0.3
@@ -91,7 +93,7 @@ def test_bandwidth_rule_violations(spark):
         ("garbage", b"not audio"),
     ]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    bw = with_bandwidth(df)
+    bw = with_decoded(df, fields=("bandwidth",))
     rs = Object().with_unknown().with_rule(bandwidth_rule(min_ratio=0.5))
     v = rs.violations(bw, row_key_cols=["clip_id"])
     flagged = {r["clip_id"] for r in v.collect()}
@@ -104,23 +106,23 @@ def test_bandwidth_rule_violations(spark):
 
 
 def test_fused_full_audio_bandwidth(spark):
-    """bandwidth=True rides the single fused Arrow stage: one
+    """The bandwidth group rides the single fused Arrow stage: one
     ArrowEvalPython in the plan, bandwidth fields present, every
-    pre-existing field identical to the bandwidth=False stage."""
+    other field identical to the stage without it."""
     sr = 16000
     rows = [("a", synth_wav(_noise(sr, 0.3), sr)),
             ("b", synth_wav(_lowpass_sines(sr, 0.3, [700.0]), sr)),
             ("c", b"junk")]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    fused = with_full_audio(df, bandwidth=True)
+    fused = with_decoded(df, fields=("features", "vad", "bandwidth"))
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
-    got = {r["clip_id"]: r["_audio"] for r in fused.collect()}
+    got = {r["clip_id"]: r["_decoded"] for r in fused.collect()}
     assert got["a"]["bandwidth_ratio"] > 0.9
     assert got["b"]["bandwidth_ratio"] < 0.3
     assert got["c"]["bandwidth_ratio"] is None
-    base = {r["clip_id"]: r["_audio"]
-            for r in with_full_audio(df).collect()}
+    base = {r["clip_id"]: r["_decoded"] for r in
+            with_decoded(df, fields=("features", "vad")).collect()}
     for cid in ("a", "b", "c"):
         for f in base[cid].asDict():
             assert got[cid][f] == base[cid][f] or (
@@ -134,7 +136,7 @@ def test_bandwidth_rule_composes_with_ruleset(spark):
     sr = 16000
     rows = [("x", synth_wav(_lowpass_sines(sr, 0.3, [600.0]), sr), 99)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary, n int")
-    bw = with_bandwidth(df)
+    bw = with_decoded(df, fields=("bandwidth",))
     rs = (Object().with_unknown()
           .with_key("n", Int().max(10))
           .with_rule(bandwidth_rule(min_ratio=0.5)))

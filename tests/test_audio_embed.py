@@ -11,11 +11,11 @@ from protovalidate_spark.audio.embed import (
     audio_embeddings_frame,
     with_audio_embedding,
 )
+from protovalidate_spark.audio.decode import _decode_series, with_decoded
 from protovalidate_spark.audio.segments import (
     max_gap_rule,
     segment_pcm,
     speech_presence_rule,
-    with_segments,
 )
 from protovalidate_spark.audio.wav import (
     decode_wav,
@@ -145,15 +145,15 @@ def test_segment_pcm_drops_clicks_and_silence():
     assert segment_pcm(np.array([]), 16000) == []
 
 
-def test_with_segments_stage_and_rules(spark):
+def test_vad_group_stage_and_rules(spark):
     x, sr = _tone_silence_pcm()                      # 300 on / 200 off / 300 on
     mostly_silent, _ = _tone_silence_pcm(pattern=((40, True), (760, False)))
     rows = [("talky", synth_wav(x, sr)),
             ("holey", synth_wav(mostly_silent, sr)),
             ("bad", b"nope"), ("nul", None)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    seg = with_segments(df, threshold_rms=0.01)
-    got = {r["clip_id"]: r["_vad"] for r in seg.collect()}
+    seg = with_decoded(df, fields=("vad",), vad_threshold_rms=0.01)
+    got = {r["clip_id"]: r["_decoded"] for r in seg.collect()}
     assert got["bad"]["ok"] is False and got["bad"]["speech_ms"] is None
     t = got["talky"]
     assert t["n_segments"] == 2 and 0.6 <= t["speech_ratio"] <= 0.9
@@ -171,7 +171,7 @@ def test_with_segments_stage_and_rules(spark):
                      ("holey", "/bytes/longest_gap_ms", "MAX")}
     # ONE fused Arrow stage end-to-end (fresh frame: AQE plan-toString
     # double-counts after execution)
-    plan = (with_segments(df)._jdf.queryExecution()
+    plan = (with_decoded(df, fields=("vad",))._jdf.queryExecution()
             .executedPlan().toString())
     assert plan.count("ArrowEvalPython") == 1, plan
 
@@ -210,8 +210,9 @@ def test_vad_snr_estimate():
         synth_wav(np.zeros(4800), sr),     # all silent
         b"garbage",
     ], dtype=object)
-    out = _segments_series(rows, frame_ms=20, threshold_rms=0.01,
-                           hangover_frames=2, min_speech_frames=2)
+    out = _segments_series(_decode_series(rows, want_pcm=True), frame_ms=20,
+                           threshold_rms=0.01, hangover_frames=2,
+                           min_speech_frames=2)
     snr = out["snr_db"]
     assert abs(snr[0] - 20 * np.log10((0.5 / np.sqrt(2)) / 0.005)) < 0.2
     assert abs(snr[1] - 20 * np.log10((0.02 / np.sqrt(2)) / 0.009)) < 0.3
@@ -224,7 +225,7 @@ def test_min_snr_rule(spark):
     import numpy as np
 
     from protovalidate_spark import Object
-    from protovalidate_spark.audio import min_snr_rule, with_segments
+    from protovalidate_spark.audio import min_snr_rule
     from protovalidate_spark.audio.wav import synth_wav
     sr = 16000
     n = int(sr * 0.3)
@@ -239,8 +240,9 @@ def test_min_snr_rule(spark):
             ("noisy", clip(0.02, 0.009)),
             ("tone_only", synth_wav(0.5 * np.sin(2 * np.pi * 330.0 * t), sr)),
             ("bad", b"nope")]
-    df = with_segments(
-        spark.createDataFrame(rows, "clip_id string, bytes binary"))
+    df = with_decoded(
+        spark.createDataFrame(rows, "clip_id string, bytes binary"),
+        fields=("vad",))
     rs = Object().with_unknown().with_rule(min_snr_rule(min_db=10.0))
     v = {r["clip_id"] for r in
          rs.violations(df, row_key_cols=["clip_id"]).collect()}

@@ -6,17 +6,24 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from protovalidate_spark.audio.decode import _decode_series, with_decoded
 from protovalidate_spark.audio.features import (
     _features_series, clipping_rule, silence_rule, speech_rate_rule,
-    with_audio_features,
 )
 from protovalidate_spark.audio.wav import synth_sine_wav
 
 
-def _feat(b, **kw):
+def _features(bs, **kw):
+    """Decode a batch, then run the feature kernel on it (what the
+    ``features`` group of the decode stage computes)."""
     defaults = dict(frame_ms=20, silence_rms=0.01, clip_level=0.999)
     defaults.update(kw)
-    return _features_series(pd.Series([b], dtype=object), **defaults).iloc[0]
+    dec = _decode_series(pd.Series(bs, dtype=object), want_pcm=True)
+    return pd.concat([dec, _features_series(dec, **defaults)], axis=1)
+
+
+def _feat(b, **kw):
+    return _features([b], **kw).iloc[0]
 
 
 def test_clean_sine_features():
@@ -60,20 +67,20 @@ def test_partial_silence_ratio():
 
 
 def test_undecodable_gives_nulls():
-    out = _features_series(pd.Series([b"garbage", None], dtype=object),
-                           frame_ms=20, silence_rms=0.01, clip_level=0.999)
+    out = _features([b"garbage", None])
     assert not out["ok"].any()
     assert out[["peak", "clip_ratio", "silence_ratio", "zcr"]].isna().all().all()
 
 
-def test_with_audio_features_spark(spark):
+def test_features_group_spark(spark):
     rows = [("clean", synth_sine_wav(300.0, 8000, 250, amp=0.5)),
             ("clipped", synth_sine_wav(300.0, 8000, 250, amp=2.0)),
             ("silent", synth_sine_wav(300.0, 8000, 250, amp=0.0)),
             ("bad", b"nope")]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
     out = {r["clip_id"]: r for r in
-           with_audio_features(df).select("clip_id", "_afeat.*").collect()}
+           with_decoded(df, fields=("features",))
+           .select("clip_id", "_decoded.*").collect()}
     assert out["clean"]["ok"] and out["clean"]["clip_ratio"] == 0.0
     assert out["clipped"]["clip_ratio"] > 0.3
     assert out["silent"]["silence_ratio"] == 1.0
@@ -86,8 +93,9 @@ def test_feature_rules_flag_violations(spark):
             ("clipped", synth_sine_wav(300.0, 8000, 250, amp=2.0)),
             ("silent", synth_sine_wav(300.0, 8000, 250, amp=0.0)),
             ("bad", b"nope")]
-    df = with_audio_features(
-        spark.createDataFrame(rows, "clip_id string, bytes binary"))
+    df = with_decoded(
+        spark.createDataFrame(rows, "clip_id string, bytes binary"),
+        fields=("features",))
     rs = (Object().with_unknown()
           .with_rule(clipping_rule(max_ratio=0.01))
           .with_rule(silence_rule(max_ratio=0.9)))
@@ -124,8 +132,8 @@ def test_features_single_arrow_stage(spark):
     property that keeps the 10^12-row pass at one Python round-trip."""
     df = spark.createDataFrame(
         [(synth_sine_wav(300.0, 8000, 100),)], "bytes binary")
-    plan = with_audio_features(df).select(
-        "_afeat.clip_ratio", "_afeat.zcr")._jdf.queryExecution() \
+    plan = with_decoded(df, fields=("features",)).select(
+        "_decoded.clip_ratio", "_decoded.zcr")._jdf.queryExecution() \
         .executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
 
@@ -192,8 +200,9 @@ def test_level_rules_flag_violations(spark):
             ("faint", synth_sine_wav(300.0, 8000, 250, amp=0.002)),
             ("biased", biased),
             ("bad", b"nope")]
-    df = with_audio_features(
-        spark.createDataFrame(rows, "clip_id string, bytes binary"))
+    df = with_decoded(
+        spark.createDataFrame(rows, "clip_id string, bytes binary"),
+        fields=("features",))
     rs = (Object().with_unknown()
           .with_rule(quiet_rule(min_dbfs=-45.0))
           .with_rule(dc_offset_rule(max_abs=0.02)))
@@ -206,42 +215,90 @@ def test_level_rules_flag_violations(spark):
                    ("biased", "/bytes/dc_offset", "MAX")}
 
 
-def test_full_audio_fused_stage_matches_parts(spark):
-    """with_full_audio == with_decoded_features fields + with_segments
-    fields, from ONE Arrow stage (one decode for everything)."""
-    from protovalidate_spark.audio import with_full_audio, with_segments
-    from protovalidate_spark.audio.features import with_decoded_features
+ALL_FIELDS = ("rms", "pcm", "features", "vad", "bandwidth")
+
+
+@pytest.fixture(scope="module")
+def stage_rows(spark):
+    """A clean tone, a silent clip, a garbage payload and a NULL (25
+    copies each in one partition, so one Arrow stream's fixed framing
+    does not swamp the per-row transfer), plus the stage's struct with
+    every field group on (the reference)."""
     rows = [("clean", synth_sine_wav(300.0, 8000, 250, amp=0.5)),
             ("silent", synth_sine_wav(300.0, 8000, 250, amp=0.0)),
-            ("bad", b"nope")]
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary")
-    full = {r["clip_id"]: r for r in
-            with_full_audio(df).select("clip_id", "_audio.*").collect()}
-    feat = {r["clip_id"]: r for r in
-            with_decoded_features(df).select("clip_id", "_decoded.*")
-            .collect()}
-    vad = {r["clip_id"]: r for r in
-           with_segments(df).select("clip_id", "_vad.*").collect()}
-    for cid in ("clean", "silent", "bad"):
-        for f in ("ok", "sr", "dur_ms", "rms", "peak", "clip_ratio",
-                  "silence_ratio", "zcr", "rms_dbfs", "dc_offset"):
-            assert full[cid][f] == feat[cid][f], (cid, f)
-        for f in ("speech_ms", "speech_ratio", "n_segments",
-                  "longest_gap_ms", "snr_db", "segments"):
-            assert full[cid][f] == vad[cid][f] or (
-                full[cid][f] != full[cid][f]
-                and vad[cid][f] != vad[cid][f]), (cid, f)
-    # single fused stage
-    plan = with_full_audio(df).select("_audio.snr_db", "_audio.peak") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
+            ("bad", b"nope"),
+            ("null", None)]
+    df = spark.createDataFrame(rows * 25, "clip_id string, bytes binary") \
+        .coalesce(1)
+    ref = {r["clip_id"]: r["_decoded"].asDict() for r in
+           with_decoded(df, fields=ALL_FIELDS).collect()}
+    return df, ref
+
+
+def _same(a, b):
+    return a == b or (a != a and b != b)    # NaN == NaN
+
+
+@pytest.mark.parametrize("fields", [
+    (), ("rms",), ("pcm",), ("features",), ("vad",), ("bandwidth",),
+    ALL_FIELDS], ids=lambda f: "+".join(f) or "header")
+def test_decoded_fields_are_independent(stage_rows, fields):
+    """ONE Arrow stage for every ``fields`` set: the struct is the header
+    fields plus the requested groups in fixed order (a payload group
+    brings rms), each shared field equals the all-groups value (a
+    group's values do not depend on the other groups present), and only
+    ``fields=()`` keeps the transfer at a header per row."""
+    from test_plans import _python_data_sent
+
+    from protovalidate_spark.audio.decode import (FIELD_GROUPS,
+                                                  HEADER_FIELDS, HEADER_LEN)
+    df, ref = stage_rows
+    out = with_decoded(df, fields=fields)
+    got = [(r["clip_id"], r["_decoded"].asDict()) for r in out.collect()]
+    groups = [g for g in FIELD_GROUPS
+              if g in fields or (g == "rms" and fields)]
+    want = [f.name for f in HEADER_FIELDS] + [
+        f.name for g in groups for f in FIELD_GROUPS[g]]
+    for cid, row in got:
+        assert list(row) == want, (cid, list(row))
+        for f, v in row.items():
+            assert _same(v, ref[cid][f]), (cid, f, v, ref[cid][f])
+    [sent] = _python_data_sent(out)    # one Arrow stage
+    # per row: the header, its length, Arrow offsets and validity, plus
+    # the payload of the one row the canonical guard rejects (garbage)
+    header_bound = len(got) * (HEADER_LEN + 32) + 25 * len(b"nope")
+    assert (sent <= header_bound) == (fields == ()), (fields, sent)
+
+
+def test_vad_suite_struct_carries_features(spark):
+    """audio_vad alone still brings the feature fields (VAD implies
+    features): a rule reading a feature and a VAD field analyses."""
+    import datetime
+
+    from protovalidate_spark.clips import clips_rules
+    from protovalidate_spark.rules.object import ObjectRule
+    from protovalidate_spark.suite import ValidationSuite
+    plain = spark.createDataFrame(
+        [(1, "clip-0000000001", synth_sine_wav(440.0, 16000, 100), 16000,
+          100, "wav", "some words", datetime.date(2026, 1, 1))],
+        "row_idx long, clip_id string, bytes binary, sr_hz int, "
+        "dur_ms int, codec string, transcript string, part_date date")
+    suite = ValidationSuite(
+        rules=clips_rules(), row_keys=("row_idx", "clip_id"),
+        audio_vad=("bytes",),
+        extra_object_rules=(ObjectRule(
+            rule_id="MAX", message="peak", field_path="/bytes/peak",
+            predicate=lambda get: get("__dec_bytes")["peak"]
+            <= get("__dec_bytes")["speech_ratio"] + 1),))
+    assert suite._audio_fields("bytes") == ("features", "vad")
+    suite.row_violations(plain).schema   # analysis only, no action
 
 
 def test_clips_suite_all_audio_flags_one_stage(spark, tiny_clips):
     """level_checks + vad_checks compose on top of audio_checks: the
     baseline 27 violations stay a subset, every extra row belongs to one
     of the eight audio-gate paths, and the row pass is STILL one
-    ArrowEvalPython (with_full_audio)."""
+    ArrowEvalPython (with_decoded)."""
     import datetime
 
     from protovalidate_spark.clips import clips_suite
@@ -290,8 +347,7 @@ def test_normalize_pcm_kernel():
 
 
 def test_with_normalized_audio_repairs_gates(spark):
-    from protovalidate_spark.audio import (with_audio_features,
-                                           with_normalized_audio)
+    from protovalidate_spark.audio import with_normalized_audio
     from protovalidate_spark.audio.wav import synth_wav
     t = np.arange(4000) / 8000.0
     rows = [
@@ -304,12 +360,13 @@ def test_with_normalized_audio_repairs_gates(spark):
     norm = with_normalized_audio(df)
     # repaired bytes decode through the UNMODIFIED pipeline and pass
     # the very gates that flagged the original
-    feats = with_audio_features(
+    feats = with_decoded(
         norm.select("clip_id", F.col("_norm")["ok"].alias("norm_ok"),
                     F.col("_norm")["gain_db"].alias("gain_db"),
-                    F.col("_norm")["bytes"].alias("bytes")))
+                    F.col("_norm")["bytes"].alias("bytes")),
+        fields=("features",))
     r = {x["clip_id"]: x for x in
-         feats.select("clip_id", "norm_ok", "gain_db", "_afeat.*")
+         feats.select("clip_id", "norm_ok", "gain_db", "_decoded.*")
          .collect()}
     bf = r["biased_faint"]
     assert bf["norm_ok"] and abs(bf["dc_offset"]) < 1e-3

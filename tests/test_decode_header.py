@@ -1,5 +1,5 @@
 """The suite's header-only decode stage (audio/decode.py
-``with_decoded_header``): Python gets each row's 44-byte header and
+``with_decoded(fields=())``): Python gets each row's 44-byte header and
 length, plus the payload only where the Catalyst guard cannot prove the
 header canonical. Over an adversarial matrix its (ok, sr, n_samples,
 dur_ms) must equal the whole-payload decode, and the guard must imply
@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 
 from protovalidate_spark.audio.decode import (HEADER_LEN, _decode_parts,
                                               _parse_headers,
-                                              canonical_guard, with_decoded,
-                                              with_decoded_header)
+                                              canonical_guard, with_decoded)
 from protovalidate_spark.audio.wav import decode_wav, synth_sine_wav, synth_wav
 
 FIELDS = ("ok", "sr", "n_samples", "dur_ms")
@@ -68,7 +67,7 @@ def _matrix():
 def decoded(spark):
     cases = _matrix()
     df = spark.createDataFrame(cases, "label string, bytes binary")
-    hdr = with_decoded_header(df, out_col="h")
+    hdr = with_decoded(df, out_col="h", fields=())
     both = with_decoded(hdr, out_col="f").withColumn(
         "guard", canonical_guard(F.col("bytes")))
     rows = {r["label"]: r for r in both.collect()}
