@@ -5,8 +5,8 @@
 
 Also times the flagship clips full-pass (WAV decode + all checks) on a
 cached deterministic clips table and reports clips/sec. The two-level
-scaling-efficiency evidence (local[8] vs local[32]) lives in
-``bench/scaling.py`` → BENCH.md.
+scaling-efficiency evidence (N vs 4N cores) lives in
+``bench/scaling_paired.py`` → BENCH.md.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Per-core host-speed calibration for the scaling-efficiency windows.
 
-The N vs 4N emulation (bench/scaling.py) divides throughput measured
+The N vs 4N emulation (bench/scaling_paired.py) divides throughput measured
 with 2 active cores by throughput with 8 active cores ON ONE SHARED
 HOST. Real clusters hold per-core speed constant as executors are
 added; a single box does not — turbo bins, SMT co-scheduling on the

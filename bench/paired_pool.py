@@ -4,9 +4,8 @@ Each run's JSON carries per-pair efficiencies with per-pass steal and
 loadavg. Pooling is at PAIR granularity (a pair is the protocol's
 atomic regime-matched sample): the headline is the median of all
 pairs, and the probe-stratified estimator keeps only pairs where BOTH
-passes recorded steal ≤ 2 cpu-s — same threshold as
-bench/pool_aggregate.py so the two protocols' clean strata are
-comparable.
+passes recorded steal ≤ 2 cpu-s — the threshold the retired block
+protocol's pools used, so the BENCH.md clean strata stay comparable.
 
 Usage: python bench/paired_pool.py bench/artifacts/scaling_paired_r5_run*.json
 """

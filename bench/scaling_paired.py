@@ -1,7 +1,7 @@
 """Interleaved-pair scaling-efficiency protocol (north_rule ≥0.8).
 
-bench/scaling.py times all N-level passes, then all 4N-level passes, in
-two separate fresh JVMs. On this shared box the host regime (steal
+The block protocol this replaced timed all N-level passes, then all
+4N-level passes, in two separate fresh JVMs. On this shared box the host regime (steal
 episodes, level-independent frequency throttling — BENCH.md round-5
 episode analysis) drifts on a minutes timescale, i.e. BETWEEN the two
 blocks — and any drift lands directly in the efficiency ratio: the
@@ -21,7 +21,7 @@ This harness removes the between-block term by construction:
     window, so a regime excursion perturbs one pair, not one level.
 
 Per-pass steal and loadavg are still recorded for the stratified-clean
-estimator (same thresholds as bench/pool_aggregate.py).
+estimator (pairs where both passes recorded steal ≤ 2 cpu-s).
 
 Usage:  python bench/scaling_paired.py [--n 2] [--pairs 5] [--rows 400000]
 Prints one JSON line; append it to the round's pool artifact.
@@ -42,7 +42,23 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "bench"))
 
-from scaling import ensure_table, ensure_zip  # noqa: E402
+
+
+def ensure_zip() -> str:
+    zpath = "/tmp/pv_spark.zip"
+    subprocess.run(["rm", "-f", zpath], check=True)
+    subprocess.run(["zip", "-qr", zpath, "protovalidate_spark"],
+                   cwd=REPO, check=True)
+    return zpath
+
+
+def ensure_table(rows: int) -> str:
+    from protovalidate_spark.conf import local_session
+    import bench as benchmod
+    spark = local_session(cores=8, app="pv-scaling-prep")
+    path = benchmod.ensure_clips_bench(spark, rows)
+    spark.stop()
+    return path
 
 
 class Level:

@@ -3,7 +3,7 @@
 and 4N executors; in-sandbox protocol: same job, same input, local[N] vs
 local[4N]).
 
-Launched by bench/scaling.py as:
+Launched by bench/scaling_paired.py (``--serve``), or by hand as:
   spark-submit --master local[N] --py-files pv_spark.zip \
       bench/scaling_worker.py --table PATH --cores N --repeats 3
 

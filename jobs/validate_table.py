@@ -28,8 +28,9 @@ def main():
     ap.add_argument("--table", required=True)
     ap.add_argument("--rules", default="",
                     help="JSON rule-set artifact (rules/serde.py "
-                         "save_ruleset / profile_table --suggest + "
-                         "build_ruleset)")
+                         "save_ruleset: the recorded builder calls, "
+                         "replayed on load; e.g. from profile_table "
+                         "--suggest + build_ruleset)")
     ap.add_argument("--suite", default="",
                     help="JSON ValidationSuite artifact "
                          "(suite_serde.py save_suite): the WHOLE table "

@@ -24,10 +24,19 @@ Reference semantics reimplemented (NOT ported):
   internal/util/withnil.go:13-28.
 - Error customization (WithErrorMessage/Code/Meta): string.go:280-307,
   errors/error_config.go:11-40.
+
+Recording: every builder call (a method returning a new rule set) is
+recorded on its result as ``(name, args, kwargs)`` after the ROOT rule
+set it started from, so rules/serde.py persists a rule set as the calls
+that made it and replays them on load. One hook (``__init_subclass__``)
+wraps the methods; ``_clone`` and ``_with_rule`` are the unrecorded
+core every builder goes through.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 from dataclasses import dataclass, field, replace
 from typing import Any, Callable, Optional
 
@@ -90,6 +99,56 @@ class Rule:
         return f"With{self.rule_id.title().replace('_', '')}({args})"
 
 
+class CallDefault:
+    """A builder default computed when the builder is called (e.g. the
+    clock). The recorded call holds the computed value, so a replay
+    reproduces the rule set instead of computing it again."""
+
+    def __init__(self, make: Callable[[], Any]):
+        self.make = make
+
+
+#: the core every builder goes through (a rule added through it
+#: directly is off the recorded path) and the record's own accessors
+_UNRECORDED = frozenset({"_clone", "_with_rule", "_recording", "_record"})
+
+
+def _recorded(fn):
+    sig = inspect.signature(fn)
+    call_defaults = {n: p.default for n, p in sig.parameters.items()
+                     if isinstance(p.default, CallDefault)}
+
+    @functools.wraps(fn)
+    def builder(self, *args, **kwargs):
+        if call_defaults:
+            bound = sig.bind(self, *args, **kwargs)
+            for n, d in call_defaults.items():
+                if bound.arguments.get(n) is None:
+                    bound.arguments[n] = d.make()
+            args, kwargs = bound.args[1:], bound.kwargs
+        out = fn(self, *args, **kwargs)
+        # record on results derived from self (not on a child rule set
+        # a method hands back); an outer builder overwrites the calls
+        # its inner builders recorded
+        if isinstance(out, RuleSet) and out is not self:
+            root, calls = self._recording()
+            if out.__dict__.get("_root") is root:
+                out._record(root, calls + ((fn.__name__, args, kwargs),))
+        return out
+
+    builder._records = True
+    return builder
+
+
+def _record_builders(cls) -> None:
+    for name in dir(cls):
+        if name.startswith("__") or name in _UNRECORDED:
+            continue
+        fn = inspect.getattr_static(cls, name)
+        if inspect.isfunction(fn) and not getattr(fn, "_records", False):
+            setattr(cls, name, _recorded(fn))
+
+
 @dataclass(frozen=True)
 class RuleSet:
     """Immutable rule collection for one value (reference ruleset.go:18-24).
@@ -108,10 +167,27 @@ class RuleSet:
 
     SPARK_TYPE: str = "string"  # overridden by subclasses
 
+    def __init_subclass__(cls, **kw):
+        super().__init_subclass__(**kw)
+        _record_builders(cls)
+
+    # -- recording (not fields: out of equality, repr and the
+    #    constructor) ----------------------------------------------------
+
+    def _recording(self) -> tuple:
+        """(root rule set, recorded builder calls) that made this one."""
+        return self.__dict__.get("_root", self), self.__dict__.get("_calls", ())
+
+    def _record(self, root: "RuleSet", calls: tuple) -> None:
+        object.__setattr__(self, "_root", root)
+        object.__setattr__(self, "_calls", calls)
+
     # -- chaining core ------------------------------------------------------
 
     def _clone(self, **kw) -> "RuleSet":
-        return replace(self, **kw)
+        out = replace(self, **kw)
+        out._record(*self._recording())
+        return out
 
     def _with_rule(self, rule: Rule) -> "RuleSet":
         """Append a rule, pruning conflicting ancestors (noConflict,
@@ -285,6 +361,9 @@ class RuleSet:
         boolean Column, True iff value passes all rules (ignoring coercion
         and null handling beyond the standard semantics)."""
         return F.size(self.compile_violations(col, "/", input_type)) == 0
+
+
+_record_builders(RuleSet)
 
 
 def comparable_lit(v: Any) -> Column:

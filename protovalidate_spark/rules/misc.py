@@ -27,6 +27,13 @@ class ConstantRuleSet(RuleSet):
 
     SPARK_TYPE: str = "string"
 
+    def _structural(self) -> "ConstantRuleSet":
+        v = self.value
+        return self._with_rule(Rule(
+            Code.NOTALLOWED, lambda c: c == F.lit(v),
+            f"value must equal {v!r}", conflict_key="constant",
+            params={"value": v}))
+
     def coerce(self, col, input_type):
         return col, F.lit(True), Code.TYPE
 
@@ -39,9 +46,7 @@ def Constant(v) -> ConstantRuleSet:
             return _CONSTANT_CACHE[v]
     except TypeError:
         pass  # unhashable — no interning
-    rs = ConstantRuleSet(value=v, rules=(Rule(
-        Code.NOTALLOWED, lambda c: c == F.lit(v),
-        f"value must equal {v!r}", conflict_key="constant", params={"value": v}),))
+    rs = ConstantRuleSet(value=v)._structural()
     try:
         _CONSTANT_CACHE[v] = rs
     except TypeError:

@@ -6,36 +6,30 @@ internal/util/util.go:24-58). At dataset scale the standard companion
 (a Deequ VerificationSuite persisted to code, a Great Expectations
 suite persisted to JSON) is a DECLARATIVE artifact: author or suggest
 rules once, version them beside the table contract, load them in any
-job. This module closes that loop for the engine's declarative
-builders:
+job. This module closes that loop:
 
     doc = ruleset_to_dict(rules)          # JSON-able
     rules2 = ruleset_from_dict(doc)       # same violations output
     save_ruleset(rules, path) / load_ruleset(path)
 
-Every rule in the engine carries (rule_id, conflict_key, params)
-metadata precisely so the predicate lambda never needs pickling: the
-loader REBUILDS each rule through the same public builder that created
-it, so a round-tripped rule set is behaviorally identical by
-construction (pinned in tests/test_serde.py by comparing compiled
-violations row-for-row).
+A rule set records the builder calls that made it (rules/base.py): its
+root's construction-time fields plus the outermost ``(name, args,
+kwargs)`` of each call. The artifact is exactly that record — ``kind``,
+the root fields and ``calls`` — and loading is ``kind(**fields)``
+followed by the replayed calls, so a round-tripped rule set is built by
+the same public builders as the original (pinned in tests/test_serde.py
+by comparing compiled violations row-for-row). Rule-set arguments
+(``with_key``, ``with_domain``, ``with_query_param``, ...) encode
+recursively.
 
-Coverage: the scalar core (string/int/float/bool/time/duration/binary/
-any/constant — bounds, membership, lengths, pattern family, magic,
-required/nil/strict, error customization, width/base/rounding/layout
-fields), Object and Map nesting (with_key, with_dynamic_key,
-with_unknown, with_json, unconditional map buckets), Vector
-(dim/finite/norm bounds, item rule sets), and the net family (Domain,
-Email incl. embedded with_domain sets, IP versions/public-private/
-range/CIDR/mask, URI schemes/parts/ports/relative/deep-errors, Query)
-— constructor-provided structural rules rebuild through the same
-constructors, prune-idempotent. Rules built from ARBITRARY CODE —
-WithRule / WithRuleFunc lambdas, conditional keys (row-level lambda
-conditions), conditional buckets, URI.with_query_param /
-Query.with_param lifts (the inner set's cast type is baked into the
-lifted predicate, not recorded) — raise ``SerdeError`` with the
-offending piece named: a serialized artifact must never silently drop
-a constraint.
+A serialized artifact never silently drops a constraint:
+
+* a callable or Column argument (``with_rule_func``, conditional keys
+  and buckets, ``with_cast``) raises ``SerdeError`` naming the builder;
+* before writing, the record is replayed from its JSON form and must
+  reproduce every rule's (rule_id, conflict_key, params, message), every
+  field and every nested key and item set — a rule added off the
+  recorded path (``_with_rule``, ``with_rule(Rule(...))``) is refused.
 """
 
 from __future__ import annotations
@@ -44,7 +38,10 @@ import datetime as _dt
 import json
 from dataclasses import MISSING as _MISSING
 from dataclasses import fields as _dc_fields
+from dataclasses import is_dataclass
 from typing import Any
+
+from pyspark.sql import Column
 
 from .base import Rule, RuleSet
 
@@ -82,6 +79,8 @@ def _kinds():
 # -- value encoding ---------------------------------------------------------
 
 def _enc(v: Any):
+    if isinstance(v, RuleSet):
+        return {"$rules": _record_to_dict(v)}
     if isinstance(v, _dt.datetime):
         return {"$dt": v.isoformat()}
     if isinstance(v, _dt.date):
@@ -96,11 +95,17 @@ def _enc(v: Any):
         return {k: _enc(x) for k, x in v.items()}
     if v is None or isinstance(v, (str, int, float, bool)):
         return v
-    raise SerdeError(f"cannot serialize param value {v!r}")
+    if callable(v) or isinstance(v, Column):
+        raise SerdeError(f"{v!r} is code (a callable or Column)")
+    raise SerdeError(f"cannot serialize value {v!r}")
 
 
-def _dec(v: Any):
+def _dec(v: Any, seq=list):
+    """Decode an ``_enc`` value; JSON lists become ``seq`` (rule-set
+    builder arguments decode with ``tuple``: rule sets are immutable)."""
     if isinstance(v, dict):
+        if "$rules" in v:
+            return ruleset_from_dict(v["$rules"])
         if "$dt" in v:
             return _dt.datetime.fromisoformat(v["$dt"])
         if "$date" in v:
@@ -109,355 +114,118 @@ def _dec(v: Any):
             return _dt.timedelta(seconds=v["$td"])
         if "$hex" in v:
             return bytes.fromhex(v["$hex"])
-        return {k: _dec(x) for k, x in v.items()}
+        return {k: _dec(x, seq) for k, x in v.items()}
     if isinstance(v, list):
-        return [_dec(x) for x in v]
+        return seq(_dec(x, seq) for x in v)
     return v
+
+
+def _is_default(f, v) -> bool:
+    """Compare with the dataclass field's default, never truthiness: a
+    zero-valued threshold (psi_threshold=0.0) is the STRICTEST gate and
+    must survive the round-trip."""
+    d = f.default
+    if d is _MISSING and f.default_factory is not _MISSING:
+        d = f.default_factory()
+    if isinstance(d, tuple) and isinstance(v, (list, tuple)):
+        return tuple(v) == d
+    return v == d
 
 
 # -- serialize --------------------------------------------------------------
 
-_SKIP_FIELDS = {"rules", "keys", "object_rules", "bucket_specs",
-                "item_rule_set", "item_type", "map_keys"}
-
-
-def ruleset_to_dict(rs: RuleSet) -> dict:
-    kinds = _kinds()
-    kind = next((k for k, cls in kinds.items() if type(rs) is cls), None)
+def _record_to_dict(rs: RuleSet) -> dict:
+    kind = next((k for k, cls in _kinds().items() if type(rs) is cls), None)
     if kind is None:
         raise SerdeError(
             f"{type(rs).__name__} has no registered serde kind "
             f"(subclassed rule sets must be registered in _kinds)")
-
+    root, calls = rs._recording()
     out: dict = {"kind": kind}
-    for f in _dc_fields(rs):
-        if f.name in _SKIP_FIELDS:
+    for f in _dc_fields(root):
+        v = getattr(root, f.name)
+        if _is_default(f, v):
             continue
-        v = getattr(rs, f.name)
-        if f.default is not _MISSING and v == f.default:
-            continue
-        if f.default is _MISSING and f.default_factory is not _MISSING \
-                and v == f.default_factory():
-            continue
-        out[f.name] = _enc(v)
-
-    if kind == "constant":
-        # interned equality set: the value field is the whole story
-        out.pop("rules", None)
-        return out
-
-    if kind in ("array", "vector") and rs.item_rule_set is not None:
-        out["item_rule_set"] = ruleset_to_dict(rs.item_rule_set)
-        out.pop("item_type", None)  # derived by with_item_rule_set
-
-    if kind == "object":
-        if rs.object_rules:
+        try:
+            out[f.name] = _enc(v)
+        except SerdeError as e:
             raise SerdeError(
-                "object-level with_rule lambdas are not serializable")
-        if rs.bucket_specs:
-            raise SerdeError("dynamic bucket specs are not serializable")
-        keys = []
-        for ks in rs.keys:
-            if ks.condition is not None:
-                raise SerdeError(
-                    f"conditional key {ks.name!r} carries a row-level "
-                    f"lambda condition and is not serializable")
-            entry = {"name": ks.name,
-                     "rule_set": ruleset_to_dict(ks.rule_set)}
-            if ks.dynamic_pattern:
-                entry["dynamic_pattern"] = ks.dynamic_pattern
-            keys.append(entry)
-        out["keys"] = keys
-
-    if kind == "map":
-        keys = []
-        for ks in rs.map_keys:
-            entry = {"name": ks.name,
-                     "rule_set": ruleset_to_dict(ks.rule_set)}
-            if ks.pattern:
-                entry["pattern"] = ks.pattern
-            keys.append(entry)
-        out["keys"] = keys
-        buckets = []
-        for b in rs.bucket_specs:
-            if getattr(b, "condition", None) is not None:
-                raise SerdeError(
-                    f"conditional dynamic bucket {b.bucket!r} carries a "
-                    f"lambda condition and is not serializable")
-            buckets.append({"pattern": b.pattern, "bucket": b.bucket})
-        if buckets:
-            out["buckets"] = buckets
-
-    rules = []
-    for r in rs.rules:
-        if _builder_for(kind, r.rule_id, r.conflict_key, r.params,
-                        r.message) is None:
+                f"field {f.name} ({kind} rule set) cannot be "
+                f"serialized: {e}") from None
+    encoded = []
+    for name, args, kwargs in calls:
+        try:
+            call: dict = {"call": name}
+            if args:
+                call["args"] = _enc(args)
+            if kwargs:
+                call["kwargs"] = _enc(kwargs)
+        except SerdeError as e:
             raise SerdeError(
-                f"rule {r.rule_id}/{r.conflict_key} on a {kind} rule "
-                f"set cannot be serialized — custom with_rule/"
-                f"with_rule_func predicates and query-param lifts "
-                f"(URI.with_query_param / Query.with_param) are not "
-                f"round-trippable; a JSON artifact must never silently "
-                f"drop a constraint")
-        rules.append({
-            "rule_id": r.rule_id,
-            "conflict_key": r.conflict_key,
-            "message": r.message,
-            "params": _enc(r.params),
-        })
-    if rules:
-        out["rules"] = rules
+                f"{name} ({kind} rule set) cannot be serialized: "
+                f"{e}") from None
+        encoded.append(call)
+    if encoded:
+        out["calls"] = encoded
     return out
 
 
-# -- rebuild ----------------------------------------------------------------
-
-def _match_builder(rule_id: str, key, params: dict, message: str):
-    """Return the rebuild callable for a rule's metadata, or None when
-    no registered public builder produces this shape (custom
-    with_rule/with_rule_func entries). Used by BOTH directions:
-    serialization refuses eagerly, load re-invokes."""
-    if key == "min" and "min" in params:
-        return lambda rs: rs.min(params["min"])
-    if key == "min" and "min_exclusive" in params:
-        return lambda rs: rs.min_exclusive(params["min_exclusive"])
-    if key == "max" and "max" in params:
-        return lambda rs: rs.max(params["max"])
-    if key == "max" and "max_exclusive" in params:
-        return lambda rs: rs.max_exclusive(params["max_exclusive"])
-    # Duration bounds store the SCALED ms value; feed it back as a
-    # timedelta so the rebuild is unit-independent (temporal.py _to_ms)
-    if key == "min" and "min_ms" in params:
-        return lambda rs: rs.min(_dt.timedelta(milliseconds=params["min_ms"]))
-    if key == "min" and "min_ms_exclusive" in params:
-        return lambda rs: rs.min_exclusive(
-            _dt.timedelta(milliseconds=params["min_ms_exclusive"]))
-    if key == "max" and "max_ms" in params:
-        return lambda rs: rs.max(_dt.timedelta(milliseconds=params["max_ms"]))
-    if key == "max" and "max_ms_exclusive" in params:
-        return lambda rs: rs.max_exclusive(
-            _dt.timedelta(milliseconds=params["max_ms_exclusive"]))
-    if key == "allowed":
-        return lambda rs: rs.allowed_values(*params["values"])
-    if key == "rejected":
-        return lambda rs: rs.rejected_values(*params["values"])
-    if key == "min_len":
-        if params.get("chars"):
-            return lambda rs: rs.min_len_chars(params["n"])
-        return lambda rs: rs.min_len(params["n"])
-    if key == "max_len":
-        return lambda rs: rs.max_len(params["n"])
-    if key == "forbidden":
-        return lambda rs: rs.forbidden()
-    if rule_id == "PATTERN":
-        if "pattern" in params:
-            return lambda rs: rs.regex(params["pattern"], message)
-        if "substr" in params:
-            return lambda rs: rs.contains(params["substr"])
-        if "prefix" in params:
-            return lambda rs: rs.starts_with(params["prefix"])
-        if "suffix" in params:
-            return lambda rs: rs.ends_with(params["suffix"])
-    if rule_id == "ENCODING" and "magic" in params:
-        return lambda rs: rs.magic(bytes.fromhex(params["magic"]))
-    # vector family (vector.py): distinctive conflict keys
-    if key == "dim":
-        return lambda rs: rs.dim(params["n"])
-    if key == "finite":
-        return lambda rs: rs.finite()
-    if key == "norm_min":
-        return lambda rs: rs.norm_min(params["x"])
-    if key == "norm_max":
-        return lambda rs: rs.norm_max(params["x"])
-    return None
+def _signature(v: Any):
+    """What a replay must reproduce: every field, and per rule its
+    (rule_id, conflict_key, params, message) — predicates are code."""
+    if isinstance(v, Rule):
+        return ("rule", v.rule_id, v.conflict_key, _signature(v.params),
+                v.message)
+    if is_dataclass(v) and not isinstance(v, type):
+        return (type(v).__name__,) + tuple(
+            (f.name, _signature(getattr(v, f.name))) for f in _dc_fields(v))
+    if isinstance(v, (tuple, list)):
+        return tuple(_signature(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted(((repr(k), _signature(x)) for k, x in v.items()),
+                            key=lambda kv: kv[0]))
+    if callable(v) or isinstance(v, Column):
+        return "<code>"
+    return v
 
 
-def _net_builder(kind: str, rule_id: str, key, params: dict,
-                 message: str):
-    """Kind-aware rebuilders for the net family's constructor-provided
-    and parameterized rules. Returns a callable or None."""
-    key = key or ""
-    if kind in ("domain", "email_domain"):
-        if key in ("domain_format", "domain_len"):
-            return lambda rs: rs._structural()     # idempotent via prune
-        if key == "domain_tld":
-            return lambda rs: rs.with_tld(*params["tlds"])
-        if key == "domain_suffix":
-            return lambda rs: rs.with_suffix(*params["suffixes"])
-    if kind == "ip":
-        if key == "ip_format":
-            return lambda rs: rs._structural()
-        if key == "ip_version":
-            return lambda rs: rs._versions(tuple(params["versions"]))
-        if key == "ip_pub_priv":
-            if params.get("mode") == "private":
-                return lambda rs: rs.with_private_only()
-            return lambda rs: rs.with_public_only()
-        if not key and "start" in params and "end" in params:
-            return lambda rs: rs.with_range(params["start"], params["end"])
-        if key == "ip_cidr":
-            return lambda rs: rs.with_cidr(*params["cidrs"])
-        if key == "ip_subnet_mask":
-            return lambda rs: rs.with_subnet_mask(params["network"],
-                                                  params["mask"])
-    if kind == "email":
-        if key in ("email_at_missing", "email_at_many", "email_local"):
-            return lambda rs: rs._structural()
-        # email_domain_* handled by the email group rebuild in
-        # ruleset_from_dict; report them serializable here
-        if key.startswith("email_domain_"):
-            rest = key[len("email_domain_"):].split("_", 1)
-            inner = rest[1] if len(rest) == 2 else ""
-            if _net_builder("email_domain", rule_id, inner, params,
-                            message) is not None:
-                return lambda rs: rs       # placeholder; grouped later
-            if _match_builder(rule_id, inner or None, params,
-                              message) is not None:
-                return lambda rs: rs
-            return None
-    if kind == "uri":
-        if key == "uri_encoding":
-            return lambda rs: rs._structural(relative=True)  # encoding only
-        if key == "uri_scheme_req":
-            if params.get("relative"):
-                return lambda rs: rs.with_relative()
-            return lambda rs: rs._structural()
-        if key == "uri_schemes":
-            return lambda rs: rs.with_allowed_schemes(*params["schemes"])
-        if key == "uri_req_user":
-            return lambda rs: rs.with_user_required()
-        if key == "uri_req_password":
-            return lambda rs: rs.with_password_required()
-        if key.startswith("uri_req_"):
-            part = key[len("uri_req_"):]
-            return lambda rs: rs._part_required(part)
-        if key == "uri_min_port":
-            return lambda rs: rs.with_min_port(params["n"])
-        if key == "uri_max_port":
-            return lambda rs: rs.with_max_port(params["n"])
-        if key == "uri_ports":
-            return lambda rs: rs.with_allowed_ports(*params["ports"])
-        # uri_qp_*: with_query_param lifts an inner rule set whose TYPE
-        # (the try_cast target) is baked into the predicate and not
-        # recorded — not round-trippable; refuse loudly
-        if key.startswith("uri_qp_"):
-            return None
-    if kind == "query":
-        if key == "q_encoding":
-            return lambda rs: rs._structural()
-        if key.startswith("q_"):
-            return None                    # with_param lift, same reason
-    return None
-
-
-def _builder_for(kind: str, rule_id: str, key, params: dict, message: str):
-    fn = _net_builder(kind, rule_id, key, params, message)
-    if fn is not None:
-        return fn
-    return _match_builder(rule_id, key, params, message)
-
-
-def _rebuild_rule(kind: str, rs: RuleSet, rule_id: str, key, params: dict,
-                  message: str) -> RuleSet:
-    fn = _builder_for(kind, rule_id, key, params, message)
-    if fn is None:
+def ruleset_to_dict(rs: RuleSet) -> dict:
+    doc = _record_to_dict(rs)
+    replayed = ruleset_from_dict(json.loads(json.dumps(doc)))
+    if _signature(replayed) != _signature(rs):
         raise SerdeError(
-            f"no builder registered for rule {rule_id}/{key} with params "
-            f"{sorted(params)} — custom with_rule/with_rule_func entries "
-            f"cannot round-trip through JSON")
-    return fn(rs)
+            f"replaying the recorded builder calls of this "
+            f"{type(rs).__name__} does not reproduce it: a rule or field "
+            f"was set off the recorded builder path (e.g. _with_rule or "
+            f"_clone); a JSON artifact must never silently drop a "
+            f"constraint")
+    return doc
 
+
+# -- replay -----------------------------------------------------------------
 
 def ruleset_from_dict(doc: dict) -> RuleSet:
-    kinds = _kinds()
-    kind = doc.get("kind")
-    if kind not in kinds:
-        raise SerdeError(f"unknown rule-set kind {kind!r}")
-
-    if kind == "constant":
-        from .misc import Constant
-        return Constant(_dec(doc.get("value")))
-
-    field_kw = {k: _dec(v) for k, v in doc.items()
-                if k not in ("kind", "rules", "keys", "buckets",
-                             "item_rule_set")}
-    # tuples serialized as lists — restore tuple-typed fields
-    for tk in ("layouts", "condition_deps"):
-        if tk in field_kw and isinstance(field_kw[tk], list):
-            field_kw[tk] = tuple(field_kw[tk])
-    rs = kinds[kind](**field_kw)
-
-    if kind in ("array", "vector") and "item_rule_set" in doc:
-        rs = rs.with_item_rule_set(ruleset_from_dict(doc["item_rule_set"]))
-
-    if kind == "object":
-        for entry in doc.get("keys", ()):
-            child = ruleset_from_dict(entry["rule_set"])
-            if entry.get("dynamic_pattern"):
-                rs = rs.with_dynamic_key(entry["dynamic_pattern"], child)
-            else:
-                rs = rs.with_key(entry["name"], child)
-
-    if kind == "map":
-        for entry in doc.get("keys", ()):
-            child = ruleset_from_dict(entry["rule_set"])
-            if entry.get("pattern"):
-                rs = rs.with_dynamic_key(entry["pattern"], child)
-            else:
-                rs = rs.with_key(entry["name"], child)
-        for b in doc.get("buckets", ()):
-            rs = rs.with_dynamic_bucket(b["pattern"], b["bucket"])
-
-    if kind == "email":
-        return _email_from_rules(rs, doc.get("rules", ()))
-
-    for r in doc.get("rules", ()):
-        rs = _rebuild_rule(kind, rs, r["rule_id"], r.get("conflict_key"),
-                           _dec(r.get("params", {})), r.get("message", ""))
+    cls = _kinds().get(doc.get("kind"))
+    if cls is None:
+        raise SerdeError(f"unknown rule-set kind {doc.get('kind')!r}")
+    if "rules" in doc:
+        raise SerdeError(
+            "this artifact lists rules, not recorded builder calls; "
+            "rebuild the rule set and save it again")
+    kw = {}
+    for f in _dc_fields(cls):
+        if f.name in doc:
+            kw[f.name] = _dec(doc[f.name],
+                              tuple if isinstance(f.default, tuple) else list)
+    rs = cls(**kw)
+    for call in doc.get("calls", ()):
+        name = call["call"]
+        builder = getattr(rs, name, None)
+        if not getattr(builder, "_records", False):
+            raise SerdeError(f"{name!r} is not a {doc['kind']} builder")
+        rs = builder(*_dec(call.get("args", []), tuple),
+                     **_dec(call.get("kwargs", {}), tuple))
     return rs
-
-
-def _email_from_rules(rs, rules):
-    """Email rules interleave structural entries, lifted domain rules
-    (``email_domain_{i}_{orig_key}``), and plain string rules — rebuild
-    in order, grouping contiguous domain rules into ONE with_domain
-    call so the lifted conflict keys come out identical."""
-    from .net import DomainRuleSet
-
-    dom_buf = []   # (i, rule_id, orig_key, params, message)
-
-    def flush(rs):
-        if not dom_buf:
-            return rs
-        dom_buf.sort(key=lambda t: t[0])
-        dom = DomainRuleSet()
-        for _, rid, okey, p, msg in dom_buf:
-            # messages were prefixed "invalid domain: " at lift time —
-            # strip so the rebuild's own lift does not double-prefix
-            if msg.startswith("invalid domain: "):
-                msg = msg[len("invalid domain: "):]
-            fn = _builder_for("email_domain", rid, okey or None, p, msg)
-            if fn is None:
-                raise SerdeError(
-                    f"embedded domain rule {rid}/{okey} is not "
-                    f"round-trippable")
-            dom = fn(dom)
-        dom_buf.clear()
-        return rs.with_domain(dom)
-
-    for r in rules:
-        ck = r.get("conflict_key") or ""
-        params = _dec(r.get("params", {}))
-        if ck.startswith("email_domain_"):
-            rest = ck[len("email_domain_"):].split("_", 1)
-            dom_buf.append((int(rest[0]), r["rule_id"],
-                            rest[1] if len(rest) == 2 else "",
-                            params, r.get("message", "")))
-            continue
-        rs = flush(rs)
-        rs = _rebuild_rule("email", rs, r["rule_id"], ck or None,
-                           params, r.get("message", ""))
-    return flush(rs)
 
 
 # -- file convenience -------------------------------------------------------

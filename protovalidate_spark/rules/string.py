@@ -38,8 +38,8 @@ class StringRuleSet(RuleSet, ComparableMixin, MembershipMixin):
 
     def min_len_chars(self, n: int) -> "StringRuleSet":
         """Character-length variant (Spark ``length``). The ``chars``
-        param disambiguates it from the octet form for serde round-trips
-        (rules/serde.py) — same rule_id and conflict key otherwise."""
+        param tells it apart from the octet form in the rule metadata
+        (same rule_id and conflict key otherwise)."""
         return self._with_rule(Rule(
             Code.MIN_LEN, lambda c: F.length(c) >= n,
             f"length must be at least {n} chars", conflict_key="min_len",

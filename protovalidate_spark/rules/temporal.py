@@ -9,8 +9,9 @@ time/rule_duration_*.go, time/rule_{mindiff,maxdiff}.go.
 Spark mapping (SURVEY.md §2.4): TimestampType column; string→time via
 ``coalesce(to_timestamp(col, fmt1), ...)`` (first-match-wins layout list);
 Duration = numeric column scaled by WithUnit to milliseconds.
-min_diff/max_diff pin "now" at compile time for determinism (the reference
-evaluates time.Until at call time, rule_mindiff.go:19-53).
+min_diff/max_diff/expired pin "now" when the builder is called, for
+deterministic plans and replays (the reference evaluates time.Until at
+call time, rule_mindiff.go:19-53).
 """
 
 from __future__ import annotations
@@ -23,12 +24,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..errors import Code, CompileError
-from .base import ComparableMixin, MembershipMixin, Rule, RuleSet
+from .base import CallDefault, ComparableMixin, MembershipMixin, Rule, RuleSet
 
 #: ns per unit, mirroring Go time constants (duration.go WithUnit default ns)
 UNIT_MS = {
     "ns": 1e-6, "us": 1e-3, "ms": 1.0, "s": 1e3, "m": 60e3, "h": 3600e3,
 }
+
+#: "now" when the builder is called (naive UTC); the recorded call keeps it
+NOW = CallDefault(
+    lambda: _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None))
 
 
 @dataclass(frozen=True)
@@ -51,26 +56,24 @@ class TimeRuleSet(RuleSet, ComparableMixin, MembershipMixin):
             return F.date_format(value, self.output_layout)
         return value
 
-    def min_diff(self, delta: _dt.timedelta, now: Optional[_dt.datetime] = None):
+    def min_diff(self, delta: _dt.timedelta, now: _dt.datetime = NOW):
         """value - now >= delta (reference rule_mindiff.go:19-53). ``now`` is
-        pinned at compile time (pass job-start) for deterministic plans."""
-        now = now or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        pinned when the builder is called (pass job-start) for
+        deterministic plans."""
         bound = now + delta
         return self._with_rule(Rule(
             Code.MIN, lambda c: c >= F.lit(bound),
             f"value must be at least {delta} from now", conflict_key="min_diff",
             params={"delta": delta}))
 
-    def max_diff(self, delta: _dt.timedelta, now: Optional[_dt.datetime] = None):
-        now = now or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    def max_diff(self, delta: _dt.timedelta, now: _dt.datetime = NOW):
         bound = now + delta
         return self._with_rule(Rule(
             Code.MAX, lambda c: c <= F.lit(bound),
             f"value must be at most {delta} from now", conflict_key="max_diff",
             params={"delta": delta}))
 
-    def expired(self, now: Optional[_dt.datetime] = None):
-        now = now or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    def expired(self, now: _dt.datetime = NOW):
         return self._with_rule(Rule(
             Code.EXPIRED, lambda c: c >= F.lit(now),
             "value has expired", params={"now": now}))

@@ -311,6 +311,9 @@ def streaming_transcript_conflict_violations(
                 GroupStateTimeout.ProcessingTimeTimeout))
 
 
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
 def write_violations_stream(
     violations: DataFrame, path: str, checkpoint: str,
     output_mode: str = "append", trigger_available_now: bool = True,
@@ -320,7 +323,9 @@ def write_violations_stream(
 ):
     """writeStream with checkpointing — the streaming analog of the
     batch runner's violation sink. ``availableNow`` drains the backlog
-    and stops (batch-like semantics for tests and backfills).
+    and stops (batch-like semantics for tests and backfills); it runs
+    no no-data micro-batches, so a watermarked aggregation's windows
+    that only a later watermark closes are written by the next run.
 
     ``max_exemplars_per_rule`` > 0 bounds the rows MATERIALIZED per
     micro-batch to the k smallest (by ``exemplar_order_cols``) per
@@ -346,9 +351,22 @@ def write_violations_stream(
              .option("path", path)
              .option("checkpointLocation", checkpoint)
              .outputMode(output_mode))
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    if not trigger_available_now:
+        return w.start()
+    # A stateful check's processing-time timeout asks for a no-data
+    # micro-batch after every batch, so an availableNow query would
+    # never drain. Its data batches still expire timed-out keys, so the
+    # query starts without no-data batches (the conf is read at start).
+    conf = violations.sparkSession.conf
+    prior = conf.get(_NO_DATA_BATCHES, None)
+    conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        return w.trigger(availableNow=True).start()
+    finally:
+        if prior is None:
+            conf.unset(_NO_DATA_BATCHES)
+        else:
+            conf.set(_NO_DATA_BATCHES, prior)
 
 
 def windowed_column_stats(

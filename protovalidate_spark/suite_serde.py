@@ -23,10 +23,11 @@ Non-JSON members need an explicit side channel, never guessing:
   inside the rule set) raise ``SerdeError`` — an artifact must never
   silently drop a constraint (same contract as rules/serde.py).
 
-Spec lists that are already plain dicts (stats_bounds, metrics,
-outliers, monotonic, volume, freshness, label_conflicts,
-embedding_drift incl. its baseline dict, drift_baseline) serialize
-verbatim through the same ``_enc``/``_dec`` value codec.
+Every other field is plain data (thresholds, column lists, spec dicts
+incl. the drift and embedding baselines) and serializes through one
+walk over ``dataclasses.fields(ValidationSuite)`` with the same
+``_enc``/``_dec`` value codec, so a new suite field reaches the
+artifact without a second list to keep.
 """
 
 from __future__ import annotations
@@ -38,31 +39,15 @@ from typing import Sequence
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .rules.serde import (SerdeError, _dec, _enc, ruleset_from_dict,
-                          ruleset_to_dict)
+from .rules.serde import (SerdeError, _dec, _enc, _is_default,
+                          ruleset_from_dict, ruleset_to_dict)
 from .suite import ValidationSuite
 
-_PLAIN_FIELDS = (
-    "row_keys", "partition_col", "salt_buckets", "psi_threshold",
-    "ks_threshold", "drift_group_col", "stats_cols", "audio_features",
-    "audio_vad", "audio_bandwidth", "calendar_cols",
-    "max_exemplars_per_rule",
-)
-_SPEC_FIELDS = (
-    "label_conflicts", "monotonic", "volume_specs", "freshness",
-    "embedding_drift", "stats_bounds", "metrics", "outliers",
-)
-_DEFAULTS = {f.name: f.default for f in dataclasses.fields(ValidationSuite)}
-
-
-def _is_default(name: str, v) -> bool:
-    """Compare against the dataclass default, never truthiness: a
-    zero-valued threshold (psi_threshold=0.0) is the STRICTEST gate and
-    must survive the round-trip."""
-    d = _DEFAULTS[name]
-    if isinstance(d, tuple) and isinstance(v, (list, tuple)):
-        return tuple(v) == d
-    return v == d
+#: fields with their own code: a rule set, live DataFrames / Columns,
+#: or lambdas; every other field is plain data
+_EXPLICIT = ("rules", "refs", "reconciliations", "extra_object_rules")
+_FIELDS = [f for f in dataclasses.fields(ValidationSuite)
+           if f.name not in _EXPLICIT]
 
 
 def suite_to_dict(suite: ValidationSuite, *,
@@ -75,14 +60,10 @@ def suite_to_dict(suite: ValidationSuite, *,
             "builders or re-attach them after load_suite")
 
     out: dict = {"rules": ruleset_to_dict(suite.rules)}
-    for f in _PLAIN_FIELDS:
-        v = getattr(suite, f)
+    for f in _FIELDS:
+        v = getattr(suite, f.name)
         if not _is_default(f, v):
-            out[f] = _enc(v)
-    if suite.unique:
-        out["unique"] = [list(g) for g in suite.unique]
-    if suite.drift_baseline is not None:
-        out["drift_baseline"] = _enc(suite.drift_baseline)
+            out[f.name] = _enc(v)
 
     if suite.refs:
         if len(ref_paths) != len(suite.refs):
@@ -110,23 +91,14 @@ def suite_to_dict(suite: ValidationSuite, *,
             plain["fact_expr_sql"] = tbl["fact_expr_sql"]
             recs.append(plain)
         out["reconciliations"] = recs
-
-    for f in _SPEC_FIELDS:
-        v = getattr(suite, f)
-        if v:
-            out[f] = _enc(list(v))
     return out
 
 
 def suite_from_dict(doc: dict, spark: SparkSession) -> ValidationSuite:
     kw: dict = {"rules": ruleset_from_dict(doc["rules"])}
-    for f in _PLAIN_FIELDS:
-        if f in doc:
-            kw[f] = _dec(doc[f])
-    if "unique" in doc:
-        kw["unique"] = [list(g) for g in doc["unique"]]
-    if "drift_baseline" in doc:
-        kw["drift_baseline"] = _dec(doc["drift_baseline"])
+    for f in _FIELDS:
+        if f.name in doc:
+            kw[f.name] = _dec(doc[f.name])
     if "refs" in doc:
         kw["refs"] = [
             (r["col"], spark.read.parquet(r["dim_path"]), r["dim_col"])
@@ -140,9 +112,6 @@ def suite_from_dict(doc: dict, spark: SparkSession) -> ValidationSuite:
             spec["fact_expr"] = F.expr(r["fact_expr_sql"])
             recs.append(spec)
         kw["reconciliations"] = recs
-    for f in _SPEC_FIELDS:
-        if f in doc:
-            kw[f] = _dec(doc[f])
     return ValidationSuite(**kw)
 
 

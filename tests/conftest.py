@@ -17,6 +17,22 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def no_streaming_query_left_active():
+    """Fail any test that leaves a streaming query running: it would
+    keep executors busy for every test after it."""
+    yield
+    s = SparkSession.getActiveSession()
+    if s is None:
+        return
+    active = s.streams.active
+    for q in active:
+        q.stop()
+    assert not active, (
+        f"test left {len(active)} streaming queries active: "
+        f"{[q.name or str(q.id) for q in active]}")
+
+
 @pytest.fixture(scope="session")
 def tiny_table(spark, tmp_path_factory):
     """The TINY profile written ONCE as a part_date-partitioned parquet

@@ -469,3 +469,28 @@ def test_correlation_affine_invariance_property(spark, vals, a, b):
     else:
         assert abs(pos - base) <= 2e-5
         assert abs(neg + base) <= 2e-5
+
+
+@settings(max_examples=6, deadline=None)
+@given(rows=st.lists(
+    st.tuples(st.one_of(st.none(), st.sampled_from("ab")),
+              st.one_of(st.none(), st.integers(0, 2))),
+    min_size=1, max_size=40),
+    salt=st.sampled_from([0, 3]))
+def test_duplicate_keys_null_semantics_property(spark, rows, salt):
+    """Multi-column uniqueness follows SQL UNIQUE: a row whose key has a
+    NULL in ANY column never takes part in a duplicate group (NULL is
+    not equal to NULL), with or without salting. Oracle: pandas
+    groupby over the rows whose key columns are all non-null."""
+    import pandas as pd
+
+    from protovalidate_spark.dataset.uniqueness import duplicate_keys
+    pdf = pd.DataFrame(rows, columns=["k1", "k2"])
+    full = pdf.dropna(subset=["k1", "k2"])
+    counts = full.groupby(["k1", "k2"]).size()
+    want = {(k1, int(k2), int(n)) for (k1, k2), n in counts.items()
+            if n > 1}
+    df = spark.createDataFrame(rows, "k1 string, k2 int")
+    got = {(r["k1"], r["k2"], r["dup_count"])
+           for r in duplicate_keys(df, ["k1", "k2"], salt).collect()}
+    assert got == want

@@ -66,7 +66,8 @@ def test_typed_fields_roundtrip(spark):
 def test_width_base_fields_survive():
     rs = Int16().with_base(16).with_rounding("half_even")
     doc = ruleset_to_dict(rs)
-    assert doc["width"] == "int16" and doc["base"] == 16
+    assert doc["width"] == "int16"
+    assert doc["calls"][0] == {"call": "with_base", "args": [16]}
     rs2 = ruleset_from_dict(doc)
     assert rs2.width == "int16" and rs2.base == 16 \
         and rs2.rounding == "half_even"
@@ -260,7 +261,79 @@ def test_map_roundtrip(spark):
     assert_same_violations(spark, obj, obj2, df)
 
 
-def test_query_param_lift_refuses():
+def test_query_param_lift_roundtrip(spark):
+    """The lift's inner rule set is a recorded argument, so its cast
+    type survives the replay."""
     from protovalidate_spark import Int32, Query
-    with pytest.raises(SerdeError):
-        ruleset_to_dict(Query().with_param("page", Int32().min(1)))
+    rs = Object().with_key("q", Query().with_param("page", Int32().min(1)))
+    rs2 = roundtrip(rs)
+    df = spark.createDataFrame(
+        [(1, "page=0"), (2, "page=5"), (3, "x=1&page=-3"), (4, "a=%zz")],
+        "id int, q string")
+    assert_same_violations(spark, rs, rs2, df)
+
+
+def test_uri_query_param_roundtrip(spark):
+    from protovalidate_spark import URI, Int32
+    rs = Object().with_key("u", URI().with_query_param(
+        "page", Int32().with_required().min(1)))
+    rs2 = roundtrip(rs)
+    df = spark.createDataFrame(
+        [(1, "https://x.com/?page=0"), (2, "https://x.com/?page=2"),
+         (3, "https://x.com/")],
+        "id int, u string")
+    assert_same_violations(spark, rs, rs2, df)
+
+
+def test_time_diff_and_expired_roundtrip(spark):
+    """min_diff / max_diff / expired resolve ``now`` when called; the
+    record keeps the resolved value, so the replay does not re-read the
+    clock."""
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    rs = (Object()
+          .with_key("a", Time().min_diff(dt.timedelta(days=-1)))
+          .with_key("b", Time().max_diff(dt.timedelta(days=1)))
+          .with_key("c", Time().expired()))
+    doc = ruleset_to_dict(rs)
+    json.dumps(doc)
+    import time as _time
+    _time.sleep(0.01)    # a replay that re-read the clock would differ
+    rs2 = ruleset_from_dict(doc)
+    bound = rs.key_rules()["a"].rules[0].predicate
+    bound2 = rs2.key_rules()["a"].rules[0].predicate
+    # the compiled bounds are the same literal timestamps
+    from pyspark.sql import functions as F
+    assert str(bound(F.col("a"))) == str(bound2(F.col("a")))
+    df = spark.createDataFrame(
+        [(1, now - dt.timedelta(days=2), now + dt.timedelta(days=2),
+          now - dt.timedelta(hours=1)),
+         (2, now, now, now + dt.timedelta(hours=1))],
+        "id int, a timestamp, b timestamp, c timestamp")
+    assert_same_violations(spark, rs, rs2, df)
+
+
+def test_duration_unit_after_bound_roundtrip(spark):
+    """Replay starts from the construction-time fields: min(10) before
+    with_unit("s") stays 10 ms (a replay from the final unit would give
+    10,000 ms)."""
+    rs = Object().with_key("d", Duration().min(10).with_unit("s"))
+    rs2 = roundtrip(rs)
+    assert rs2.key_rules()["d"].rules[0].params == {"min_ms": 10.0}
+    df = spark.createDataFrame([(1, 0), (2, 1), (3, 20)],
+                               "id int, d int")
+    assert_same_violations(spark, rs, rs2, df)
+
+
+def test_rules_off_the_recorded_path_refuse():
+    from pyspark.sql import functions as F
+    from protovalidate_spark.rules import Rule
+    custom = Rule("CUSTOM", lambda c: c != F.lit("no"), "custom")
+    with pytest.raises(SerdeError, match="recorded builder path"):
+        ruleset_to_dict(Object().with_key("x", String()._with_rule(custom)))
+    with pytest.raises(SerdeError, match="with_rule"):
+        ruleset_to_dict(Object().with_key("x", String().with_rule(custom)))
+
+
+def test_rule_func_refusal_names_the_builder():
+    with pytest.raises(SerdeError, match="with_rule_func"):
+        ruleset_to_dict(String().with_rule_func(lambda c: c.isNotNull()))

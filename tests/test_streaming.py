@@ -48,7 +48,7 @@ def test_stream_matches_batch(spark, stream_src, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = write_violations_stream(v, out, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = {(r["row_idx"], r["field_path"], r["rule_id"])
            for r in spark.read.parquet(out).collect()}
@@ -65,12 +65,12 @@ def test_stream_resume_is_incremental(spark, stream_src, tmp_path):
     out, ckpt = str(tmp_path / "o2"), str(tmp_path / "c2")
     stream = spark.readStream.schema(batch_df.schema).parquet(path)
     v = stream_violations(stream, _rules(), row_key_cols=["row_idx"])
-    write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     n1 = spark.read.parquet(out).count()
     # second run with same checkpoint: no new input ⇒ no new rows
     stream2 = spark.readStream.schema(batch_df.schema).parquet(path)
     v2 = stream_violations(stream2, _rules(), row_key_cols=["row_idx"])
-    write_violations_stream(v2, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == n1
 
 
@@ -86,7 +86,7 @@ def test_windowed_unique(spark, stream_src, tmp_path):
          .outputMode("complete")
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.sql("select clip_id, dup_count, rule_id from dups").collect()
     assert len(got) == 1
     assert got[0]["clip_id"] == "clip-0000000001"
@@ -104,9 +104,6 @@ def test_stream_suite_row_pass_with_decode(spark, tmp_path):
     import shutil
 
     from protovalidate_spark.fixtures import Profile
-
-    for active in spark.streams.active:   # no cross-test stream leakage
-        active.stop()
 
     src = str(tmp_path / "clips_src")
     # 600 rows still hits every injection modulus (smallest hit at
@@ -126,8 +123,7 @@ def test_stream_suite_row_pass_with_decode(spark, tmp_path):
             q = (v.writeStream.format("parquet").option("path", out)
                  .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
-            if not q.awaitTermination(180):
-                q.stop()
+            assert q.awaitTermination(180)
             break
         except Exception:
             if attempt:
@@ -140,6 +136,31 @@ def test_stream_suite_row_pass_with_decode(spark, tmp_path):
     want = {(r["row_idx"], r["field_path"], r["rule_id"])
             for r in suite.row_violations(batch).collect()}
     assert got == want and len(want) > 0
+
+
+def test_stateful_available_now_query_stops(spark, tmp_path):
+    """A stateful check (processing-time state timeout) under the
+    availableNow sink drains its backlog and terminates instead of
+    running empty micro-batches forever."""
+    import time
+
+    from protovalidate_spark.streaming import stateful_unique_violations
+    src = str(tmp_path / "src_stop")
+    spark.createDataFrame([(0, "a"), (1, "b"), (2, "a")],
+                          "row_idx long, clip_id string") \
+        .coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("row_idx long, clip_id string") \
+        .parquet(src)
+    t0 = time.monotonic()
+    q = write_violations_stream(
+        stateful_unique_violations(stream, "clip_id"),
+        str(tmp_path / "o_stop"), str(tmp_path / "c_stop"))
+    try:
+        assert q.awaitTermination(30)
+    finally:
+        q.stop()
+    assert time.monotonic() - t0 < 30
+    assert spark.read.parquet(str(tmp_path / "o_stop")).count() == 1
 
 
 def test_stateful_unique_across_batches(spark, stream_src, tmp_path):
@@ -156,7 +177,7 @@ def test_stateful_unique_across_batches(spark, stream_src, tmp_path):
     stream = spark.readStream.schema(batch_df.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v = stateful_unique_violations(stream, "clip_id")
-    write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == 0
     # drop 2: re-sends clip-0000000001 (dup of drop 1) + a fresh key
     batch_df.filter(F.col("row_idx") >= 3).coalesce(1) \
@@ -164,7 +185,7 @@ def test_stateful_unique_across_batches(spark, stream_src, tmp_path):
     stream2 = spark.readStream.schema(batch_df.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v2 = stateful_unique_violations(stream2, "clip_id")
-    write_violations_stream(v2, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     got = {(r["clip_id"], r["dup_count_batch"], r["total_seen"],
             r["rule_id"]) for r in rows}
@@ -196,7 +217,7 @@ def test_windowed_column_stats(spark, tmp_path):
     q = (stats.writeStream.format("parquet").option("path", out)
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = {r["window_start"].strftime("%H:%M"): r
            for r in spark.read.parquet(out).collect()}
@@ -249,7 +270,7 @@ def test_stream_drift_violations(spark, tmp_path):
     q = stream_drift_violations(stream, snap, "ts", out, ckpt,
                                 window="10 minutes",
                                 watermark="0 seconds")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
     flagged = {(r["window_start"].strftime("%H:%M"), r["field_path"])
@@ -289,7 +310,7 @@ def test_streaming_audio_dup_across_batches(spark, tmp_path):
     stream = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v = streaming_audio_dup_violations(stream)
-    write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == 0
     # drop 2: 440 Hz re-encoded (8-bit, 8 kHz, half gain) + REPEATED
     # byte-identical garbage (same id + bytes -> same sentinel key;
@@ -302,7 +323,7 @@ def test_streaming_audio_dup_across_batches(spark, tmp_path):
     stream2 = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v2 = streaming_audio_dup_violations(stream2)
-    write_violations_stream(v2, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -339,7 +360,7 @@ def test_stateful_unique_emit_ids(spark, stream_src, tmp_path):
     stream = spark.readStream.schema(keyed.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v = stateful_unique_violations(stream, "clip_id", emit_ids_col="rid")
-    write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     # fixture: clip-0000000001 appears at row_idx 0 and 3 (same batch)
     assert len(rows) == 1
@@ -372,7 +393,7 @@ def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
     stream = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v = streaming_transcript_conflict_violations(stream)
-    write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     rows = {r["clip_id"]: r for r in spark.read.parquet(out).collect()}
     assert sorted(rows) == ["c2"]          # batch-internal conflict
     assert rows["c2"]["first_id"] == "c1"
@@ -390,7 +411,7 @@ def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
     stream2 = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v2 = streaming_transcript_conflict_violations(stream2)
-    write_violations_stream(v2, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     rows = {r["clip_id"]: r for r in spark.read.parquet(out).collect()}
     assert sorted(rows) == ["a2", "c2"]
     r = rows["a2"]
@@ -417,7 +438,7 @@ def test_streaming_transcript_conflict_exact_null_label(spark, tmp_path):
     stream = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v = streaming_transcript_conflict_violations(stream, key="exact")
-    write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == 0
     b2 = spark.createDataFrame(
         [("a2", wav, None), ("n2", None, "ghost two")], schema)
@@ -425,7 +446,7 @@ def test_streaming_transcript_conflict_exact_null_label(spark, tmp_path):
     stream2 = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     v2 = streaming_transcript_conflict_violations(stream2, key="exact")
-    write_violations_stream(v2, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -460,7 +481,7 @@ def test_stream_volume_violations(spark, tmp_path):
                                  window="10 minutes",
                                  watermark="0 seconds",
                                  max_rel_dev=0.5)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
     flagged = {(r["window_start"].strftime("%H:%M"), r["actual"])
@@ -499,7 +520,7 @@ def test_stream_outlier_violations(spark, tmp_path):
     q = stream_outlier_violations(stream, "ts", out, ckpt, fences,
                                   window="10 minutes",
                                   watermark="0 seconds", max_rate=0.05)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
     assert len(got) == 1
@@ -523,7 +544,7 @@ def test_stream_sink_caps_exemplars_per_rule(spark, tmp_path):
     stream = spark.readStream.schema(df.schema).parquet(path)
     v = stream_violations(stream, _rules(), row_key_cols=["row_idx"])
     out, ckpt = str(tmp_path / "o_cap"), str(tmp_path / "c_cap")
-    write_violations_stream(v, out, ckpt, max_exemplars_per_rule=3,
+    assert write_violations_stream(v, out, ckpt, max_exemplars_per_rule=3,
                             exemplar_order_cols=["row_idx"]
                             ).awaitTermination(120)
     got = sorted(r["row_idx"] for r in spark.read.parquet(out).collect())
@@ -558,7 +579,7 @@ def test_stream_entropy_violations(spark, tmp_path):
                                   window="10 minutes",
                                   watermark="0 seconds",
                                   min_entropy=0.5)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
     assert len(got) == 1

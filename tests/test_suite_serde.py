@@ -156,3 +156,42 @@ def test_validate_table_refuses_flags_the_suite_ignores(monkeypatch, tmp_path):
                                           *flags])
         with pytest.raises(SystemExit, match=flags[0]):
             job.main()
+
+
+def test_every_plain_field_survives_roundtrip(spark):
+    """One field walk: every ValidationSuite field except the ones with
+    their own code (rules, refs, reconciliations, extra_object_rules)
+    set to a non-default value comes back from the artifact."""
+    import dataclasses
+    explicit = {"rules", "refs", "reconciliations", "extra_object_rules"}
+    values = {
+        "row_keys": ["id"], "partition_col": "p", "unique": [["id"]],
+        "drift_baseline": {"amt": {"kind": "numeric", "edges": [0.0, 1.0],
+                                   "counts": [3, 4]}},
+        "psi_threshold": 0.0, "ks_threshold": 0.0,
+        "drift_group_col": "flag", "stats_cols": ["amt"],
+        "salt_buckets": 4, "audio_features": ["bytes"],
+        "audio_vad": ["bytes"], "audio_bandwidth": ["bytes"],
+        "label_conflicts": [{"id_col": "id", "key": "exact"}],
+        "monotonic": [{"col": "id"}],
+        "volume_specs": [{"group_col": "flag", "max_rel_dev": 0.5}],
+        "calendar_cols": ["d"],
+        "freshness": [{"ts_col": "ts", "max_age_hours": 1.0,
+                       "as_of": "2024-01-01 00:00:00"}],
+        "embedding_drift": [{"col": "v", "baseline": {"mean": [0.0]}}],
+        "stats_bounds": [{"col": "amt", "max_null_rate": 0.0}],
+        "metrics": [{"kind": "entropy", "cols": ["flag"],
+                     "min_entropy": 0.1}],
+        "outliers": [{"col": "amt", "method": "mad"}],
+        "max_exemplars_per_rule": 3,
+    }
+    plain = [f for f in dataclasses.fields(ValidationSuite)
+             if f.name not in explicit]
+    assert {f.name for f in plain} == set(values)
+    for f in plain:
+        assert values[f.name] != f.default, f.name
+    suite = ValidationSuite(rules=Object().with_unknown(), **values)
+    doc = json.loads(json.dumps(suite_to_dict(suite)))
+    back = suite_from_dict(doc, spark)
+    for f in plain:
+        assert getattr(back, f.name) == values[f.name], f.name
