@@ -38,8 +38,7 @@ def main():
 
     from protovalidate_spark.clips import clips_suite
     from protovalidate_spark.fixtures import TINY, Profile, write_clips
-    from protovalidate_spark.streaming import (
-        stream_suite_violations, write_violations_stream)
+    from protovalidate_spark.streaming import write_violations_stream
 
     import os
     table = args.table or "/tmp/protovalidate_stream_table"
@@ -54,7 +53,7 @@ def main():
     suite = clips_suite(spark, audio_checks=args.audio_checks)
     t0 = time.time()
     stream = spark.readStream.schema(schema).parquet(table)
-    v = stream_suite_violations(stream, suite)
+    v = suite.row_violations(stream)
     q = write_violations_stream(
         v, path=f"{args.out}/violations",
         checkpoint=f"{args.out}/_checkpoint")

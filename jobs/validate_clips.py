@@ -6,6 +6,7 @@ Usage:
       [--table PATH] [--out DIR] [--rows N] [--resume]
 
 With no --table, generates the deterministic fixture table first.
+The JSON summary is the last line the job writes, after the tables.
 """
 
 import argparse
@@ -76,14 +77,14 @@ def main():
             write_clips(spark, table, profile)
         rep = run_checkpointed(spark, suite, table, out)
         verdicts = verdicts_from_outputs(spark, out)
-        print(json.dumps({
+        summary = {
             "mode": "checkpointed", "partitions_run": rep.partitions_run,
             "partitions_skipped": rep.partitions_skipped,
             "partitions_stale": rep.partitions_stale,
             "manifest_torn_tail": rep.manifest_torn_tail,
             "rows": rep.total_rows, "violations": rep.total_violations,
             "wall_s": round(time.time() - t0, 2),
-        }))
+        }
         verdicts.orderBy("part_date").show(20, truncate=False)
     else:
         df = (spark.read.parquet(args.table) if args.table
@@ -94,19 +95,21 @@ def main():
         # violations_full is the pre-cap stream
         nv = (res.violations_full
               if res.violations_full is not None else res.violations).count()
-        out = {
+        summary = {
             "mode": "single-pass", "rows": n_rows, "violations": nv,
             "clips_per_sec": round(n_rows / (time.time() - t0), 1),
             "wall_s": round(time.time() - t0, 2),
         }
         if args.max_exemplars > 0:
-            out["exemplar_rows"] = res.violations.count()
-        print(json.dumps(out))
+            summary["exemplar_rows"] = res.violations.count()
         res.verdicts.orderBy("part_date").show(5, truncate=False)
         res.violations.groupBy("field_path", "rule_id").count() \
            .orderBy("field_path", "rule_id").show(30, truncate=False)
 
     spark.stop()
+    # the summary is the LAST line: spark-submit merges stderr (manifest
+    # warnings, Spark logs) into stdout, so a reader takes the tail
+    print(json.dumps(summary), flush=True)
     return 0
 
 

@@ -9,9 +9,9 @@ contract, and run this job against any table:
       --table PATH --rules rules.json [--row-keys id] [--out DIR] \
       [--unique col[,col...]] [--max-exemplars K]
 
-Prints one JSON summary line (rows, violations, by-rule counts) and, on
-stderr, the violations-by-rule table. With --out, writes the violation
-rows as parquet (append-safe overwrite).
+Prints the violations-by-rule table on stderr and then one JSON summary
+line (rows, violations, by-rule counts) as the job's last line. With
+--out, writes the violation rows as parquet (append-safe overwrite).
 """
 
 import argparse
@@ -81,16 +81,13 @@ def main():
         by_rule = {f"{r['field_path']}:{r['rule_id']}": r["violations"]
                    for r in sorted(summary_rows, key=lambda r: (
                        r["field_path"], r["rule_id"]))}
-        print(json.dumps({
+        _finish(spark, {
             "table": args.table, "suite": args.suite,
             "rows": df.count(),
             "violations": sum(by_rule.values()),
             "by_rule": by_rule,
             "wall_s": round(time.time() - t0, 2),
-        }))
-        for k, v in by_rule.items():
-            print(f"  {k}: {v}", file=sys.stderr)
-        spark.stop()
+        })
         return
 
     rules = load_ruleset(args.rules)
@@ -124,17 +121,23 @@ def main():
     by_rule = {f"{r['field_path']}:{r['rule_id']}": r["violations"]
                for r in sorted(summary_rows,
                                key=lambda r: (r["field_path"], r["rule_id"]))}
-    print(json.dumps({
+    _finish(spark, {
         "table": args.table, "rules": args.rules,
         "rows": df.count(),
         "violations": sum(by_rule.values()),
         "violation_rows_materialized": n_materialized,
         "by_rule": by_rule,
         "wall_s": round(time.time() - t0, 2),
-    }))
-    for k, v in by_rule.items():
+    })
+
+
+def _finish(spark, summary: dict) -> None:
+    """Per-rule lines on stderr, then the JSON summary as the LAST line:
+    spark-submit merges stderr into stdout, so a reader takes the tail."""
+    for k, v in summary["by_rule"].items():
         print(f"  {k}: {v}", file=sys.stderr)
     spark.stop()
+    print(json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":

@@ -9,20 +9,29 @@ rules are stateless) applied via ``readStream`` → transformations →
 violations column is a streaming-compatible stateless expression, decode
 UDF included.
 
+Row-level validation needs no wrapper: ``rules.violations(stream_df)``
+and ``suite.row_violations(stream_df)`` run unchanged on a stream, and
+:func:`write_violations_stream` is their checkpointed sink.
+
 Dataset-level checks need state and are therefore *windowed* on the
 stream (global exact uniqueness over an unbounded stream is unbounded
 state by definition):
 - :func:`windowed_unique_violations` — duplicates within an event-time
   window, watermarked so state is bounded and late data is handled.
+- :func:`stateful_unique_violations` and its audio-dup and
+  transcript-conflict users — exact cross-batch keyed state with a TTL.
 - :func:`windowed_column_stats` — the per-column stats pass
   (``dataset/stats.py``) per event-time window: ONE stateful
   aggregation, state O(windows × columns).
-- :func:`windowed_histogram_counts` + :func:`stream_drift_violations` —
-  the PSI/KS drift check (``dataset/drift.py``) per event-time window
-  against a frozen baseline snapshot. Bucket spaces are frozen
-  driver-side from the baseline (numeric bounds AND the categorical
-  label set), so streaming state is bounded at
-  O(windows × columns × buckets) no matter the live cardinality.
+- :func:`stream_window_checks` — the windowed monitors, one stage: ONE
+  watermarked count per (window, check, name, label) and one
+  epoch-overwrite sink that judges each closed window with the checks
+  :class:`WindowDrift` (PSI/KS vs a frozen baseline snapshot),
+  :class:`WindowVolume` (row count vs a pinned rate),
+  :class:`WindowOutliers` (fence-breach rate vs frozen fences) and
+  :class:`WindowEntropy` (categorical entropy vs pinned bounds).
+  Baselines are frozen on the Spark driver, so state stays bounded at
+  O(windows × checks × labels) no matter the live cardinality.
 """
 
 from __future__ import annotations
@@ -34,23 +43,6 @@ from pyspark.sql import functions as F
 
 from .errors import Code
 from .rules.base import violation_struct
-from .rules.object import ObjectRuleSet
-
-
-def stream_violations(stream_df: DataFrame, rules: ObjectRuleSet,
-                      row_key_cols: Sequence[str] = ()) -> DataFrame:
-    """Row-level violations on a streaming DataFrame — identical plan to
-    the batch path (stateless projection + explode), append-mode safe."""
-    return rules.violations(stream_df, row_key_cols=row_key_cols)
-
-
-def stream_suite_violations(stream_df: DataFrame, suite) -> DataFrame:
-    """A ValidationSuite's ROW-LEVEL pass (rules + Arrow decode stage +
-    consistency rules) over a stream. The decode pandas UDF is stateless,
-    so the exact batch plan runs per micro-batch; dataset-level checks
-    need state → use :func:`windowed_unique_violations` or the batch
-    runner over closed partitions."""
-    return suite.row_violations(stream_df)
 
 
 def windowed_unique_violations(
@@ -414,389 +406,249 @@ def windowed_column_stats(
             .select("window_start", "window_end", "s.*"))
 
 
-def windowed_histogram_counts(
-    stream_df: DataFrame, baseline: dict, ts_col: str,
-    window: str = "10 minutes", watermark: str = "10 minutes",
-    n_buckets: Optional[int] = None,
-) -> DataFrame:
-    """Streaming stage of the drift check: per-(window, column, label)
-    counts with the bucket space FROZEN by the baseline snapshot
+class WindowDrift:
+    """PSI/KS drift of each baseline column per event-time window
+    against a frozen baseline snapshot
     (:func:`~protovalidate_spark.dataset.drift.snapshot`).
 
-    Numeric columns bucket by ``width_bucket`` over the baseline's
-    stored (lo, hi); categorical values not present in the baseline's
-    histogram collapse to ``__other__`` AT PROJECTION TIME — the label
-    set is known driver-side, so streaming state per window is
-    O(columns × buckets) regardless of live cardinality (an unbounded
-    label space would otherwise be unbounded state). Same stacked
-    single-aggregation shape as the batch
-    :func:`~protovalidate_spark.dataset.drift.histograms` pass."""
-    from .dataset.drift import N_BUCKETS, _NUMERIC, _fix_bounds
+    The bucket space is FROZEN by the snapshot: numeric columns bucket
+    by ``width_bucket`` over the stored (lo, hi) into ``N_BUCKETS``;
+    categorical values not in the baseline's histogram collapse to
+    ``__other__`` at projection time, so state per window is
+    O(columns × buckets) whatever the live cardinality. NULL values are
+    left out, as in the batch histograms. The verdict reuses the batch
+    PSI/KS kernels, so thresholds mean what they mean in
+    :func:`~protovalidate_spark.dataset.drift.drift_violations`."""
 
-    nb = n_buckets or N_BUCKETS
-    dtypes = dict(stream_df.dtypes)
-    missing = [c for c in baseline if c not in dtypes]
-    if missing:
-        raise ValueError(
-            f"baseline column(s) {missing} missing from the stream schema "
-            f"{sorted(dtypes)} — drop them from the baseline snapshot or "
-            f"add them to the stream (batch stats_drift_violations reports "
-            f"a missing column as a REQUIRED violation; a stream cannot, "
-            f"since its bucket projection is fixed at setup time)")
-    entries = []
-    for c in baseline:
-        base = dtypes[c].split("(")[0]
-        snap = baseline[c]
-        if base in _NUMERIC:
-            lo, hi = _fix_bounds(snap.get("lo"), snap.get("hi"))
-            label = F.concat(
-                F.lit("b"),
-                F.width_bucket(F.col(c).cast("double"), F.lit(lo),
-                               F.lit(hi), F.lit(nb))
-                .cast("bigint").cast("string"))
-        else:
-            known = sorted(k for k in snap.get("hist", {})
-                           if k != "__other__")
-            val = F.col(c).cast("string")
-            label = (F.when(val.isin(*known), val)
-                     .otherwise(F.lit("__other__"))
-                     if known else F.lit("__other__"))
-        entries.append(F.struct(F.lit(c).alias("name"),
-                                F.when(F.col(c).isNotNull(), label)
-                                 .alias("label")))
-    pairs = (stream_df
-             .withWatermark(ts_col, watermark)
-             .select(F.col(ts_col).alias("__ts"),
-                     F.explode(F.array(*entries)).alias("p"))
-             .filter(F.col("p.label").isNotNull()))
-    return (pairs.groupBy(F.window("__ts", window).alias("w"),
-                          F.col("p.name").alias("name"),
-                          F.col("p.label").alias("label"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "name", "label", "cnt"))
+    def __init__(self, baseline: dict, psi_threshold: float = 0.2,
+                 ks_threshold: float = 0.1):
+        self.baseline = baseline
+        self.psi_threshold = psi_threshold
+        self.ks_threshold = ks_threshold
 
+    def entries(self, dtypes: dict):
+        from .dataset.drift import N_BUCKETS, _NUMERIC, _fix_bounds
 
-def window_drift_rows(
-    batch_rows, baseline: dict,
-    psi_threshold: float = 0.2, ks_threshold: float = 0.1,
-) -> list:
-    """Driver-side verdict step for CLOSED windows (a ``foreachBatch``
-    body): ``batch_rows`` is the collected output of
-    :func:`windowed_histogram_counts` for one micro-batch — bounded at
-    O(closed windows × columns × buckets). Returns one violation-shaped
-    tuple per drifted (window, column):
-    (window_start, window_end, field_path, rule_id, message, actual),
-    reusing the batch PSI/KS kernels so thresholds and semantics are
-    identical to :func:`~protovalidate_spark.dataset.drift.drift_violations`."""
-    from collections import defaultdict
+        missing = [c for c in self.baseline if c not in dtypes]
+        if missing:
+            raise ValueError(
+                f"baseline column(s) {missing} missing from the stream "
+                f"schema {sorted(dtypes)} — drop them from the baseline "
+                f"snapshot or add them to the stream (batch "
+                f"stats_drift_violations reports a missing column as a "
+                f"REQUIRED violation; a stream cannot, since its bucket "
+                f"projection is fixed at setup time)")
+        out = []
+        for c, snap in self.baseline.items():
+            if dtypes[c].split("(")[0] in _NUMERIC:
+                lo, hi = _fix_bounds(snap.get("lo"), snap.get("hi"))
+                label = F.concat(
+                    F.lit("b"),
+                    F.width_bucket(F.col(c).cast("double"), F.lit(lo),
+                                   F.lit(hi), F.lit(N_BUCKETS))
+                    .cast("bigint").cast("string"))
+            else:
+                known = sorted(k for k in snap.get("hist", {})
+                               if k != "__other__")
+                val = F.col(c).cast("string")
+                label = (F.when(val.isin(*known), val)
+                         .otherwise(F.lit("__other__"))
+                         if known else F.lit("__other__"))
+            label = F.when(F.col(c).isNotNull(), label)
+            out.append((c, label, label.isNotNull()))
+        return out
 
-    from .dataset.drift import ks_stat, psi
+    def rows(self, ws, we, counts: dict) -> list:
+        from .dataset.drift import ks_stat, psi
 
-    counts: dict = defaultdict(dict)
-    for r in batch_rows:
-        counts[(r["window_start"], r["window_end"], r["name"])][r["label"]] \
-            = r["cnt"]
-    out = []
-    for (ws, we, name), hist in sorted(counts.items()):
-        total = sum(hist.values())
-        if not total:
-            continue
-        actual = {k: v / total for k, v in hist.items()}
-        expected = baseline[name]["hist"]
-        p = psi(expected, actual)
-        k = ks_stat(expected, actual)
-        if p > psi_threshold or k > ks_threshold:
-            out.append((ws, we, f"/{name}", Code.DRIFT,
-                        f"distribution drift exceeds thresholds "
-                        f"(psi>{psi_threshold} or ks>{ks_threshold}) "
-                        f"in window",
-                        f"psi={p:.4f},ks={k:.4f}"))
-    return out
+        out = []
+        for name, hist in sorted(counts.items()):
+            total = sum(hist.values())
+            actual = {k: v / total for k, v in hist.items()}
+            expected = self.baseline[name]["hist"]
+            p = psi(expected, actual)
+            k = ks_stat(expected, actual)
+            if p > self.psi_threshold or k > self.ks_threshold:
+                out.append((ws, we, f"/{name}", Code.DRIFT,
+                            f"distribution drift exceeds thresholds "
+                            f"(psi>{self.psi_threshold} or "
+                            f"ks>{self.ks_threshold}) in window",
+                            f"psi={p:.4f},ks={k:.4f}"))
+        return out
 
 
-_DRIFT_WINDOW_SCHEMA = ("window_start timestamp, window_end timestamp, "
-                        "field_path string, rule_id string, "
-                        "message string, actual string")
+class WindowVolume:
+    """Row count per event-time window against a PINNED expected rate
+    (the "ingest fell over at 2am" detector): a DRIFT row when the count
+    deviates from ``expected_per_window`` by more than ``max_rel_dev``
+    (relative) or falls under the ``min_count`` floor. Unlike the batch
+    check (mean over observed groups), a stream has no full set of
+    sibling windows to average, so derive the rate from a batch baseline
+    at the same window size. A window with ZERO rows produces no count
+    at all: an absent ingest interval is the batch calendar/volume
+    pass's job; a stream can only flag what arrives."""
+
+    def __init__(self, expected_per_window: float, max_rel_dev: float = 0.5,
+                 min_count: Optional[int] = None):
+        self.expected = expected_per_window
+        self.max_rel_dev = max_rel_dev
+        self.min_count = min_count
+
+    def entries(self, dtypes: dict):
+        return [("__volume__", F.lit("rows"), None)]
+
+    def rows(self, ws, we, counts: dict) -> list:
+        cnt = sum(counts["__volume__"].values())
+        rel_bad = (abs(cnt - self.expected)
+                   / max(self.expected, 1e-9)) > self.max_rel_dev
+        if not rel_bad and (self.min_count is None or cnt >= self.min_count):
+            return []
+        return [(ws, we, "/__volume__", Code.DRIFT,
+                 f"window row count deviates from expected "
+                 f"{self.expected:g} by more than {self.max_rel_dev}"
+                 + (f" or falls below {self.min_count}"
+                    if self.min_count is not None else ""),
+                 str(cnt))]
 
 
-def stream_drift_violations(
-    stream_df: DataFrame, baseline: dict, ts_col: str,
-    out_path: str, checkpoint: str,
-    window: str = "10 minutes", watermark: str = "10 minutes",
-    psi_threshold: float = 0.2, ks_threshold: float = 0.1,
-    trigger_available_now: bool = True,
-):
-    """End-to-end streaming drift monitor: watermarked windowed
-    histogram aggregation (distributed, bounded state) → per-closed-
-    window PSI/KS verdicts vs the frozen baseline (driver-side over the
-    tiny closed-window count rows) → violation rows written to
-    ``out_path`` as Parquet. Effectively-once per window: append-mode
-    emits a window's counts in the single micro-batch whose watermark
-    closes it, and the sink writes each epoch's rows under an
-    ``__epoch=<id>`` partition OVERWRITTEN in place — foreachBatch is
-    inherently at-least-once (a retry after a committed append but
-    before the checkpoint records the epoch would duplicate rows), and
-    the epoch-keyed dynamic-partition overwrite makes the retry
-    idempotent."""
-    counts = windowed_histogram_counts(
-        stream_df, baseline, ts_col, window, watermark)
+class WindowOutliers:
+    """Fence-breach RATE per (event-time window, column) against FROZEN
+    fences: ``fences`` comes from ``iqr_fences`` over a healthy batch
+    baseline, since a stream cannot derive robust quantiles over itself
+    without unbounded state. A few breaches per window are what fences
+    mean; the monitored regression is the rate jumping over
+    ``max_rate`` (a producer started emitting garbage magnitudes)."""
 
-    def _sink(batch_df: DataFrame, epoch: int) -> None:
-        rows = window_drift_rows(batch_df.collect(), baseline,
-                                 psi_threshold, ks_threshold)
-        if rows:
-            (batch_df.sparkSession.createDataFrame(
-                rows, _DRIFT_WINDOW_SCHEMA)
-             .withColumn("__epoch", F.lit(int(epoch)))
-             .coalesce(1).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("__epoch").parquet(out_path))
+    def __init__(self, fences: dict, max_rate: float = 0.01):
+        self.fences = fences
+        self.max_rate = max_rate
 
-    w = (counts.writeStream.foreachBatch(_sink)
-         .outputMode("append")
-         .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    def entries(self, dtypes: dict):
+        out = []
+        for c, (lo, hi, _q1, _q3) in self.fences.items():
+            x = F.col(c).cast("double")
+            breach = x.isNotNull() & ((x < F.lit(lo)) | (x > F.lit(hi)))
+            out.append((c, breach, None))
+        return out
 
-
-def windowed_volume_counts(stream_df: DataFrame, ts_col: str,
-                           window: str = "10 minutes",
-                           watermark: str = "10 minutes") -> DataFrame:
-    """Per-window row counts (watermarked — bounded state, one count
-    per open window): the streaming stage of the volume-anomaly check
-    (dataset/integrity.py volume_anomalies is the batch analog)."""
-    return (stream_df.withWatermark(ts_col, watermark)
-            .groupBy(F.window(ts_col, window).alias("w"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"), "cnt"))
-
-
-def window_volume_rows(batch_rows, expected_per_window: float,
-                       max_rel_dev: float = 0.5,
-                       min_count: Optional[int] = None) -> list:
-    """Driver-side verdict for CLOSED windows: one DRIFT tuple per
-    window whose count deviates from ``expected_per_window`` by more
-    than ``max_rel_dev`` (relative) or falls under the ``min_count``
-    floor. Unlike the batch check (mean over observed groups), a stream
-    needs the expected rate pinned UP FRONT — there is no full set of
-    sibling windows to average; derive it from a batch baseline
-    (rows/window at the same window size)."""
-    out = []
-    for r in sorted(batch_rows, key=lambda r: r["window_start"]):
-        cnt = int(r["cnt"])
-        rel_bad = (abs(cnt - expected_per_window)
-                   / max(expected_per_window, 1e-9)) > max_rel_dev
-        floor_bad = min_count is not None and cnt < min_count
-        if rel_bad or floor_bad:
-            out.append((r["window_start"], r["window_end"],
-                        "/__volume__", Code.DRIFT,
-                        f"window row count deviates from expected "
-                        f"{expected_per_window:g} by more than "
-                        f"{max_rel_dev}"
-                        + (f" or falls below {min_count}"
-                           if min_count is not None else ""),
-                        str(cnt)))
-    return out
-
-
-def stream_volume_violations(
-    stream_df: DataFrame, ts_col: str, out_path: str, checkpoint: str,
-    expected_per_window: float, window: str = "10 minutes",
-    watermark: str = "10 minutes", max_rel_dev: float = 0.5,
-    min_count: Optional[int] = None, trigger_available_now: bool = True,
-):
-    """End-to-end streaming volume monitor (the "ingest fell over at
-    2am" detector): watermarked window counts -> per-closed-window
-    verdict vs the pinned expected rate -> violation rows as Parquet,
-    same epoch-overwrite idempotent sink as the drift monitor. NOTE: a
-    window with ZERO rows produces no aggregate row at all - an
-    entirely-absent ingest interval must be caught by the batch
-    calendar/volume pass over the landed table; a stream can only flag
-    what arrives."""
-    counts = windowed_volume_counts(stream_df, ts_col, window, watermark)
-
-    def _sink(batch_df: DataFrame, epoch: int) -> None:
-        rows = window_volume_rows(batch_df.collect(), expected_per_window,
-                                  max_rel_dev, min_count)
-        if rows:
-            (batch_df.sparkSession.createDataFrame(
-                rows, _DRIFT_WINDOW_SCHEMA)
-             .withColumn("__epoch", F.lit(int(epoch)))
-             .coalesce(1).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("__epoch").parquet(out_path))
-
-    w = (counts.writeStream.foreachBatch(_sink)
-         .outputMode("append")
-         .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def windowed_outlier_counts(stream_df: DataFrame, ts_col: str,
-                            fences: dict, window: str = "10 minutes",
-                            watermark: str = "10 minutes") -> DataFrame:
-    """Per-window outlier counts per column against FROZEN fences (the
-    streaming stage of dataset/outliers.py): ``fences`` comes from
-    ``iqr_fences`` over a healthy batch baseline — a stream cannot
-    derive robust quantiles over itself without unbounded state, and
-    freezing them is the same baseline-snapshot contract the drift
-    monitor uses. ONE watermarked agg (bounded state): per window, the
-    row count plus each column's breach count — shuffle volume is one
-    counter row per open window, never per row."""
-    aggs = [F.count(F.lit(1)).alias("cnt")]
-    for c, (lo, hi, _q1, _q3) in fences.items():
-        x = F.col(c).cast("double")
-        breach = (x.isNotNull() & ((x < F.lit(lo)) | (x > F.lit(hi))))
-        aggs.append(F.sum(breach.cast("long")).alias(f"{c}__outliers"))
-    return (stream_df.withWatermark(ts_col, watermark)
-            .groupBy(F.window(ts_col, window).alias("w"))
-            .agg(*aggs)
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"), "*")
-            .drop("w"))
-
-
-def window_outlier_rows(batch_rows, fences: dict,
-                        max_rate: float = 0.01) -> list:
-    """Driver-side verdict for CLOSED windows: one OUTLIER tuple per
-    (window, column) whose fence-breach RATE exceeds ``max_rate``.
-    A few outliers per window are normal (that is what fences mean);
-    the monitored regression is the rate jumping — a producer started
-    emitting garbage magnitudes."""
-    out = []
-    for r in sorted(batch_rows, key=lambda r: r["window_start"]):
-        n = int(r["cnt"])
-        if n == 0:
-            continue
-        for c in fences:
-            k = int(r[f"{c}__outliers"])
+    def rows(self, ws, we, counts: dict) -> list:
+        out = []
+        for c in self.fences:
+            n = sum(counts[c].values())
+            k = counts[c].get("true", 0)
             rate = k / n
-            if rate > max_rate:
-                out.append((r["window_start"], r["window_end"],
-                            f"/{c}", Code.OUTLIER,
+            if rate > self.max_rate:
+                out.append((ws, we, f"/{c}", Code.OUTLIER,
                             f"fence-breach rate {rate:.4f} exceeds "
-                            f"{max_rate} ({k}/{n} rows)",
+                            f"{self.max_rate} ({k}/{n} rows)",
                             f"{rate:.6f}"))
-    return out
+        return out
 
 
-def stream_outlier_violations(
-    stream_df: DataFrame, ts_col: str, out_path: str, checkpoint: str,
-    fences: dict, window: str = "10 minutes",
-    watermark: str = "10 minutes", max_rate: float = 0.01,
-    trigger_available_now: bool = True,
-):
-    """End-to-end streaming outlier-rate monitor: watermarked per-window
-    breach counts vs frozen fences -> per-closed-window rate verdict ->
-    violation rows as Parquet, same epoch-overwrite idempotent sink as
-    the drift and volume monitors."""
-    counts = windowed_outlier_counts(stream_df, ts_col, fences,
-                                     window, watermark)
+class WindowEntropy:
+    """Shannon entropy (nats, the batch metric's ``ln(n) -
+    sum(c*ln(c))/n`` rounded to 6) of one categorical column per
+    event-time window: MIN rows for a collapsing column, MAX rows for a
+    category-set explosion. Derive the bounds from the batch
+    ``column_entropy`` over a healthy baseline. NULL is a real category
+    (a producer pinning a field to NULL is the collapse being
+    monitored). State is one counter per (open window, category), so
+    point this only at LOW-cardinality columns; the batch entropy MAX
+    gate catches a column drifting into a key shape."""
 
-    def _sink(batch_df: DataFrame, epoch: int) -> None:
-        rows = window_outlier_rows(batch_df.collect(), fences, max_rate)
-        if rows:
-            (batch_df.sparkSession.createDataFrame(
-                rows, _DRIFT_WINDOW_SCHEMA)
-             .withColumn("__epoch", F.lit(int(epoch)))
-             .coalesce(1).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("__epoch").parquet(out_path))
+    def __init__(self, col: str, min_entropy: Optional[float] = None,
+                 max_entropy: Optional[float] = None):
+        self.col = col
+        self.min_entropy = min_entropy
+        self.max_entropy = max_entropy
 
-    w = (counts.writeStream.foreachBatch(_sink)
-         .outputMode("append")
-         .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    def entries(self, dtypes: dict):
+        return [(self.col, F.col(self.col), None)]
 
+    def rows(self, ws, we, counts: dict) -> list:
+        import math
 
-def windowed_category_counts(stream_df: DataFrame, ts_col: str,
-                             col: str, window: str = "10 minutes",
-                             watermark: str = "10 minutes") -> DataFrame:
-    """Per-window per-category counts for ONE categorical column — the
-    streaming stage of dataset/metrics.py entropy monitoring. ONE
-    watermarked agg; state is one counter row per (open window,
-    category), so this is for genuinely LOW-cardinality columns
-    (status/codec enums — the columns entropy monitoring exists for).
-    A key-shaped column would grow state per distinct value; the batch
-    entropy MAX gate is precisely the check that catches a column
-    drifting into that shape, so run it before pointing the stream
-    monitor at a column. NULL is a real category (a producer pinning a
-    field to NULL is the collapse being monitored)."""
-    return (stream_df.withWatermark(ts_col, watermark)
-            .groupBy(F.window(ts_col, window).alias("w"),
-                     F.col(col).cast("string").alias("v"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"), "v", "cnt"))
-
-
-def window_entropy_rows(batch_rows, col: str,
-                        min_entropy: Optional[float] = None,
-                        max_entropy: Optional[float] = None) -> list:
-    """Driver-side verdict for CLOSED windows: recombine each window's
-    per-category counts into Shannon entropy (nats, same
-    ``ln(n) - sum(c*ln(c))/n`` arithmetic as the batch metric, rounded
-    to 6) and emit MIN (collapsing categorical) / MAX (category-set
-    explosion) rows. The driver sees one row per (window, category) —
-    bounded by the low-cardinality contract — never raw rows."""
-    import math
-    from collections import defaultdict
-
-    by_win = defaultdict(list)
-    for r in batch_rows:
-        by_win[(r["window_start"], r["window_end"])].append(int(r["cnt"]))
-    out = []
-    for (ws, we), counts in sorted(by_win.items()):
-        n = sum(counts)
-        if n == 0:
-            continue
-        h = round(math.log(n) - sum(c * math.log(c) for c in counts) / n,
-                  6)
-        if min_entropy is not None and h < min_entropy:
-            out.append((ws, we, f"/{col}", Code.MIN,
-                        f"window entropy below minimum {min_entropy} "
+        cats = list(counts[self.col].values())
+        n = sum(cats)
+        h = round(math.log(n) - sum(c * math.log(c) for c in cats) / n, 6)
+        out = []
+        if self.min_entropy is not None and h < self.min_entropy:
+            out.append((ws, we, f"/{self.col}", Code.MIN,
+                        f"window entropy below minimum {self.min_entropy} "
                         f"nats (collapsing categorical, "
-                        f"{len(counts)} categories over {n} rows)",
+                        f"{len(cats)} categories over {n} rows)",
                         str(h)))
-        if max_entropy is not None and h > max_entropy:
-            out.append((ws, we, f"/{col}", Code.MAX,
-                        f"window entropy above maximum {max_entropy} "
+        if self.max_entropy is not None and h > self.max_entropy:
+            out.append((ws, we, f"/{self.col}", Code.MAX,
+                        f"window entropy above maximum {self.max_entropy} "
                         f"nats (category explosion, "
-                        f"{len(counts)} categories over {n} rows)",
+                        f"{len(cats)} categories over {n} rows)",
                         str(h)))
-    return out
+        return out
 
 
-def stream_entropy_violations(
-    stream_df: DataFrame, ts_col: str, out_path: str, checkpoint: str,
-    col: str, window: str = "10 minutes", watermark: str = "10 minutes",
-    min_entropy: Optional[float] = None,
-    max_entropy: Optional[float] = None, trigger_available_now: bool = True,
+_WINDOW_SCHEMA = ("window_start timestamp, window_end timestamp, "
+                  "field_path string, rule_id string, "
+                  "message string, actual string")
+
+
+def stream_window_checks(
+    stream_df: DataFrame, ts_col: str, checks: Sequence, out_path: str,
+    checkpoint: str, window: str = "10 minutes",
+    watermark: str = "10 minutes", trigger_available_now: bool = True,
 ):
-    """End-to-end streaming entropy monitor (the "status column froze /
-    exploded at 2am" detector): watermarked per-window category counts
-    -> per-closed-window Shannon entropy verdict vs pinned bounds ->
-    violation rows as Parquet, same epoch-overwrite idempotent sink as
-    the drift/volume/outlier monitors. Derive the bounds from the batch
-    metric over a healthy baseline (column_entropy), the same
-    baseline-snapshot contract the other monitors use."""
-    counts = windowed_category_counts(stream_df, ts_col, col,
-                                      window, watermark)
+    """Windowed monitors over a stream: ONE watermarked count per
+    (event-time window, check, name, label) for every check, judged per
+    closed window on the Spark driver.
+
+    Each check (:class:`WindowDrift`, :class:`WindowVolume`,
+    :class:`WindowOutliers`, :class:`WindowEntropy`) gives
+    ``entries(dtypes)`` — ``(name, label Column, when Column | None)``
+    triples — and ``rows(ws, we, counts)``, which turns one closed
+    window's ``{name: {label: count}}`` into violation tuples. The
+    entries of all checks are stacked into one exploded struct array,
+    scoped by the check's index, with labels cast to string (a boolean
+    label counts as ``"true"``/``"false"``); a NULL label is a real
+    category, and an entry is dropped only where its ``when`` is not
+    true. State is one counter per (open window, check, name, label),
+    bounded by the watermark, so several checks on one stream share one
+    query, one state store and one checkpoint.
+
+    Rows ``(window_start, window_end, field_path, rule_id, message,
+    actual)`` go to ``out_path`` as Parquet. Effectively-once per
+    window: append mode emits a window's counts in the single
+    micro-batch whose watermark closes it, and the ``foreachBatch`` sink
+    OVERWRITES that epoch's ``__epoch=<id>`` partition — foreachBatch is
+    at-least-once (a retry after a committed write but before the
+    checkpoint records the epoch would duplicate rows), and the
+    epoch-keyed dynamic-partition overwrite makes the retry
+    idempotent."""
+    dtypes = dict(stream_df.dtypes)
+    entries = [
+        F.struct(F.lit(i).alias("check"), F.lit(name).alias("name"),
+                 label.cast("string").alias("label"),
+                 (F.lit(True) if when is None else when).alias("keep"))
+        for i, check in enumerate(checks)
+        for name, label, when in check.entries(dtypes)]
+    counts = (stream_df
+              .withWatermark(ts_col, watermark)
+              .select(F.col(ts_col), F.explode(F.array(*entries)).alias("e"))
+              .filter(F.col("e.keep"))
+              .groupBy(F.window(ts_col, window).alias("w"),
+                       "e.check", "e.name", "e.label")
+              .count())
 
     def _sink(batch_df: DataFrame, epoch: int) -> None:
-        rows = window_entropy_rows(batch_df.collect(), col,
-                                   min_entropy, max_entropy)
+        wins: dict = {}
+        for r in batch_df.collect():
+            (wins.setdefault(tuple(r["w"]), {})
+             .setdefault(r["check"], {})
+             .setdefault(r["name"], {}))[r["label"]] = r["count"]
+        rows = [row for (ws, we), per_check in sorted(wins.items())
+                for i, cnts in sorted(per_check.items())
+                for row in checks[i].rows(ws, we, cnts)]
         if rows:
-            (batch_df.sparkSession.createDataFrame(
-                rows, _DRIFT_WINDOW_SCHEMA)
+            (batch_df.sparkSession.createDataFrame(rows, _WINDOW_SCHEMA)
              .withColumn("__epoch", F.lit(int(epoch)))
              .coalesce(1).write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
@@ -806,5 +658,8 @@ def stream_entropy_violations(
          .outputMode("append")
          .option("checkpointLocation", checkpoint))
     if trigger_available_now:
+        # Unlike write_violations_stream, no-data micro-batches stay on:
+        # the last windows close only in the no-data batch that follows
+        # the data batch, once the advanced watermark takes effect.
         w = w.trigger(availableNow=True)
     return w.start()

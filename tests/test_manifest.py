@@ -92,3 +92,33 @@ def test_resume_after_torn_manifest_line(spark, tiny_table, tmp_path):
     assert len(m) == 17
     gv = spark.read.parquet(os.path.join(out, "global_violations"))
     assert m[GLOBAL_KEY]["violations"] == gv.count() > 0
+
+
+def test_resume_job_summary_is_last_line(spark, tmp_path):
+    """``jobs/validate_clips.py --resume`` after a torn manifest line:
+    the cut-torn-record warning goes to stderr, which spark-submit
+    merges into stdout, yet the JSON summary stays the last line."""
+    import subprocess
+    import sys
+
+    from protovalidate_spark.fixtures import Profile, write_clips
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    table, out = str(tmp_path / "table"), str(tmp_path / "out")
+    # two rows land in two partitions: the job pays one JVM start and
+    # two partition jobs
+    write_clips(spark, table, Profile(n_rows=2, dur_range_ms=400))
+    _write(os.path.join(out, "_manifest"), '{"part": "2024-01-')
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs", "validate_clips.py"),
+         "--resume", "--table", table, "--out", out],
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
+        env=env, timeout=600)
+    assert proc.returncode == 0, proc.stdout[-2000:]
+    assert "cut torn trailing record" in proc.stdout
+    last = [ln for ln in proc.stdout.splitlines() if ln.strip()][-1]
+    summary = json.loads(last)
+    assert summary["manifest_torn_tail"] == '{"part": "2024-01-'
+    assert summary["mode"] == "checkpointed" and summary["rows"] == 2

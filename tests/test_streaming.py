@@ -10,7 +10,11 @@ from pyspark.sql import functions as F
 
 from protovalidate_spark import Int32, Object, String
 from protovalidate_spark.streaming import (
-    stream_violations,
+    WindowDrift,
+    WindowEntropy,
+    WindowOutliers,
+    WindowVolume,
+    stream_window_checks,
     windowed_unique_violations,
     write_violations_stream,
 )
@@ -43,7 +47,7 @@ def stream_src(spark, tmp_path_factory):
 def test_stream_matches_batch(spark, stream_src, tmp_path):
     path, batch_df = stream_src
     stream = spark.readStream.schema(batch_df.schema).parquet(path)
-    v = stream_violations(stream, _rules(), row_key_cols=["row_idx"])
+    v = _rules().violations(stream, row_key_cols=["row_idx"])
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -53,8 +57,8 @@ def test_stream_matches_batch(spark, stream_src, tmp_path):
     got = {(r["row_idx"], r["field_path"], r["rule_id"])
            for r in spark.read.parquet(out).collect()}
     want = {(r["row_idx"], r["field_path"], r["rule_id"])
-            for r in stream_violations(batch_df, _rules(),
-                                       row_key_cols=["row_idx"]).collect()}
+            for r in _rules().violations(batch_df,
+                                         row_key_cols=["row_idx"]).collect()}
     assert got == want and len(want) == 2
 
 
@@ -64,12 +68,12 @@ def test_stream_resume_is_incremental(spark, stream_src, tmp_path):
     path, batch_df = stream_src
     out, ckpt = str(tmp_path / "o2"), str(tmp_path / "c2")
     stream = spark.readStream.schema(batch_df.schema).parquet(path)
-    v = stream_violations(stream, _rules(), row_key_cols=["row_idx"])
+    v = _rules().violations(stream, row_key_cols=["row_idx"])
     assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     n1 = spark.read.parquet(out).count()
     # second run with same checkpoint: no new input ⇒ no new rows
     stream2 = spark.readStream.schema(batch_df.schema).parquet(path)
-    v2 = stream_violations(stream2, _rules(), row_key_cols=["row_idx"])
+    v2 = _rules().violations(stream2, row_key_cols=["row_idx"])
     assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == n1
 
@@ -99,7 +103,6 @@ def test_stream_suite_row_pass_with_decode(spark, tmp_path):
     consistency rules) over a stream matches the batch pass."""
     from protovalidate_spark.clips import clips_suite
     from protovalidate_spark.fixtures import TINY, clips_df
-    from protovalidate_spark.streaming import stream_suite_violations
 
     import shutil
 
@@ -119,7 +122,7 @@ def test_stream_suite_row_pass_with_decode(spark, tmp_path):
         out, ckpt = str(tmp_path / f"o4_{attempt}"), str(tmp_path / f"c4_{attempt}")
         try:
             stream = spark.readStream.schema(batch.schema).parquet(src)
-            v = stream_suite_violations(stream, suite)
+            v = suite.row_violations(stream)
             q = (v.writeStream.format("parquet").option("path", out)
                  .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
@@ -233,15 +236,13 @@ def test_windowed_column_stats(spark, tmp_path):
     assert w2["quantiles"] is not None and 50.0 <= w2["quantiles"][0] <= 53.0
 
 
-def test_stream_drift_violations(spark, tmp_path):
-    """Windowed PSI/KS drift vs a frozen baseline: the shifted window is
-    flagged, the matching window is not, and the streaming verdict
-    agrees with the batch drift pass on the same slice."""
+def _drift_input(spark, tmp_path):
+    """(baseline snapshot, stream rows, parquet source): window 00:00
+    follows the baseline, window 02:00 shifts v and brings a new codec,
+    and a 09:00 sentinel row closes both."""
     import random
 
-    from protovalidate_spark.dataset.drift import (
-        drift_violations, snapshot)
-    from protovalidate_spark.streaming import stream_drift_violations
+    from protovalidate_spark.dataset.drift import snapshot
 
     rng = random.Random(11)
     base_rows = [(i, rng.uniform(0.0, 100.0),
@@ -264,12 +265,21 @@ def test_stream_drift_violations(spark, tmp_path):
         .withColumn("ts", F.to_timestamp("ts"))
     src = str(tmp_path / "src")
     df.coalesce(1).write.parquet(src)
+    return snap, df, src
 
+
+def test_stream_drift_violations(spark, tmp_path):
+    """Windowed PSI/KS drift vs a frozen baseline: the shifted window is
+    flagged, the matching window is not, and the streaming verdict
+    agrees with the batch drift pass on the same slice."""
+    from protovalidate_spark.dataset.drift import drift_violations
+
+    snap, df, src = _drift_input(spark, tmp_path)
     stream = spark.readStream.schema(df.schema).parquet(src)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_drift_violations(stream, snap, "ts", out, ckpt,
-                                window="10 minutes",
-                                watermark="0 seconds")
+    q = stream_window_checks(stream, "ts", [WindowDrift(snap)], out, ckpt,
+                             window="10 minutes",
+                             watermark="0 seconds")
     assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
@@ -285,6 +295,45 @@ def test_stream_drift_violations(spark, tmp_path):
     batch_flagged = {r["field_path"]
                      for r in drift_violations(w2, snap).collect()}
     assert batch_flagged == {p for ws, p in flagged if ws == "02:00"}
+
+    # a baseline column the stream lacks refuses at setup, not per batch
+    with pytest.raises(ValueError, match="missing from the stream"):
+        WindowDrift({**snap, "gone": snap["v"]}).entries(dict(df.dtypes))
+
+
+def test_stream_window_checks_share_one_query(spark, tmp_path):
+    """All four window checks in ONE query (one aggregation, one state
+    store, one checkpoint) write exactly the union of the rows of four
+    single-check queries over the same input."""
+    import random
+
+    from protovalidate_spark.dataset import iqr_fences
+
+    snap, df, src = _drift_input(spark, tmp_path)
+    rng = random.Random(3)
+    base = spark.createDataFrame(
+        [(rng.uniform(0.0, 100.0),) for _ in range(1000)], "v double")
+    checks = [WindowDrift(snap),
+              WindowVolume(expected_per_window=500.0),
+              WindowOutliers(iqr_fences(base, ["v"], k=1.5, exact=True)),
+              WindowEntropy("c", min_entropy=0.8, max_entropy=1.05)]
+
+    def run(name, chks):
+        stream = spark.readStream.schema(df.schema).parquet(src)
+        out = str(tmp_path / f"out_{name}")
+        q = stream_window_checks(stream, "ts", chks, out,
+                                 str(tmp_path / f"ckpt_{name}"),
+                                 window="10 minutes",
+                                 watermark="0 seconds")
+        assert q.awaitTermination(120)
+        # one stateful operator however many checks ride the query
+        assert len(q.lastProgress["stateOperators"]) == 1
+        return sorted(tuple(r) for r in spark.read.parquet(out)
+                      .drop("__epoch").collect())
+
+    singles = [run(str(i), [c]) for i, c in enumerate(checks)]
+    assert all(singles)  # every check flags something on this input
+    assert run("all", checks) == sorted(r for rows in singles for r in rows)
 
 
 def test_streaming_audio_dup_across_batches(spark, tmp_path):
@@ -459,8 +508,6 @@ def test_stream_volume_violations(spark, tmp_path):
     """Windowed volume monitor vs a pinned expected rate: the starved
     window and the flooded window flag DRIFT; the on-rate window
     passes; the sentinel-open window never emits."""
-    from protovalidate_spark.streaming import stream_volume_violations
-
     rows = []
     for i in range(100):      # window 00:00 — on rate (100/expected 100)
         rows.append((i, "2026-01-01 00:0%d:%02d" % (i % 10, i % 60)))
@@ -476,11 +523,11 @@ def test_stream_volume_violations(spark, tmp_path):
 
     stream = spark.readStream.schema(df.schema).parquet(src)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_volume_violations(stream, "ts", out, ckpt,
-                                 expected_per_window=100.0,
-                                 window="10 minutes",
-                                 watermark="0 seconds",
-                                 max_rel_dev=0.5)
+    q = stream_window_checks(stream, "ts",
+                             [WindowVolume(expected_per_window=100.0,
+                                           max_rel_dev=0.5)],
+                             out, ckpt, window="10 minutes",
+                             watermark="0 seconds")
     assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
@@ -496,7 +543,6 @@ def test_stream_outlier_violations(spark, tmp_path):
     batch baseline): the poisoned window's breach rate flags OUTLIER,
     the healthy window's background rate stays under max_rate."""
     from protovalidate_spark.dataset import iqr_fences
-    from protovalidate_spark.streaming import stream_outlier_violations
 
     base = spark.createDataFrame(
         [(float(i % 100),) for i in range(1000)], "value double")
@@ -517,9 +563,10 @@ def test_stream_outlier_violations(spark, tmp_path):
 
     stream = spark.readStream.schema(df.schema).parquet(src)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_outlier_violations(stream, "ts", out, ckpt, fences,
-                                  window="10 minutes",
-                                  watermark="0 seconds", max_rate=0.05)
+    q = stream_window_checks(stream, "ts",
+                             [WindowOutliers(fences, max_rate=0.05)],
+                             out, ckpt, window="10 minutes",
+                             watermark="0 seconds")
     assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
@@ -542,7 +589,7 @@ def test_stream_sink_caps_exemplars_per_rule(spark, tmp_path):
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
     stream = spark.readStream.schema(df.schema).parquet(path)
-    v = stream_violations(stream, _rules(), row_key_cols=["row_idx"])
+    v = _rules().violations(stream, row_key_cols=["row_idx"])
     out, ckpt = str(tmp_path / "o_cap"), str(tmp_path / "c_cap")
     assert write_violations_stream(v, out, ckpt, max_exemplars_per_rule=3,
                             exemplar_order_cols=["row_idx"]
@@ -554,11 +601,10 @@ def test_stream_sink_caps_exemplars_per_rule(spark, tmp_path):
 def test_stream_entropy_violations(spark, tmp_path):
     """Windowed entropy monitor vs pinned bounds from a healthy batch
     baseline: the collapsed window (one category) flags MIN, the
-    healthy window's mixed categories pass, and the verdict value
-    equals the batch column_entropy arithmetic."""
+    healthy window's mixed categories pass, a half-NULL window counts
+    NULL as a category and passes, and the verdict value equals the
+    batch column_entropy arithmetic."""
     import math
-
-    from protovalidate_spark.streaming import stream_entropy_violations
 
     rows = []
     for i in range(100):      # window 00:00 — healthy (4 categories)
@@ -567,7 +613,11 @@ def test_stream_entropy_violations(spark, tmp_path):
     for i in range(100):      # window 01:00 — collapsed (pinned value)
         rows.append(("stuck", "2026-01-01 01:0%d:%02d"
                      % (i % 10, i % 60)))
-    rows.append(("s0", "2026-01-01 09:00:00"))  # sentinel closes 01:00
+    for i in range(100):      # window 02:00 — half NULL: NULL is a real
+        # category, so H = ln 2 passes; dropping NULLs would read H = 0
+        rows.append((None if i % 2 else "s1", "2026-01-01 02:0%d:%02d"
+                     % (i % 10, i % 60)))
+    rows.append(("s0", "2026-01-01 09:00:00"))  # sentinel closes 02:00
     df = spark.createDataFrame(rows, "status string, ts string") \
         .withColumn("ts", F.to_timestamp("ts"))
     src = str(tmp_path / "src_ent")
@@ -575,10 +625,10 @@ def test_stream_entropy_violations(spark, tmp_path):
 
     stream = spark.readStream.schema(df.schema).parquet(src)
     out, ckpt = str(tmp_path / "out_ent"), str(tmp_path / "ckpt_ent")
-    q = stream_entropy_violations(stream, "ts", out, ckpt, "status",
-                                  window="10 minutes",
-                                  watermark="0 seconds",
-                                  min_entropy=0.5)
+    q = stream_window_checks(stream, "ts",
+                             [WindowEntropy("status", min_entropy=0.5)],
+                             out, ckpt, window="10 minutes",
+                             watermark="0 seconds")
     assert q.awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
