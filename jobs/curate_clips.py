@@ -64,15 +64,17 @@ def main():
     by_rule = {r["rule_id"]: r["n"] for r in
                drops.groupBy("rule_id").count()
                .withColumnRenamed("count", "n").collect()}
-    print(json.dumps({
+    summary = {
         "rows": n_in, "kept": n_kept,
         "dropped_rows": n_in - n_kept,
         "violation_rows": sum(by_rule.values()),
         "by_rule": dict(sorted(by_rule.items())),
         "wall_s": round(time.time() - t0, 2),
         "out": args.out,
-    }))
+    }
     spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":

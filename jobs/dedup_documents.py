@@ -61,7 +61,7 @@ def main():
     sim.write.mode("overwrite").parquet(args.out + "/simhash")
     n_sim = spark.read.parquet(args.out + "/simhash").count()
 
-    print(json.dumps({
+    summary = {
         "table": args.table,
         "rows": df.count(),
         "exact_dup_rows": n_exact,
@@ -69,8 +69,10 @@ def main():
         "simhash_pairs": n_sim,
         "wall_s": round(time.time() - t0, 2),
         "out": args.out,
-    }))
+    }
     spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
     return 0
 
 

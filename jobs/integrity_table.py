@@ -115,14 +115,14 @@ def main():
             v.write.mode("overwrite").parquet(
                 os.path.join(args.out, name))
 
-    print(json.dumps({"table": args.table, "violations": counts,
-                      "wall_s": round(time.time() - t0, 2)}))
-    by_rule = None
-    for name, v in parts:
-        top = v.groupBy("rule_id").count().orderBy("rule_id").collect()
-        by_rule = {**(by_rule or {}),
-                   **{f"{name}.{r['rule_id']}": r["count"] for r in top}}
-    print(json.dumps({"by_rule": by_rule}))
+    summary = {"table": args.table, "violations": counts,
+               "wall_s": round(time.time() - t0, 2)}
+    summary["by_rule"] = {
+        f"{name}.{r['rule_id']}": r["count"] for name, v in parts
+        for r in v.groupBy("rule_id").count().orderBy("rule_id").collect()}
+    spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":

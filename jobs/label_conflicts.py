@@ -65,7 +65,7 @@ def main():
         content.write.mode("overwrite").parquet(args.out + "/content")
         n_content = spark.read.parquet(args.out + "/content").count()
 
-    print(json.dumps({
+    summary = {
         "table": args.table,
         "rows": df.count(),
         "exact_conflict_rows": n_exact,
@@ -73,8 +73,10 @@ def main():
         "edit_tolerance": args.edit_tolerance,
         "wall_s": round(time.time() - t0, 1),
         "out": args.out,
-    }))
+    }
     spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":

@@ -69,7 +69,7 @@ def main():
     # sitting exactly on a window boundary would mint a phantom window
     windows = -(-total // args.window_tokens)
 
-    print(json.dumps({
+    summary = {
         "table": args.table,
         "docs": int(agg["docs"]),
         "total_tokens": total,
@@ -84,8 +84,10 @@ def main():
             if total % args.window_tokens else (1.0 if total else 0.0),
         "wall_s": round(time.time() - t0, 2),
         "out": args.out,
-    }))
+    }
     spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
     return 0
 
 

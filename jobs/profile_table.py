@@ -189,7 +189,6 @@ def main():
         summary["groups"] = len({r[args.group_col] for r in grouped})
 
     summary["wall_s"] = round(time.time() - t0, 2)
-    print(json.dumps(summary))
 
     print("\n== column stats ==", file=sys.stderr)
     for r in stats:
@@ -215,6 +214,8 @@ def main():
                   f"max={r['max']}", file=sys.stderr)
 
     spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
     return 0
 
 

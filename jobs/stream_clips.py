@@ -60,14 +60,16 @@ def main():
     q.awaitTermination()
 
     viols = spark.read.parquet(f"{args.out}/violations")
-    print(json.dumps({
+    summary = {
         "mode": "streaming-availableNow",
         "violations": viols.count(),
         "wall_s": round(time.time() - t0, 2),
-    }))
+    }
     viols.groupBy("field_path", "rule_id").count() \
          .orderBy("field_path", "rule_id").show(30, truncate=False)
     spark.stop()
+    # last line: spark-submit merges stderr into stdout
+    print(json.dumps(summary), flush=True)
     return 0
 
 

@@ -86,12 +86,6 @@ def digit_ratio(col: Column) -> Column:
                   ).otherwise(F.lit(0.0))
 
 
-def upper_ratio(col: Column) -> Column:
-    return F.when(F.length(col) > 0,
-                  F.length(F.regexp_replace(col, r"[^A-Z]", "")) / F.length(col)
-                  ).otherwise(F.lit(0.0))
-
-
 def stopword_ratio(col: Column, lang: str = "en") -> Column:
     toks = tokens(F.lower(col))
     sw = F.lit(list(STOPWORDS[lang]))

@@ -3,8 +3,9 @@ manifest (FIXTURES.md §5; BASELINE.json north_rule "resumable from
 checkpoint with per-partition lineage + metrics").
 
 Iceberg-style layout: the input is a ``part_date=...`` directory-partitioned
-Parquet table (a real Iceberg catalog slots in by replacing
-``list_partitions``/``read_partition`` with snapshot + manifest reads).
+Parquet table (a real Iceberg catalog slots in through the
+``sources.py`` seam: ``table_partitions``/``read_partition`` become
+snapshot + manifest reads).
 
 Manifest: one JSON line per completed partition —
 (part, snapshot_id, file_list, rows_scanned, violations, wall_ms,
@@ -38,8 +39,15 @@ file-composable, so only the NEW files are scanned, their violations
 appended to the partition's sink, and the manifest totals summed with
 the prior rec (``appended_files`` records the delta size). Any other
 divergence (compaction, rewrite, shrink) re-validates the whole
-partition. Disable with ``verify_lineage=False`` to get blind
-skip-if-recorded semantics.
+partition.
+
+One sink write: a partition job first removes the sink directory
+``violations/<partition_col>=<v>`` of every partition it fully
+re-validates (one whose table directory vanished included), then
+APPENDS its rows with ``partitionBy`` — a re-validated partition that
+now passes holds no rows, an append-delta partition keeps its earlier
+rows, and a TIMEOUT control row takes the same write. Sink files hold
+no partition column; the path carries it.
 
 Timeout/cancel semantics mirror the reference's context handling
 (``pkg/rules/object.go:416-427``, ``slice.go:289-292``: ctx deadline ⇒
@@ -64,6 +72,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import threading
 import time
 from dataclasses import dataclass, field
@@ -84,16 +93,11 @@ GLOBAL_KEY = "__global__"
 STATUS_COMPLETE = "complete"
 
 
-def list_partitions(table_path: str, partition_col: str) -> List[str]:
-    vals = []
-    for name in sorted(os.listdir(table_path)):
-        if name.startswith(f"{partition_col}="):
-            vals.append(name.split("=", 1)[1])
-    return vals
-
-
 def partition_files(table_path: str, partition_col: str, value: str) -> List[str]:
+    """A partition directory's data files; none when it is missing."""
     d = os.path.join(table_path, f"{partition_col}={value}")
+    if not os.path.isdir(d):
+        return []
     return sorted(
         os.path.join(d, f) for f in os.listdir(d)
         if f.endswith(".parquet")
@@ -197,37 +201,23 @@ class RunReport:
     manifest_torn_tail: Optional[str] = None
 
 
-def stale_partitions(done: dict, table_path: str, partition_col: str) -> List[str]:
-    """Completed-manifest partitions whose recorded ``file_list`` lineage no
-    longer matches the partition directory's current data files. Only
-    meaningful for directory-backed tables (the Iceberg seam compares
-    manifest data-file paths instead)."""
-    return [pv for pv, _, _ in
-            classify_stale(done, table_path, partition_col)]
-
-
 def classify_stale(done: dict, table_path: str, partition_col: str):
     """Lineage triage for completed-manifest partitions: ``(pv,
     delta_files, old_rec)`` per stale partition. ``delta_files`` is the
     list of NEW data files when the change is a pure append (recorded
     file set ⊂ current — the dominant Iceberg commit shape), else None
-    (rewrite/compaction/shrink ⇒ full re-validation). Row-level checks
-    are file-composable, so an append only needs the delta validated and
-    the counts summed."""
+    (rewrite/compaction/shrink ⇒ full re-validation)."""
     out = []
     for pv, rec in done.items():
         if pv == GLOBAL_KEY:
             continue
-        d = os.path.join(table_path, f"{partition_col}={pv}")
-        current = (partition_files(table_path, partition_col, pv)
-                   if os.path.isdir(d) else [])
+        current = partition_files(table_path, partition_col, pv)
         recorded = sorted(rec.get("file_list") or [])
         if recorded == current:
             continue
         delta = None
         if recorded and set(recorded) <= set(current):
-            seen = set(recorded)
-            delta = [f for f in current if f not in seen]
+            delta = sorted(set(current) - set(recorded))
         out.append((pv, delta, rec))
     return out
 
@@ -242,27 +232,19 @@ def _manifest_rec(pv, snapshot_id, files, rows, viols, wall_ms,
     }
 
 
-def _control_violation_row(spark: SparkSession, schema, code: str,
-                           message: str) -> DataFrame:
-    """One suite-shaped violation row (all row keys NULL) carrying a
-    runner-level code — TIMEOUT/CANCELED are first-class violations in
-    the reference's error model, not just log lines."""
-    from pyspark.sql import types as T
-    # the suite schema may carry non-nullable fields (lit() partition
-    # values); the control row holds NULL keys, so relax nullability
-    schema = T.StructType([T.StructField(f_.name, f_.dataType, True)
-                           for f_ in schema.fields])
-    vals = []
-    for f_ in schema.fields:
-        if f_.name == "field_path":
-            vals.append("/")
-        elif f_.name == "rule_id":
-            vals.append(code)
-        elif f_.name == "message":
-            vals.append(message)
-        else:
-            vals.append(None)
-    return spark.createDataFrame([tuple(vals)], schema)
+def _control_rows(spark: SparkSession, schema, pc: str, pvs, code: str,
+                  message: str) -> DataFrame:
+    """One suite-shaped violation row per partition (row keys NULL) with
+    a runner-level code, a first-class violation as in the reference."""
+    from .dataset.fused import local_frame
+    cols = [(f_.name, f_.dataType) for f_ in schema.fields]
+    fixed = {"field_path": "/", "rule_id": code, "message": message}
+    return local_frame(spark, [[str(pv) if name == pc else fixed.get(name)
+                                for name, _ in cols] for pv in pvs], cols)
+
+
+def _append_violations(df: DataFrame, viol_dir: str, pc: str) -> None:
+    df.write.mode("append").partitionBy(pc).parquet(viol_dir)
 
 
 class _JobGroupTimeout:
@@ -302,13 +284,10 @@ def run_checkpointed(
     suite: ValidationSuite,
     table_path: str,
     output_dir: str,
-    snapshot_id: str = "",
-    fail_fast: bool = False,
     max_partitions: Optional[int] = None,
     partition_timeout_secs: Optional[float] = None,
     time_budget_secs: Optional[float] = None,
     partitions_per_job: int = 1,
-    verify_lineage: bool = True,
 ) -> RunReport:
     """Validate partition-by-partition with resume.
 
@@ -317,29 +296,24 @@ def run_checkpointed(
     in a final global phase over the full table — recorded separately so a
     resumed run redoes only un-checkpointed partitions + the global phase.
 
+    Completed partitions whose file list diverged from the recorded
+    lineage re-run (a directory listing each, no Spark job): in full, or
+    over their new files only for a pure append. Every job makes one
+    sink write: it removes the sink directory of each partition it fully
+    re-validates, then appends its rows partitioned by ``partition_col``.
+
     ``partition_timeout_secs``: wall budget per partition JOB. On expiry
-    the job is cancelled, a TIMEOUT violation row is written to the
-    partition's violations sink, and the manifest records status=TIMEOUT —
-    NOT complete, so a resume retries it. With ``partitions_per_job`` > 1
-    the budget covers the whole batch job and expiry marks every partition
-    in the batch.
+    the job is cancelled, each of its partitions gets a TIMEOUT violation
+    row in the sink and a status=TIMEOUT manifest rec — NOT complete, so
+    a resume retries it.
 
     ``time_budget_secs``: wall budget for the whole call, checked between
     jobs (a running job is never interrupted by it). On expiry the
-    remaining partitions are recorded status=CANCELED (resumable) and the
-    run returns.
+    remaining partitions are recorded status=CANCELED (resumable).
 
-    ``partitions_per_job``: union N pending partitions into one Spark job.
-    Per-partition rows/violations still come from the same job via
-    conditional Observation aggregates, and the manifest keeps one rec per
-    partition; only driver job-scheduling overhead changes.
-
-    ``verify_lineage``: re-run (instead of skip) completed partitions whose
-    current data-file list differs from the manifest's recorded lineage —
-    rewritten/backfilled partitions are never silently trusted; pure
-    appends scan only their new files (module docstring). The check is a
-    directory listing per completed partition, O(partitions) driver work
-    and no Spark jobs.
+    ``partitions_per_job``: union N pending partitions (full or
+    append-delta alike) into one Spark job; per-partition rows/violations
+    ride it as conditional Observation aggregates, one manifest rec each.
     """
     pc = suite.partition_col or "part_date"
     manifest_dir = os.path.join(output_dir, "_manifest")
@@ -348,7 +322,7 @@ def run_checkpointed(
     done = completed_partitions(manifest_dir)
     stale = []
     delta_plan = {}  # pv -> (new data files, prior complete rec)
-    if verify_lineage and done and os.path.isdir(table_path):
+    if os.path.isdir(table_path):
         for pv, delta, rec in classify_stale(done, table_path, pc):
             stale.append(pv)
             done.pop(pv, None)
@@ -357,10 +331,10 @@ def run_checkpointed(
     # source seam: Iceberg catalog table (partitions/snapshots from
     # metadata tables) or directory-partitioned Parquet (fixtures)
     parts = table_partitions(spark, table_path, pc)
-    snapshot_id = snapshot_id or table_snapshot_id(spark, table_path)
+    snapshot_id = table_snapshot_id(spark, table_path)
     run_t0 = time.time()
 
-    ran, skipped, timed_out, canceled = [], [], [], []
+    ran, timed_out, canceled = [], [], []
     total_rows = total_viol = 0
 
     pending = [pv for pv in parts if pv not in done]
@@ -369,17 +343,8 @@ def run_checkpointed(
         pending = pending[:max_partitions]
 
     n = max(int(partitions_per_job), 1)
-    # append-delta partitions run as their own single-partition jobs:
-    # they read ONLY the new files and APPEND to the violations sink,
-    # so they can't share a batch with full-scan (overwrite) partitions
-    delta_pending = [pv for pv in pending if pv in delta_plan]
-    full_pending = [pv for pv in pending if pv not in delta_plan]
-    chunks = [[pv] for pv in delta_pending] + \
-        [full_pending[i:i + n] for i in range(0, len(full_pending), n)]
-    stop = False
+    chunks = [pending[i:i + n] for i in range(0, len(pending), n)]
     for ci, chunk in enumerate(chunks):
-        if stop:
-            break
         if (time_budget_secs is not None
                 and time.time() - run_t0 > time_budget_secs):
             # run budget exhausted: everything not yet started is
@@ -393,16 +358,19 @@ def run_checkpointed(
         t0 = time.time()
         live = []  # (pv, files, pdf)
         for pv in chunk:
-            files = (partition_files(table_path, pc, pv)
-                     if os.path.isdir(table_path) else [])
+            files = partition_files(table_path, pc, pv)
             if pv in delta_plan:
                 # append-delta: scan only the files added since the
                 # recorded lineage; manifest keeps the FULL current list
                 pdf = read_partition_files(
                     spark, delta_plan[pv][0], pc, pv)
-                live.append((pv, files, pdf))
-                continue
-            pdf = read_partition(spark, table_path, pc, pv)
+            else:
+                # A partition gets no new complete rec until the append
+                # below commits, so a crash in between re-runs it on
+                # resume — the same order mode("overwrite") has.
+                shutil.rmtree(os.path.join(viol_dir, f"{pc}={pv}"),
+                              ignore_errors=True)
+                pdf = read_partition(spark, table_path, pc, pv)
             if pdf is None:
                 # partition vanished between the listing and the read
                 # (compaction/expiry race) — record an empty completion so
@@ -425,14 +393,12 @@ def run_checkpointed(
         obs_in, obs_out = Observation(), Observation()
         # string-compare the partition key so the aggregates are
         # type-agnostic (date fixtures, string/int partition specs alike)
-        in_aggs = [F.count(F.when(
-            F.col(pc).cast("string") == F.lit(str(pv)), 1))
-            .alias(f"r{i}") for i, pv in enumerate(pvs)]
-        out_aggs = [F.count(F.when(
-            F.col(pc).cast("string") == F.lit(str(pv)), 1))
-            .alias(f"v{i}") for i, pv in enumerate(pvs)]
-        rv = suite.row_violations(batch.observe(obs_in, *in_aggs))
-        rv = rv.observe(obs_out, *out_aggs)
+        def per_part(prefix):
+            return [F.count(F.when(
+                F.col(pc).cast("string") == F.lit(str(pv)), 1))
+                .alias(f"{prefix}{i}") for i, pv in enumerate(pvs)]
+        rv = suite.row_violations(batch.observe(obs_in, *per_part("r")))
+        rv = rv.observe(obs_out, *per_part("v"))
         if suite.max_exemplars_per_rule > 0:
             # Observations above ride the PRE-cap stream: manifest
             # violation counts stay exact while the parquet sink is
@@ -446,27 +412,18 @@ def run_checkpointed(
         watch = _JobGroupTimeout(spark, group, partition_timeout_secs)
         try:
             with watch:
-                if len(live) == 1:
-                    mode = ("append" if pvs[0] in delta_plan
-                            else "overwrite")
-                    (rv.write.mode(mode)
-                       .parquet(os.path.join(viol_dir, f"{pc}={pvs[0]}")))
-                else:
-                    (rv.write.mode("overwrite")
-                       .option("partitionOverwriteMode", "dynamic")
-                       .partitionBy(pc).parquet(viol_dir))
+                _append_violations(rv, viol_dir, pc)
         except Exception:
             if not watch.fired:
                 raise
             # deadline exceeded: first-class TIMEOUT violation row per
             # partition + a resumable (non-complete) manifest rec
             wall_ms = int((time.time() - t0) * 1000)
-            for pv, files, pdf in live:
-                row = _control_violation_row(
-                    spark, rv.schema, Code.TIMEOUT,
-                    f"partition job exceeded {partition_timeout_secs}s")
-                (row.write.mode("overwrite")
-                    .parquet(os.path.join(viol_dir, f"{pc}={pv}")))
+            _append_violations(_control_rows(
+                spark, rv.schema, pc, pvs, Code.TIMEOUT,
+                f"partition job exceeded {partition_timeout_secs}s"),
+                viol_dir, pc)
+            for pv, files, _ in live:
                 append_manifest(manifest_dir, _manifest_rec(
                     pv, snapshot_id, files, 0, 1, wall_ms,
                     status=Code.TIMEOUT))
@@ -492,8 +449,6 @@ def run_checkpointed(
             ran.append(pv)
             total_rows += rows
             total_viol += nv
-            if fail_fast and nv:
-                stop = True
 
     # global phase: dataset-level checks over the whole table — only once
     # every partition is checkpointed (a truncated run resumes later).
@@ -503,8 +458,7 @@ def run_checkpointed(
     # all-skipped rerun costs O(partition listing), not O(table).
     if len(skipped) + len(ran) == len(parts):
         prior_global = read_manifest(manifest_dir).get(GLOBAL_KEY)
-        if (verify_lineage and not ran and not stale
-                and prior_global is not None
+        if (not ran and not stale and prior_global is not None
                 and prior_global.get("status",
                                      STATUS_COMPLETE) == STATUS_COMPLETE):
             return RunReport(ran, skipped, total_rows,
@@ -559,8 +513,7 @@ def compact_violations(spark: SparkSession, output_dir: str,
         tmp = d + "__compact"
         (spark.read.parquet(d).coalesce(files_per_partition)
          .write.mode("overwrite").parquet(tmp))
-        import shutil as _sh
-        _sh.rmtree(d)
+        shutil.rmtree(d)
         os.replace(tmp, d)
         compacted.append(name.split("=", 1)[1])
     return compacted

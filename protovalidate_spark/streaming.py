@@ -11,7 +11,9 @@ UDF included.
 
 Row-level validation needs no wrapper: ``rules.violations(stream_df)``
 and ``suite.row_violations(stream_df)`` run unchanged on a stream, and
-:func:`write_violations_stream` is their checkpointed sink.
+:func:`write_violations_stream` is their checkpointed sink;
+:func:`write_epoch` is the idempotent write of every ``foreachBatch``
+sink.
 
 Dataset-level checks need state and are therefore *windowed* on the
 stream (global exact uniqueness over an unbounded stream is unbounded
@@ -306,10 +308,21 @@ def streaming_transcript_conflict_violations(
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
+def write_epoch(batch_df: DataFrame, epoch: int, path: str) -> None:
+    """A ``foreachBatch`` sink's write: ``batch_df`` as Parquet under
+    ``path/__epoch=<epoch>``, overwriting only that partition.
+    ``foreachBatch`` is at-least-once (a retry after a committed write
+    but before the checkpoint records the epoch replays it), and the
+    epoch-keyed dynamic-partition overwrite makes the replay idempotent."""
+    (batch_df.withColumn("__epoch", F.lit(int(epoch)))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("__epoch").parquet(path))
+
+
 def write_violations_stream(
     violations: DataFrame, path: str, checkpoint: str,
     output_mode: str = "append", trigger_available_now: bool = True,
-    fmt: str = "parquet",
     max_exemplars_per_rule: int = 0,
     exemplar_order_cols: Sequence[str] = (),
 ):
@@ -325,21 +338,22 @@ def write_violations_stream(
     writes k rows per batch, not its raw rate. Per-micro-batch, not
     global: a cross-batch cap would need unbounded state; the batch
     runner's cap applies when the backlog is re-validated offline.
-    Implemented via ``foreachBatch`` (the cap is a batch transform), so
-    exactly-once comes from the idempotent parquet epoch commit."""
+    The cap is a batch transform, so this sink runs in ``foreachBatch``
+    and writes through :func:`write_epoch`: its files carry an
+    ``__epoch`` partition column, and a replayed epoch overwrites its
+    own rows instead of duplicating them."""
     if max_exemplars_per_rule > 0:
         from .errors import cap_exemplars
 
         def _sink(batch_df: DataFrame, epoch: int) -> None:
-            (cap_exemplars(batch_df, list(exemplar_order_cols),
-                           max_exemplars_per_rule)
-             .write.mode("append").format(fmt).save(path))
+            write_epoch(cap_exemplars(batch_df, list(exemplar_order_cols),
+                                      max_exemplars_per_rule), epoch, path)
 
         w = (violations.writeStream.foreachBatch(_sink)
              .option("checkpointLocation", checkpoint)
              .outputMode(output_mode))
     else:
-        w = (violations.writeStream.format(fmt)
+        w = (violations.writeStream.format("parquet")
              .option("path", path)
              .option("checkpointLocation", checkpoint)
              .outputMode(output_mode))
@@ -618,11 +632,8 @@ def stream_window_checks(
     actual)`` go to ``out_path`` as Parquet. Effectively-once per
     window: append mode emits a window's counts in the single
     micro-batch whose watermark closes it, and the ``foreachBatch`` sink
-    OVERWRITES that epoch's ``__epoch=<id>`` partition — foreachBatch is
-    at-least-once (a retry after a committed write but before the
-    checkpoint records the epoch would duplicate rows), and the
-    epoch-keyed dynamic-partition overwrite makes the retry
-    idempotent."""
+    writes through :func:`write_epoch`, so a replayed epoch overwrites
+    its own ``__epoch=<id>`` partition."""
     dtypes = dict(stream_df.dtypes)
     entries = [
         F.struct(F.lit(i).alias("check"), F.lit(name).alias("name"),
@@ -648,11 +659,8 @@ def stream_window_checks(
                 for i, cnts in sorted(per_check.items())
                 for row in checks[i].rows(ws, we, cnts)]
         if rows:
-            (batch_df.sparkSession.createDataFrame(rows, _WINDOW_SCHEMA)
-             .withColumn("__epoch", F.lit(int(epoch)))
-             .coalesce(1).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("__epoch").parquet(out_path))
+            write_epoch(batch_df.sparkSession.createDataFrame(
+                rows, _WINDOW_SCHEMA).coalesce(1), epoch, out_path)
 
     w = (counts.writeStream.foreachBatch(_sink)
          .outputMode("append")

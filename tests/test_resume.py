@@ -109,9 +109,6 @@ def test_resume_reruns_rewritten_partition(spark, tmp_path_factory):
     assert n_global() == g_before
     g_rec = read_manifest(os.path.join(out, "_manifest"))["__global__"]
     assert r3.total_violations == g_rec["violations"] > 0
-    # blind mode would have skipped the rewrite too
-    r4 = run_checkpointed(spark, suite, table, out, verify_lineage=False)
-    assert not r4.partitions_stale and not r4.partitions_run
 
 
 def test_resume_appends_only_delta_files(spark, tmp_path_factory):

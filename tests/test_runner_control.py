@@ -6,14 +6,16 @@ fewer jobs). Mirrors the reference's context handling
 
 import dataclasses
 import os
+import shutil
 import time
 
 import pytest
 from pyspark.sql.functions import pandas_udf
 
+from protovalidate_spark import Object, runner
 from protovalidate_spark.clips import clips_suite
 from protovalidate_spark.errors import Code
-from protovalidate_spark.fixtures import TINY, expected_violations
+from protovalidate_spark.fixtures import TINY, expected_violations, write_clips
 from protovalidate_spark.runner import (
     completed_partitions, read_manifest, run_checkpointed,
     verdicts_from_outputs,
@@ -133,10 +135,56 @@ def test_partition_batching_matches_per_partition(spark, tiny_table,
                 for r in df.collect()}
 
     assert key_set(out1) == key_set(out4)
+
+    def sink_dirs(path):
+        return {d for d in os.listdir(os.path.join(path, "violations"))
+                if d.startswith("part_date=")}
+
+    assert sink_dirs(out1) == sink_dirs(out4)
     gv = spark.read.parquet(os.path.join(out4, "global_violations"))
     got = key_set(out4) | {(r["row_idx"], r["field_path"], r["rule_id"])
                            for r in gv.collect()}
     assert got == expected_violations(TINY)
+
+
+def test_batched_rerun_clears_sink_of_passing_partitions(
+        spark, tmp_path_factory, monkeypatch):
+    """A ``partitions_per_job`` batch that re-validates rewritten
+    partitions which now pass leaves no old violation rows in their
+    sinks, and a partition whose table directory vanished after the
+    listing loses its sink rows too."""
+    table = str(tmp_path_factory.mktemp("clips_table_batch"))
+    out = str(tmp_path_factory.mktemp("run_out_batch"))
+    write_clips(spark, table, TINY)
+    run_checkpointed(spark, clips_suite(spark), table, out,
+                     partitions_per_job=4)
+    vdir = os.path.join(out, "violations")
+    with_rows = sorted(d.split("=", 1)[1] for d in os.listdir(vdir)
+                       if d.startswith("part_date="))
+    victims, ghost = with_rows[:2], "2030-01-01"
+    for pv in victims:
+        # a renamed data file fails the lineage check (not an append)
+        d = os.path.join(table, f"part_date={pv}")
+        f = sorted(x for x in os.listdir(d) if x.endswith(".parquet"))[0]
+        os.rename(os.path.join(d, f), os.path.join(d, "renamed-" + f))
+    # a partition listed but gone by the time its job reads it
+    shutil.copytree(os.path.join(vdir, f"part_date={with_rows[2]}"),
+                    os.path.join(vdir, f"part_date={ghost}"))
+    listed = runner.table_partitions(spark, table, "part_date")
+    monkeypatch.setattr(runner, "table_partitions",
+                        lambda *a: listed + [ghost])
+
+    passing = ValidationSuite(rules=Object().with_unknown(),
+                              row_keys=("row_idx", "clip_id"),
+                              partition_col="part_date")
+    r2 = run_checkpointed(spark, passing, table, out, partitions_per_job=4)
+    assert sorted(r2.partitions_stale) == victims
+    assert sorted(r2.partitions_run) == victims + [ghost]
+    m = read_manifest(os.path.join(out, "_manifest"))
+    for pv in victims + [ghost]:
+        assert m[pv]["violations"] == 0, pv
+        d = os.path.join(vdir, f"part_date={pv}")
+        assert not os.path.isdir(d) or spark.read.parquet(d).count() == 0, pv
 
 
 def test_runner_caps_sink_but_keeps_manifest_counts_exact(

@@ -598,6 +598,46 @@ def test_stream_sink_caps_exemplars_per_rule(spark, tmp_path):
     assert got == [0, 1, 2]  # the 3 smallest of 20 MIN violations
 
 
+def test_write_epoch_replay_writes_rows_once(spark, tmp_path):
+    """foreachBatch is at-least-once: a replayed epoch written again
+    through write_epoch overwrites its own __epoch partition, so each
+    row reads back once and other epochs are left alone."""
+    from protovalidate_spark.streaming import write_epoch
+
+    out = str(tmp_path / "epochs")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    write_epoch(df, 0, out)
+    write_epoch(df.filter("k = 1"), 1, out)
+    write_epoch(df, 0, out)  # the replay of epoch 0
+    got = sorted((r["k"], r["v"], r["__epoch"])
+                 for r in spark.read.parquet(out).collect())
+    assert got == [(1, "a", 0), (1, "a", 1), (2, "b", 0)]
+
+
+def test_stream_job_summary_is_last_line(spark, tmp_path):
+    """``jobs/stream_clips.py`` with stderr merged into stdout ends on
+    its JSON summary line, after its violations-by-rule table."""
+    import json
+    import subprocess
+    import sys
+
+    from protovalidate_spark.fixtures import Profile, write_clips
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    table, out = str(tmp_path / "table"), str(tmp_path / "out")
+    write_clips(spark, table, Profile(n_rows=2, dur_range_ms=400))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs", "stream_clips.py"),
+         "--table", table, "--out", out],
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
+        env=env, timeout=600)
+    assert proc.returncode == 0, proc.stdout[-2000:]
+    last = [ln for ln in proc.stdout.splitlines() if ln.strip()][-1]
+    assert json.loads(last)["mode"] == "streaming-availableNow"
+
+
 def test_stream_entropy_violations(spark, tmp_path):
     """Windowed entropy monitor vs pinned bounds from a healthy batch
     baseline: the collapsed window (one category) flags MIN, the
