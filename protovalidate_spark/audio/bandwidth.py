@@ -92,7 +92,7 @@ def _bandwidth_frame(dec: pd.DataFrame, rolloff: float,
     return pd.DataFrame({"rolloff_hz": roll, "bandwidth_ratio": ratio})
 
 
-def bandwidth_rule(bytes_col: str = "bytes", bw_col: str = "_decoded",
+def bandwidth_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                    min_ratio: float = 0.5,
                    min_rms: float = MIN_JUDGED_RMS) -> ObjectRule:
     """Effective bandwidth must reach ``min_ratio`` of Nyquist
@@ -101,10 +101,10 @@ def bandwidth_rule(bytes_col: str = "bytes", bw_col: str = "_decoded",
     declared sr_hz over-promises. Undecodable rows are DECODE's
     finding; rows under ``min_rms`` are the silence/quiet gates'."""
     def pred(get):
-        judged = (F.coalesce(get(bw_col)["ok"], F.lit(False))
-                  & (get(bw_col)["rms"] >= min_rms)
-                  & ~F.isnan(get(bw_col)["bandwidth_ratio"]))
-        return (~judged) | (get(bw_col)["bandwidth_ratio"] >= min_ratio)
+        judged = (F.coalesce(get(decoded_col)["ok"], F.lit(False))
+                  & (get(decoded_col)["rms"] >= min_rms)
+                  & ~F.isnan(get(decoded_col)["bandwidth_ratio"]))
+        return (~judged) | (get(decoded_col)["bandwidth_ratio"] >= min_ratio)
 
     return ObjectRule(
         rule_id=Code.CONSISTENT,
@@ -113,5 +113,5 @@ def bandwidth_rule(bytes_col: str = "bytes", bw_col: str = "_decoded",
                 "(upsampled or band-limited content)",
         field_path=f"/{bytes_col}/bandwidth_ratio",
         actual=lambda get: F.round(
-            get(bw_col)["bandwidth_ratio"], 4).cast("string"),
+            get(decoded_col)["bandwidth_ratio"], 4).cast("string"),
     )

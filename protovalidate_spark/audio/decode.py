@@ -45,9 +45,12 @@ from pyspark.sql.functions import pandas_udf
 
 from ..errors import Code
 from ..rules.object import ObjectRule
-from .bandwidth import BANDWIDTH_FIELDS, _bandwidth_frame
-from .features import FEATURE_FIELDS, _features_series
-from .segments import VAD_FIELDS, _segments_series
+from .bandwidth import BANDWIDTH_FIELDS, _bandwidth_frame, bandwidth_rule
+from .features import (FEATURE_FIELDS, _features_series, clipping_rule,
+                       dc_offset_rule, quiet_rule, silence_rule,
+                       speech_rate_rule)
+from .segments import (VAD_FIELDS, _segments_series, max_gap_rule,
+                       min_snr_rule, speech_presence_rule)
 from .wav import (_DATA, _FMT, _FMT_BITS, _RIFF, _WAVE, _samples_to_float,
                   decode_bytes)
 
@@ -358,3 +361,20 @@ def dur_consistency_rule(dur_col: str = "dur_ms", decoded_col: str = "_decoded",
         actual=lambda get: F.concat(get(dur_col).cast("string"), F.lit("!="),
                                     get(decoded_col)["dur_ms"].cast("string")),
     )
+
+
+#: a suite's audio gates: name -> (rule factory, the ``with_decoded``
+#: field groups it reads; None: no decode, so its spec has no ``col``)
+GATES = {
+    "sr_consistency": (sr_consistency_rule, ()),
+    "dur_consistency": (dur_consistency_rule, ()),
+    "clipping": (clipping_rule, ("features",)),
+    "silence": (silence_rule, ("features",)),
+    "quiet": (quiet_rule, ("features",)),
+    "dc_offset": (dc_offset_rule, ("features",)),
+    "speech_rate": (speech_rate_rule, None),
+    "speech_presence": (speech_presence_rule, ("vad",)),
+    "max_gap": (max_gap_rule, ("vad",)),
+    "min_snr": (min_snr_rule, ("vad",)),
+    "bandwidth": (bandwidth_rule, ("bandwidth",)),
+}

@@ -84,7 +84,7 @@ def _features_series(dec: pd.DataFrame, frame_ms: int, silence_rms: float,
                          "rms_dbfs": dbfs, "dc_offset": dc})
 
 
-def clipping_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
+def clipping_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                   max_ratio: float = 0.01) -> ObjectRule:
     """Clipped-sample ratio must stay under max_ratio (MAX). Only
     decodable clips are judged — DECODE reports the rest.
@@ -98,28 +98,28 @@ def clipping_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
     ``clip_level=0.99`` to count both rails."""
     return ObjectRule(
         rule_id=Code.MAX,
-        predicate=lambda get: (~F.coalesce(get(feat_col)["ok"], F.lit(False)))
-        | (get(feat_col)["clip_ratio"] <= max_ratio),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | (get(decoded_col)["clip_ratio"] <= max_ratio),
         message=f"clipped-sample ratio exceeds {max_ratio}",
         field_path=f"/{bytes_col}/clip_ratio",
-        actual=lambda get: F.round(get(feat_col)["clip_ratio"], 6).cast("string"),
+        actual=lambda get: F.round(get(decoded_col)["clip_ratio"], 6).cast("string"),
     )
 
 
-def silence_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
+def silence_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                  max_ratio: float = 0.9) -> ObjectRule:
     """Mostly-silent clips (silent-frame ratio above max_ratio) fail MAX."""
     return ObjectRule(
         rule_id=Code.MAX,
-        predicate=lambda get: (~F.coalesce(get(feat_col)["ok"], F.lit(False)))
-        | (get(feat_col)["silence_ratio"] <= max_ratio),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | (get(decoded_col)["silence_ratio"] <= max_ratio),
         message=f"silent-frame ratio exceeds {max_ratio}",
         field_path=f"/{bytes_col}/silence_ratio",
-        actual=lambda get: F.round(get(feat_col)["silence_ratio"], 6).cast("string"),
+        actual=lambda get: F.round(get(decoded_col)["silence_ratio"], 6).cast("string"),
     )
 
 
-def quiet_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
+def quiet_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                min_dbfs: float = -45.0) -> ObjectRule:
     """Integrated RMS level must reach min_dbfs (MIN) — a near-inaudible
     recording is a capture failure even when it isn't digitally silent,
@@ -129,15 +129,15 @@ def quiet_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
     per-frame silence). Loud clips are clipping_rule's finding."""
     return ObjectRule(
         rule_id=Code.MIN,
-        predicate=lambda get: (~F.coalesce(get(feat_col)["ok"], F.lit(False)))
-        | (get(feat_col)["rms_dbfs"] >= min_dbfs),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | (get(decoded_col)["rms_dbfs"] >= min_dbfs),
         message=f"integrated level below {min_dbfs} dBFS",
         field_path=f"/{bytes_col}/rms_dbfs",
-        actual=lambda get: F.round(get(feat_col)["rms_dbfs"], 2).cast("string"),
+        actual=lambda get: F.round(get(decoded_col)["rms_dbfs"], 2).cast("string"),
     )
 
 
-def dc_offset_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
+def dc_offset_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                    max_abs: float = 0.02) -> ObjectRule:
     """Mean sample value must stay within ±max_abs of zero (MAX) — a DC
     bias flags a broken capture chain (mic preamp / ADC coupling) and
@@ -145,11 +145,11 @@ def dc_offset_rule(bytes_col: str = "bytes", feat_col: str = "_decoded",
     computed from raw sample moments."""
     return ObjectRule(
         rule_id=Code.MAX,
-        predicate=lambda get: (~F.coalesce(get(feat_col)["ok"], F.lit(False)))
-        | (F.abs(get(feat_col)["dc_offset"]) <= max_abs),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | (F.abs(get(decoded_col)["dc_offset"]) <= max_abs),
         message=f"DC offset magnitude exceeds {max_abs}",
         field_path=f"/{bytes_col}/dc_offset",
-        actual=lambda get: F.round(get(feat_col)["dc_offset"], 6).cast("string"),
+        actual=lambda get: F.round(get(decoded_col)["dc_offset"], 6).cast("string"),
     )
 
 

@@ -154,22 +154,22 @@ def _segments_series(dec: pd.DataFrame, frame_ms: int,
         "snr_db": pd.array(snr, dtype="float64")})
 
 
-def speech_presence_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
+def speech_presence_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                          min_ratio: float = 0.1) -> ObjectRule:
     """Speech-activity ratio must reach min_ratio (MIN). Only decodable
     clips are judged — DECODE reports the rest."""
     return ObjectRule(
         rule_id=Code.MIN,
-        predicate=lambda get: (~F.coalesce(get(vad_col)["ok"], F.lit(False)))
-        | (get(vad_col)["speech_ratio"] >= min_ratio),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | (get(decoded_col)["speech_ratio"] >= min_ratio),
         message=f"speech-activity ratio below {min_ratio}",
         field_path=f"/{bytes_col}/speech_ratio",
-        actual=lambda get: F.round(get(vad_col)["speech_ratio"], 6)
+        actual=lambda get: F.round(get(decoded_col)["speech_ratio"], 6)
         .cast("string"),
     )
 
 
-def min_snr_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
+def min_snr_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                  min_db: float = 10.0) -> ObjectRule:
     """VAD-estimated SNR must reach min_db (MIN) — a recording whose
     speech barely clears its own noise floor is a capture-quality
@@ -179,24 +179,24 @@ def min_snr_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
     speech_presence/silence gates' findings, not this one's)."""
     return ObjectRule(
         rule_id=Code.MIN,
-        predicate=lambda get: (~F.coalesce(get(vad_col)["ok"], F.lit(False)))
-        | get(vad_col)["snr_db"].isNull()
-        | (get(vad_col)["snr_db"] >= min_db),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | get(decoded_col)["snr_db"].isNull()
+        | (get(decoded_col)["snr_db"] >= min_db),
         message=f"VAD-estimated SNR below {min_db} dB",
         field_path=f"/{bytes_col}/snr_db",
-        actual=lambda get: F.round(get(vad_col)["snr_db"], 2).cast("string"),
+        actual=lambda get: F.round(get(decoded_col)["snr_db"], 2).cast("string"),
     )
 
 
-def max_gap_rule(bytes_col: str = "bytes", vad_col: str = "_decoded",
+def max_gap_rule(bytes_col: str = "bytes", decoded_col: str = "_decoded",
                  max_gap_ms: int = 5000) -> ObjectRule:
     """No silent hole (incl. lead-in/tail-out) may exceed max_gap_ms
     (MAX) — a transcriptless dead-air stretch is a pairing smell."""
     return ObjectRule(
         rule_id=Code.MAX,
-        predicate=lambda get: (~F.coalesce(get(vad_col)["ok"], F.lit(False)))
-        | (get(vad_col)["longest_gap_ms"] <= max_gap_ms),
+        predicate=lambda get: (~F.coalesce(get(decoded_col)["ok"], F.lit(False)))
+        | (get(decoded_col)["longest_gap_ms"] <= max_gap_ms),
         message=f"longest silent gap exceeds {max_gap_ms} ms",
         field_path=f"/{bytes_col}/longest_gap_ms",
-        actual=lambda get: get(vad_col)["longest_gap_ms"].cast("string"),
+        actual=lambda get: get(decoded_col)["longest_gap_ms"].cast("string"),
     )

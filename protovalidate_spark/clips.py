@@ -9,7 +9,6 @@ from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .audio.decode import dur_consistency_rule, sr_consistency_rule
 from .fixtures import codecs_dim
 from .rules import Binary, Int32, Object, String
 from .suite import ValidationSuite
@@ -42,55 +41,22 @@ def clips_suite(spark: SparkSession,
                 vad_checks: bool = False,
                 bandwidth_checks: bool = False,
                 label_conflicts: bool = False) -> ValidationSuite:
-    """``audio_checks=True`` adds the PCM quality gates (clipping ratio,
-    silence ratio) and the transcript speech-rate consistency rule; the
-    feature fields ride the SAME decode stage (its ``features`` group),
-    so the scan and Python round-trip budget is unchanged.
-    ``level_checks=True`` adds the capture-chain gates (integrated RMS
-    level, DC offset) on the same feature fields. ``vad_checks=True``
-    adds the energy-VAD gates (speech presence, max silent gap,
-    VAD-estimated min SNR) — the ``vad`` group; with every flag on it is
-    STILL one Arrow stage and one decode (``audio/decode.py::
-    with_decoded``). ``bandwidth_checks=True`` adds the
-    effective-bandwidth / upsample-detection gate (audio/bandwidth.py:
-    spectral rolloff vs the container's Nyquist) — the ``bandwidth``
-    group of the same stage. With no audio flag the stage ships headers,
-    not payloads. NOTE: the deterministic test fixture synthesizes pure
-    tones, which ARE narrowband — on the fixture this gate flags most
-    decodable clips by design; it is meant for real recorded speech.
-    ``label_conflicts=True`` adds the byte-exact transcript-conflict
-    dataset check (audio/consistency.py): byte-identical clips whose
-    transcripts disagree emit CONSISTENT violation rows."""
-    extra = [
-        sr_consistency_rule("sr_hz", "__dec_bytes"),
-        dur_consistency_rule("dur_ms", "__dec_bytes", tolerance_ms=10),
-    ]
-    features = ()
-    vad = ()
+    """The flagship suite. Its ``audio_gates`` (audio/decode.py
+    ``GATES``) always hold ``sr_consistency`` and ``dur_consistency``;
+    ``audio_checks`` adds clipping, silence and speech_rate,
+    ``level_checks`` quiet and dc_offset, ``vad_checks``
+    speech_presence, max_gap and min_snr, and ``bandwidth_checks``
+    bandwidth. ``label_conflicts=True`` adds the byte-exact
+    transcript-conflict dataset check (audio/consistency.py)."""
+    gates = ["sr_consistency", "dur_consistency"]
     if audio_checks:
-        from .audio.features import (clipping_rule, silence_rule,
-                                     speech_rate_rule)
-        features = ("bytes",)
-        extra += [clipping_rule("bytes", "__dec_bytes"),
-                  silence_rule("bytes", "__dec_bytes"),
-                  speech_rate_rule("transcript", "dur_ms")]
+        gates += ["clipping", "silence", "speech_rate"]
     if level_checks:
-        from .audio.features import dc_offset_rule, quiet_rule
-        features = ("bytes",)
-        extra += [quiet_rule("bytes", "__dec_bytes"),
-                  dc_offset_rule("bytes", "__dec_bytes")]
+        gates += ["quiet", "dc_offset"]
     if vad_checks:
-        from .audio.segments import (max_gap_rule, min_snr_rule,
-                                     speech_presence_rule)
-        vad = ("bytes",)
-        extra += [speech_presence_rule("bytes", "__dec_bytes"),
-                  max_gap_rule("bytes", "__dec_bytes"),
-                  min_snr_rule("bytes", "__dec_bytes")]
-    bw = ()
+        gates += ["speech_presence", "max_gap", "min_snr"]
     if bandwidth_checks:
-        from .audio.bandwidth import bandwidth_rule
-        bw = ("bytes",)
-        extra += [bandwidth_rule("bytes", "__dec_bytes")]
+        gates += ["bandwidth"]
     return ValidationSuite(
         rules=clips_rules(),
         row_keys=("row_idx", "clip_id"),
@@ -99,11 +65,9 @@ def clips_suite(spark: SparkSession,
         refs=[("codec", dim if dim is not None else codecs_dim(spark), "codec")],
         drift_baseline=drift_baseline,
         stats_cols=("clip_id", "sr_hz", "dur_ms", "codec", "transcript"),
-        extra_object_rules=tuple(extra),
         salt_buckets=salt_buckets,
-        audio_features=features,
-        audio_vad=vad,
-        audio_bandwidth=bw,
+        audio_gates=tuple({"gate": g} if g == "speech_rate"
+                          else {"gate": g, "col": "bytes"} for g in gates),
         label_conflicts=(({"id_col": "clip_id", "bytes_col": "bytes",
                            "transcript_col": "transcript",
                            "key": "exact"},)

@@ -46,6 +46,9 @@ RECOMMENDED = {
     # error-context decoration; on build-heavy plans (rule-set compile,
     # lang-ID CASE chains) this was ~60% of plan-construction wall time
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # the console progress bar writes "\r"-joined stage lines onto the
+    # line a job's JSON summary is printed on
+    "spark.ui.showConsoleProgress": "false",
 }
 
 

@@ -4,9 +4,9 @@ Combines:
 - row-level object rule set (ONE projection, whole-stage codegen; audio
   decode wired in as ONE Arrow batch stage, decoded struct computed once
   and reused — SURVEY.md §4). Each decodable bytes column gets one
-  ``audio/decode.py::with_decoded`` stage whose ``fields`` follow from
-  ``audio_features`` / ``audio_vad`` / ``audio_bandwidth``. With none of
-  them (``fields=()``) it ships Python each row's 44-byte WAV header and
+  ``audio/decode.py::with_decoded`` stage whose ``fields`` are the
+  groups that column's ``audio_gates`` read (``GATES``). With none
+  (``fields=()``) it ships Python each row's 44-byte WAV header and
   payload length, plus the payload only for rows a Catalyst guard
   cannot prove canonical; its struct is ``ok, sr, n_samples, dur_ms``
   with no ``rms``, so a rule reading ``rms`` from it fails at analysis.
@@ -42,13 +42,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .audio.decode import decode_ok_rule, with_decoded
+from .audio.decode import (FIELD_GROUPS, GATES, decode_ok_rule,
+                           with_decoded)
 from .dataset.fused import collect, local_frame
 from .dataset.referential import ref_violations
 from .dataset.stats import ColumnStats
 from .dataset.uniqueness import unique_violations
 from .rules.binary import BinaryRuleSet
 from .rules.object import ObjectRuleSet
+
+
+def _gate_rule(spec: dict, decodable):
+    """The rule of one ``audio_gates`` spec. Specs come from artifacts,
+    so an unknown gate or a col with no decode raises ValueError."""
+    kw = dict(spec)
+    name = kw.pop("gate")
+    if name not in GATES:
+        raise ValueError(f"unknown audio gate {name!r}; known gates: "
+                         f"{sorted(GATES)}")
+    factory, groups = GATES[name]
+    if groups is not None:
+        col = kw.pop("col", None)
+        if col not in decodable:
+            raise ValueError(f"audio gate {name!r} reads col {col!r}, "
+                             f"not a Binary().decodable() key")
+        kw["decoded_col"] = f"__dec_{col}"
+    return factory(**kw)
 
 
 @dataclass
@@ -77,21 +96,10 @@ class ValidationSuite:
     stats_cols: Sequence[str] = ()
     extra_object_rules: tuple = field(default_factory=tuple)
     salt_buckets: int = 0
-    # bytes columns whose decode stage should ALSO emit the PCM feature
-    # fields (peak/clip/silence/zcr/rms_dbfs/dc_offset) — the stage's
-    # "features" group, same struct column name, so decode-consumer
-    # rules are unaffected
-    audio_features: Sequence[str] = ()
-    # bytes columns whose decode stage should ALSO emit the energy-VAD
-    # fields (segments/speech_ratio/longest_gap_ms/snr_db) — the "vad"
-    # group; implies the feature fields too: EVERY audio gate on is
-    # still ONE Arrow stage and ONE decode
-    audio_vad: Sequence[str] = ()
-    # bytes columns whose decode stage should ALSO emit the
-    # effective-bandwidth fields (rolloff_hz/bandwidth_ratio — upsample
-    # detection, audio/bandwidth.py) — the "bandwidth" group; implies
-    # features + VAD: still ONE Arrow stage and ONE decode
-    audio_bandwidth: Sequence[str] = ()
+    # audio gate specs (audio/decode.py GATES): factory kwargs plus the
+    # decodable bytes column "col" whose ONE decode stage they read,
+    # e.g. {"gate": "clipping", "col": "bytes", "max_ratio": 0.01}
+    audio_gates: Sequence[dict] = ()
     # transcript-label conflict specs (audio/consistency.py): each dict
     # is kwargs for transcript_conflict_violations minus row_key_cols,
     # e.g. {"id_col": "clip_id", "bytes_col": "bytes",
@@ -157,23 +165,23 @@ class ValidationSuite:
         return cols
 
     def _audio_fields(self, col: str) -> tuple:
-        """The decode stage's field groups for bytes column ``col``:
-        bandwidth implies VAD, VAD implies features."""
-        bw = col in self.audio_bandwidth
-        vad = bw or col in self.audio_vad
-        feat = vad or col in self.audio_features
-        return tuple(g for g, on in (("features", feat), ("vad", vad),
-                                     ("bandwidth", bw)) if on)
+        """The decode stage's field groups for bytes column ``col``: the
+        union of the groups its gates read."""
+        read = {g for s in self.audio_gates if s.get("col") == col
+                for g in GATES[s["gate"]][1]}
+        return tuple(g for g in FIELD_GROUPS if g in read)
 
     def row_violations(self, df: DataFrame) -> DataFrame:
         """Row-level pass: decode stage (if any) + one validation projection."""
         rules = self.rules
         work = df
-        for c in self._decodable_cols():
+        decodable = self._decodable_cols()
+        gates = [_gate_rule(s, decodable) for s in self.audio_gates]
+        for c in decodable:
             work = with_decoded(work, bytes_col=c, out_col=f"__dec_{c}",
                                 fields=self._audio_fields(c))
             rules = rules.with_rule(decode_ok_rule(c, f"__dec_{c}"))
-        for r in self.extra_object_rules:
+        for r in (*gates, *self.extra_object_rules):
             rules = rules.with_rule(r)
         if not rules.allow_unknown:
             rules = rules.with_unknown()  # engine-internal helper cols

@@ -23,11 +23,11 @@ Non-JSON members need an explicit side channel, never guessing:
   inside the rule set) raise ``SerdeError`` — an artifact must never
   silently drop a constraint (same contract as rules/serde.py).
 
-Every other field is plain data (thresholds, column lists, spec dicts
-incl. the drift and embedding baselines) and serializes through one
-walk over ``dataclasses.fields(ValidationSuite)`` with the same
-``_enc``/``_dec`` value codec, so a new suite field reaches the
-artifact without a second list to keep.
+Every other field is plain data (thresholds, column lists, spec dicts:
+drift and embedding baselines, ``audio_gates``, so ``clips_suite``
+saves whole) and serializes through one walk over
+``dataclasses.fields(ValidationSuite)`` with the same ``_enc``/``_dec``
+value codec, so a new suite field reaches the artifact unlisted.
 """
 
 from __future__ import annotations

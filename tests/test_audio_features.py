@@ -270,10 +270,14 @@ def test_decoded_fields_are_independent(stage_rows, fields):
     assert (sent <= header_bound) == (fields == ()), (fields, sent)
 
 
-def test_vad_suite_struct_carries_features(spark):
-    """audio_vad alone still brings the feature fields (VAD implies
-    features): a rule reading a feature and a VAD field analyses."""
+def test_vad_gates_decode_only_vad_fields(spark):
+    """A suite whose only payload gates are VAD gates decodes the
+    ``vad`` group alone: a rule reading ``speech_ratio`` analyses, a
+    rule reading the feature field ``peak`` fails at analysis."""
+    import dataclasses
     import datetime
+
+    from pyspark.errors import AnalysisException
 
     from protovalidate_spark.clips import clips_rules
     from protovalidate_spark.rules.object import ObjectRule
@@ -285,13 +289,17 @@ def test_vad_suite_struct_carries_features(spark):
         "dur_ms int, codec string, transcript string, part_date date")
     suite = ValidationSuite(
         rules=clips_rules(), row_keys=("row_idx", "clip_id"),
-        audio_vad=("bytes",),
-        extra_object_rules=(ObjectRule(
-            rule_id="MAX", message="peak", field_path="/bytes/peak",
-            predicate=lambda get: get("__dec_bytes")["peak"]
-            <= get("__dec_bytes")["speech_ratio"] + 1),))
-    assert suite._audio_fields("bytes") == ("features", "vad")
-    suite.row_violations(plain).schema   # analysis only, no action
+        audio_gates=tuple({"gate": g, "col": "bytes"} for g in
+                          ("speech_presence", "max_gap", "min_snr")))
+    assert suite._audio_fields("bytes") == ("vad",)
+
+    def reading(field):
+        return dataclasses.replace(suite, extra_object_rules=(ObjectRule(
+            rule_id="MIN", message=field, field_path=f"/bytes/{field}",
+            predicate=lambda get: get("__dec_bytes")[field] >= 0),))
+    reading("speech_ratio").row_violations(plain).schema  # analysis only
+    with pytest.raises(AnalysisException):
+        reading("peak").row_violations(plain).schema
 
 
 def test_clips_suite_all_audio_flags_one_stage(spark, tiny_clips):

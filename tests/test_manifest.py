@@ -118,7 +118,8 @@ def test_resume_job_summary_is_last_line(spark, tmp_path):
         env=env, timeout=600)
     assert proc.returncode == 0, proc.stdout[-2000:]
     assert "cut torn trailing record" in proc.stdout
-    last = [ln for ln in proc.stdout.splitlines() if ln.strip()][-1]
+    assert "\r" not in proc.stdout   # no console progress bar
+    last = [ln for ln in proc.stdout.split("\n") if ln.strip()][-1]
     summary = json.loads(last)
     assert summary["manifest_torn_tail"] == '{"part": "2024-01-'
     assert summary["mode"] == "checkpointed" and summary["rows"] == 2

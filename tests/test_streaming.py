@@ -634,7 +634,8 @@ def test_stream_job_summary_is_last_line(spark, tmp_path):
         stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
         env=env, timeout=600)
     assert proc.returncode == 0, proc.stdout[-2000:]
-    last = [ln for ln in proc.stdout.splitlines() if ln.strip()][-1]
+    assert "\r" not in proc.stdout   # no console progress bar
+    last = [ln for ln in proc.stdout.split("\n") if ln.strip()][-1]
     assert json.loads(last)["mode"] == "streaming-availableNow"
 
 

@@ -116,6 +116,45 @@ def test_extra_object_rules_refuse(spark):
         suite_to_dict(suite)
 
 
+def _rows(suite, df):
+    return sorted(((r["row_idx"], r["field_path"], r["rule_id"],
+                    r["message"], r["actual"])
+                   for r in suite.run(df, persist=False).violations.collect()),
+                  key=str)
+
+
+def test_clips_suite_with_every_audio_gate_roundtrips(spark, tiny_clips,
+                                                      tmp_path):
+    """The flagship suite with every audio flag saves as one artifact
+    (its decode-consistency and audio gates are plain specs) and the
+    reloaded suite reproduces its violation rows exactly."""
+    from protovalidate_spark.clips import clips_suite
+    from protovalidate_spark.fixtures import codecs_dim
+    dim = str(tmp_path / "codecs.parquet")
+    codecs_dim(spark).write.parquet(dim)
+    suite = clips_suite(spark, dim=spark.read.parquet(dim),
+                        audio_checks=True, level_checks=True,
+                        vad_checks=True, bandwidth_checks=True)
+    p = str(tmp_path / "clips.json")
+    save_suite(suite, p, ref_paths=[dim])
+    want = _rows(suite, tiny_clips)
+    assert len(want) > 27   # the baseline rows plus audio-gate rows
+    assert _rows(load_suite(p, spark), tiny_clips) == want
+
+
+@pytest.mark.parametrize("spec, named", [
+    ({"gate": "loudness", "col": "bytes"}, r"'loudness'.*'clipping'"),
+    ({"gate": "clipping", "col": "transcript"}, r"'clipping'.*'transcript'"),
+], ids=["unknown-gate", "col-not-decodable"])
+def test_bad_gate_spec_in_artifact_raises(spark, tiny_clips, spec, named):
+    from protovalidate_spark.clips import clips_rules
+    doc = suite_to_dict(ValidationSuite(rules=clips_rules(),
+                                        audio_gates=(spec,)))
+    suite = suite_from_dict(json.loads(json.dumps(doc)), spark)
+    with pytest.raises(ValueError, match=named):
+        suite.row_violations(tiny_clips)
+
+
 def _drift_rows(suite, table):
     return [r for r in suite.run(table, persist=False).violations.collect()
             if r["rule_id"] == "DRIFT"]
@@ -170,8 +209,9 @@ def test_every_plain_field_survives_roundtrip(spark):
                                    "counts": [3, 4]}},
         "psi_threshold": 0.0, "ks_threshold": 0.0,
         "drift_group_col": "flag", "stats_cols": ["amt"],
-        "salt_buckets": 4, "audio_features": ["bytes"],
-        "audio_vad": ["bytes"], "audio_bandwidth": ["bytes"],
+        "salt_buckets": 4,
+        "audio_gates": [{"gate": "clipping", "col": "bytes",
+                         "max_ratio": 0.01}],
         "label_conflicts": [{"id_col": "id", "key": "exact"}],
         "monotonic": [{"col": "id"}],
         "volume_specs": [{"group_col": "flag", "max_rel_dev": 0.5}],
