@@ -159,42 +159,6 @@ def _perm_seeds(num_hashes: int, seed: int = 7) -> np.ndarray:
     return (hi << np.uint64(32)) | lo
 
 
-def minhash_from_shingles(sh_col: Column, num_hashes: int = 32,
-                          seed: int = 7) -> Column:
-    """MinHash signature (array<bigint>) from a precomputed STRING
-    shingles array column (compat path). Shingle hashing (crc32) is
-    JVM-side; the k splitmix64 permutations are ONE Arrow-batched numpy
-    kernel over the hash array. (A pure-Column version with k
-    ``array_min(transform(...))`` duplicates the shingling subtree k× —
-    Catalyst has no common-subexpression elimination across projections
-    — so the vectorized UDF is the fast path here.)"""
-    seeds = _perm_seeds(num_hashes, seed)
-    sh_hashes = F.transform(sh_col, F.crc32)
-
-    def _minhash(hs: pd.Series) -> pd.Series:
-        sv = seeds[:, None]
-        out = []
-        for h in hs:
-            if h is None or len(h) == 0:
-                out.append(None)
-                continue
-            hv = np.asarray(h, dtype=np.int64).astype(np.uint64)[None, :]
-            with np.errstate(over="ignore"):
-                mins = _mix64(hv ^ sv).min(axis=1)
-            out.append(mins.astype(np.int64))
-        return pd.Series(out)
-
-    udf = pandas_udf(_minhash, T.ArrayType(T.LongType()))
-    return udf(sh_hashes)
-
-
-def minhash_signature(col: Column, num_hashes: int = 32, shingle_n: int = 3,
-                      seed: int = 7) -> Column:
-    """MinHash signature as array<bigint> straight from a text column."""
-    return minhash_from_shingles(word_shingles(col, shingle_n),
-                                 num_hashes, seed)
-
-
 def minhash_from_hashes(sh_col: Column, num_hashes: int = 32,
                         seed: int = 7) -> Column:
     """MinHash signature (array<bigint>) from a shingle-HASH array column
@@ -860,24 +824,6 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float> columns, JVM-side
-    (zip_with dot product + aggregate norms).
-
-    Utility for ad-hoc expressions over a handful of rows ONLY —
-    higher-order functions are interpreted per element outside
-    whole-stage codegen, so every hot path (signatures, in-bucket
-    verification, query probes) uses the Arrow-batched matmul kernels in
-    this module / pipeline.similarity instead (measured 40x gap)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
 
 _BRUTE_BLOCK_ROWS = 256
 

@@ -67,13 +67,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-like subword estimate: word chunks + digits + punctuation each
-    count (regex split, JVM-side)."""
-    pieces = F.split(col, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])")
-    return F.size(F.filter(pieces, lambda p: F.trim(p) != ""))
-
-
 def punct_ratio(col: Column) -> Column:
     stripped = F.regexp_replace(col, r"[A-Za-z0-9\s]", "")
     return F.when(F.length(col) > 0,
@@ -450,20 +443,6 @@ def fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of normalized text
     (matches ANSI md5 → DuckDB-verifiable)."""
     return F.md5(normalize_text(col))
-
-
-def rolling_hash_fingerprint(col: Column, n: int = 4) -> Column:
-    """Order-sensitive rolling fingerprint: crc32 of each n-token shingle,
-    combined with a positional multiplier — JVM-side only."""
-    toks = tokens(normalize_text(col))
-    n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_sh - 1, F.lit(0))),
-        lambda i: F.crc32(F.concat_ws(" ", F.slice(toks, i + 1, n))))
-    combined = F.aggregate(
-        shingles, F.lit(0).cast("bigint"),
-        lambda acc, h: (acc * F.lit(31) + h) % F.lit(2**61 - 1))
-    return F.when(F.size(toks) == 0, F.lit(0).cast("bigint")).otherwise(combined)
 
 
 def oov_rate(df: DataFrame, id_col: str, vocab: DataFrame,

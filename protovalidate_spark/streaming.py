@@ -20,8 +20,10 @@ stream (global exact uniqueness over an unbounded stream is unbounded
 state by definition):
 - :func:`windowed_unique_violations` — duplicates within an event-time
   window, watermarked so state is bounded and late data is handled.
-- :func:`stateful_unique_violations` and its audio-dup and
-  transcript-conflict users — exact cross-batch keyed state with a TTL.
+- :func:`stream_key_checks` — the exact keyed checks, one stage: ONE
+  ``applyInPandasWithState`` with TTL-bounded state per key, judging
+  each arriving row against its key's keeper with :class:`KeyDuplicate`
+  (a repeated key) and :class:`KeyConflict` (a label unlike the keeper's).
 - :func:`windowed_column_stats` — the per-column stats pass
   (``dataset/stats.py``) per event-time window: ONE stateful
   aggregation, state O(windows × columns).
@@ -38,9 +40,10 @@ state by definition):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .errors import Code
@@ -76,232 +79,116 @@ def windowed_unique_violations(
              "_v.field_path", "_v.rule_id", "_v.message", "_v.actual")
 
 
-def stateful_unique_violations(
-    stream_df: DataFrame, key_col: str,
+@dataclass
+class KeyDuplicate:
+    """Every row of a key after its keeper: rule UNIQUE, ``actual`` the
+    key."""
+
+    field_path: str
+    message: str
+    rule_id = Code.UNIQUE
+    label = actual = None
+
+
+@dataclass
+class KeyConflict:
+    """A row whose ``label`` Column differs from the keeper's: rule
+    CONSISTENT, ``actual`` the row's ``actual`` Column. Labels compare
+    as strings, and a NULL label equals only another NULL."""
+
+    label: Column
+    actual: Column
+    field_path: str
+    message: str
+    rule_id = Code.CONSISTENT
+
+
+def stream_key_checks(
+    stream_df: DataFrame, key_col: str, id_col: str, checks: Sequence,
     state_timeout_ms: int = 3_600_000,
-    field_path: str = None, rule_id: str = None,
-    drop_null_keys: bool = True,
-    skip_key_prefix: str = None,
-    emit_ids_col: str = None,
 ) -> DataFrame:
-    """EXACT cross-batch duplicate detection via keyed state
-    (``applyInPandasWithState`` — the brief's custom-stateful-operator
-    path). Unlike the windowed relaxation, a key is flagged whenever it
-    was EVER seen while its state lives: state is one counter per key,
-    expired by a processing-time timeout so it stays bounded (the
-    streaming trade-off: duplicates further apart than the TTL are the
-    batch runner's job).
+    """Exact cross-batch keyed checks, one stage: ONE
+    ``groupBy(key_col).applyInPandasWithState`` for every check
+    (:class:`KeyDuplicate`, :class:`KeyConflict`), so checks on one key
+    share one state store and one checkpoint, and a key derived from a
+    Python stage (``keyed_fingerprints``) runs that stage once.
 
-    Emits one row per micro-batch per key that gained duplicates:
-    (key, dup_count_batch, total_seen, field_path, rule_id, message,
-    actual). With ``emit_ids_col`` (for DERIVED keys — a content hash
-    is not actionable by itself) the row additionally carries
-    ``first_id`` (the state-remembered keeper, the batch analog's
-    group_id) and ``dup_ids`` (this batch's duplicate row ids), so an
-    operator can quarantine the offenders without re-deriving keys."""
+    A key's keeper is the row with the smallest typed ``id_col`` value
+    in the key's first micro-batch (the batch ``F.min`` keeper of
+    ``audio_dup_groups`` / ``transcript_conflicts``). State per key is
+    ``(first_id, seen, one keeper label per conflict check)``, dropped
+    by a processing-time timeout so it stays bounded: rows further apart
+    than the TTL are the batch runner's job. Append mode emits arriving
+    rows only, never the rows that set the state; ``first_id`` recovers
+    the group.
+
+    NULL keys and keys starting with ``fingerprint.SENTINEL_PREFIX``
+    (rows ``keyed_fingerprints`` could not fingerprint) are skipped
+    inside the state function. Nothing is filtered before the groupBy:
+    a filter on a key derived from a Python stage is pushed below that
+    stage and runs it twice (pinned in test_streaming).
+
+    Emits one row per offending row and check: ``(<key_col>, <id_col>,
+    first_id, seen, field_path, rule_id, message, actual)``, the key and
+    id cast to string; ``seen`` counts the key's rows so far."""
     import pandas as pd
-    from pyspark.sql.streaming.state import (
-        GroupState, GroupStateTimeout)
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    field_path = field_path or f"/{key_col}"
-    rule_id = rule_id or Code.UNIQUE
-    ids_part = ("first_id string, dup_ids array<string>, "
-                if emit_ids_col else "")
-    out_schema = (f"{key_col} string, dup_count_batch long, "
-                  f"total_seen long, {ids_part}"
-                  "field_path string, rule_id string, "
+    from .audio.fingerprint import SENTINEL_PREFIX
+
+    cols = [F.col(key_col).cast("string").alias(key_col),
+            F.col(id_col).cast("string").alias(id_col),
+            F.col(id_col).alias("_order")]
+    # plain tuples for the state function: Columns do not pickle
+    specs, n_labels = [], 0
+    for c in checks:
+        j = None
+        if c.label is not None:
+            j, n_labels = n_labels, n_labels + 1
+            cols += [c.label.cast("string").alias(f"_l{j}"),
+                     c.actual.cast("string").alias(f"_a{j}")]
+        specs.append((j, c.field_path, c.rule_id, c.message))
+    out_schema = (f"{key_col} string, {id_col} string, first_id string, "
+                  "seen long, field_path string, rule_id string, "
                   "message string, actual string")
-    state_schema = ("seen long, first_id string" if emit_ids_col
-                    else "seen long")
+    state_schema = "first_id string, seen long" + "".join(
+        f", l{j} string" for j in range(n_labels))
 
-    def flag_dups(key, pdfs, state: GroupState):
+    def judge(key, pdfs, state: GroupState):
         if state.hasTimedOut:
             state.remove()
             return
-        # sentinel keys (e.g. per-row keys minted for rows excluded
-        # from dedup) are never flagged AND never create state — two
-        # byte-identical excluded rows colliding on a sentinel must
-        # not read as a duplicate
-        if skip_key_prefix and str(key[0]).startswith(skip_key_prefix):
+        k = key[0]
+        if k is None or k.startswith(SENTINEL_PREFIX):
             for _ in pdfs:  # drain the iterator per the state contract
                 pass
             return
-        if emit_ids_col:
-            ids = []
-            for p in pdfs:
-                ids.extend(str(x) for x in p[emit_ids_col])
-            n = len(ids)
+        batch = pd.concat(list(pdfs), ignore_index=True) \
+            .sort_values("_order", kind="mergesort")
+        if state.exists:
+            first, seen, *refs = state.get
+            new = batch
         else:
-            n = sum(len(p) for p in pdfs)
-        seen = state.get[0] if state.exists else 0
-        dups = n if seen > 0 else n - 1
-        total = seen + n
-        if emit_ids_col:
-            first = state.get[1] if state.exists else ids[0]
-            state.update((total, first))
-        else:
-            state.update((total,))
+            first, seen = batch[id_col].iloc[0], 0
+            refs = [batch[f"_l{j}"].iloc[0] for j in range(n_labels)]
+            new = batch.iloc[1:]
+        seen += len(batch)
+        state.update((first, seen, *refs))
         state.setTimeoutDuration(state_timeout_ms)
-        if dups > 0:
-            row = {
-                key_col: [key[0]], "dup_count_batch": [dups],
-                "total_seen": [total],
-                "field_path": [field_path],
-                "rule_id": [rule_id],
-                "message": [f"value of {key_col!r} duplicated "
-                            f"(stateful exact check)"],
-                "actual": [str(key[0])],
-            }
-            if emit_ids_col:
-                row["first_id"] = [first]
-                row["dup_ids"] = [ids if seen > 0 else ids[1:]]
-            yield pd.DataFrame(row)
+        for j, field_path, rule_id, message in specs:
+            bad = new if j is None else \
+                new[[x != refs[j] for x in new[f"_l{j}"]]]
+            if len(bad):
+                yield pd.DataFrame({
+                    key_col: k, id_col: bad[id_col], "first_id": first,
+                    "seen": seen, "field_path": field_path,
+                    "rule_id": rule_id, "message": message,
+                    "actual": k if j is None else bad[f"_a{j}"]})
 
-    # drop_null_keys=False is for callers whose key column is DERIVED
-    # from an expensive (e.g. Python-stage) projection and already
-    # guaranteed non-null: the isNotNull predicate would be pushed
-    # below that projection and re-instantiate the stage (no
-    # cross-operator CSE — pinned in test_streaming)
-    src = (stream_df.filter(F.col(key_col).isNotNull())
-           if drop_null_keys else stream_df)
-    return (src
+    return (stream_df.select(*cols)
             .groupBy(key_col)
             .applyInPandasWithState(
-                flag_dups, out_schema, state_schema, "append",
-                GroupStateTimeout.ProcessingTimeTimeout))
-
-
-def streaming_audio_dup_violations(
-    stream_df: DataFrame, id_col: str = "clip_id",
-    bytes_col: str = "bytes", state_timeout_ms: int = 3_600_000,
-    chunks: int = 4, peaks: int = 3, min_rel_mag: float = 0.1,
-) -> DataFrame:
-    """Cross-batch duplicate-AUDIO detection: the batch spectral
-    fingerprint stage (audio/fingerprint.py — encoding-invariant
-    semitone peak tokens from one Arrow decode+FFT pass) keyed per
-    row, then the stateful exact check on the 16-byte content key.
-    The same recording re-encoded (other rate / bit depth / gain)
-    arriving in a LATER micro-batch is flagged, which byte-level or
-    clip_id dedup cannot do. Undecodable rows keep their sentinel
-    keys INSTEAD of being filtered — an isNotNull predicate on a key
-    derived from the Python stage would be pushed below the
-    projection and run the decode+FFT twice (drop_null_keys=False —
-    the single Python stage is pinned in test_streaming) — and the
-    sentinel prefix is skipped inside the stateful op, so
-    byte-identical undecodable payloads are neither flagged nor held
-    in state (pinned: repeated garbage in the test). Violation rows
-    carry field_path /<bytes_col> (content identity, not id
-    collision), rule_id UNIQUE, plus first_id (the state-remembered
-    keeper — the batch analog's group_id) and dup_ids (this batch's
-    duplicate clip ids) so the offenders are actionable without
-    re-fingerprinting."""
-    from .audio.fingerprint import SENTINEL_PREFIX, keyed_fingerprints
-
-    keyed = keyed_fingerprints(stream_df, id_col, bytes_col, chunks,
-                               peaks, min_rel_mag)
-    return stateful_unique_violations(
-        keyed.select("fp_key", "id"), "fp_key",
-        state_timeout_ms=state_timeout_ms,
-        field_path=f"/{bytes_col}", drop_null_keys=False,
-        skip_key_prefix=SENTINEL_PREFIX, emit_ids_col="id")
-
-
-def streaming_transcript_conflict_violations(
-    stream_df: DataFrame, id_col: str = "clip_id",
-    bytes_col: str = "bytes", transcript_col: str = "transcript",
-    key: str = "content", normalize: bool = True,
-    state_timeout_ms: int = 3_600_000,
-    chunks: int = 4, peaks: int = 3, min_rel_mag: float = 0.1,
-) -> DataFrame:
-    """Cross-batch transcript-label conflict detection — the streaming
-    analog of :func:`~protovalidate_spark.audio.consistency.
-    transcript_conflicts` (tolerance-0 semantics): the same audio
-    (byte-exact md5 key, or spectral-content key for re-encodings)
-    arriving in a LATER micro-batch with a DIFFERENT transcript is
-    flagged against the state-remembered reference label. Labels are
-    normalized JVM-side before the stateful op (same
-    ``transcript_label`` expression as batch); a NULL transcript is a
-    distinct label vs real text, and an all-NULL key never conflicts.
-
-    State per content key: (reference label, keeper id, seen count),
-    TTL-bounded like every stateful check here. Divergence from batch,
-    inherent to append-mode streams: only the ARRIVING conflicting rows
-    are emitted — the earlier rows that set the reference cannot be
-    retro-flagged; the keeper id in the row recovers the group. Edit
-    tolerance is batch-only (the resumable runner's job).
-
-    Emits (clip_id, first_id, field_path=/<transcript_col>,
-    rule_id=CONSISTENT, message, actual=the arriving transcript)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import (
-        GroupState, GroupStateTimeout)
-
-    from .audio.consistency import transcript_label
-    from .audio.fingerprint import SENTINEL_PREFIX, keyed_fingerprints
-
-    if key == "content":
-        keyed = keyed_fingerprints(stream_df, id_col, bytes_col, chunks,
-                                   peaks, min_rel_mag,
-                                   extra_cols=(transcript_col,))
-    elif key == "exact":
-        keyed = (stream_df
-                 .select(F.col(id_col).alias("id"),
-                         # sentinel for NULL payloads, same reason as
-                         # keyed_fingerprints: no shared-NULL key group
-                         F.coalesce(
-                             F.md5(F.col(bytes_col)),
-                             F.concat(F.lit(SENTINEL_PREFIX),
-                                      F.coalesce(F.col(id_col)
-                                                 .cast("string"),
-                                                 F.lit("")))
-                         ).alias("fp_key"),
-                         F.lit(True).alias("is_content"),
-                         F.col(transcript_col)))
-    else:
-        raise ValueError(f"key must be 'exact' or 'content', got {key!r}")
-    lbl = transcript_label(F.col(transcript_col), normalize)
-    rows = keyed.select("fp_key", "id",
-                        F.col(transcript_col).alias("_tx"),
-                        lbl.alias("_lbl"))
-
-    out_schema = ("clip_id string, first_id string, field_path string, "
-                  "rule_id string, message string, actual string")
-    state_schema = "ref_label string, first_id string, seen long"
-    field_path = f"/{transcript_col}"
-
-    def flag_conflicts(group_key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if str(group_key[0]).startswith(SENTINEL_PREFIX):
-            for _ in pdfs:  # drain per the state contract
-                pass
-            return
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values("id", kind="mergesort")
-        if state.exists:
-            ref_label, first_id, seen = state.get
-        else:
-            ref_label = batch["_lbl"].iloc[0]
-            first_id = batch["id"].iloc[0]
-            seen = 0
-        conflicts = batch[batch["_lbl"] != ref_label]
-        state.update((ref_label, first_id, seen + len(batch)))
-        state.setTimeoutDuration(state_timeout_ms)
-        if len(conflicts):
-            yield pd.DataFrame({
-                "clip_id": conflicts["id"].astype(str),
-                "first_id": first_id,
-                "field_path": field_path,
-                "rule_id": Code.CONSISTENT,
-                "message": (f"transcript conflicts with {key}-identical "
-                            f"audio (keeper {first_id})"),
-                "actual": conflicts["_tx"],
-            })
-
-    return (rows.groupBy("fp_key")
-            .applyInPandasWithState(
-                flag_conflicts, out_schema, state_schema, "append",
+                judge, out_schema, state_schema, "append",
                 GroupStateTimeout.ProcessingTimeTimeout))
 
 

@@ -10,10 +10,13 @@ from pyspark.sql import functions as F
 
 from protovalidate_spark import Int32, Object, String
 from protovalidate_spark.streaming import (
+    KeyConflict,
+    KeyDuplicate,
     WindowDrift,
     WindowEntropy,
     WindowOutliers,
     WindowVolume,
+    stream_key_checks,
     stream_window_checks,
     windowed_unique_violations,
     write_violations_stream,
@@ -141,22 +144,26 @@ def test_stream_suite_row_pass_with_decode(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
+def _dup(key_col):
+    return KeyDuplicate(f"/{key_col}", f"value of {key_col!r} duplicated")
+
+
 def test_stateful_available_now_query_stops(spark, tmp_path):
     """A stateful check (processing-time state timeout) under the
     availableNow sink drains its backlog and terminates instead of
-    running empty micro-batches forever."""
+    running empty micro-batches forever. NULL keys are skipped inside
+    the state function: two of them are not a duplicate."""
     import time
 
-    from protovalidate_spark.streaming import stateful_unique_violations
     src = str(tmp_path / "src_stop")
-    spark.createDataFrame([(0, "a"), (1, "b"), (2, "a")],
-                          "row_idx long, clip_id string") \
+    spark.createDataFrame([(0, "a"), (1, "b"), (2, "a"), (3, None),
+                           (4, None)], "row_idx long, clip_id string") \
         .coalesce(1).write.parquet(src)
     stream = spark.readStream.schema("row_idx long, clip_id string") \
         .parquet(src)
     t0 = time.monotonic()
     q = write_violations_stream(
-        stateful_unique_violations(stream, "clip_id"),
+        stream_key_checks(stream, "clip_id", "row_idx", [_dup("clip_id")]),
         str(tmp_path / "o_stop"), str(tmp_path / "c_stop"))
     try:
         assert q.awaitTermination(30)
@@ -170,7 +177,6 @@ def test_stateful_unique_across_batches(spark, stream_src, tmp_path):
     """applyInPandasWithState exact dedup: duplicates are caught even
     when the two arrivals land in DIFFERENT micro-batches (file drops),
     which the windowed check cannot guarantee across window boundaries."""
-    from protovalidate_spark.streaming import stateful_unique_violations
     path, batch_df = stream_src
     src = str(tmp_path / "src2")
     out, ckpt = str(tmp_path / "o3"), str(tmp_path / "c3")
@@ -179,7 +185,7 @@ def test_stateful_unique_across_batches(spark, stream_src, tmp_path):
         .write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(batch_df.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v = stateful_unique_violations(stream, "clip_id")
+    v = stream_key_checks(stream, "clip_id", "row_idx", [_dup("clip_id")])
     assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == 0
     # drop 2: re-sends clip-0000000001 (dup of drop 1) + a fresh key
@@ -187,12 +193,30 @@ def test_stateful_unique_across_batches(spark, stream_src, tmp_path):
         .write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(batch_df.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v2 = stateful_unique_violations(stream2, "clip_id")
+    v2 = stream_key_checks(stream2, "clip_id", "row_idx", [_dup("clip_id")])
     assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
-    got = {(r["clip_id"], r["dup_count_batch"], r["total_seen"],
-            r["rule_id"]) for r in rows}
-    assert got == {("clip-0000000001", 1, 2, "UNIQUE")}
+    got = [(r["clip_id"], r["row_idx"], r["first_id"], r["seen"],
+            r["field_path"], r["rule_id"], r["actual"]) for r in rows]
+    assert got == [("clip-0000000001", "3", "0", 2, "/clip_id", "UNIQUE",
+                    "clip-0000000001")]
+
+
+def test_stream_key_checks_typed_key_and_keeper(spark, tmp_path):
+    """A non-string key is cast to string for the output (a long key
+    once failed the query on the string output schema), and the keeper
+    is the smallest id by TYPED order: 9 < 10 although "10" < "9" and
+    10 arrives first."""
+    src = str(tmp_path / "src_long")
+    out, ckpt = str(tmp_path / "o_long"), str(tmp_path / "c_long")
+    spark.createDataFrame([(7, 10), (7, 9), (8, 1)], "acct long, rid long") \
+        .coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("acct long, rid long").parquet(src)
+    v = stream_key_checks(stream, "acct", "rid", [_dup("acct")])
+    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
+    rows = [(r["acct"], r["rid"], r["first_id"], r["seen"], r["actual"])
+            for r in spark.read.parquet(out).collect()]
+    assert rows == [("7", "10", "9", 2, "7")]
 
 
 def test_windowed_column_stats(spark, tmp_path):
@@ -341,16 +365,15 @@ def test_streaming_audio_dup_across_batches(spark, tmp_path):
     (other rate / bit depth / gain) arriving in a LATER micro-batch is
     flagged on the spectral content key; distinct content and
     undecodable bytes are not. Also pins the single-Python-stage plan:
-    the drop_null_keys pre-filter would re-instantiate the decode+FFT
+    a filter on the derived key would re-instantiate the decode+FFT
     stage below the key projection (no cross-operator CSE)."""
     from protovalidate_spark.audio.fingerprint import keyed_fingerprints
     from protovalidate_spark.audio.wav import synth_sine_wav
-    from protovalidate_spark.streaming import (
-        streaming_audio_dup_violations, write_violations_stream)
 
     src = str(tmp_path / "audio_src")
     out, ckpt = str(tmp_path / "audio_out"), str(tmp_path / "audio_ck")
     schema = "clip_id string, bytes binary"
+    dup = [KeyDuplicate("/bytes", "audio content duplicated")]
     # drop 1: two distinct contents
     b1 = spark.createDataFrame(
         [("a1", synth_sine_wav(440, 16000, 400)),
@@ -358,7 +381,7 @@ def test_streaming_audio_dup_across_batches(spark, tmp_path):
     b1.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v = streaming_audio_dup_violations(stream)
+    v = stream_key_checks(keyed_fingerprints(stream), "fp_key", "id", dup)
     assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     assert spark.read.parquet(out).count() == 0
     # drop 2: 440 Hz re-encoded (8-bit, 8 kHz, half gain) + REPEATED
@@ -371,15 +394,15 @@ def test_streaming_audio_dup_across_batches(spark, tmp_path):
     b2.coalesce(1).write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v2 = streaming_audio_dup_violations(stream2)
+    v2 = stream_key_checks(keyed_fingerprints(stream2), "fp_key", "id", dup)
     assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
     r = rows[0]
-    assert (r["dup_count_batch"], r["total_seen"],
-            r["field_path"], r["rule_id"]) == (1, 2, "/bytes", "UNIQUE")
+    assert (r["seen"], r["field_path"], r["rule_id"], r["actual"]) \
+        == (2, "/bytes", "UNIQUE", r["fp_key"])
     # actionable ids: the keeper from batch 1's state + this batch's dup
-    assert (r["first_id"], list(r["dup_ids"])) == ("a1", ["a2"])
+    assert (r["first_id"], r["id"]) == ("a1", "a2")
 
     # plan pin (batch equivalent of the streaming projection, single
     # source — a union holds one Python node per branch): the
@@ -395,11 +418,8 @@ def test_streaming_audio_dup_across_batches(spark, tmp_path):
 
 
 def test_stateful_unique_emit_ids(spark, stream_src, tmp_path):
-    """emit_ids_col on the plain stateful path: the violation row names
-    the state-remembered keeper (first arrival) and this batch's
-    duplicate row ids; the default (no emit_ids_col) schema is pinned
-    unchanged by test_stateful_unique_across_batches."""
-    from protovalidate_spark.streaming import stateful_unique_violations
+    """Each violation row names its key's keeper (the smallest id, from
+    the state) and its own row id, one row per duplicate row."""
     path, batch_df = stream_src
     src = str(tmp_path / "src_ids")
     out, ckpt = str(tmp_path / "oi"), str(tmp_path / "ci")
@@ -408,14 +428,21 @@ def test_stateful_unique_emit_ids(spark, stream_src, tmp_path):
     keyed.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(keyed.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v = stateful_unique_violations(stream, "clip_id", emit_ids_col="rid")
+    v = stream_key_checks(stream, "clip_id", "rid", [_dup("clip_id")])
     assert write_violations_stream(v, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     # fixture: clip-0000000001 appears at row_idx 0 and 3 (same batch)
     assert len(rows) == 1
     r = rows[0]
     assert r["clip_id"] == "clip-0000000001"
-    assert (r["first_id"], list(r["dup_ids"])) == ("0", ["3"])
+    assert (r["first_id"], r["rid"], r["seen"]) == ("0", "3", 2)
+
+
+def _tx_conflict():
+    from protovalidate_spark.audio.consistency import transcript_label
+    return KeyConflict(transcript_label(F.col("transcript")),
+                       F.col("transcript"), "/transcript",
+                       "transcript conflicts with identical audio")
 
 
 def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
@@ -424,13 +451,17 @@ def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
     flagged against the state-remembered reference label; a matching
     (formatting-only different) label, distinct content, and garbage
     payloads are not. Batch-internal conflicts flag too."""
+    from protovalidate_spark.audio.fingerprint import keyed_fingerprints
     from protovalidate_spark.audio.wav import synth_sine_wav
-    from protovalidate_spark.streaming import (
-        streaming_transcript_conflict_violations, write_violations_stream)
 
     src = str(tmp_path / "tx_src")
     out, ckpt = str(tmp_path / "tx_out"), str(tmp_path / "tx_ck")
     schema = "clip_id string, bytes binary, transcript string"
+
+    def checks(stream):
+        keyed = keyed_fingerprints(stream, extra_cols=("transcript",))
+        return stream_key_checks(keyed, "fp_key", "id", [_tx_conflict()])
+
     # drop 1: references — also one batch-INTERNAL conflict (c1 vs c2)
     b1 = spark.createDataFrame(
         [("a1", synth_sine_wav(440, 16000, 400), "the cat sat"),
@@ -441,9 +472,9 @@ def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
     b1.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v = streaming_transcript_conflict_violations(stream)
-    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
-    rows = {r["clip_id"]: r for r in spark.read.parquet(out).collect()}
+    assert write_violations_stream(checks(stream), out, ckpt) \
+        .awaitTermination(120)
+    rows = {r["id"]: r for r in spark.read.parquet(out).collect()}
     assert sorted(rows) == ["c2"]          # batch-internal conflict
     assert rows["c2"]["first_id"] == "c1"
     # drop 2: a re-encoded 440 Hz with a conflicting label (flag), a
@@ -459,9 +490,9 @@ def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
     b2.coalesce(1).write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v2 = streaming_transcript_conflict_violations(stream2)
-    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
-    rows = {r["clip_id"]: r for r in spark.read.parquet(out).collect()}
+    assert write_violations_stream(checks(stream2), out, ckpt) \
+        .awaitTermination(120)
+    rows = {r["id"]: r for r in spark.read.parquet(out).collect()}
     assert sorted(rows) == ["a2", "c2"]
     r = rows["a2"]
     assert (r["first_id"], r["field_path"], r["rule_id"], r["actual"]) \
@@ -469,39 +500,76 @@ def test_streaming_transcript_conflict_across_batches(spark, tmp_path):
 
 
 def test_streaming_transcript_conflict_exact_null_label(spark, tmp_path):
-    """Exact (md5) key mode + NULL-label semantics: byte-identical rows
-    where one transcript is NULL and the reference is real text flag
-    the NULL row; NULL-bytes rows ride per-row sentinel keys and never
-    flag each other."""
+    """Exact (md5) key + NULL-label semantics: byte-identical rows where
+    one transcript is NULL and the reference is real text flag the NULL
+    row; NULL-bytes rows have a NULL key and never flag each other."""
     from protovalidate_spark.audio.wav import synth_sine_wav
-    from protovalidate_spark.streaming import (
-        streaming_transcript_conflict_violations, write_violations_stream)
 
     src = str(tmp_path / "tx2_src")
     out, ckpt = str(tmp_path / "tx2_out"), str(tmp_path / "tx2_ck")
     schema = "clip_id string, bytes binary, transcript string"
+
+    def checks(stream):
+        keyed = stream.withColumn("md5", F.md5("bytes"))
+        return stream_key_checks(keyed, "md5", "clip_id", [_tx_conflict()])
+
     wav = synth_sine_wav(440, 16000, 400)
     b1 = spark.createDataFrame(
         [("a1", wav, "hello"), ("n1", None, "ghost one")], schema)
     b1.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v = streaming_transcript_conflict_violations(stream, key="exact")
-    assert write_violations_stream(v, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(checks(stream), out, ckpt) \
+        .awaitTermination(120)
     assert spark.read.parquet(out).count() == 0
     b2 = spark.createDataFrame(
         [("a2", wav, None), ("n2", None, "ghost two")], schema)
     b2.coalesce(1).write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(b1.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    v2 = streaming_transcript_conflict_violations(stream2, key="exact")
-    assert write_violations_stream(v2, out, ckpt).awaitTermination(120)
+    assert write_violations_stream(checks(stream2), out, ckpt) \
+        .awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["clip_id"], r["first_id"], r["rule_id"]) \
         == ("a2", "a1", "CONSISTENT")
     assert r["actual"] is None
+
+
+def test_stream_key_checks_share_one_stage(spark, tmp_path, capsys):
+    """Duplicate + conflict on one fingerprinted stream: one decode+FFT
+    Python stage and one state operator serve both checks, and a
+    re-encoded clip with a new transcript flags under each."""
+    from protovalidate_spark.audio.fingerprint import keyed_fingerprints
+    from protovalidate_spark.audio.wav import synth_sine_wav
+
+    src = str(tmp_path / "both_src")
+    out, ckpt = str(tmp_path / "both_out"), str(tmp_path / "both_ck")
+    spark.createDataFrame(
+        [("a1", synth_sine_wav(440, 16000, 400), "the cat sat"),
+         ("a2", synth_sine_wav(440, 8000, 400, amp=0.25, fmt="pcm8"),
+          "the dog sat"),
+         ("b1", synth_sine_wav(550, 16000, 400), "other words")],
+        "clip_id string, bytes binary, transcript string") \
+        .coalesce(1).write.parquet(src)
+    stream = spark.readStream \
+        .schema("clip_id string, bytes binary, transcript string") \
+        .parquet(src)
+    keyed = keyed_fingerprints(stream, extra_cols=("transcript",))
+    v = stream_key_checks(keyed, "fp_key", "id", [
+        KeyDuplicate("/bytes", "audio content duplicated"), _tx_conflict()])
+    q = write_violations_stream(v, out, ckpt)
+    assert q.awaitTermination(120)
+    capsys.readouterr()
+    q.explain()
+    plan = capsys.readouterr().out
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("FlatMapGroupsInPandasWithState") == 1
+    rows = sorted((r["id"], r["first_id"], r["field_path"], r["rule_id"])
+                  for r in spark.read.parquet(out).collect())
+    assert rows == [("a2", "a1", "/bytes", "UNIQUE"),
+                    ("a2", "a1", "/transcript", "CONSISTENT")]
 
 
 def test_stream_volume_violations(spark, tmp_path):
