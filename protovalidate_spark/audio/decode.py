@@ -27,6 +27,13 @@ What the stage ships to Python follows from ``fields`` alone:
 - any other ``fields`` ships the whole payload: ``rms`` and the samples
   need it. The re-encoding stages (repair, fingerprints, embeddings)
   decode whole payloads with :func:`_decode_series`.
+
+The header fields also have a Catalyst form built from the same byte
+table as the guard: :func:`header_struct` is ``with_decoded(fields=())``
+on every row that :func:`header_undecided` leaves out, i.e. every row
+but the RIFF/WAVE-tagged ones the guard rejects. A suite run counts
+those rows in its shared aggregate and, where there are none, reads the
+header struct with no Python stage at all.
 """
 
 from __future__ import annotations
@@ -293,10 +300,24 @@ def _binary_sql(raw: bytes) -> str:
     return f"X'{raw.hex().upper()}'"
 
 
+def _quoted(name: str) -> str:
+    return (name if re.fullmatch(r"\w+(\.\w+)*|`[^`]+`", name)
+            else "`" + name.replace("`", "``") + "`")
+
+
+def _name(b: str | Column) -> str:
+    return b if isinstance(b, str) else b._jc.toString()
+
+
+def _int32(x: str) -> str:
+    """SQL for BIGINT ``x`` wrapped to INT, as numpy's
+    ``astype(np.int32)`` does (a plain ANSI cast fails on overflow)."""
+    return f"CAST(shiftright(shiftleft({x}, 32), 32) AS INT)"
+
+
 @functools.lru_cache(maxsize=None)
 def _guard_sql(name: str) -> str:
-    b = (name if re.fullmatch(r"\w+(\.\w+)*|`[^`]+`", name)
-         else "`" + name.replace("`", "``") + "`")
+    b = _quoted(name)
     bits, dsize = _le_uint(b, 34, 2), _le_uint(b, 40, 4)
     pairs = ", ".join(_binary_sql(struct.pack("<HH", code, nb))
                       for code, allowed in _FMT_BITS.items() for nb in allowed)
@@ -317,7 +338,48 @@ def canonical_guard(b: str | Column) -> Column:
     equalities as :func:`_parse_headers`. ``b`` is the bytes column's
     name or a plain column reference to it; its SQL text is built once
     per name and parsed by one ``F.expr``."""
-    return F.expr(_guard_sql(b if isinstance(b, str) else b._jc.toString()))
+    return F.expr(_guard_sql(_name(b)))
+
+
+@functools.lru_cache(maxsize=None)
+def _undecided_sql(name: str) -> str:
+    b = _quoted(name)
+    return (f"coalesce(substring({b}, 1, 4) = {_binary_sql(_RIFF)} "
+            f"AND substring({b}, 9, 4) = {_binary_sql(_WAVE)} "
+            f"AND length({b}) >= {HEADER_LEN}, false) "
+            f"AND NOT {_guard_sql(name)}")
+
+
+@functools.lru_cache(maxsize=None)
+def _struct_sql(name: str) -> str:
+    b = _quoted(name)
+    sr = _le_uint(b, 24, 4)
+    n = (f"({_le_uint(b, 40, 4)} div "
+         f"greatest(shiftright({_le_uint(b, 34, 2)}, 3), 1))")
+    # n * 1000.0 / sr in float64, rounded half-even like np.round
+    dur = f"CAST(bround(CAST({n} * 1000 AS DOUBLE) / {sr}, 0) AS BIGINT)"
+    return (f"CASE WHEN {_guard_sql(name)} THEN named_struct('ok', true, "
+            f"'sr', {_int32(sr)}, 'n_samples', {n}, "
+            f"'dur_ms', {_int32(dur)}) ELSE named_struct('ok', false, "
+            f"'sr', 0, 'n_samples', 0L, 'dur_ms', 0) END")
+
+
+def header_undecided(b: str | Column) -> Column:
+    """True exactly for the payloads that only the exact chunk walker
+    decodes: RIFF/WAVE-tagged, at least ``HEADER_LEN`` bytes, and not
+    :func:`canonical_guard`. Every other row's ``ok, sr, n_samples,
+    dur_ms`` is :func:`header_struct`'s: NULL, short and untagged
+    payloads fail :func:`decode_wav` before it walks."""
+    return F.expr(_undecided_sql(_name(b)))
+
+
+def header_struct(b: str | Column) -> Column:
+    """Catalyst twin of ``with_decoded(fields=())``: ``ok, sr,
+    n_samples, dur_ms`` from the header on :func:`canonical_guard` rows,
+    ``(false, 0, 0, 0)`` elsewhere. Equal to the Python stage on every
+    row where :func:`header_undecided` is false, overflow included
+    (``sr`` and ``dur_ms`` wrap to int32 as the kernel's casts do)."""
+    return F.expr(_struct_sql(_name(b)))
 
 
 # ---------------------------------------------------------------------------

@@ -488,6 +488,10 @@ def run_checkpointed(
                      timed_out, canceled, stale, torn_tail)
 
 
+# dot-prefixed sibling names of a partition being compacted
+_COPY, _ASIDE = ".compact.", ".aside."
+
+
 def compact_violations(spark: SparkSession, output_dir: str,
                        partition_col: str = "part_date",
                        files_per_partition: int = 1,
@@ -496,13 +500,28 @@ def compact_violations(spark: SparkSession, output_dir: str,
     files (each append-delta run appends one file set — the classic
     Iceberg small-file problem) into ``files_per_partition`` coalesced
     files. Pure sink maintenance: row content, the manifest, and
-    verdicts are untouched. Per-partition read→coalesce→atomic dir swap;
-    partitions under ``min_files`` are skipped. Returns the partitions
-    compacted."""
+    verdicts are untouched. Per partition: the coalesced copy is written
+    to a dot-prefixed sibling (Spark's file index skips dot names), the
+    old directory is renamed aside to another dot name, the copy is
+    renamed into place, then the old one is deleted. A failed swap
+    renames the old directory back; the leftovers of an interrupted run
+    are settled first (an aside directory whose partition is missing is
+    restored). Partitions under ``min_files`` are skipped. Returns the
+    partitions compacted."""
     viol_dir = os.path.join(output_dir, "violations")
     compacted = []
     if not os.path.isdir(viol_dir):
         return compacted
+    for name in os.listdir(viol_dir):
+        path = os.path.join(viol_dir, name)
+        if name.startswith(_ASIDE):
+            live = os.path.join(viol_dir, name[len(_ASIDE):])
+            if os.path.exists(live):
+                shutil.rmtree(path)
+            else:
+                os.replace(path, live)
+        elif name.startswith(_COPY):
+            shutil.rmtree(path)
     for name in sorted(os.listdir(viol_dir)):
         if not name.startswith(f"{partition_col}="):
             continue
@@ -510,11 +529,17 @@ def compact_violations(spark: SparkSession, output_dir: str,
         nfiles = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
         if nfiles < max(min_files, files_per_partition + 1):
             continue
-        tmp = d + "__compact"
+        tmp = os.path.join(viol_dir, _COPY + name)
+        old = os.path.join(viol_dir, _ASIDE + name)
         (spark.read.parquet(d).coalesce(files_per_partition)
          .write.mode("overwrite").parquet(tmp))
-        shutil.rmtree(d)
-        os.replace(tmp, d)
+        os.replace(d, old)
+        try:
+            os.replace(tmp, d)
+        except OSError:
+            os.replace(old, d)
+            raise
+        shutil.rmtree(old)
         compacted.append(name.split("=", 1)[1])
     return compacted
 

@@ -10,7 +10,13 @@ Combines:
   payload length, plus the payload only for rows a Catalyst guard
   cannot prove canonical; its struct is ``ok, sr, n_samples, dur_ms``
   with no ``rms``, so a rule reading ``rms`` from it fails at analysis.
-  The feature/VAD/bandwidth groups need the samples and ship whole
+  ``run`` goes further for such a column: its shared aggregate counts
+  the payloads only the exact chunk walker decodes
+  (``header_undecided``), and where that count is 0 the row pass reads
+  the same struct from one Catalyst expression (``header_struct``) and
+  starts no Python worker. ``row_violations`` (the runner's partition
+  jobs, streams) keeps the Python header stage. The
+  feature/VAD/bandwidth groups need the samples and ship whole
   payloads,
 - scan-based dataset checks (uniqueness, referential, label conflicts,
   monotonicity, reconciliation, outliers) which scan the RAW input (no
@@ -27,10 +33,11 @@ Scan budget at scale: row pass (1 scan incl. decode) + uniqueness
 the columns its checks read: one stacked count, one global agg) +
 row-count agg (metadata-cheap). ``run`` fires exactly ONE driver action
 — the shared aggregate's collect (outlier and embedding-drift specs
-without frozen parameters add their own parameter aggs); its findings
-re-enter the violation union as one JVM-local relation. Violations are
-persisted (or written to a sink) so verdict aggregation never re-runs
-the decode stage.
+without frozen parameters add their own parameter aggs), which also
+reads the payload column of a header-only decodable column; its
+findings re-enter the violation union as one JVM-local relation.
+Violations are persisted (or written to a sink) so verdict aggregation
+never re-runs the decode stage.
 """
 
 from __future__ import annotations
@@ -43,8 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .audio.decode import (FIELD_GROUPS, GATES, decode_ok_rule,
-                           with_decoded)
-from .dataset.fused import collect, local_frame
+                           header_struct, header_undecided, with_decoded)
+from .dataset.fused import Check, collect, local_frame
 from .dataset.referential import ref_violations
 from .dataset.stats import ColumnStats
 from .dataset.uniqueness import unique_violations
@@ -68,6 +75,21 @@ def _gate_rule(spec: dict, decodable):
                              f"not a Binary().decodable() key")
         kw["decoded_col"] = f"__dec_{col}"
     return factory(**kw)
+
+
+class _Undecided(Check):
+    """The count of ``col``'s payloads that only the exact chunk walker
+    decodes, riding the shared aggregate; no findings."""
+
+    def __init__(self, col: str):
+        self.col = col
+
+    def plan(self, agg) -> None:
+        self.name = agg.scope() + "undecided"
+        agg.glob(F.count_if(header_undecided(self.col)).alias(self.name))
+
+    def findings(self, res) -> list:
+        return []
 
 
 @dataclass
@@ -173,13 +195,20 @@ class ValidationSuite:
 
     def row_violations(self, df: DataFrame) -> DataFrame:
         """Row-level pass: decode stage (if any) + one validation projection."""
+        return self._row_pass(df, ())
+
+    def _row_pass(self, df: DataFrame, proven) -> DataFrame:
+        """The row pass; each column in ``proven`` reads its decoded
+        header from :func:`header_struct` instead of a Python stage."""
         rules = self.rules
         work = df
         decodable = self._decodable_cols()
         gates = [_gate_rule(s, decodable) for s in self.audio_gates]
         for c in decodable:
-            work = with_decoded(work, bytes_col=c, out_col=f"__dec_{c}",
-                                fields=self._audio_fields(c))
+            work = (work.withColumn(f"__dec_{c}", header_struct(c))
+                    if c in proven else
+                    with_decoded(work, bytes_col=c, out_col=f"__dec_{c}",
+                                 fields=self._audio_fields(c)))
             rules = rules.with_rule(decode_ok_rule(c, f"__dec_{c}"))
         for r in (*gates, *self.extra_object_rules):
             rules = rules.with_rule(r)
@@ -229,11 +258,14 @@ class ValidationSuite:
     def dataset_violations(self, df: DataFrame) -> list:
         return self._dataset_parts(df)[0]
 
-    def _dataset_parts(self, df: DataFrame, stats_cols=None):
-        """(dataset-level violation frames, column-stats frame or None).
-        The aggregate-shaped checks and the stats share ONE aggregate of
-        ``df`` — the one driver action of a suite run — and return as
-        one JVM-local frame."""
+    def _dataset_parts(self, df: DataFrame, stats_cols=None,
+                       header_cols=()):
+        """(dataset-level violation frames, column-stats frame or None,
+        the ``header_cols`` with no undecided payload). The
+        aggregate-shaped checks, the stats and one undecided-payload
+        count per ``header_cols`` column share ONE aggregate of ``df``
+        — the one driver action of a suite run — and the findings
+        return as one JVM-local frame."""
         keep = self._keep()
         out = []
         for cols in self.unique:
@@ -283,9 +315,11 @@ class ValidationSuite:
 
         checks = self._aggregate_checks()
         stats = ColumnStats(stats_cols) if stats_cols is not None else None
-        if not checks and stats is None:
-            return out, None
-        res = collect(df, [c for c, _ in checks] + ([stats] if stats else []))
+        headers = [_Undecided(c) for c in header_cols]
+        if not checks and stats is None and not headers:
+            return out, None, ()
+        res = collect(df, [c for c, _ in checks] + headers
+                      + ([stats] if stats else []))
         spark = df.sparkSession
         blank = (None,) * (len(self.row_keys) + len(part))
         rows = []
@@ -308,18 +342,25 @@ class ValidationSuite:
                    ("field_path", "rule_id", "message", "actual")]))
         stats_df = (local_frame(spark, stats.findings(res), stats.columns(df))
                     if stats else None)
-        return out, stats_df
+        return out, stats_df, tuple(h.col for h in headers
+                                    if res.g[h.name] == 0)
 
     def run(self, df: DataFrame, with_stats: bool = False,
             persist: bool = True) -> RunResult:
         """One suite pass. Plan building fires ONE driver action — the
         shared aggregate of the table-level checks (and the column stats
-        with ``with_stats``) — plus the parameter aggs of outlier and
-        embedding-drift specs without frozen parameters; everything else
-        stays lazy until the caller acts on the returned frames."""
-        dparts, stats = self._dataset_parts(
-            df, (list(self.stats_cols) or df.columns) if with_stats else None)
-        parts = [self.row_violations(df)] + dparts
+        with ``with_stats``, and the undecided-payload count of each
+        decodable column whose gates read no payload group) — plus the
+        parameter aggs of outlier and embedding-drift specs without
+        frozen parameters; everything else stays lazy until the caller
+        acts on the returned frames. Python runs in the row pass only
+        for a column whose gates read a payload group, or whose count
+        found a payload the header cannot settle; a suite with such a
+        header-only column therefore always fires the one action."""
+        dparts, stats, proven = self._dataset_parts(
+            df, (list(self.stats_cols) or df.columns) if with_stats else None,
+            [c for c in self._decodable_cols() if not self._audio_fields(c)])
+        parts = [self._row_pass(df, proven)] + dparts
         violations = parts[0]
         for p in parts[1:]:
             violations = violations.unionByName(p.select(*violations.columns))

@@ -3,7 +3,8 @@
 length, plus the payload only where the Catalyst guard cannot prove the
 header canonical. Over an adversarial matrix its (ok, sr, n_samples,
 dur_ms) must equal the whole-payload decode, and the guard must imply
-the kernel's canonical mask."""
+the kernel's canonical mask. Its Catalyst twin ``header_struct`` must
+equal it wherever ``header_undecided`` leaves no row to Python."""
 
 import struct
 
@@ -13,8 +14,10 @@ from pyspark.sql import functions as F
 
 from protovalidate_spark.audio.decode import (HEADER_LEN, _decode_parts,
                                               _parse_headers,
-                                              canonical_guard, with_decoded)
-from protovalidate_spark.audio.wav import decode_wav, synth_sine_wav, synth_wav
+                                              canonical_guard, header_struct,
+                                              header_undecided, with_decoded)
+from protovalidate_spark.audio.wav import (_FMT_BITS, decode_wav,
+                                           synth_sine_wav, synth_wav)
 
 FIELDS = ("ok", "sr", "n_samples", "dur_ms")
 FMTS = ["pcm8", "pcm16", "pcm24", "pcm32", "float32", "float64", "alaw",
@@ -130,3 +133,81 @@ def test_rule_reading_rms_fails_at_analysis(spark, tiny_clips):
         message="rms", field_path="/bytes"),)
     with pytest.raises(AnalysisException):
         suite.row_violations(tiny_clips).schema
+
+
+def _overflow():
+    """Canonical headers whose sr or dur_ms leave int32: the kernel's
+    casts wrap them (sr 0xFFFFFFF0 reads -16)."""
+    neg_sr = bytearray(synth_sine_wav(300.0, 16000, 5))
+    struct.pack_into("<I", neg_sr, 24, 0xFFFFFFF0)
+    long_dur = bytearray(synth_wav(np.zeros(2_200_000), 8000, fmt="pcm8"))
+    struct.pack_into("<I", long_dur, 24, 1)   # dur_ms 2.2e9 > 2**31
+    return [("sr_overflow", bytes(neg_sr)), ("dur_overflow", bytes(long_dur))]
+
+
+def _mutations(n=2000, seed=7):
+    """Seeded header mutations of short canonical clips: random bytes in
+    the header fields, random (fmt, bits) pairs and sample rates with the
+    data size kept exact (so many still pass the guard), truncations and
+    appended bytes."""
+    rng = np.random.default_rng(seed)
+    bases = [synth_sine_wav(300.0, 8000, 5 + k, fmt=f)
+             for k, f in enumerate(FMTS)]
+    pairs = [(c, b) for c, bits in _FMT_BITS.items() for b in bits]
+    hot = [0, 3, 8, 11, 12, 16, 17, 20, 21, 22, 23, 24, 25, 26, 27, 34, 35,
+           36, 40, 41, 42, 43]
+    out = []
+    for i in range(n):
+        b = bytearray(bases[rng.integers(len(bases))])
+        kind = rng.integers(4)
+        if kind == 0:       # random bytes in the header fields
+            for pos in rng.choice(hot, size=rng.integers(1, 4)):
+                b[pos] = rng.integers(256)
+        elif kind == 1:     # any admissible format, any rate, exact size
+            code, bits = pairs[rng.integers(len(pairs))]
+            struct.pack_into("<HH", b, 20, code, 1)
+            struct.pack_into("<H", b, 34, bits)
+            struct.pack_into("<I", b, 24, int(rng.choice(
+                [rng.integers(1, 1 << 32), rng.integers(1, 64),
+                 (1 << 32) - rng.integers(1, 64)])))
+            body = len(b) - HEADER_LEN
+            del b[HEADER_LEN + body - body % max(bits >> 3, 1):]
+            struct.pack_into("<I", b, 40, len(b) - HEADER_LEN)
+        elif kind == 2:     # truncate or extend
+            cut = int(rng.integers(0, len(b) + 8))
+            b = b[:cut] if cut <= len(b) else b + bytes(rng.integers(
+                0, 256, size=cut - len(b), dtype=np.uint8))
+        else:               # a size field off by a little
+            struct.pack_into("<I", b, 40,
+                             max(len(b) - HEADER_LEN
+                                 + int(rng.integers(-3, 4)), 0))
+        out.append((f"mut{i}", bytes(b)))
+    return out
+
+
+def test_catalyst_header_equals_python_stage(spark):
+    cases = _matrix() + _overflow() + _mutations()
+    df = spark.createDataFrame(cases, "label string, bytes binary")
+    rows = (with_decoded(df, out_col="py", fields=())
+            .select("label", "py",
+                    header_struct("bytes").alias("cat"),
+                    header_undecided("bytes").alias("undecided"),
+                    canonical_guard("bytes").alias("guard"))
+            .collect())
+    rows = {r["label"]: r for r in rows}
+    assert len(rows) == len(cases)
+    decided = 0
+    for label, b in cases:
+        r = rows[label]
+        tagged = (b is not None and len(b) >= HEADER_LEN
+                  and b[:4] == b"RIFF" and b[8:12] == b"WAVE")
+        assert r["undecided"] == (tagged and not r["guard"]), label
+        if r["undecided"]:
+            continue
+        decided += 1
+        assert tuple(r["cat"]) == tuple(r["py"][f] for f in FIELDS), label
+    assert tuple(rows["sr_overflow"]["cat"])[:2] == (True, -16)
+    assert rows["dur_overflow"]["cat"]["dur_ms"] == 2_200_000_000 - 2**32
+    # the mutations reach guard rows with arbitrary rates and formats
+    assert sum(rows[lb]["guard"] for lb, _ in _mutations()) > 300
+    assert decided > len(cases) // 3

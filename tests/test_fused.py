@@ -192,6 +192,37 @@ def test_run_is_one_action_and_jvm_local(spark, tables, monkeypatch):
     assert "ExistingRDD" not in _plan(res.stats)
 
 
+def test_clips_run_is_one_action(spark, tiny_table, monkeypatch):
+    """A clips suite with no aggregate-shaped check still fires exactly
+    one action: the shared aggregate's count of the payloads only the
+    exact chunk walker decodes."""
+    from protovalidate_spark.clips import clips_suite
+    df = spark.read.parquet(tiny_table)
+    suite = clips_suite(spark)
+    assert not suite._aggregate_checks()
+    seen = _record_actions(monkeypatch, spark)
+    suite.run(df, persist=False)
+    assert len(seen) == 1, f"run() fired {len(seen)} driver actions"
+    assert _plan(seen[0]).count("FileScan") == 1
+
+
+def test_dataset_violations_prune_bytes(spark, tiny_table, monkeypatch):
+    """``dataset_violations`` adds no header count: neither its shared
+    aggregate nor its key checks read the payload column."""
+    from protovalidate_spark.clips import clips_suite
+    df = spark.read.parquet(tiny_table)
+    suite = clips_suite(spark, drift_baseline=snapshot(df, ["dur_ms"]))
+    seen = _record_actions(monkeypatch, spark)
+    parts = suite.dataset_violations(df)
+    monkeypatch.undo()
+    assert len(seen) == 1
+    schemas = [line.split("ReadSchema:")[1]
+               for f in [*seen, *parts] for line in _plan(f).splitlines()
+               if "ReadSchema:" in line]
+    assert len(schemas) >= 3 and not any("bytes" in s for s in schemas), \
+        schemas
+
+
 def _nodes(plan):
     yield plan
     kids = plan.children()

@@ -2,7 +2,8 @@
 engine claims (SURVEY.md §4) asserted against `.explain` output:
 
 - ONE Arrow decode stage per pass (guards the InferFiltersFromGenerate
-  double-evaluation regression fixed in rules/object.py),
+  double-evaluation regression fixed in rules/object.py), and none in a
+  suite run whose shared aggregate proves every header,
 - broadcast anti-join for referential checks (zero fact-side shuffle),
 - two-phase aggregation for uniqueness (map-side partials),
 - parquet column pruning: key-only checks must not read ``bytes``.
@@ -73,6 +74,40 @@ def test_row_pass_ships_headers_not_payloads(spark, clips_path):
     per_row = HEADER_LEN + 32   # + Arrow offsets, the length, validity
     assert sent <= n * per_row + (shipped or 0), (sent, n)
     assert (shipped or 0) < total / 100   # the fixture is mostly canonical
+
+
+def test_run_proves_headers_without_python(spark, clips_path, tmp_path):
+    """``run()``'s shared aggregate finds no TINY payload that only the
+    exact chunk walker decodes, so its row pass reads every header from
+    Catalyst and starts no Python worker. One clip with a LIST chunk
+    brings the Python header stage back. Either way the rows equal the
+    Python-stage pass (``row_violations`` plus ``dataset_violations``)."""
+    import struct
+    from collections import Counter
+
+    df = spark.read.parquet(clips_path)
+    r = df.orderBy("row_idx").first().asDict()
+    b = r["bytes"]
+    extra = b"LIST" + struct.pack("<I", 4) + b"INFO"
+    r.update(row_idx=10**9, clip_id="clip-9999999999",
+             bytes=(b[:4] + struct.pack("<I", len(b) - 8 + len(extra))
+                    + b[8:36] + extra + b[36:]))
+    # the fixture's layout: one small file per part_date
+    df.unionByName(spark.createDataFrame(
+        [tuple(r[c] for c in df.columns)], df.schema)
+    ).repartition("part_date").write.partitionBy("part_date").parquet(
+        str(tmp_path / "listed"))
+    listed = spark.read.parquet(str(tmp_path / "listed"))
+    for frame, stages in ((df, 0), (listed, 1)):
+        suite = clips_suite(spark)
+        res = suite.run(frame, with_stats=True, persist=False)
+        got = Counter(tuple(x) for x in res.violations_full.collect())
+        plan = _plan(res.violations_full).split("== Initial Plan ==")[0]
+        assert plan.count("ArrowEvalPython") == stages, plan
+        want = Counter(tuple(x) for p in [suite.row_violations(frame),
+                                          *suite.dataset_violations(frame)]
+                       for x in p.collect())
+        assert got == want and sum(got.values()) > 0
 
 
 def test_referential_is_broadcast_anti_join(spark, clips_path):

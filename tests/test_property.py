@@ -5,7 +5,7 @@ null/required/nil → coercion lossless-check → accumulate-all rules)."""
 
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import assume, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from protovalidate_spark import Code, Int32, Object, String
@@ -449,10 +449,17 @@ def test_mutual_information_symmetry_property(spark, pairs):
               st.floats(-100, 100, allow_nan=False)),
     min_size=3, max_size=40),
     a=st.floats(0.5, 10), b=st.floats(-5, 5))
+# x + 1 rounds every x to 1.0: the shifted column is constant, r is NULL
+@example(vals=[(0.0, 0.0), (0.0, 0.0), (1.1754943508222875e-38, 1.0)],
+         a=1.0, b=1.0)
+# a 1e-15 spread shifted by 1 keeps a few ulps: r drifts to ~0.998
+@example(vals=[(0.0, 0.0), (1e-15, 1.0), (2e-15, 2.0)], a=1.0, b=1.0)
 def test_correlation_affine_invariance_property(spark, vals, a, b):
     """Pearson r is invariant under positive affine maps of either
     column (r(ax+b, y) == r(x, y)) and sign-flips under negative a —
-    up to the 6-decimal round and co-moment float noise."""
+    up to the 6-decimal round and co-moment float noise. A mapped
+    column with one distinct value has r = NULL; one whose spread the
+    map rounds to a few ulps of its magnitude is not drawn."""
     from protovalidate_spark.dataset import correlation
 
     df = spark.createDataFrame(
@@ -466,9 +473,15 @@ def test_correlation_affine_invariance_property(spark, vals, a, b):
         "x", "y").collect()[0]["r"]
     if base is None:
         assert pos is None and neg is None
-    else:
-        assert abs(pos - base) <= 2e-5
-        assert abs(neg + base) <= 2e-5
+        return
+    xs = [float(x) for x, _ in vals]
+    for r, col, want in ((pos, [x * float(a) + float(b) for x in xs], base),
+                         (neg, [x * float(-a) for x in xs], -base)):
+        if len(set(col)) == 1:
+            assert r is None
+            continue
+        assume(max(col) - min(col) > 1e-9 * max(abs(v) for v in col))
+        assert abs(r - want) <= 2e-5
 
 
 @settings(max_examples=6, deadline=None)

@@ -5,6 +5,8 @@ remaining 9 are re-scanned and final outputs equal a cold full run
 import os
 import shutil
 
+import pytest
+
 from protovalidate_spark.clips import clips_suite
 from protovalidate_spark.fixtures import TINY, clips_df, expected_violations, write_clips
 from protovalidate_spark.runner import (
@@ -167,6 +169,27 @@ def test_resume_appends_only_delta_files(spark, tmp_path_factory):
     assert not r3.partitions_stale and not r3.partitions_run
 
 
+def _small_file_sink(spark, out):
+    """A violation sink whose partition A holds three append runs (3
+    files, 30 rows) and partition B one file (5 rows)."""
+    vdir = os.path.join(out, "violations")
+    rows = [(i, f"/f{i % 2}", "MIN", "m", str(i)) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "row_idx long, field_path string, rule_id string, "
+              "message string, actual string")
+    a = os.path.join(vdir, "part_date=2026-01-01")
+    for lo, hi in ((0, 10), (10, 20), (20, 30)):
+        (df.filter(f"row_idx >= {lo} and row_idx < {hi}").coalesce(1)
+           .write.mode("append").parquet(a))
+    b = os.path.join(vdir, "part_date=2026-01-02")
+    df.limit(5).coalesce(1).write.mode("overwrite").parquet(b)
+    return a, b
+
+
+def nf(d):
+    return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+
+
 def test_compact_violations_preserves_rows(spark, tmp_path_factory):
     """Sink compaction collapses a partition's accumulated small files
     into one without changing row content; single-file partitions are
@@ -174,20 +197,7 @@ def test_compact_violations_preserves_rows(spark, tmp_path_factory):
     from protovalidate_spark.runner import compact_violations
 
     out = str(tmp_path_factory.mktemp("run_out_cmp"))
-    vdir = os.path.join(out, "violations")
-    rows = [(i, f"/f{i % 2}", "MIN", "m", str(i)) for i in range(30)]
-    df = spark.createDataFrame(
-        rows, "row_idx long, field_path string, rule_id string, "
-              "message string, actual string")
-    # partition A: three append runs -> >= 3 files; partition B: one
-    a = os.path.join(vdir, "part_date=2026-01-01")
-    for lo, hi in ((0, 10), (10, 20), (20, 30)):
-        (df.filter(f"row_idx >= {lo} and row_idx < {hi}").coalesce(1)
-           .write.mode("append").parquet(a))
-    b = os.path.join(vdir, "part_date=2026-01-02")
-    df.limit(5).coalesce(1).write.mode("overwrite").parquet(b)
-
-    nf = lambda d: sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+    a, b = _small_file_sink(spark, out)
     assert nf(a) == 3 and nf(b) == 1
     before = sorted(tuple(r) for r in spark.read.parquet(a).collect())
 
@@ -196,3 +206,62 @@ def test_compact_violations_preserves_rows(spark, tmp_path_factory):
     assert nf(a) == 1 and nf(b) == 1
     after = sorted(tuple(r) for r in spark.read.parquet(a).collect())
     assert after == before
+
+
+@pytest.mark.parametrize("fail_at", [0, 1])
+def test_compact_violations_survives_a_failed_rename(spark, tmp_path,
+                                                     monkeypatch, fail_at):
+    """A rename of the compaction swap fails once: the sink still reads
+    every row exactly once under its date, and the next call settles
+    the leftovers and compacts."""
+    from collections import Counter
+
+    from protovalidate_spark import runner
+
+    out = str(tmp_path)
+    vdir = os.path.join(out, "violations")
+    a, _ = _small_file_sink(spark, out)
+
+    def read():
+        df = spark.read.parquet(vdir)
+        assert dict(df.dtypes)["part_date"] == "date"
+        return Counter((tuple(r), str(r["part_date"])) for r in df.collect())
+
+    before = read()
+    real, calls = os.replace, []
+
+    def flaky(src, dst):
+        calls.append(src)
+        if len(calls) == fail_at + 1:
+            raise OSError("injected rename failure")
+        return real(src, dst)
+
+    monkeypatch.setattr(runner.os, "replace", flaky)
+    with pytest.raises(OSError, match="injected"):
+        runner.compact_violations(spark, out)
+    monkeypatch.undo()
+    assert read() == before and sum(before.values()) == 35
+    assert runner.compact_violations(spark, out) == ["2026-01-01"]
+    assert read() == before and nf(a) == 1
+    assert sorted(os.listdir(vdir)) == ["part_date=2026-01-01",
+                                        "part_date=2026-01-02"]
+
+
+def test_compact_violations_settles_an_interrupted_swap(spark, tmp_path):
+    """A run killed between its two renames leaves the old partition
+    aside and a copy beside it: the next call restores the partition,
+    drops the copy, and compacts it."""
+    from protovalidate_spark.runner import compact_violations
+
+    out = str(tmp_path)
+    vdir = os.path.join(out, "violations")
+    a, b = _small_file_sink(spark, out)
+    before = sorted(tuple(r) for r in spark.read.parquet(vdir).collect())
+    os.replace(a, os.path.join(vdir, ".aside.part_date=2026-01-01"))
+    shutil.copytree(b, os.path.join(vdir, ".compact.part_date=2026-01-02"))
+    assert compact_violations(spark, out) == ["2026-01-01"]
+    assert sorted(os.listdir(vdir)) == ["part_date=2026-01-01",
+                                        "part_date=2026-01-02"]
+    assert nf(a) == 1
+    assert sorted(tuple(r) for r in spark.read.parquet(vdir).collect()) \
+        == before
